@@ -56,6 +56,13 @@ def get_spark(
         # Python Data Source filter pushdown (sources/spark_datasource.py
         # prunes buckets from pushed key filters)
         .config("spark.sql.python.filterPushdown.enabled", "true")
+        # list input directories on the driver, never in a Spark job: a
+        # sink read over more than 32 (the default) bucket/delta dirs
+        # otherwise launches a 48-64-task listing job, ~0.8 CPU-s each.
+        # SnapshotSink tables are POSIX-local (commits are os.replace
+        # under a lock file), so driver-side listing is a few dozen
+        # readdirs
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "65536")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

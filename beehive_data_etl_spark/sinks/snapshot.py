@@ -46,6 +46,7 @@ import json
 import os
 import re
 import shutil
+import struct
 import threading
 import time
 import uuid
@@ -82,6 +83,151 @@ _PATCH_MASK = "patch_cols"
 
 def _bucket_expr(n_buckets: int):
     return F.pmod(F.xxhash64(F.col(KEY)), F.lit(n_buckets)).cast("int")
+
+
+# ------------------------------------------- Python twin of _bucket_expr
+# Planning a point read needs each probe key's bucket. Asking the JVM
+# costs a Spark job per call; hashing on the driver costs microseconds,
+# and is sound only while it equals F.xxhash64 bit for bit — parity is
+# pinned per key type in tests/test_spark_datasource.py.
+_PY_TYPES = {
+    T.StringType: str,
+    T.IntegerType: int,
+    T.LongType: int,
+    T.ShortType: int,
+    T.DoubleType: float,
+    T.FloatType: float,
+    T.BooleanType: bool,
+}
+_INT_BITS = {T.ShortType: 16, T.IntegerType: 32, T.LongType: 64}
+_XXH_P1 = 0x9E3779B185EBCA87
+_XXH_P2 = 0xC2B2AE3D27D4EB4F
+_XXH_P3 = 0x165667B19E3779F9
+_XXH_P4 = 0x85EBCA77C2B2AE63
+_XXH_P5 = 0x27D4EB2F165667C5
+_M64 = 0xFFFFFFFFFFFFFFFF
+
+
+def _rotl64(x: int, r: int) -> int:
+    return ((x << r) | (x >> (64 - r))) & _M64
+
+
+def _xxhash64(data: bytes, seed: int = 42) -> int:
+    """XXH64 (public algorithm, xxhash.com spec) with Spark's seed 42,
+    as a signed 64-bit int like Spark's Long."""
+    n = len(data)
+    i = 0
+    if n >= 32:
+        acc = [
+            (seed + _XXH_P1 + _XXH_P2) & _M64,
+            (seed + _XXH_P2) & _M64,
+            seed & _M64,
+            (seed - _XXH_P1) & _M64,
+        ]
+        while i <= n - 32:
+            for j in range(4):
+                lane = int.from_bytes(data[i + 8 * j : i + 8 * j + 8], "little")
+                v = (acc[j] + lane * _XXH_P2) & _M64
+                acc[j] = (_rotl64(v, 31) * _XXH_P1) & _M64
+            i += 32
+        h = (
+            _rotl64(acc[0], 1) + _rotl64(acc[1], 7)
+            + _rotl64(acc[2], 12) + _rotl64(acc[3], 18)
+        ) & _M64
+        for v in acc:
+            h ^= (_rotl64((v * _XXH_P2) & _M64, 31) * _XXH_P1) & _M64
+            h = ((h * _XXH_P1) + _XXH_P4) & _M64
+    else:
+        h = (seed + _XXH_P5) & _M64
+    h = (h + n) & _M64
+    while i <= n - 8:
+        lane = int.from_bytes(data[i : i + 8], "little")
+        h ^= (_rotl64((lane * _XXH_P2) & _M64, 31) * _XXH_P1) & _M64
+        h = ((_rotl64(h, 27) * _XXH_P1) + _XXH_P4) & _M64
+        i += 8
+    if i <= n - 4:
+        lane = int.from_bytes(data[i : i + 4], "little")
+        h ^= (lane * _XXH_P1) & _M64
+        h = ((_rotl64(h, 23) * _XXH_P2) + _XXH_P3) & _M64
+        i += 4
+    while i < n:
+        h ^= (data[i] * _XXH_P5) & _M64
+        h = (_rotl64(h, 11) * _XXH_P1) & _M64
+        i += 1
+    h ^= h >> 33
+    h = (h * _XXH_P2) & _M64
+    h ^= h >> 29
+    h = (h * _XXH_P3) & _M64
+    h ^= h >> 32
+    return h - (1 << 64) if h >= 1 << 63 else h
+
+
+def _hash_input(value, dtype: T.DataType) -> bytes:
+    """The bytes Spark's xxhash64 feeds XXH64 for ``value`` of
+    ``dtype``: UTF-8 for strings; 4 little-endian bytes for int, short
+    and bool (Spark widens them to int); 8 for long; the IEEE bits of
+    float/double, with -0.0 hashed as 0 and NaN as its canonical bits
+    (Java's floatToIntBits / doubleToLongBits)."""
+    if isinstance(dtype, T.StringType):
+        return value.encode("utf-8")
+    if isinstance(dtype, T.BooleanType):
+        return (1 if value else 0).to_bytes(4, "little")
+    if isinstance(dtype, (T.ShortType, T.IntegerType)):
+        return value.to_bytes(4, "little", signed=True)
+    if isinstance(dtype, T.LongType):
+        return value.to_bytes(8, "little", signed=True)
+    if isinstance(dtype, (T.FloatType, T.DoubleType)):
+        fmt, width = ("<f", 4) if isinstance(dtype, T.FloatType) else ("<d", 8)
+        if value == 0:
+            return bytes(width)
+        if value != value:
+            value = float("nan")  # canonical quiet NaN, like Java
+        return struct.pack(fmt, value)
+    raise TypeError(f"no Python twin of xxhash64 for {dtype.simpleString()} keys")
+
+
+def bucket_of(value, n_buckets: int, dtype: T.DataType | None = None) -> int:
+    """Python twin of ``_bucket_expr``: pmod(xxhash64(key), n) for a key
+    of ``dtype`` (default: string). Python's ``%`` of a positive modulus
+    is already non-negative, like pmod."""
+    return _xxhash64(_hash_input(value, dtype or T.StringType())) % n_buckets
+
+
+def _probe_keys(ids: list, key_field: T.StructField) -> list:
+    """Probe ids as the key column holds them, gated on the driver: a
+    probe id of the wrong Python type (or out of the key type's range)
+    fails HERE with a clear error instead of an ANSI cast error inside
+    the scan's IN filter. Float keys are rounded to float32, the value
+    the column stores, so the IN filter and the hash both see it; -0.0
+    is probed as 0.0, the key Spark's grouping stored it under (the
+    parquet min/max and bloom filters would otherwise skip its file)."""
+    dtype = key_field.dataType
+    want = _PY_TYPES.get(type(dtype))
+    if want is None:
+        return list(ids)
+    out = []
+    for i in ids:
+        # bool is an int subclass — reject it for numeric keys
+        if not isinstance(i, want) or (want is not bool and isinstance(i, bool)):
+            raise TypeError(
+                f"probe id {i!r} is {type(i).__name__}; key column "
+                f"{key_field.name!r} is {dtype.simpleString()}"
+            )
+        bits = _INT_BITS.get(type(dtype))
+        if bits is not None and not -(1 << (bits - 1)) <= i < 1 << (bits - 1):
+            raise ValueError(
+                f"probe id {i!r} is out of range for key column "
+                f"{key_field.name!r} ({dtype.simpleString()})"
+            )
+        if want is float and i == 0:
+            i = 0.0
+        elif isinstance(dtype, T.FloatType) and i == i:
+            try:
+                i = struct.unpack("<f", struct.pack("<f", i))[0]
+            except OverflowError:  # beyond float32: Java's cast gives ±inf
+                i = float("inf") if i > 0 else float("-inf")
+        out.append(i)
+    return out
 
 
 def _cell_fp(col):
@@ -1224,74 +1370,179 @@ class SnapshotSink:
         re-scanning the table: one row per doc whose LIVE state differs,
         tagged ``change_type`` I (absent/deleted → live), U (live →
         live with changed state), or D (live → deleted/absent).
-        Computed as a full-outer join of the two LWW states on the key;
-        both sides prune to their own bucket lists, so cost is
-        O(state), never O(history).
 
-        Because this reader diffs whole STATES (not delta files), a
-        ``purge_keys`` commit in the window is handled correctly: the
-        purged keys simply vanish from the new state and surface as
-        ``D`` rows (with NULL new-side payload and op_sequence — a
-        purge removes the row at its existing clock, there is no
-        forward event). ``read_changes_pruned`` delegates purge
-        windows here for exactly that reason.
+        Cost: O(the window's delta files + the old state of the buckets
+        they touch), never O(table) — the diff is computed from the
+        DELTA FILES committed in the window, and a bucket with no new
+        file in it is pruned entirely, which is what makes tailing a
+        10^10-row table's changelog feasible. Planning is driver-side
+        JSON: the two endpoint snapshots plus a walk of the window's
+        commit metadata (O(window) JSON reads, the same walk the
+        replicator does). A key untouched by every fresh file cannot
+        have changed (state mutates only via committed delta/rewrite
+        files); a compaction or tombstone-GC that landed in the window
+        re-surfaces OLD rows in the fresh files, but those carry an
+        unchanged ``op_sequence`` and are dropped by the strict ``seq >
+        old_seq`` predicate — correct, at the cost of scanning the
+        rewritten bucket. A ``rebucket`` in the window renumbers the
+        bucket space, so the old side reads every old bucket.
+
+        Three commit kinds break the fresh-files argument; a window
+        holding one is answered by the full diff of the two LWW states
+        (a full-outer join on the key, O(state)) instead:
+
+        - ``purge_keys`` REMOVES live keys without writing any fresh
+          row for them: the purged keys surface as ``D`` rows with NULL
+          new-side payload and op_sequence (a purge removes the row at
+          its existing clock, there is no forward event);
+        - ``rollback_to`` regresses state to LOWER op_sequences
+          (``read_changes_pruned`` refuses such windows);
+        - a ``tombstone_floor`` advance (``expire_tombstones``): a
+          delete whose tombstone was written AND folded away inside the
+          window leaves no fresh row behind.
+
+        These are rare administrative ops, so the one O(state) pass is
+        the documented cost.
 
         Change detection: row-LWW compares op_sequence (state changed ⇔
         row seq advanced). Per-cell mode ALSO compares the _cell_seq
         fingerprints — a late out-of-order patch (seq below the row's
         current max) changes state WITHOUT advancing the row seq
         (review-found: the seq-only predicate silently dropped those
-        rows from every replica). ``include_cells=True`` (patch tables
-        only) keeps the internal _cell_seq column on emitted rows for
-        cell-exact replication into another patch table.
-        ``include_old=True`` adds the pre-image payload as
-        ``_old_<col>`` columns (NULL for inserts) — the same contract
-        as ``read_changes_pruned(include_old=True)``; both sides are
-        aligned to the TO-version schema so evolved columns compare.
+        rows from every replica). In per-cell mode a fresh PATCH delta
+        alone is not the new row image, so the touched buckets' old
+        state is folded in to emit FULL images.
+        ``include_cells=True`` (patch tables only) keeps the internal
+        _cell_seq column on emitted rows for cell-exact replication
+        into another patch table. ``include_old=True`` adds the
+        pre-image payload as ``_old_<col>`` columns (NULL for inserts)
+        — what incremental aggregate maintenance (``sinks.aggregates``)
+        subtracts; both sides are aligned to the TO-version schema so
+        evolved columns compare. Like time travel, reads of
+        ``from_version`` state may fail if ``vacuum()`` already reaped
+        that version's files — refresh consumers inside the vacuum
+        horizon.
 
-        ``columns``: payload projection pushed into both sides' scans
-        (see _projection_target). Row-LWW tables emit the SAME ROWS as
-        the full reader (detection is op_sequence-based, and the seq
-        always rides) with narrower columns — a view over two columns
-        of a 50-column table pays 2 columns of changelog bytes. On
-        per-cell PATCH tables projection also SCOPES DETECTION: the
-        narrowed fold rebuilds the cell map from the projected columns
-        only, so emitted rows are those whose row clock advanced,
-        liveness flipped, or a PROJECTED cell changed — a late
-        out-of-order patch confined to unprojected columns is (by
-        design) not emitted. That is exactly what a column-scoped view
-        wants; a consumer that must see EVERY changed row of a patch
-        table (full-row replication, shard dirtiness) must read
+        ``columns``: payload projection pushed into every scan (see
+        _projection_target) — what the derived views pass so a
+        per-batch refresh reads only the columns it maintains.
+        Row-LWW tables emit the SAME ROWS as an unprojected read
+        (detection is op_sequence-based, and the seq always rides) with
+        narrower columns. On per-cell PATCH tables projection also
+        SCOPES DETECTION: the narrowed fold rebuilds the cell map from
+        the projected columns only, so emitted rows are those whose row
+        clock advanced, liveness flipped, or a PROJECTED cell changed —
+        a late out-of-order patch confined to unprojected columns is
+        (by design) not emitted. That is exactly what a column-scoped
+        view wants; a consumer that must see EVERY changed row of a
+        patch table (full-row replication, shard dirtiness) must read
         unprojected (``columns=None``)."""
         old_snap = self.snapshot(from_version)
         new_snap = self.snapshot(to_version)
-        target = self._projection_target(new_snap, columns)
-        # mirror read_changes_pruned's column construction exactly so
-        # the two readers interchange (and pruned can delegate here)
+        floor_moved = old_snap.get("tombstone_floor", 0) != new_snap.get(
+            "tombstone_floor", 0
+        )
+        full = (
+            to_version < from_version
+            or floor_moved
+            or any(
+                "purge" in m or "rollback_to" in m
+                for m in self._window_metrics(from_version, to_version)
+            )
+        )
+        diff = self._state_diff if full else self._delta_diff
+        return diff(
+            from_version,
+            to_version,
+            old_snap,
+            new_snap,
+            include_cells=include_cells,
+            include_old=include_old,
+            columns=columns,
+        )
+
+    def _window_metrics(self, from_version: int, to_version: int) -> list[dict]:
+        """Commit metrics of every version in (from, to], in order."""
+        return [
+            self.snapshot(v).get("metrics", {})
+            for v in range(from_version + 1, to_version + 1)
+        ]
+
+    def _changes_schema(
+        self, target: T.StructType, include_old: bool, include_cells: bool
+    ) -> tuple[list[str], list[str]]:
+        """The changelog's payload column list (SEQ first, then the
+        remaining payload in schema order — lww_dedup's order) and its
+        output column list, shared by both diffs so they interchange."""
         payload = [
             f.name for f in target.fields if f.name not in (KEY, SEQ, CELL)
         ]
         payload = [SEQ] + payload
+        keep_cell = self.patch and include_cells and CELL in target.fieldNames()
+        keep = (
+            [KEY, *payload]
+            + ([CELL] if keep_cell else [])
+            + ["change_type"]
+            + ([f"_old_{c}" for c in payload] if include_old else [])
+        )
+        return payload, keep
+
+    def _bridged_old(
+        self,
+        old_snap: dict,
+        buckets: list[int],
+        target: T.StructType,
+        from_version: int,
+        to_version: int,
+    ) -> DataFrame | None:
+        """Raw FROM-version rows of ``buckets`` under the TO-version
+        column names: renames inside the window are bridged (see
+        _window_name_bridge) and, in patch mode, the cell map is
+        brought into the TO namespace BEFORE any fold — the delta
+        diff's union fold merges old-state maps with fresh-file maps,
+        and old-name (or dropped-column) cells surviving the merge
+        would both corrupt the winner map and storm the fingerprint
+        compare."""
         read_target, bridge_sel = self._window_name_bridge(
             from_version, to_version, target
         )
-        o_raw = self._read_buckets(
-            old_snap, list(range(old_snap["n_buckets"])), target=read_target
-        )
-        if o_raw is not None and bridge_sel is not None:
-            o_raw = o_raw.select(
-                *[F.col(frm).alias(to) for frm, to in bridge_sel]
-            )
-        if o_raw is not None and self.patch:
+        o = self._read_buckets(old_snap, buckets, target=read_target)
+        if o is not None and bridge_sel is not None:
+            o = o.select(*[F.col(frm).alias(to) for frm, to in bridge_sel])
+        if o is not None and self.patch:
             allowed = [
                 f.name for f in target.fields if f.name not in (KEY, SEQ, CELL)
             ]
-            o_raw = o_raw.withColumn(
+            o = o.withColumn(
                 CELL,
                 _bridge_cell_map(
                     F.col(CELL), allowed, _bridge_renames(bridge_sel)
                 ),
             )
+        return o
+
+    def _state_diff(
+        self,
+        from_version: int,
+        to_version: int,
+        old_snap: dict,
+        new_snap: dict,
+        include_cells: bool,
+        include_old: bool,
+        columns: list[str] | None,
+    ) -> DataFrame:
+        """read_changes as a full-outer join of the two whole LWW
+        states on the key — O(state); only for the windows the delta
+        diff cannot express (see read_changes)."""
+        target = self._projection_target(new_snap, columns)
+        payload, keep = self._changes_schema(target, include_old, include_cells)
+        o_raw = self._bridged_old(
+            old_snap,
+            list(range(old_snap["n_buckets"])),
+            target,
+            from_version,
+            to_version,
+        )
         n_raw = self._read_buckets(
             new_snap, list(range(new_snap["n_buckets"])), target=target
         )
@@ -1320,100 +1571,26 @@ class SnapshotSink:
             .when(new_live & old_live & u_changed, F.lit("U"))
             .when(~new_live & old_live, F.lit("D"))
         )
-        keep_cell = self.patch and include_cells and CELL in {
-            f.name for f in target.fields
-        }
-        keep = (
-            [KEY, *payload]
-            + ([CELL] if keep_cell else [])
-            + ["change_type"]
-            + ([f"_old_{c}" for c in payload] if include_old else [])
-        )
         return (
             j.withColumn("change_type", change)
             .filter(F.col("change_type").isNotNull())
             .select(*keep)
         )
 
-    def read_changes_pruned(
+    def _delta_diff(
         self,
         from_version: int,
         to_version: int,
-        include_old: bool = False,
-        include_cells: bool = False,
-        columns: list[str] | None = None,
+        old_snap: dict,
+        new_snap: dict,
+        include_cells: bool,
+        include_old: bool,
+        columns: list[str] | None,
     ) -> DataFrame:
-        """``read_changes`` computed from the DELTA FILES committed
-        between the two snapshots instead of a full-outer join of the
-        two whole states: cost is O(changed rows + old state of their
-        buckets), never O(table) — a bucket with no new files in the
-        window is pruned entirely, which is what makes tailing a
-        10^10-row table's changelog feasible. Same output contract as
-        ``read_changes``; with ``include_old=True`` every row also
-        carries the pre-image payload as ``_old_<col>`` columns (NULL
-        for inserts) — what incremental aggregate maintenance
-        (``sinks.aggregates``) subtracts. ``columns``: payload
-        projection pushed into every scan — what the derived views
-        pass so a per-batch refresh reads only the columns it
-        maintains. Row-LWW: same rows as the full reader. Patch
-        tables: detection scopes to the projected cells (+ row clock
-        + liveness) — see ``read_changes`` for the contract and the
-        full-row-consumer caveat.
-
-        Correctness under rewrites: a compaction or tombstone-GC that
-        landed in the window re-surfaces OLD rows in the path diff, but
-        those carry an unchanged ``op_sequence`` and are dropped by the
-        strict ``seq > old_seq`` predicate — correct, at the cost of
-        scanning the rewritten bucket. A key untouched by any file in
-        the diff cannot have changed (state mutates only via committed
-        delta/rewrite files). Like time travel, reads of ``from_version``
-        state may fail if ``vacuum()`` already reaped that version's
-        files — refresh consumers inside the vacuum horizon.
-
-        Two commit kinds break the fresh-files argument and are handled
-        by a driver-side walk of the window's commit metadata (O(window)
-        JSON reads — the same walk the replicator does):
-
-        - ``purge_keys`` REMOVES live keys without writing any fresh
-          row for them, so the diff below is blind to the removal. The
-          window DEGRADES to the full state diff (``read_changes``),
-          where purged keys surface as ``D`` rows — purges are rare
-          administrative ops, so the one O(state) pass is the
-          documented cost.
-        - ``rollback_to`` regresses state to LOWER op_sequences, which
-          neither reader can express (the ``seq > old_seq`` predicate
-          is the correctness of everything downstream) — REFUSED
-          loudly; rebuild the consumer from the restored state."""
-        for v in range(from_version + 1, to_version + 1):
-            m = self.snapshot(v).get("metrics", {})
-            if "rollback_to" in m:
-                raise RuntimeError(
-                    f"rollback at v{v} inside changelog window "
-                    f"({from_version}, {to_version}]: state regressed to "
-                    "lower op_sequences, which no forward change event can "
-                    "express — a pruned or full diff would silently miss "
-                    "the reverted rows. Rebuild this consumer from the "
-                    "rolled-back state (or resume from a version at/after "
-                    "the rollback)."
-                )
-            if "purge" in m:
-                return self.read_changes(
-                    from_version,
-                    to_version,
-                    include_cells=include_cells,
-                    include_old=include_old,
-                    columns=columns,
-                )
-        old_snap = self.snapshot(from_version)
-        new_snap = self.snapshot(to_version)
+        """read_changes from the window's fresh delta files joined to
+        the old state of the buckets they touch (see read_changes)."""
         target = self._projection_target(new_snap, columns)
-        # a rebucket() in the window renumbers the bucket space: a NEW
-        # bucket number does not address the same keys in the OLD
-        # snapshot, so per-bucket old-image pruning is meaningless —
-        # degrade to whole-state images (the rebucket itself rewrote
-        # every file, so the "fresh files" side is O(table) regardless).
-        # The seq > old_seq predicate still drops every merely-rewritten
-        # row; consumers see only genuine changes.
+        payload, keep = self._changes_schema(target, include_old, include_cells)
         rebucketed = old_snap["n_buckets"] != new_snap["n_buckets"]
         old_paths = {
             e["path"] for ents in old_snap["buckets"].values() for e in ents
@@ -1427,30 +1604,19 @@ class SnapshotSink:
             )
             if fresh:
                 fresh_buckets[b_str] = fresh
-        # mirror read_changes' column order (= lww_dedup's: KEY, SEQ,
-        # remaining payload) so the two changelog readers interchange
-        payload = [
-            f.name for f in target.fields if f.name not in (KEY, SEQ, CELL)
-        ]
-        payload = [SEQ] + payload
-        by_name = {f.name: f for f in target.fields}
-        keep_cell = self.patch and include_cells and CELL in by_name
-        out_schema = T.StructType(
-            [by_name[KEY]]
-            + [by_name[c] for c in payload]
-            + ([by_name[CELL]] if keep_cell else [])
-            + [T.StructField("change_type", T.StringType())]
-            + (
-                [
-                    T.StructField(f"_old_{c}", by_name[c].dataType)
-                    for c in payload
-                ]
-                if include_old
-                else []
-            )
-        )
         if not fresh_buckets:
-            return self.spark.createDataFrame([], out_schema)
+            by_name = {f.name: f for f in target.fields}
+
+            def field(c: str) -> T.StructField:
+                if c == "change_type":
+                    return T.StructField(c, T.StringType())
+                if c in by_name:
+                    return by_name[c]
+                return T.StructField(c, by_name[c.removeprefix("_old_")].dataType)
+
+            return self.spark.createDataFrame(
+                [], T.StructType([field(c) for c in keep])
+            )
         touched = [int(b) for b in fresh_buckets]
         # old images by OLD bucket numbering — identical to `touched`
         # unless a rebucket renumbered the space (then: all old buckets,
@@ -1458,25 +1624,24 @@ class SnapshotSink:
         old_touched = (
             [int(b) for b in old_snap["buckets"]] if rebucketed else touched
         )
-        read_target, bridge_sel = self._window_name_bridge(
-            from_version, to_version, target
-        )
-        o = self._read_buckets(old_snap, old_touched, target=read_target)
-        if o is not None and bridge_sel is not None:
-            o = o.select(*[F.col(frm).alias(to) for frm, to in bridge_sel])
-        if o is not None and self.patch:
-            # bridge the cell namespace BEFORE the fold: the union fold
-            # below merges old-state maps with fresh-file maps, and
-            # old-name (or dropped-column) cells surviving the merge
-            # would both corrupt the winner map and storm the
-            # fingerprint compare
-            allowed = [
-                f.name for f in target.fields if f.name not in (KEY, SEQ, CELL)
-            ]
-            o = o.withColumn(
-                CELL,
-                _bridge_cell_map(
-                    F.col(CELL), allowed, _bridge_renames(bridge_sel)
+        # row-LWW without pre-images needs only each old key's clock and
+        # liveness: fold just (key, seq, deleted) — the fold's max-struct
+        # cannot be narrowed by the optimizer after the fact, so without
+        # this every old payload byte (token arrays) would be scanned
+        # and shuffled only to be dropped. Same winners: rows of one key
+        # with equal seq are identical within a snapshot.
+        if include_old or self.patch:
+            old_cols = payload
+            o = self._bridged_old(
+                old_snap, old_touched, target, from_version, to_version
+            )
+        else:
+            old_cols = [SEQ, "deleted"]
+            o = self._read_buckets(
+                old_snap,
+                old_touched,
+                target=T.StructType(
+                    [f for f in target.fields if f.name in (KEY, *old_cols)]
                 ),
             )
         old_state = None if o is None else self._fold(o, KEY, SEQ)
@@ -1492,8 +1657,8 @@ class SnapshotSink:
             # emitted changes carry FULL images. The old-state fold
             # feeds TWO plan branches here (this union and the
             # old-image join below) — persist it so the dominant cost
-            # of the pruned changelog is paid once, not twice; the
-            # block is dropped when the consumer's DataFrame is GC'd
+            # of the changelog is paid once, not twice; the block is
+            # dropped when the consumer's DataFrame is GC'd
             # (review-found double scan).
             old_state = old_state.persist()
             d = self._fold(fresh_raw.unionByName(old_state), KEY, SEQ)
@@ -1503,24 +1668,12 @@ class SnapshotSink:
             # max(old row, fresh rows))
             d = self._fold(fresh_raw, KEY, SEQ)
         if old_state is None:
-            old_img = None
-        else:
-            old_img = old_state.select(
-                F.col(KEY),
-                *[F.col(c).alias(f"_old_{c}") for c in payload],
-                *(
-                    [_cell_fp(F.col(CELL)).alias("_old_fp")]
-                    if self.patch
-                    else []
-                ),
-            )
-        if old_img is None:
             types = {f.name: f.dataType for f in target.fields}
             j = d.select(
                 KEY,
                 *payload,
                 *([CELL] if self.patch else []),
-                *[F.lit(None).cast(types[c]).alias(f"_old_{c}") for c in payload],
+                *[F.lit(None).cast(types[c]).alias(f"_old_{c}") for c in old_cols],
                 *(
                     [F.lit(None).cast("array<struct<key:string,value:bigint>>").alias("_old_fp")]
                     if self.patch
@@ -1528,6 +1681,11 @@ class SnapshotSink:
                 ),
             )
         else:
+            old_img = old_state.select(
+                F.col(KEY),
+                *[F.col(c).alias(f"_old_{c}") for c in old_cols],
+                *([_cell_fp(F.col(CELL)).alias("_old_fp")] if self.patch else []),
+            )
             j = d.join(old_img, KEY, "left_outer")
         old_live = F.col("_old_deleted").isNotNull() & ~F.col("_old_deleted")
         new_live = ~F.col("deleted")
@@ -1550,13 +1708,44 @@ class SnapshotSink:
             .withColumn("change_type", change)
             .filter(F.col("change_type").isNotNull())
         )
-        keep = (
-            [KEY, *payload]
-            + ([CELL] if keep_cell else [])
-            + ["change_type"]
-            + ([f"_old_{c}" for c in payload] if include_old else [])
-        )
         return out.select(*keep)
+
+    def read_changes_pruned(
+        self,
+        from_version: int,
+        to_version: int,
+        include_old: bool = False,
+        include_cells: bool = False,
+        columns: list[str] | None = None,
+    ) -> DataFrame:
+        """``read_changes`` for incremental consumers (derived views,
+        replicas, outboxes), which apply each window as forward
+        changes: same rows, same cost, but a window holding a
+        ``rollback_to`` is REFUSED loudly. A rollback regresses state to
+        LOWER op_sequences, which no forward change event can express
+        (the ``seq > old_seq`` predicate is the correctness of
+        everything downstream) — a diff would silently miss the
+        reverted rows; rebuild the consumer from the restored state."""
+        for v, m in enumerate(
+            self._window_metrics(from_version, to_version), from_version + 1
+        ):
+            if "rollback_to" in m:
+                raise RuntimeError(
+                    f"rollback at v{v} inside changelog window "
+                    f"({from_version}, {to_version}]: state regressed to "
+                    "lower op_sequences, which no forward change event can "
+                    "express — a pruned or full diff would silently miss "
+                    "the reverted rows. Rebuild this consumer from the "
+                    "rolled-back state (or resume from a version at/after "
+                    "the rollback)."
+                )
+        return self.read_changes(
+            from_version,
+            to_version,
+            include_cells=include_cells,
+            include_old=include_old,
+            columns=columns,
+        )
 
     def read_final(self, columns: list[str] | None = None) -> DataFrame:
         """The user-facing table: live rows only, internal columns
@@ -1583,10 +1772,11 @@ class SnapshotSink:
         now?") — at 10^10 rows a full-state scan per probe is absurd, so
         four prunes stack:
 
-        1. **bucket pruning** — each key's bucket is computed with the
-           sink's own bucket expression (one tiny 1-task Spark job over
-           the probe ids; cost O(|ids|), documented driver-side work)
-           and only those buckets' delta files are read;
+        1. **bucket pruning** — each key's bucket is computed on the
+           driver by ``bucket_of``, the Python twin of the sink's bucket
+           expression (parity with ``F.xxhash64`` pinned per key type;
+           no Spark job, cost O(|ids|)), and only those buckets' delta
+           files are read;
         2. **entry-level stats pruning** — every commit entry records
            its files' KEY [min, max] (harvested from the staged parquet
            footers at publish, Iceberg-manifest style), so delta files
@@ -1599,7 +1789,12 @@ class SnapshotSink:
            key-sorted, so the pushed filter prunes row groups via
            parquet min/max stats on a compacted table.
 
-        LWW then folds only the surviving rows; tombstoned keys return
+        LWW then folds only the surviving rows. When the probe touches
+        ONE bucket (every point read) they fold in one partition:
+        ``coalesce(1)`` before the fold drops the shuffle, so the scan,
+        the pushed filter and the fold run as one task of one Spark job.
+        A probe spanning many buckets (MERGE's target lookup, purge
+        counts) keeps the parallel shuffle fold. Tombstoned keys return
         no row (a delete is the absence of the doc, as in read_final)."""
         if not ids:
             raise ValueError("lookup() needs at least one key")
@@ -1609,11 +1804,9 @@ class SnapshotSink:
         table_schema = T.StructType.fromDDL(snap["schema"])
         key_field = next(f for f in table_schema.fields if f.name == KEY)
         target = self._projection_target(snap, columns)
-        rows = _probe_buckets(
-            self.spark, ids, key_field, snap["n_buckets"]
-        )
-        buckets = sorted({r.b for r in rows})
-        keys = [r[0] for r in rows]
+        keys = _probe_keys(ids, key_field)
+        n = snap["n_buckets"]
+        buckets = sorted({bucket_of(k, n, key_field.dataType) for k in keys})
         keys_sorted = sorted(keys)
         df = self._read_buckets(
             snap,
@@ -1635,7 +1828,13 @@ class SnapshotSink:
                 ordered = [c for c in dict.fromkeys(columns) if c != KEY]
                 return empty.select(KEY, *ordered)
             return empty
-        state = self._fold(df.filter(F.col(KEY).isin(keys)), KEY, SEQ)
+        df = df.filter(F.col(KEY).isin(keys))
+        if len(buckets) == 1:
+            # one bucket is at most one task's worth of rows (the layout
+            # sizes buckets to a shuffle partition, see the module
+            # docstring): fold it in place, without an Exchange
+            df = df.coalesce(1)
+        state = self._fold(df, KEY, SEQ)
         if columns is not None:
             ordered = [c for c in dict.fromkeys(columns) if c != KEY]
             return state.filter(~F.col("deleted")).select(KEY, *ordered)
@@ -3373,8 +3572,9 @@ class SnapshotSink:
         tombstones, current state AND time travel. Composes the
         existing machinery; nothing here has its own crash protocol:
 
-        1. the keys' buckets are computed with the sink's own bucket
-           expression (one O(|keys|) driver-side probe, as lookup());
+        1. the keys' buckets are computed on the driver by
+           ``bucket_of``, the Python twin of the sink's bucket
+           expression (O(|keys|), no Spark job, as lookup());
         2. ONE filtering rewrite commit (the same crash-safe staged
            protocol as compact()) re-folds exactly those buckets and
            drops the keys' rows ENTIRELY — not a tombstone: a tombstone
@@ -3394,8 +3594,8 @@ class SnapshotSink:
           vacuum keeps, so by default the purge REFUSES while tags
           exist; ``ignore_tags=True`` proceeds and the tagged bytes
           survive until the tags drop and a later vacuum runs.
-        - **The changelog stays correct**: ``read_changes_pruned``
-          detects the purge commit and degrades that window to the
+        - **The changelog stays correct**: the changelog readers
+          detect the purge commit and answer that window with the
           full state diff, where purged live keys surface as ``D``
           rows — index/aggregate refreshes stay exact. REPLICATION
           refuses the window instead (no forward delete event exists
@@ -3442,16 +3642,9 @@ class SnapshotSink:
             )
         table_schema = T.StructType.fromDDL(snap["schema"])
         key_field = next(f for f in table_schema.fields if f.name == KEY)
-        probe = self.spark.createDataFrame(
-            [(k,) for k in keys], T.StructType([key_field])
-        ).coalesce(1)
+        keys = _probe_keys(keys, key_field)
         targets = sorted(
-            {
-                r.b
-                for r in probe.select(
-                    _bucket_expr(self.n_buckets).alias("b")
-                ).collect()
-            }
+            {bucket_of(k, self.n_buckets, key_field.dataType) for k in keys}
         )
         live_before = self.lookup(keys).count()
         res = self._rewrite_buckets(
@@ -4082,67 +4275,6 @@ def _parquet_stats(
         (per_file if stats_ok and per_file else None),
         col_ranges,
     )
-
-
-_PY_TYPES = {
-    T.StringType: str,
-    T.IntegerType: int,
-    T.LongType: int,
-    T.ShortType: int,
-    T.DoubleType: float,
-    T.FloatType: float,
-    T.BooleanType: bool,
-}
-
-
-def _probe_buckets(
-    spark, ids: list, key_field, n_buckets: int, bucket_expr=None
-) -> list:
-    """Probe ids → (id, bucket) rows via the sink's own bucket
-    expression, as one tiny JVM-ONLY job: literals exploded from a
-    `range(1)` local relation, cast to the key's exact type (the hash
-    is type-sensitive — a Python int defaults to LongType, which would
-    bucket an int32 key differently). The obvious
-    ``createDataFrame([(id,)])`` plan costs ~4 s PER CALL here: a
-    Python-list local relation runs its task through a Python worker,
-    and every cold worker pays the full pyspark import (measured —
-    the whole point of a point lookup is to NOT pay that). Large probe
-    sets (>1024) fall back to createDataFrame, where the worker cost
-    amortizes and a 100k-literal plan tree would hurt instead.
-
-    The type gate stays driver-side either way: a probe id of the
-    wrong Python type fails HERE with a clear TypeError instead of an
-    ANSI cast error inside the scan's IN filter."""
-    want = _PY_TYPES.get(type(key_field.dataType))
-    if want is not None:
-        for i in ids:
-            # bool is an int subclass — reject it for numeric keys
-            if not isinstance(i, want) or (
-                want is not bool and isinstance(i, bool)
-            ):
-                raise TypeError(
-                    f"probe id {i!r} is {type(i).__name__}; key column "
-                    f"{key_field.name!r} is {key_field.dataType.simpleString()}"
-                )
-    if len(ids) <= 1024:
-        # cast the ARRAY (a generator can't nest inside a cast): the
-        # elements land with the key's exact type before the explode
-        probe = spark.range(1).select(
-            F.explode(
-                F.array(*[F.lit(i) for i in ids]).cast(
-                    T.ArrayType(key_field.dataType)
-                )
-            ).alias(key_field.name)
-        )
-    else:
-        probe = spark.createDataFrame(
-            [(i,) for i in ids], T.StructType([key_field])
-        ).coalesce(1)
-    if bucket_expr is None:
-        bucket_expr = _bucket_expr(n_buckets)
-    return probe.select(
-        F.col(key_field.name), bucket_expr.alias("b")
-    ).collect()
 
 
 def _range_may_contain(key_range, keys_sorted: list) -> bool:

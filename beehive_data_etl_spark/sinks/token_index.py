@@ -44,13 +44,20 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from beehive_data_etl_spark.sinks.snapshot import KEY, SEQ, _INTERNAL
+from beehive_data_etl_spark.sinks.snapshot import (
+    KEY,
+    SEQ,
+    _INTERNAL,
+    _probe_keys,
+    bucket_of,
+)
 
 
 def _token_bucket_expr(n_buckets: int):
-    """THE bucket expression — write path and probe path must stay
-    bit-identical for bucket pruning to be correct, so both go through
-    this single helper (mirrors snapshot.py's _bucket_expr)."""
+    """THE bucket expression of the write path (mirrors snapshot.py's
+    _bucket_expr). The probe path must bucket bit-identically, so it
+    uses this expression's Python twin ``snapshot.bucket_of`` over the
+    same element type (parity with F.xxhash64 pinned in tests)."""
     return F.pmod(F.xxhash64(F.col("token")), F.lit(n_buckets)).cast("int")
 
 
@@ -324,21 +331,12 @@ class TokenIndex:
         cur = self.current()
         if cur is None:
             raise ValueError("index never refreshed")
-        # type-gate + bucket computation in one tiny JVM-only job
-        # (same pattern as SnapshotSink.lookup — the createDataFrame
-        # probe paid a cold Python worker's full pyspark import, ~4 s,
-        # per call)
-        from beehive_data_etl_spark.sinks.snapshot import _probe_buckets
-
-        rows = _probe_buckets(
-            self.spark,
-            probe_tokens,
-            T.StructField("token", self._elem_type()),
-            self.n_buckets,
-            bucket_expr=_token_bucket_expr(self.n_buckets),
-        )
-        buckets = sorted({r.b for r in rows})
-        toks = [r.token for r in rows]
+        # type gate + buckets on the driver, no Spark job (same as
+        # SnapshotSink.lookup): bucket_of is the Python twin of the
+        # write path's bucket expression over the same element type
+        elem = self._elem_type()
+        toks = _probe_keys(probe_tokens, T.StructField("token", elem))
+        buckets = sorted({bucket_of(t, self.n_buckets, elem) for t in toks})
         paths = [
             os.path.join(d, f"tbucket={b}")
             for d in cur["files"]

@@ -96,6 +96,8 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
+from beehive_data_etl_spark.sinks.snapshot import bucket_of
+
 from . import table_meta as tm
 
 KEY, SEQ, DELETED, CELL = tm.KEY, tm.SEQ, tm.DELETED, tm.CELL
@@ -104,18 +106,21 @@ CHANGE = "change_type"
 
 def register(spark) -> None:
     """Register the sources (and write paths) on a session.  Also
-    registers this module
-    (and table_meta) for cloudpickle by-value serialization, so Spark's
-    Python planner/executor workers never need the package importable
-    on their own sys.path — the classes travel inside the pickle."""
+    registers this module, table_meta and sinks.snapshot (whose
+    ``bucket_of`` the planner calls) for cloudpickle by-value
+    serialization, so Spark's Python planner/executor workers never
+    need the package importable on their own sys.path — the classes
+    travel inside the pickle."""
     try:  # best-effort: falls back to by-reference (import) pickling
         from pyspark import cloudpickle
 
+        import beehive_data_etl_spark.sinks.snapshot as _snapshot
         import beehive_data_etl_spark.sources.spark_datasource as _self
         import beehive_data_etl_spark.sources.table_meta as _meta
 
         cloudpickle.register_pickle_by_value(_self)
         cloudpickle.register_pickle_by_value(_meta)
+        cloudpickle.register_pickle_by_value(_snapshot)
     except Exception:
         pass
     # required for pushFilters (bucket pruning); plain SQL conf,
@@ -230,9 +235,9 @@ def plan_state_partitions(
 ) -> list[BucketPartition]:
     """One partition per non-empty bucket.  ``filters`` (Spark pushed
     filters on the KEY column) prune buckets: an EqualTo/In on doc_id
-    maps each key to its bucket via the same xxhash64 the sink's
-    ``_bucket_expr`` uses (parity pinned in tests) — a point lookup
-    through the data source then scans ONE bucket.  Pruning is
+    maps each key to its bucket via ``snapshot.bucket_of``, the Python
+    twin of the sink's ``_bucket_expr`` (parity pinned in tests) — a
+    point lookup through the data source then scans ONE bucket.  Pruning is
     bucket-granular only: payload-predicate entry skipping would hit
     the stale-winner trap the sink's scan_where documents."""
     wanted = _buckets_for_filters(filters, snap["n_buckets"])
@@ -318,81 +323,6 @@ def plan_window_partitions(
 
 
 # ------------------------------------------------------- key-hash pruning
-def _xxhash64_utf8(data: bytes, seed: int = 42) -> int:
-    """XXH64 (public algorithm, xxhash.com spec) over UTF-8 bytes with
-    Spark's seed 42 — the Python twin of ``F.xxhash64(col)`` on a
-    string column, used ONLY to map key-equality filters to buckets.
-    Parity with the JVM implementation is pinned in tests; signed
-    64-bit wraparound matches Spark's Long."""
-    P1, P2, P3, P4, P5 = (
-        0x9E3779B185EBCA87,
-        0xC2B2AE3D27D4EB4F,
-        0x165667B19E3779F9,
-        0x85EBCA77C2B2AE63,
-        0x27D4EB2F165667C5,
-    )
-    M = 0xFFFFFFFFFFFFFFFF
-
-    def rotl(x: int, r: int) -> int:
-        return ((x << r) | (x >> (64 - r))) & M
-
-    n = len(data)
-    i = 0
-    if n >= 32:
-        v1 = (seed + P1 + P2) & M
-        v2 = (seed + P2) & M
-        v3 = seed & M
-        v4 = (seed - P1) & M
-        while i <= n - 32:
-            for j, v in enumerate((v1, v2, v3, v4)):
-                lane = int.from_bytes(data[i + 8 * j : i + 8 * j + 8], "little")
-                v = (v + lane * P2) & M
-                v = (rotl(v, 31) * P1) & M
-                if j == 0:
-                    v1 = v
-                elif j == 1:
-                    v2 = v
-                elif j == 2:
-                    v3 = v
-                else:
-                    v4 = v
-            i += 32
-        h = (rotl(v1, 1) + rotl(v2, 7) + rotl(v3, 12) + rotl(v4, 18)) & M
-        for v in (v1, v2, v3, v4):
-            h ^= (rotl((v * P2) & M, 31) * P1) & M
-            h = ((h * P1) + P4) & M
-    else:
-        h = (seed + P5) & M
-    h = (h + n) & M
-    while i <= n - 8:
-        lane = int.from_bytes(data[i : i + 8], "little")
-        h ^= (rotl((lane * P2) & M, 31) * P1) & M
-        h = ((rotl(h, 27) * P1) + P4) & M
-        i += 8
-    if i <= n - 4:
-        lane = int.from_bytes(data[i : i + 4], "little")
-        h ^= (lane * P1) & M
-        h = ((rotl(h, 23) * P2) + P3) & M
-        i += 4
-    while i < n:
-        h ^= (data[i] * P5) & M
-        h = (rotl(h, 11) * P1) & M
-        i += 1
-    h ^= h >> 33
-    h = (h * P2) & M
-    h ^= h >> 29
-    h = (h * P3) & M
-    h ^= h >> 32
-    if h >= 1 << 63:  # Spark's Long is signed
-        h -= 1 << 64
-    return h
-
-
-def bucket_of(doc_id: str, n_buckets: int) -> int:
-    """Python twin of ``snapshot._bucket_expr``: pmod(xxhash64(key), n)."""
-    return _xxhash64_utf8(doc_id.encode("utf-8")) % n_buckets
-
-
 def _key_values_for_filters(filters: list | None) -> list | None:
     """String values of the first key-equality conjunct, or None.
     Restricting the scan to ONE conjunct's value set is sound for a

@@ -1388,6 +1388,14 @@ def main() -> None:
         return
     if len(sys.argv) > 1:
         sys.exit(f"unknown args {sys.argv[1:]}; run with no args for the full bench")
+    if WEAK_PAIRS < 2:
+        # paired_weak_efficiency takes a median over >= 2 complete
+        # (solo, quad) pairs; fewer would fail both paired sections
+        # after their full runs
+        sys.exit(
+            f"SPARK_GRAFT_WEAK_PAIRS={WEAK_PAIRS}: the paired weak-scaling "
+            "sections need at least 2 (solo, quad) pairs; set it to 2 or more"
+        )
     if set(SECTIONS) != {"merge_only", "pipeline", "weak"}:
         # the subset hook exists for --cdc-worker experiments; the full
         # bench's aggregation/report assumes all three sections

@@ -155,10 +155,9 @@ def main() -> None:
         w = walls[name]
         r1 = w["sf0.1"] / max(w["sf0.01"], 1e-9)
         r2 = w["x10"] / max(w["sf0.1"], 1e-9)
-        verdict = "ok (sublinear-to-linear)"
-        if r2 > 13.0:
-            verdict = "SUPRALINEAR — investigate"
-            flagged.append((name, r2))
+        over = [(step, r) for step, r in (("step1", r1), ("step2", r2)) if r > 13.0]
+        verdict = "SUPRALINEAR — investigate" if over else "ok (sublinear-to-linear)"
+        flagged += [(name, step, r) for step, r in over]
         lines.append(
             f"| {name} | {w['sf0.01']} | {w['sf0.1']} | {w['x10']} "
             f"| {r1:.1f}x | {r2:.1f}x | {verdict} |"
@@ -177,7 +176,7 @@ def main() -> None:
             "",
             "## Flagged for investigation",
             "",
-        ] + [f"- {n}: step2 ratio {r:.1f}x" for n, r in flagged]
+        ] + [f"- {n}: {step} ratio {r:.1f}x" for n, step, r in flagged]
     else:
         lines += ["", "No step exceeded the 13x supralinear threshold."]
     os.makedirs("BENCH", exist_ok=True)

@@ -74,10 +74,11 @@ def test_pruned_changelog_is_empty_between_equal_versions(spark, replayed):
 
 
 def test_pruned_changelog_scan_is_delta_sized(spark, replayed):
-    """The point of the pruned reader: a window whose batch touched ONE
-    bucket scans that batch's fresh file plus that bucket's old state —
-    strictly fewer files than the two full states read_changes joins,
-    and nothing outside the window's snapshot."""
+    """The point of the delta-file changelog (read_changes and its
+    rollback-refusing twin read_changes_pruned): a window whose batch
+    touched ONE bucket scans that batch's fresh file plus that bucket's
+    old state — strictly fewer files than the two full states, and
+    nothing outside the window's snapshot."""
     sink = replayed
     v_old = sink.current_snapshot()["version"]
     one = spark.createDataFrame(
@@ -90,7 +91,10 @@ def test_pruned_changelog_scan_is_delta_sized(spark, replayed):
     pruned = sink.read_changes_pruned(v_old, v)
     assert [r["doc_id"] for r in pruned.collect()] == ["zz-new-doc"]
     pruned_files = set(pruned.inputFiles())
-    full_files = set(sink.read_changes(v_old, v).inputFiles())
+    assert set(sink.read_changes(v_old, v).inputFiles()) == pruned_files
+    full_files = set(sink.read_state(version=v_old).inputFiles()) | set(
+        sink.read_state(version=v).inputFiles()
+    )
     assert pruned_files < full_files
     # only the tiny batch's bucket dir + its own ingest dir are touched
     dirs = {os.path.dirname(f) for f in pruned_files}

@@ -129,10 +129,55 @@ def test_xxhash64_python_twin_matches_spark(spark):
         r["s"]: r["h"]
         for r in df.select("s", F.xxhash64("s").alias("h")).collect()
     }
-    from beehive_data_etl_spark.sources.spark_datasource import _xxhash64_utf8
+    from beehive_data_etl_spark.sinks.snapshot import _xxhash64
 
     for v in vals:
-        assert _xxhash64_utf8(v.encode("utf-8")) == jvm[v], v
+        assert _xxhash64(v.encode("utf-8")) == jvm[v], v
+
+
+_I32, _I64 = 2**31, 2**63
+TWIN_CASES = {
+    "string": ["", "é", "ü" * 16, "長い文字列" * 4, "k" * 64, "doc-000123"],
+    "int": [0, 1, -1, 7, -123456, _I32 - 1, -_I32],
+    "short": [0, 1, -1, 255, 32767, -32768],
+    "bigint": [0, 1, -1, 2**40 + 7, _I32, -_I32 - 1, _I64 - 1, -_I64],
+    "boolean": [True, False],
+    "float": [0.0, -0.0, 0.1, 1.5, -2.25, 3.4028234663852886e38, 1e-45,
+              float("inf"), float("-inf"), float("nan")],
+    "double": [0.0, -0.0, 0.1, -1e308, 5e-324, 2.0**60, float("inf"),
+               float("-inf"), float("nan")],
+}
+
+
+@pytest.mark.parametrize("ddl", sorted(TWIN_CASES))
+def test_bucket_twin_matches_spark_per_key_type(spark, ddl):
+    """The Python twin hashes every key type the sink accepts exactly
+    like the JVM's xxhash64 (Spark's rules: int/short/bool as 4 bytes,
+    long as 8, float/double as IEEE bits with -0.0 as 0 and NaN
+    canonical), and bucket_of equals pmod(xxhash64(key), n)."""
+    from beehive_data_etl_spark.sinks.snapshot import (
+        _hash_input,
+        _probe_keys,
+        _xxhash64,
+        bucket_of,
+    )
+
+    dtype = T.StructType.fromDDL(f"k {ddl}")[0].dataType
+    vals = TWIN_CASES[ddl]
+    df = spark.createDataFrame(
+        [(i, v) for i, v in enumerate(vals)], f"i int, k {ddl}"
+    )
+    rows = df.select(
+        "i",
+        F.xxhash64("k").alias("h"),
+        F.pmod(F.xxhash64("k"), F.lit(13)).alias("b"),
+    ).collect()
+    assert len(rows) == len(vals)
+    field = T.StructField("k", dtype)
+    for r in rows:
+        (v,) = _probe_keys([vals[r.i]], field)  # float → float32 value
+        assert _xxhash64(_hash_input(v, dtype)) == r.h, (ddl, vals[r.i])
+        assert bucket_of(v, 13, dtype) == r.b, (ddl, vals[r.i])
 
 
 def test_state_partition_pruning_plans_one_bucket(ds_table):

@@ -208,7 +208,9 @@ def test_layout_mismatch_rejected(spark, smoke_log, replayed, tmp_path):
 
 
 def test_write_and_probe_share_bucket_expr():
-    """Review finding: the two paths must use ONE bucket expression."""
+    """Review finding: the two paths must use ONE bucket function — the
+    write path the shared Spark expression, the probe path its Python
+    twin (parity: test_probe_buckets_match_write_buckets)."""
     import inspect
 
     from beehive_data_etl_spark.sinks import token_index as m
@@ -216,7 +218,29 @@ def test_write_and_probe_share_bucket_expr():
     src = inspect.getsource(m.TokenIndex)
     assert "F.xxhash64" not in src  # only the shared helper hashes
     assert "_token_bucket_expr" in inspect.getsource(m.TokenIndex._with_bucket)
-    assert "_token_bucket_expr" in inspect.getsource(m.TokenIndex.lookup)
+    lookup_src = inspect.getsource(m.TokenIndex.lookup)
+    assert "bucket_of(" in lookup_src and "xxhash" not in lookup_src
+
+
+def test_probe_buckets_match_write_buckets(spark, replayed, tmp_path):
+    """The probe path's driver-side buckets equal the write path's
+    Spark expression for every indexed token."""
+    from beehive_data_etl_spark.sinks.snapshot import bucket_of
+    from beehive_data_etl_spark.sinks.token_index import _token_bucket_expr
+
+    ix = TokenIndex(spark, replayed, str(tmp_path / "ix"), n_buckets=8)
+    ix.refresh()
+    elem = ix._elem_type()
+    rows = (
+        ix.read()
+        .select("token")
+        .distinct()
+        .withColumn("b", _token_bucket_expr(8))
+        .collect()
+    )
+    assert rows
+    for r in rows:
+        assert bucket_of(r.token, 8, elem) == r.b, r.token
 
 
 def test_empty_and_invalid_probes(spark, replayed, tmp_path):
