@@ -13,6 +13,20 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+MAX_DRIVER_GIB = 16
+
+
+def driver_memory() -> str:
+    """The driver heap: ``SPARK_DRIVER_MEM`` when set, else a fifth of
+    physical memory capped at 16g. The heap is pinned and pre-touched
+    (see get_spark), so a fixed default larger than the host cannot
+    start the JVM at all."""
+    env = os.environ.get("SPARK_DRIVER_MEM")
+    if env:
+        return env
+    fifth = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") // 5
+    gib = min(MAX_DRIVER_GIB, fifth >> 30)
+    return f"{gib}g" if gib else f"{fifth >> 20}m"
 
 
 def get_spark(
@@ -29,6 +43,7 @@ def get_spark(
     """
     cores = cores or DEFAULT_CPUS
     shuffle_partitions = shuffle_partitions or max(2 * cores, 8)
+    heap = driver_memory()
     builder = (
         SparkSession.builder.master(f"local[{cores}]")
         .appName(app_name)
@@ -39,14 +54,13 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", heap)
         # pin the heap (-Xms == -Xmx): G1 on Java 17 uncommits idle heap
         # and the kernel page-zeroing on re-touch shows up as multi-second
         # system-time stalls inside otherwise-identical jobs
         .config(
             "spark.driver.extraJavaOptions",
-            "-Xms" + os.environ.get("SPARK_DRIVER_MEM", "16g")
-            + " -XX:+AlwaysPreTouch",
+            "-Xms" + heap + " -XX:+AlwaysPreTouch",
         )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.compression.codec", "snappy")

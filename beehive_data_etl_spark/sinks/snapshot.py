@@ -26,6 +26,17 @@ interface onto ``MERGE INTO`` + ``ALTER TABLE``):
   events inside a new batch lose the LWW reduction against the target
   rows (``op_sequence`` comparison), so re-application is idempotent.
 
+Snapshot JSON format: ``_snapshots/vNNNNNN.json`` holds ``version``,
+``parent``, ``n_buckets``, ``schema`` / ``schema_version``,
+``buckets`` (bucket → its commit entries), ``committed_batches``,
+``tombstone_floor``, ``snapshot_floor``, ``rollback_epoch``,
+``patch``, ``audit`` and the commit's ``metrics`` (every commit stamps
+``commit_ts``). ``SnapshotSink._commit_next`` is the one writer: it
+carries every field forward from the head and changes only what the
+commit names. A bucket entry (data path, schema, fold-or-delta flag,
+footer stats) is built by ``_entry`` alone; the per-``(batch_id,
+bucket)`` manifest is that entry plus the crash-replay facts.
+
 Deletes are kept as tombstone rows (``deleted=true``) so a late stale
 update can never resurrect a deleted doc (SURVEY.md §7.3). Tombstone GC
 is a compaction concern, out of scope at test scale.
@@ -79,6 +90,9 @@ _ENVELOPE_META = ["op", "event_ts", "batch_hint"]
 # envelope metadata, never payload, but NOT in _ENVELOPE_META because
 # the batch dataflow must keep it until patch_events() consumes it
 _PATCH_MASK = "patch_cols"
+# parquet codec of every data write: token arrays are near-
+# incompressible random ints, and zstd-1 costs little on them
+_COMPRESSION = "zstd"
 
 
 def _bucket_expr(n_buckets: int):
@@ -288,7 +302,6 @@ class SnapshotSink:
         salt_partials: int = 0,
         lineage: bool = True,
         compact_threshold: int = 4,
-        compression: str = "zstd",
         crash_hook=None,
         audit=None,
         patch: bool = False,
@@ -326,9 +339,6 @@ class SnapshotSink:
         # merge-on-read dial: a bucket holding this many delta files is
         # folded to one on its next touch; 1 = classic copy-on-write
         self.compact_threshold = max(1, compact_threshold)
-        # token arrays are near-incompressible random ints — zstd-1
-        # costs little; pass "none" for max ingest throughput
-        self.compression = compression
         # Iceberg's write.target-file-size analogue, in rows: every
         # data write caps files at this many records, so a compacted
         # bucket of a 100 TB table splits into operator-sized files
@@ -523,6 +533,48 @@ class SnapshotSink:
                 json.dump(ptr, fh)
             os.replace(ptr_tmp, ptr_path)  # THE commit point (branch)
 
+    def _commit_next(
+        self, head: dict | None, metrics: dict, t0: float | None = None,
+        **changes,
+    ) -> dict:
+        """Build and publish the snapshot after ``head`` — the ONLY
+        code that writes one, so the snapshot format lives here: every
+        field carries forward from the head (or starts at the empty
+        table's defaults) unless the commit names it in ``changes``.
+        Stamps ``metrics.commit_ts`` (what ``commit_time`` reads) and,
+        given the operation's start ``t0``, ``metrics.wall_s`` — into
+        the caller's dict, which ingest also returns and logs. The
+        batch's ``lineage`` (input file lists) stays out of the
+        snapshot. Spark-free: the Data Source writer commits from a
+        JVM-less worker. Caller holds the commit and table locks."""
+        if head is None:
+            snap = {
+                "n_buckets": self.n_buckets,
+                "schema_version": 0,
+                "buckets": {},
+                "committed_batches": [],
+                "tombstone_floor": 0,
+                "snapshot_floor": 1,
+                "rollback_epoch": 0,
+                "patch": self.patch,
+                # table-level write contract (set_table_audit) — a
+                # per-table property every commit carries forward
+                "audit": None,
+            }
+        else:
+            snap = dict(head)
+        if t0 is not None:
+            metrics["wall_s"] = round(time.time() - t0, 4)
+        metrics["commit_ts"] = time.time()
+        snap.update(
+            version=1 if head is None else head["version"] + 1,
+            parent=None if head is None else head["version"],
+            metrics={k: v for k, v in metrics.items() if k != "lineage"},
+            **changes,
+        )
+        self._write_snapshot(snap)
+        return snap
+
     def _is_committed_in(self, snap: dict | None, phys_id: str) -> bool:
         """True when the batch is already reflected in ``snap`` — under
         its physical id, or (on a branch handle) under the bare logical
@@ -700,7 +752,6 @@ class SnapshotSink:
             salt_partials=self.salt_partials,
             lineage=self.lineage,
             compact_threshold=self.compact_threshold,
-            compression=self.compression,
             audit=self.audit,
             target_file_rows=self.target_file_rows,
             bloom_filter=self.bloom_filter,
@@ -853,8 +904,9 @@ class SnapshotSink:
 
     def commit_time(self, v: int) -> float:
         """A committed version's wall-clock time: the recorded
-        ``metrics.commit_ts``, falling back to the snapshot JSON's
-        mtime for writer paths that predate the field. Shared by
+        ``metrics.commit_ts`` (every commit stamps it, see
+        _commit_next), falling back to the snapshot JSON's mtime for
+        snapshots written before every commit kind recorded it. Shared by
         ``as_of_version`` and the metadata tables (sinks/meta.py) so
         the snapshot-file naming and fallback live in one place."""
         snap = self.snapshot(v)
@@ -884,7 +936,7 @@ class SnapshotSink:
         between commits can off-by-one the boundary within the skewed
         interval, never outside it. Each version's time is its recorded
         ``metrics.commit_ts``, falling back to the snapshot JSON's
-        mtime for writer paths that predate the field.
+        mtime for snapshots that predate the field.
 
         Raises if ``ts`` predates the oldest readable version —
         including when the true answer was retired by
@@ -998,40 +1050,31 @@ class SnapshotSink:
                 shutil.rmtree(
                     os.path.join(self.root, "_manifests", bid), ignore_errors=True
                 )
-            new_snap = {
-                "version": head["version"] + 1,
-                "n_buckets": target["n_buckets"],
-                "schema": target["schema"],
-                "schema_version": target.get("schema_version", 0),
-                "buckets": target["buckets"],
-                "committed_batches": list(target["committed_batches"]),
-                "parent": head["version"],
-                "tombstone_floor": max(
+            # the data layout comes from the target; everything else
+            # (patch mode, write contract, snapshot floor) carries
+            # forward from the head — the rollback restores DATA, not
+            # per-table properties or governance
+            new_snap = self._commit_next(
+                head,
+                {"rollback_to": target_v, "decommitted_batches": decommitted},
+                t0,
+                n_buckets=target["n_buckets"],
+                schema=target["schema"],
+                schema_version=target.get("schema_version", 0),
+                buckets=target["buckets"],
+                committed_batches=list(target["committed_batches"]),
+                tombstone_floor=max(
                     head.get("tombstone_floor", 0),
                     target.get("tombstone_floor", 0),
                 ),
-                "snapshot_floor": head.get("snapshot_floor", 1),
                 # monotone: any writer/rewrite that PLANNED against a
                 # pre-rollback head is refused at its commit (and its
                 # crash manifests at replay) by an epoch mismatch —
                 # cross-object/process writers are invisible to the
                 # quiesce check above, and their compacted folds could
                 # otherwise re-publish de-committed rows
-                "rollback_epoch": head.get("rollback_epoch", 0) + 1,
-                # the fold mode survives rollback (it is a per-table
-                # property, not per-version — review-found: omitting it
-                # made the table refuse its own sink's next apply)
-                "patch": head.get("patch", self.patch),
-                # so does the table-level write contract (the rollback
-                # restores DATA, not governance)
-                "audit": head.get("audit"),
-                "metrics": {
-                    "rollback_to": target_v,
-                    "decommitted_batches": decommitted,
-                    "wall_s": round(time.time() - t0, 4),
-                },
-            }
-            self._write_snapshot(new_snap)
+                rollback_epoch=head.get("rollback_epoch", 0) + 1,
+            )
             self.n_buckets = target["n_buckets"]
         return {
             "rolled_back": True,
@@ -1133,7 +1176,7 @@ class SnapshotSink:
         filter on the KEY column (see __init__ for the rationale and
         measurements). One helper so a layout knob can never apply to
         some write paths and not others."""
-        writer = writer.option("compression", self.compression).option(
+        writer = writer.option("compression", _COMPRESSION).option(
             # 0 = Spark default (no cap); see target_file_rows
             "maxRecordsPerFile",
             self.target_file_rows or 0,
@@ -1752,12 +1795,31 @@ class SnapshotSink:
         dropped. ``columns`` selects a payload subset, pruned all the
         way into the parquet scan (narrow reads of a wide table cost
         bytes ∝ the columns asked for, not the table width)."""
-        state = self.read_state(columns=columns)
-        if columns is not None:
-            ordered = [c for c in dict.fromkeys(columns) if c != KEY]
-            return state.filter(~F.col("deleted")).select(KEY, *ordered)
-        payload = [c for c in state.columns if c not in _INTERNAL]
-        return state.filter(~F.col("deleted")).select(KEY, *[c for c in payload if c != KEY])
+        return self._live_rows(self.read_state(columns=columns), None, columns)
+
+    def _live_rows(
+        self,
+        state: DataFrame | None,
+        target: T.StructType | None,
+        columns: list[str] | None,
+        pred=None,
+    ) -> DataFrame:
+        """The user-facing tail of every read of current rows: the live
+        rows of a folded ``state`` (``None`` = nothing to read, a typed
+        empty frame of ``target``), ``pred`` applied to the post-fold
+        values, internal columns dropped, and the key first followed by
+        ``columns`` (default: every payload column)."""
+        if state is None:
+            state = self.spark.createDataFrame([], target)
+        live = state.filter(~F.col("deleted"))
+        if pred is not None:
+            live = live.filter(pred)
+        payload = (
+            dict.fromkeys(columns)
+            if columns is not None
+            else [c for c in live.columns if c not in _INTERNAL]
+        )
+        return live.select(KEY, *[c for c in payload if c != KEY])
 
     def lookup(
         self,
@@ -1821,25 +1883,14 @@ class SnapshotSink:
             range_pred=lambda rng: _range_may_contain(rng, keys_sorted),
         )
         if df is None:
-            empty = self.spark.createDataFrame([], target).drop(
-                *[c for c in _INTERNAL if c in target.fieldNames()]
-            )
-            if columns is not None:
-                ordered = [c for c in dict.fromkeys(columns) if c != KEY]
-                return empty.select(KEY, *ordered)
-            return empty
+            return self._live_rows(None, target, columns)
         df = df.filter(F.col(KEY).isin(keys))
         if len(buckets) == 1:
             # one bucket is at most one task's worth of rows (the layout
             # sizes buckets to a shuffle partition, see the module
             # docstring): fold it in place, without an Exchange
             df = df.coalesce(1)
-        state = self._fold(df, KEY, SEQ)
-        if columns is not None:
-            ordered = [c for c in dict.fromkeys(columns) if c != KEY]
-            return state.filter(~F.col("deleted")).select(KEY, *ordered)
-        payload = [c for c in state.columns if c not in _INTERNAL and c != KEY]
-        return state.filter(~F.col("deleted")).select(KEY, *payload)
+        return self._live_rows(self._fold(df, KEY, SEQ), target, columns)
 
     def scan_range(
         self,
@@ -1875,24 +1926,15 @@ class SnapshotSink:
             range_pred=lambda rng: _range_intersects(rng, lo, hi),
         )
         if df is None:
-            empty = self.spark.createDataFrame([], target).drop(
-                *[c for c in _INTERNAL if c in target.fieldNames()]
-            )
-            if columns is not None:
-                ordered = [c for c in dict.fromkeys(columns) if c != KEY]
-                return empty.select(KEY, *ordered)
-            return empty
+            return self._live_rows(None, target, columns)
         pred = F.lit(True)
         if lo is not None:
             pred = pred & (F.col(KEY) >= F.lit(lo))
         if hi is not None:
             pred = pred & (F.col(KEY) <= F.lit(hi))
-        state = self._fold(df.filter(pred), KEY, SEQ)
-        if columns is not None:
-            ordered = [c for c in dict.fromkeys(columns) if c != KEY]
-            return state.filter(~F.col("deleted")).select(KEY, *ordered)
-        payload = [c for c in state.columns if c not in _INTERNAL and c != KEY]
-        return state.filter(~F.col("deleted")).select(KEY, *payload)
+        return self._live_rows(
+            self._fold(df.filter(pred), KEY, SEQ), target, columns
+        )
 
     def plan_scan_where(
         self, predicates: list[tuple], version: int | str | None = None
@@ -2010,26 +2052,11 @@ class SnapshotSink:
             else None
         )
         if df is None:
-            empty = self.spark.createDataFrame([], target).drop(
-                *[c for c in _INTERNAL if c in target.fieldNames()]
-            )
-            if columns is not None:
-                ordered = [c for c in dict.fromkeys(columns) if c != KEY]
-                return empty.select(KEY, *ordered)
-            return empty
-        state = self._fold(df, KEY, SEQ)
+            return self._live_rows(None, target, columns)
         pred = F.lit(True)
         for c, op, v in preds:
             pred = pred & _conjunct_expr(c, op, v)
-        if columns is not None:
-            ordered = [c for c in dict.fromkeys(columns) if c != KEY]
-            return (
-                state.filter(~F.col("deleted")).filter(pred).select(KEY, *ordered)
-            )
-        payload = [c for c in state.columns if c not in _INTERNAL and c != KEY]
-        return (
-            state.filter(~F.col("deleted")).filter(pred).select(KEY, *payload)
-        )
+        return self._live_rows(self._fold(df, KEY, SEQ), target, columns, pred)
 
     @staticmethod
     def _check_scan_predicates(predicates) -> list[tuple]:
@@ -2105,7 +2132,7 @@ class SnapshotSink:
             return {"batch_id": batch_id, "skipped": True, "reason": "already committed"}
         compact_candidates: list[int] = []
         try:
-            return self._plan_and_apply(
+            return self._run_and_publish(
                 batch_df, batch_id, snap, compact_candidates, t0
             )
         finally:
@@ -2113,7 +2140,7 @@ class SnapshotSink:
                 self._compacting -= set(compact_candidates)
                 self._inflight.discard(batch_id)
 
-    def _plan_and_apply(
+    def _run_and_publish(
         self, batch_df: DataFrame, batch_id: str, snap: dict | None,
         compact_candidates: list[int], t0: float,
     ) -> dict:
@@ -2173,24 +2200,13 @@ class SnapshotSink:
         }
         # Reused (crash-replayed) compacted buckets: what they folded is
         # read from THEIR manifest (recorded at the crashed attempt's
-        # plan time) inside _run_and_publish — recomputing it from the
-        # replay-time head would also swallow deltas other batches
+        # plan time) inside _publish_and_commit — recomputing it from
+        # the replay-time head would also swallow deltas other batches
         # committed after the crash and silently drop them (found by
         # review repro). Manifests without the field (append deltas,
         # legacy) fold nothing: keeping extra entries only duplicates
         # rows, which the LWW read fold de-duplicates.
 
-        return self._run_and_publish(
-            batch_df, batch_id, snap, events, table_schema,
-            batch_payload_schema, manifested, compact_candidates,
-            consumed_paths, t0,
-        )
-
-    def _run_and_publish(
-        self, batch_df, batch_id, snap, events, table_schema,
-        batch_payload_schema, manifested, compact_candidates,
-        consumed_paths, t0,
-    ) -> dict:
         # the ENTIRE batch dataflow is ONE Spark job:
         #   scan batch → union with (delta files of compactable buckets,
         #   semi-joined to the batch's touched buckets) → single
@@ -2293,22 +2309,13 @@ class SnapshotSink:
             merge_in.drop("_bucket"), KEY, SEQ, salt_partials=self.salt_partials
         ).withColumn("_bucket", _bucket_expr(self.n_buckets))
 
-        staging = os.path.join(self.root, "data", f"_stage-{uuid.uuid4().hex}")
         t_plan = time.time()
-        self._file_options(
-            merged.repartition(self.n_buckets, "_bucket")
-            .write.mode("overwrite")
-            .partitionBy("_bucket")
-        ).parquet(staging)
-        t_job = time.time()
-        self.crash_hook("after_data_write")
-
-        # touched buckets = the partition dirs the job actually wrote
-        written = sorted(
-            int(d.split("=", 1)[1])
-            for d in os.listdir(staging)
-            if d.startswith("_bucket=")
+        staging, stats, t_job = self._stage_buckets(
+            merged.repartition(self.n_buckets, "_bucket"),
+            after_write=lambda: self.crash_hook("after_data_write"),
         )
+        # touched buckets = the partition dirs the job actually wrote
+        written = sorted(stats)
         metrics: dict = {
             "batch_id": batch_id,
             "skipped": False,
@@ -2317,22 +2324,6 @@ class SnapshotSink:
             "appended_buckets": [b for b in written if b not in compact_candidates],
             "reused_buckets": sorted(manifested),
         }
-        # footer stats in parallel, on the STAGED dirs — basenames
-        # survive the directory move, and reading them here keeps the
-        # slowest publish step OUTSIDE the commit critical section
-        with ThreadPoolExecutor(max_workers=min(16, max(1, len(written)))) as ex:
-            stats = dict(
-                zip(
-                    written,
-                    ex.map(
-                        lambda b: _parquet_stats(
-                            os.path.join(staging, f"_bucket={b}")
-                        ),
-                        written,
-                    ),
-                )
-            ) if written else {}
-
         # write-audit-publish: the gate runs on the STAGED files — the
         # real post-dedup, schema-aligned bytes about to be committed —
         # before any manifest or pointer moves. A violation aborts
@@ -2367,16 +2358,70 @@ class SnapshotSink:
                 ),
             }
         return self._publish_and_commit(
-            staging, batch_id, snap, batch_payload_schema,
-            _payload_ddl(table_schema), written, stats, manifested,
-            compact_candidates, consumed_paths, metrics, t0, t_plan,
-            t_job,
+            staging, batch_id, snap, stats, metrics,
+            entry_ddl=_ddl(table_schema),
+            phases=(t0, t_plan, t_job),
+            batch_payload_schema=batch_payload_schema,
+            manifested=manifested,
+            folded=consumed_paths,
         )
 
+    def _stage_buckets(self, df: DataFrame, after_write=None):
+        """The staged write every data rewrite shares (ingest, compaction
+        / rewrite, rebucket): ``df`` — already partitioned (and sorted)
+        by its ``_bucket`` column — lands as ``_bucket=N/`` dirs under a
+        fresh ``data/_stage-*`` dir with the sink's file options, then
+        every written bucket's footer stats are read in parallel.
+        Reading them on the STAGED dirs is safe (basenames survive the
+        directory move) and keeps the slowest publish step outside the
+        commit critical section. ``after_write`` runs right after the
+        write job (ingest's crash point). Returns ``(staging, {bucket:
+        _parquet_stats}, write-job end time)``."""
+        staging = os.path.join(self.root, "data", f"_stage-{uuid.uuid4().hex}")
+        self._file_options(
+            df.write.mode("overwrite").partitionBy("_bucket")
+        ).parquet(staging)
+        t_written = time.time()
+        if after_write is not None:
+            after_write()
+        written = [
+            int(d.split("=", 1)[1])
+            for d in os.listdir(staging)
+            if d.startswith("_bucket=")
+        ]
+        with ThreadPoolExecutor(max_workers=min(16, max(1, len(written)))) as ex:
+            stats = dict(zip(written, ex.map(
+                lambda b: _parquet_stats(os.path.join(staging, f"_bucket={b}")),
+                written,
+            )))
+        return staging, stats, t_written
+
+    def _move_staged(self, staging: str, buckets, tag: str) -> dict[int, str]:
+        """Publish a rewrite's staged ``_bucket=N`` dirs as
+        ``data/ingest=<tag>/bucket=N`` (rewrite tags are unique per
+        call, so a pre-existing dest is a crashed attempt's leftover)
+        and drop the staging dir. Returns bucket → table-relative path.
+        Ingest moves its own: its dest paths are deterministic per batch
+        id and may be referenced by the head or a tag."""
+        dest_root = os.path.join(self.root, "data", f"ingest={tag}")
+        os.makedirs(dest_root, exist_ok=True)
+        os.utime(dest_root)  # same vacuum-rmdir race guard as publish
+        paths = {}
+        for b in buckets:
+            dest = os.path.join(dest_root, f"bucket={b}")
+            if os.path.isdir(dest):
+                shutil.rmtree(dest)
+            os.replace(os.path.join(staging, f"_bucket={b}"), dest)
+            paths[b] = os.path.relpath(dest, self.root)
+        shutil.rmtree(staging, ignore_errors=True)
+        return paths
+
     def _publish_and_commit(
-        self, staging, batch_id, snap, batch_payload_schema,
-        schema_ddl_payload, written, stats, manifested,
-        compact_candidates, consumed_paths, metrics, t0, t_plan, t_job,
+        self, staging: str, batch_id: str, snap: dict | None, stats: dict,
+        metrics: dict, *, entry_ddl: str, phases: tuple,
+        batch_payload_schema: T.StructType | None = None,
+        manifested: set[int] = frozenset(),
+        folded: dict[str, set[str]] | None = None,
         bootstrap_schema_ddl: str | None = None,
         head_check=None,
     ) -> dict:
@@ -2395,9 +2440,19 @@ class SnapshotSink:
         (sources/spark_datasource.py) calls it from a worker process
         with no JVM, passing ``batch_payload_schema=None`` (schema
         kept verbatim — see _commit_locked) — the commit protocol is
-        SHARED with the sink, not twinned. ``staging`` holds the
-        batch laid out as ``_bucket=N/`` subdirs; ``stats`` maps each
-        written bucket to its _parquet_stats tuple."""
+        SHARED with the sink, not twinned.
+
+        ``staging`` holds the batch laid out as ``_bucket=N/`` subdirs;
+        ``stats`` maps each written bucket to its _parquet_stats tuple;
+        ``metrics`` is the commit's metrics dict (returned, completed);
+        ``entry_ddl`` is the schema the staged files were written with;
+        ``phases`` = (start, plan end, write-job end) times. Inline
+        compaction / crash replay only (the DS writer leaves them
+        empty): ``manifested`` = buckets reused from a crashed attempt's
+        manifests, ``folded`` = compacted bucket → the delta paths its
+        fold consumed (a bucket listed here is a compaction)."""
+        folded = dict(folded or {})
+        t0, t_plan, t_job = phases
         new_entries: dict[str, dict] = {}
         bucket_rows: dict[int, int] = {}
         dest_root = os.path.join(self.root, "data", f"ingest={batch_id}")
@@ -2489,7 +2544,7 @@ class SnapshotSink:
             skipped_live: set[int] = set()
             dests: dict[int, str] = {}
             alt_root = None
-            for b in written:
+            for b in sorted(stats):
                 src_dir = os.path.join(staging, f"_bucket={b}")
                 dest = os.path.join(dest_root, f"bucket={b}")
                 if os.path.relpath(dest, self.root) in head_live:
@@ -2510,26 +2565,23 @@ class SnapshotSink:
                     shutil.rmtree(dest)  # crashed, un-manifested attempt
                 os.replace(src_dir, dest)
                 dests[b] = os.path.relpath(dest, self.root)
-            written = [b for b in written if b not in skipped_live]
-            for b in written:
-                rows, files, key_range, file_ranges, col_ranges = stats[b]
-                bucket_rows[b] = rows
+            for b in sorted(set(stats) - skipped_live):
+                # the ACTUAL published dir (may be an alternate root
+                # when the deterministic path was pinned by a tag) —
+                # crash-replay relinks the manifest's copy
+                entry = _entry(dests[b], entry_ddl, stats[b], str(b) in folded)
+                bucket_rows[b] = stats[b][0]
+                # the manifest is the entry plus what crash-replay reuse
+                # needs (see _manifested_buckets)
                 self._write_manifest(
                     batch_id,
                     b,
                     {
                         "batch_id": batch_id,
                         "bucket": b,
-                        "rows": rows,
-                        "files": files,
-                        # KEY [min, max] from the staged footers — scan
-                        # planning (lookup/scan_range) skips the entry
-                        # when a probe can't be inside it, and single
-                        # files within it via the per-file ranges
-                        "key_range": key_range,
-                        "file_ranges": file_ranges,
-                        "col_ranges": col_ranges,
-                        "schema": schema_ddl_payload,
+                        "rows": stats[b][0],
+                        "files": stats[b][1],
+                        **entry,
                         # the bucket space this file was numbered in — a
                         # rebucket invalidates it for crash-replay reuse
                         "n_buckets": self.n_buckets,
@@ -2537,48 +2589,35 @@ class SnapshotSink:
                         # rollback invalidates it likewise (the folded
                         # file may embed de-committed rows)
                         "rollback_epoch": plan_epoch,
-                        "compacted": b in compact_candidates,
-                        # the ACTUAL published dir (may be an alternate
-                        # root when the deterministic path was pinned
-                        # by a tag) — crash-replay relinks this
-                        "path": dests[b],
                         # exactly the delta files this compaction folded
                         # — a crash-replay reusing this manifest must
                         # replace ONLY these at commit, never the
                         # then-current list
-                        "folded": sorted(consumed_paths.get(str(b), set())),
+                        "folded": sorted(folded.get(str(b), set())),
                         "ts": time.time(),
                     },
                 )
                 self.crash_hook("after_manifest")
-                new_entries[str(b)] = {
-                    "path": dests[b],
-                    "schema": schema_ddl_payload,
-                    "compacted": b in compact_candidates,
-                    "key_range": key_range,
-                    "file_ranges": file_ranges,
-                    "col_ranges": col_ranges,
-                }
+                new_entries[str(b)] = entry
             shutil.rmtree(staging, ignore_errors=True)
             for b in sorted(manifested):
                 with open(self._manifest_path(batch_id, b)) as fh:
                     m = json.load(fh)
                 bucket_rows[b] = m["rows"]
-                new_entries[str(b)] = {
-                    "path": m.get(
+                new_entries[str(b)] = _entry(
+                    m.get(
                         "path",
                         os.path.join("data", f"ingest={batch_id}", f"bucket={b}"),
                     ),
-                    "schema": m["schema"],
-                    "compacted": m.get("compacted", False),
-                    "key_range": m.get("key_range"),
-                    "file_ranges": m.get("file_ranges"),
-                    "col_ranges": m.get("col_ranges"),
-                }
+                    m["schema"],
+                    (m["rows"], m.get("files"), m.get("key_range"),
+                     m.get("file_ranges"), m.get("col_ranges")),
+                    m.get("compacted", False),
+                )
                 # consume exactly what the crashed attempt recorded it
                 # folded (may be absent in legacy manifests → fold
                 # nothing, duplicates are LWW-idempotent)
-                consumed_paths[str(b)] = set(m.get("folded", []))
+                folded[str(b)] = set(m.get("folded", []))
 
             metrics["phase_s"] = {
                 "plan": round(t_plan - t0, 3),
@@ -2588,7 +2627,7 @@ class SnapshotSink:
             metrics["bucket_rows"] = bucket_rows
             self._commit_locked(
                 head, batch_id, batch_payload_schema, new_entries,
-                consumed_paths, metrics, t0,
+                folded, metrics, t0,
                 bootstrap_schema_ddl=bootstrap_schema_ddl,
             )
         return metrics
@@ -2667,7 +2706,6 @@ class SnapshotSink:
             schema_str = _ddl(table_schema)
         buckets = {} if head is None else dict(head["buckets"])
         committed = [] if head is None else list(head["committed_batches"])
-        version = 0 if head is None else head["version"]
         for key_b, entry in new_entries.items():
             cur = list(buckets.get(key_b, []))
             if entry["compacted"]:
@@ -2687,26 +2725,15 @@ class SnapshotSink:
                 buckets[key_b] = cur + [entry]
         metrics["schema_ddl"] = ddl_log
         metrics["schema_version"] = schema_version
-        metrics["wall_s"] = round(time.time() - t0, 4)
-        metrics["commit_ts"] = time.time()
-        new_snap = {
-            "version": version + 1,
-            "n_buckets": self.n_buckets,
-            "schema": schema_str,
-            "schema_version": schema_version,
-            "buckets": buckets,
-            "committed_batches": committed + [batch_id],
-            "parent": None if head is None else head["version"],
-            "tombstone_floor": 0 if head is None else head.get("tombstone_floor", 0),
-            "snapshot_floor": 1 if head is None else head.get("snapshot_floor", 1),
-            "rollback_epoch": 0 if head is None else head.get("rollback_epoch", 0),
-            "patch": self.patch,
-            # table-level write contract (set_table_audit) — a
-            # per-table property every commit carries forward
-            "audit": None if head is None else head.get("audit"),
-            "metrics": {k: v for k, v in metrics.items() if k != "lineage"},
-        }
-        self._write_snapshot(new_snap)
+        self._commit_next(
+            head,
+            metrics,
+            t0,
+            schema=schema_str,
+            schema_version=schema_version,
+            buckets=buckets,
+            committed_batches=committed + [batch_id],
+        )
         with open(os.path.join(self.root, "_metrics", "commits.jsonl"), "a") as fh:
             fh.write(json.dumps(metrics) + "\n")
 
@@ -2952,79 +2979,47 @@ class SnapshotSink:
             self._rebucketing = True
             self._inflight.add(tag)  # shields staging/ingest dirs from vacuum
         try:
-            return self._rebucket_run(snap, new_n_buckets, tag, t0)
+            table_schema = T.StructType.fromDDL(snap["schema"])
+            old_buckets = [int(b) for b in snap["buckets"]]
+            raw = self._read_buckets(snap, old_buckets, target=table_schema)
+            moved: dict[str, list] = {}
+            if raw is not None:
+                folded = self._fold(raw, KEY, SEQ)
+                ff = self._floor_filter(snap)
+                if ff is not None:
+                    folded = folded.filter(ff)  # GC stickiness at every fold
+                folded = folded.withColumn("_bucket", _bucket_expr(new_n_buckets))
+                staging, stats, _ = self._stage_buckets(
+                    folded.repartition(new_n_buckets, "_bucket")
+                    .sortWithinPartitions("_bucket", KEY)
+                )
+                ddl = _ddl(table_schema)
+                for b, path in self._move_staged(staging, sorted(stats), tag).items():
+                    moved[str(b)] = [_entry(path, ddl, stats[b], True)]
+            with self._commit_lock, self._table_lock():
+                head = self.current_snapshot()
+                if head["version"] != snap["version"]:
+                    # a cross-object batch committed mid-rebucket: its
+                    # rows are NOT in the rewrite — publishing would lose
+                    # them. Abort; the moved files are unreferenced
+                    # orphans for vacuum. (Same-object writers were
+                    # rejected at entry.)
+                    raise RuntimeError(
+                        f"concurrent commit v{head['version']} during rebucket "
+                        f"of v{snap['version']}; quiesce writers and retry"
+                    )
+                self._commit_next(
+                    head,
+                    {"rebucket": {"from": snap["n_buckets"], "to": new_n_buckets}},
+                    t0,
+                    n_buckets=new_n_buckets,
+                    buckets=moved,
+                )
+                self.n_buckets = new_n_buckets
         finally:
             with self._commit_lock:
                 self._rebucketing = False
                 self._inflight.discard(tag)
-
-    def _rebucket_run(self, snap, new_n_buckets, tag, t0) -> dict:
-        table_schema = T.StructType.fromDDL(snap["schema"])
-        old_buckets = [int(b) for b in snap["buckets"]]
-        raw = self._read_buckets(snap, old_buckets, target=table_schema)
-        staging = os.path.join(self.root, "data", f"_stage-{uuid.uuid4().hex}")
-        dest_root = os.path.join(self.root, "data", f"ingest={tag}")
-        moved: dict[str, list] = {}
-        ddl = _ddl(table_schema)
-        if raw is not None:
-            folded = self._fold(raw, KEY, SEQ)
-            ff = self._floor_filter(snap)
-            if ff is not None:
-                folded = folded.filter(ff)  # GC stickiness at every fold
-            folded = folded.withColumn("_bucket", _bucket_expr(new_n_buckets))
-            self._file_options(
-                folded.repartition(new_n_buckets, "_bucket")
-                .sortWithinPartitions("_bucket", KEY)
-                .write.mode("overwrite")
-                .partitionBy("_bucket")
-            ).parquet(staging)
-            os.makedirs(dest_root, exist_ok=True)
-            os.utime(dest_root)
-            for d in sorted(os.listdir(staging)):
-                if not d.startswith("_bucket="):
-                    continue
-                b = int(d.split("=", 1)[1])
-                dest = os.path.join(dest_root, f"bucket={b}")
-                if os.path.isdir(dest):
-                    shutil.rmtree(dest)
-                _, _, key_range, file_ranges, col_ranges = _parquet_stats(
-                    os.path.join(staging, d)
-                )
-                os.replace(os.path.join(staging, d), dest)
-                moved[str(b)] = [
-                    {"path": os.path.relpath(dest, self.root), "schema": ddl,
-                     "compacted": True, "key_range": key_range,
-                     "file_ranges": file_ranges, "col_ranges": col_ranges}
-                ]
-            shutil.rmtree(staging, ignore_errors=True)
-        with self._commit_lock, self._table_lock():
-            head = self.current_snapshot()
-            if head["version"] != snap["version"]:
-                # a cross-object batch committed mid-rebucket: its rows
-                # are NOT in the rewrite — publishing would lose them.
-                # Abort; the moved files are unreferenced orphans for
-                # vacuum. (Same-object writers were rejected at entry.)
-                raise RuntimeError(
-                    f"concurrent commit v{head['version']} during rebucket "
-                    f"of v{snap['version']}; quiesce writers and retry"
-                )
-            new_snap = dict(head)
-            new_snap.update(
-                {
-                    "version": head["version"] + 1,
-                    "n_buckets": new_n_buckets,
-                    "buckets": moved,
-                    "parent": head["version"],
-                    "metrics": {
-                        "rebucket": {
-                            "from": snap["n_buckets"], "to": new_n_buckets
-                        },
-                        "wall_s": round(time.time() - t0, 3),
-                    },
-                }
-            )
-            self._write_snapshot(new_snap)
-            self.n_buckets = new_n_buckets
         return {
             "rebucketed": True,
             "from": snap["n_buckets"],
@@ -3093,16 +3088,9 @@ class SnapshotSink:
                     "max_n_tok": max_n_tok,
                 }
             }
-            new_snap = dict(head)
-            new_snap.update(
-                {
-                    "version": head["version"] + 1,
-                    "parent": head["version"],
-                    "audit": cfg,
-                    "metrics": {"set_table_audit": cfg["standard"]},
-                }
+            new_snap = self._commit_next(
+                head, {"set_table_audit": cfg["standard"]}, audit=cfg
             )
-            self._write_snapshot(new_snap)
         return {"version": new_snap["version"], "audit": cfg}
 
     def drop_table_audit(self) -> dict:
@@ -3115,16 +3103,9 @@ class SnapshotSink:
                 raise ValueError("no snapshot yet")
             if not head.get("audit"):
                 return {"version": head["version"], "audit": None}
-            new_snap = dict(head)
-            new_snap.update(
-                {
-                    "version": head["version"] + 1,
-                    "parent": head["version"],
-                    "audit": None,
-                    "metrics": {"drop_table_audit": True},
-                }
+            new_snap = self._commit_next(
+                head, {"drop_table_audit": True}, audit=None
             )
-            self._write_snapshot(new_snap)
         return {"version": new_snap["version"], "audit": None}
 
     def _table_audit_fn(self, snap: dict | None):
@@ -3191,19 +3172,11 @@ class SnapshotSink:
                 shutil.rmtree(
                     os.path.join(self.root, "_manifests", bid), ignore_errors=True
                 )
-            new_snap = dict(head)
-            new_snap.update(
-                {
-                    "version": head["version"] + 1,
-                    "committed_batches": batches[len(dropped):],
-                    "parent": head["version"],
-                    "metrics": {
-                        "trim_committed": len(dropped),
-                        "retained": retain_last,
-                    },
-                }
+            new_snap = self._commit_next(
+                head,
+                {"trim_committed": len(dropped), "retained": retain_last},
+                committed_batches=batches[len(dropped):],
             )
-            self._write_snapshot(new_snap)
         return {"trimmed": len(dropped), "version": new_snap["version"]}
 
     def expire_snapshots(self, keep_last: int) -> dict:
@@ -3293,17 +3266,11 @@ class SnapshotSink:
                     ),
                     "snapshot_floor": cur_floor,
                 }
-            new_snap = dict(head)
-            new_snap.update(
-                {
-                    "version": head["version"] + 1,
-                    "parent": head["version"],
-                    "snapshot_floor": floor,
-                    "metrics": {"expire_snapshots": True,
-                                "snapshot_floor": floor},
-                }
+            new_snap = self._commit_next(
+                head,
+                {"expire_snapshots": True, "snapshot_floor": floor},
+                snapshot_floor=floor,
             )
-            self._write_snapshot(new_snap)
             # sweep the DIRECTORY, not the [old floor, new floor)
             # range: a version kept below the old floor only because a
             # tag pinned it (since dropped) would otherwise leak
@@ -3535,17 +3502,12 @@ class SnapshotSink:
                         f"v{head['version']} during the {label} — re-run "
                         "the alter against the new head"
                     )
-                new_snap = dict(head)
-                new_snap.update(
-                    {
-                        "version": head["version"] + 1,
-                        "parent": head["version"],
-                        "schema": _ddl(final),
-                        "schema_version": head.get("schema_version", 0) + 1,
-                        "metrics": {label: [], **extra},
-                    }
+                self._commit_next(
+                    head,
+                    {label: [], **extra},
+                    schema=_ddl(final),
+                    schema_version=head.get("schema_version", 0) + 1,
                 )
-                self._write_snapshot(new_snap)
             return {"compacted": [], "op": label, **extra}
         # row_filter=lit(True) is a no-op filter whose presence makes a
         # bucket that folds to ZERO rows (all tombstones under the GC
@@ -3751,234 +3713,203 @@ class SnapshotSink:
         with self._commit_lock:
             self._inflight.add(tag)
         try:
-            return self._rewrite_buckets_run(
-                snap, todo, row_filter, tag, t0, floor, transform,
-                op_label, backfill_name, project, final_schema,
-                extra_metrics, cluster_by, zorder_col,
+            table_schema = T.StructType.fromDDL(snap["schema"])
+            folded = self._fold(
+                self._read_buckets(snap, todo, target=table_schema), KEY, SEQ
             )
-        finally:
-            with self._commit_lock:
-                self._compacting -= set(todo)
-                self._inflight.discard(tag)
-
-    def _rewrite_buckets_run(
-        self, snap, todo, row_filter, tag, t0, floor: int | None = None,
-        transform: dict | None = None, op_label: str = "compaction",
-        backfill_name: str | None = None, project=None,
-        final_schema: T.StructType | None = None,
-        extra_metrics: dict | None = None, cluster_by: list[str] | None = None,
-        zorder_col=None,
-    ) -> dict:
-        table_schema = T.StructType.fromDDL(snap["schema"])
-        folded = self._fold(
-            self._read_buckets(snap, todo, target=table_schema), KEY, SEQ
-        )
-        if row_filter is not None:
-            folded = folded.filter(row_filter)
-        ff = self._floor_filter(snap)
-        if ff is not None:
-            folded = folded.filter(ff)  # GC stickiness at every fold
-        if transform:
-            for cname, expr in transform.items():
-                # dtype probe so a tombstone's NULL (or the column's
-                # prior value) lands with the expression's exact type
-                dtype = folded.withColumn(cname, expr).schema[cname].dataType
-                keep = (
-                    F.col(cname).cast(dtype)
-                    if cname in folded.columns
-                    else F.lit(None).cast(dtype)
-                )
-                folded = folded.withColumn(
-                    cname, F.when(~F.col("deleted"), expr).otherwise(keep)
-                )
-            if self.patch:
-                # per-cell mode: stamp every transformed column's cell
-                # with the row's current op_sequence as setter — without
-                # a _cell_seq entry the next fold would treat the cell
-                # as never-set and null it. A later patch/upsert (higher
-                # seq) overrides the backfilled value, which is the
-                # backfill contract (changelog-silent derived columns).
-                names = list(transform)
-                upd = F.map_from_arrays(
-                    F.array(*[F.lit(c) for c in names]),
-                    F.array_repeat(F.col(SEQ).cast("long"), len(names)),
-                )
-                empty = F.map_from_arrays(
-                    F.array().cast("array<string>"),
-                    F.array().cast("array<bigint>"),
-                )
-                folded = folded.withColumn(
-                    CELL,
-                    F.map_concat(
-                        F.map_filter(
-                            F.coalesce(F.col(CELL), empty),
-                            lambda k, _v: ~k.isin(*names),
+            if row_filter is not None:
+                folded = folded.filter(row_filter)
+            ff = self._floor_filter(snap)
+            if ff is not None:
+                folded = folded.filter(ff)  # GC stickiness at every fold
+            if transform:
+                for cname, expr in transform.items():
+                    # dtype probe so a tombstone's NULL (or the column's
+                    # prior value) lands with the expression's exact type
+                    dtype = folded.withColumn(cname, expr).schema[cname].dataType
+                    keep = (
+                        F.col(cname).cast(dtype)
+                        if cname in folded.columns
+                        else F.lit(None).cast(dtype)
+                    )
+                    folded = folded.withColumn(
+                        cname, F.when(~F.col("deleted"), expr).otherwise(keep)
+                    )
+                if self.patch:
+                    # per-cell mode: stamp every transformed column's
+                    # cell with the row's current op_sequence as setter —
+                    # without a _cell_seq entry the next fold would treat
+                    # the cell as never-set and null it. A later
+                    # patch/upsert (higher seq) overrides the backfilled
+                    # value, which is the backfill contract
+                    # (changelog-silent derived columns).
+                    names = list(transform)
+                    upd = F.map_from_arrays(
+                        F.array(*[F.lit(c) for c in names]),
+                        F.array_repeat(F.col(SEQ).cast("long"), len(names)),
+                    )
+                    empty = F.map_from_arrays(
+                        F.array().cast("array<string>"),
+                        F.array().cast("array<bigint>"),
+                    )
+                    folded = folded.withColumn(
+                        CELL,
+                        F.map_concat(
+                            F.map_filter(
+                                F.coalesce(F.col(CELL), empty),
+                                lambda k, _v: ~k.isin(*names),
+                            ),
+                            upd,
                         ),
-                        upd,
-                    ),
+                    )
+            if project is not None:
+                # column-set rewrite (drop/rename): the callable reshapes
+                # payload columns; internals (KEY/SEQ/deleted) must survive
+                folded = project(folded)
+            folded = folded.withColumn("_bucket", _bucket_expr(self.n_buckets))
+            # key-sorted within each bucket file: parquet row-group
+            # min/max stats on the key then let point lookups (lookup())
+            # skip row groups — the standard sorted-compaction layout;
+            # the sort rides the rewrite's existing shuffle. cluster_by
+            # columns (compact()) sort FIRST so row-group stats tighten
+            # on the payload columns scan_where() filters on; with
+            # zorder_col the Morton key replaces the lexicographic
+            # cluster sort (computed on the fly, dropped before write —
+            # the projection after the sort preserves partition order)
+            to_write = folded.repartition(self.n_buckets, "_bucket")
+            if zorder_col is not None:
+                to_write = (
+                    to_write.withColumn("_zval", zorder_col)
+                    .sortWithinPartitions("_bucket", "_zval", KEY)
+                    .drop("_zval")
                 )
-        if project is not None:
-            # column-set rewrite (drop/rename): the callable reshapes
-            # payload columns; internals (KEY/SEQ/deleted) must survive
-            folded = project(folded)
-        folded = folded.withColumn("_bucket", _bucket_expr(self.n_buckets))
-        staging = os.path.join(self.root, "data", f"_stage-{uuid.uuid4().hex}")
-        # key-sorted within each bucket file: parquet row-group
-        # min/max stats on the key then let point lookups (lookup())
-        # skip row groups — the standard sorted-compaction layout;
-        # the sort rides the rewrite's existing shuffle. cluster_by
-        # columns (compact()) sort FIRST so row-group stats tighten
-        # on the payload columns scan_where() filters on; with
-        # zorder_col the Morton key replaces the lexicographic
-        # cluster sort (computed on the fly, dropped before write —
-        # the projection after the sort preserves partition order)
-        to_write = folded.repartition(self.n_buckets, "_bucket")
-        if zorder_col is not None:
-            to_write = (
-                to_write.withColumn("_zval", zorder_col)
-                .sortWithinPartitions("_bucket", "_zval", KEY)
-                .drop("_zval")
+            else:
+                to_write = to_write.sortWithinPartitions(
+                    "_bucket", *(cluster_by or []), KEY
+                )
+            staging, stats, _ = self._stage_buckets(to_write)
+            # entries record the schema the FILES were written with — for
+            # a transforming rewrite (backfill) that includes the
+            # new/replaced columns; untouched buckets keep their old
+            # entries and are aligned at read time like any schema
+            # evolution. Parquet reads match columns BY NAME, but the
+            # recorded DDL string keys the read-side schema grouping —
+            # non-transform rewrites keep the table-schema string so
+            # compacted and appended entries stay in ONE scan group
+            written_schema = (
+                T.StructType(
+                    [f for f in folded.schema.fields if f.name != "_bucket"]
+                )
+                if transform or project is not None
+                else table_schema
             )
-        else:
-            to_write = to_write.sortWithinPartitions(
-                "_bucket", *(cluster_by or []), KEY
+            ddl = _ddl(written_schema)
+            # the sort this entry's files carry — compact()'s cron
+            # idempotence skip keys on it (and on the zorder flag:
+            # linear vs Morton are different sorts)
+            sort_keys = (
+                {"clustered": list(cluster_by),
+                 **({"zorder": True} if zorder_col is not None else {})}
+                if cluster_by else {}
             )
-        self._file_options(
-            to_write.write.mode("overwrite").partitionBy("_bucket")
-        ).parquet(staging)
-        dest_root = os.path.join(self.root, "data", f"ingest={tag}")
-        os.makedirs(dest_root, exist_ok=True)
-        os.utime(dest_root)  # same vacuum-rmdir race guard as publish
-        # entries record the schema the FILES were written with — for a
-        # transforming rewrite (backfill) that includes the new/replaced
-        # columns; untouched buckets keep their old entries and are
-        # aligned at read time like any schema evolution. Parquet reads
-        # match columns BY NAME, but the recorded DDL string keys the
-        # read-side schema grouping — non-transform rewrites keep the
-        # table-schema string so compacted and appended entries stay in
-        # ONE scan group
-        written_schema = (
-            T.StructType([f for f in folded.schema.fields if f.name != "_bucket"])
-            if transform or project is not None
-            else table_schema
-        )
-        ddl = _ddl(written_schema)
-        moved: dict[str, list] = {}
-        for b in todo:
-            src_dir = os.path.join(staging, f"_bucket={b}")
-            if not os.path.isdir(src_dir):
-                # every row of the bucket was dropped (e.g. all expired
-                # tombstones): the rewrite leaves it EMPTY — but only a
-                # filtering rewrite may conclude that; plain compaction
-                # of a bucket never loses rows
-                if row_filter is not None:
+            paths = self._move_staged(staging, sorted(stats), tag)
+            moved: dict[str, list] = {}
+            for b in todo:
+                if b in paths:
+                    moved[str(b)] = [
+                        _entry(paths[b], ddl, stats[b], True, **sort_keys)
+                    ]
+                elif row_filter is not None:
+                    # every row of the bucket was dropped (e.g. all
+                    # expired tombstones): the rewrite leaves it EMPTY —
+                    # but only a filtering rewrite may conclude that;
+                    # plain compaction of a bucket never loses rows
                     moved[str(b)] = []
-                continue
-            dest = os.path.join(dest_root, f"bucket={b}")
-            if os.path.isdir(dest):
-                shutil.rmtree(dest)
-            _, _, key_range, file_ranges, col_ranges = _parquet_stats(src_dir)
-            os.replace(src_dir, dest)
-            moved[str(b)] = [
-                {"path": os.path.relpath(dest, self.root), "schema": ddl,
-                 "compacted": True, "key_range": key_range,
-                 "file_ranges": file_ranges, "col_ranges": col_ranges,
-                 # the sort this entry's files carry — compact()'s
-                 # cron idempotence skip keys on it (and on the
-                 # zorder flag: linear vs Morton are different sorts)
-                 **({"clustered": list(cluster_by),
-                     **({"zorder": True} if zorder_col is not None
-                        else {})}
-                    if cluster_by else {})}
-            ]
-        shutil.rmtree(staging, ignore_errors=True)
-        # publish under the commit lock (pipelined ingest may be
-        # appending concurrently): re-read the head and replace only the
-        # delta lists this rewrite actually folded — appends that landed
-        # since planning stay listed (duplicate rows across a fold and a
-        # kept delta are harmless: the LWW read fold is idempotent)
-        folded_paths = {
-            str(b): {e["path"] for e in snap["buckets"].get(str(b), [])}
-            for b in todo
-        }
-        with self._commit_lock, self._table_lock():
-            head = self.current_snapshot()
-            if head["n_buckets"] != self.n_buckets:
-                raise RuntimeError(
-                    f"table was rebucketed to {head['n_buckets']} buckets "
-                    f"mid-rewrite (planned with {self.n_buckets}); reopen "
-                    "the sink and re-run the rewrite"
-                )
-            if head.get("rollback_epoch", 0) != snap.get("rollback_epoch", 0):
-                # a cross-object rollback landed mid-rewrite: this fold
-                # was planned from the pre-rollback head and would
-                # re-publish de-committed rows
-                raise RuntimeError(
-                    "table rolled back mid-rewrite; re-run it against "
-                    "the restored head"
-                )
-            if final_schema is not None and head["version"] != snap["version"]:
-                # column alters ENFORCE the quiesce contract: any commit
-                # that landed mid-alter (a batch evolving the schema, a
-                # concurrent rewrite) would have its kept deltas read
-                # under the alter's stale final_schema — an evolved
-                # column erased table-wide, or old-name bytes retained
-                # under entries the schema no longer covers
-                # (resurrection). Nothing was committed; re-run.
-                raise RuntimeError(
-                    f"table advanced from v{snap['version']} to "
-                    f"v{head['version']} during the {op_label} — column "
-                    "alters require quiesced writers; re-run the alter"
-                )
-            new_buckets = dict(head["buckets"])
-            for key_b, entries in moved.items():
-                kept = [
-                    e
-                    for e in new_buckets.get(key_b, [])
-                    if e["path"] not in folded_paths.get(key_b, set())
-                ]
-                new_buckets[key_b] = entries + kept
-            metrics = {op_label: todo, "wall_s": round(time.time() - t0, 3)}
-            if backfill_name is not None:
-                metrics["backfill_name"] = backfill_name
-            if extra_metrics:
-                metrics.update(extra_metrics)
-            new_snap = dict(head)
-            new_snap.update(
-                {
-                    "version": head["version"] + 1,
+            # publish under the commit lock (pipelined ingest may be
+            # appending concurrently): re-read the head and replace only
+            # the delta lists this rewrite actually folded — appends that
+            # landed since planning stay listed (duplicate rows across a
+            # fold and a kept delta are harmless: the LWW read fold is
+            # idempotent)
+            folded_paths = {
+                str(b): {e["path"] for e in snap["buckets"].get(str(b), [])}
+                for b in todo
+            }
+            with self._commit_lock, self._table_lock():
+                head = self.current_snapshot()
+                if head["n_buckets"] != self.n_buckets:
+                    raise RuntimeError(
+                        f"table was rebucketed to {head['n_buckets']} buckets "
+                        f"mid-rewrite (planned with {self.n_buckets}); reopen "
+                        "the sink and re-run the rewrite"
+                    )
+                if head.get("rollback_epoch", 0) != snap.get("rollback_epoch", 0):
+                    # a cross-object rollback landed mid-rewrite: this
+                    # fold was planned from the pre-rollback head and
+                    # would re-publish de-committed rows
+                    raise RuntimeError(
+                        "table rolled back mid-rewrite; re-run it against "
+                        "the restored head"
+                    )
+                if final_schema is not None and head["version"] != snap["version"]:
+                    # column alters ENFORCE the quiesce contract: any
+                    # commit that landed mid-alter (a batch evolving the
+                    # schema, a concurrent rewrite) would have its kept
+                    # deltas read under the alter's stale final_schema —
+                    # an evolved column erased table-wide, or old-name
+                    # bytes retained under entries the schema no longer
+                    # covers (resurrection). Nothing was committed; re-run.
+                    raise RuntimeError(
+                        f"table advanced from v{snap['version']} to "
+                        f"v{head['version']} during the {op_label} — column "
+                        "alters require quiesced writers; re-run the alter"
+                    )
+                new_buckets = dict(head["buckets"])
+                for key_b, entries in moved.items():
+                    kept = [
+                        e
+                        for e in new_buckets.get(key_b, [])
+                        if e["path"] not in folded_paths.get(key_b, set())
+                    ]
+                    new_buckets[key_b] = entries + kept
+                metrics = {op_label: todo}
+                if backfill_name is not None:
+                    metrics["backfill_name"] = backfill_name
+                if extra_metrics:
+                    metrics.update(extra_metrics)
+                changes = {
                     "buckets": new_buckets,
-                    "parent": head["version"],
                     # monotone retention floor: every later fold
                     # re-drops tombstones below it (GC stickiness)
                     "tombstone_floor": max(
                         head.get("tombstone_floor", 0), floor or 0
                     ),
-                    "metrics": metrics,
                 }
-            )
-            if transform:
-                # a transforming rewrite can ADD columns: evolve the
-                # snapshot schema against the head exactly like an
-                # ingest batch would (add/widen only; incompatible
-                # changes raise here, before the pointer swap)
-                payload_schema = T.StructType(
-                    [f for f in written_schema.fields if f.name not in _INTERNAL]
-                )
-                evolved, _, schema_version = self._evolved_schema(
-                    head, payload_schema
-                )
-                new_snap["schema"] = _ddl(evolved)
-                new_snap["schema_version"] = schema_version
-            if final_schema is not None:
-                # column-set alter (drop/rename): the new schema is the
-                # operation's OUTPUT, not an add/widen evolution — set
-                # it directly and bump the schema epoch
-                new_snap["schema"] = _ddl(final_schema)
-                new_snap["schema_version"] = head.get("schema_version", 0) + 1
-            self._write_snapshot(new_snap)
-        # tag discarded by the caller's finally (published files are
-        # referenced by CURRENT from here on, so vacuum keeps them)
+                if transform:
+                    # a transforming rewrite can ADD columns: evolve the
+                    # snapshot schema against the head exactly like an
+                    # ingest batch would (add/widen only; incompatible
+                    # changes raise here, before the pointer swap)
+                    payload_schema = T.StructType(
+                        [f for f in written_schema.fields if f.name not in _INTERNAL]
+                    )
+                    evolved, _, changes["schema_version"] = self._evolved_schema(
+                        head, payload_schema
+                    )
+                    changes["schema"] = _ddl(evolved)
+                if final_schema is not None:
+                    # column-set alter (drop/rename): the new schema is
+                    # the operation's OUTPUT, not an add/widen evolution
+                    # — set it directly and bump the schema epoch
+                    changes["schema"] = _ddl(final_schema)
+                    changes["schema_version"] = head.get("schema_version", 0) + 1
+                self._commit_next(head, metrics, t0, **changes)
+        finally:
+            # published files are referenced by CURRENT from here on, so
+            # vacuum keeps them without the tag
+            with self._commit_lock:
+                self._compacting -= set(todo)
+                self._inflight.discard(tag)
         return {"compacted": todo, "wall_s": round(time.time() - t0, 3)}
 
     def vacuum(self, older_than_s: float = 0.0) -> dict:
@@ -4133,12 +4064,30 @@ class SnapshotSink:
             return [json.loads(line) for line in fh if line.strip()]
 
 
-def _payload_ddl(table_schema: T.StructType) -> str:
-    return _ddl(table_schema)
-
-
 def _ddl(schema: T.StructType) -> str:
     return ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in schema.fields)
+
+
+def _entry(path: str, ddl: str, stats: tuple, compacted: bool, **extra) -> dict:
+    """A snapshot's per-bucket commit entry — the one place its format
+    lives: the data dir (table-relative), the schema its files were
+    written with, whether it replaces the bucket's earlier entries (a
+    fold) or appends a delta, and the footer stats of ``stats`` (a
+    _parquet_stats tuple): the KEY [min, max] lets scan planning
+    (lookup / scan_range) skip the entry when a probe can't be inside
+    it, the per-file key ranges single files within it, the per-column
+    ranges whole buckets (scan_where). ``extra``: layout facts of a
+    rewrite (compact's ``clustered`` / ``zorder``)."""
+    _, _, key_range, file_ranges, col_ranges = stats
+    return {
+        "path": path,
+        "schema": ddl,
+        "compacted": compacted,
+        "key_range": key_range,
+        "file_ranges": file_ranges,
+        "col_ranges": col_ranges,
+        **extra,
+    }
 
 
 def _json_stat(v):

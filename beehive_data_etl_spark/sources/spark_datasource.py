@@ -836,6 +836,16 @@ class BeehiveBatchWriter(DataSourceArrowWriter):
       batch's payload must be a (subset of the) table payload with
       exactly matching types — evolve through the sink first.
 
+    The commit call is ``_publish_and_commit(staging, batch_id,
+    plan_snap, stats, metrics, entry_ddl=..., phases=(t0, t0, now),
+    bootstrap_schema_ddl=..., head_check=...)``: the staged
+    ``_bucket=N/`` dirs, footer stats per bucket, the commit metrics,
+    the schema the files were written with and the plan/write/publish
+    timing (no plan phase here). ``batch_payload_schema`` stays None
+    (the head's schema is kept verbatim, no JVM to parse DDL), and the
+    inline-compaction / crash-replay arguments (``manifested``,
+    ``folded``) stay empty: a DS write only appends deltas.
+
     Costs stated honestly: per-row Python key hashing unless the
     DataFrame carries a JVM-computed ``_bucket`` column
     (``pmod(xxhash64(doc_id), n_buckets)`` — recommended for bulk:
@@ -1208,9 +1218,9 @@ class BeehiveBatchWriter(DataSourceArrowWriter):
             "writer": "python-datasource",
         }
         sink._publish_and_commit(
-            self.staging, self.batch_id, self.plan_snap, None,
-            self.entry_ddl, written, stats, set(), [], {}, metrics,
-            self.t0, self.t0, time.time(),
+            self.staging, self.batch_id, self.plan_snap, stats, metrics,
+            entry_ddl=self.entry_ddl,
+            phases=(self.t0, self.t0, time.time()),
             bootstrap_schema_ddl=self.bootstrap_ddl,
             head_check=_head_check,
         )
