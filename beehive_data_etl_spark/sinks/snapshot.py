@@ -50,7 +50,6 @@ this file are bounded by ``n_buckets``, never by data volume.
 
 from __future__ import annotations
 
-import bisect
 import fcntl
 import glob
 import json
@@ -64,9 +63,12 @@ import uuid
 from concurrent.futures import ThreadPoolExecutor
 from contextlib import contextmanager
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from beehive_data_etl_spark.operators.lww import lww_dedup
 from beehive_data_etl_spark.operators.patch import (
@@ -78,6 +80,16 @@ from beehive_data_etl_spark.operators.patch import (
 from beehive_data_etl_spark.operators.schema_evolution import (
     align_to_schema,
     evolve_schema,
+)
+from beehive_data_etl_spark.sources import table_meta
+from beehive_data_etl_spark.sources.arrow_fold import (
+    BucketWork,
+    _bucket_files,
+    _range_may_contain,
+    read_changes_partition,
+    read_state_partition,
+    uncompressed_bytes,
+    window_partitions,
 )
 
 KEY = "doc_id"
@@ -1447,6 +1459,20 @@ class SnapshotSink:
         These are rare administrative ops, so the one O(state) pass is
         the documented cost.
 
+        Where the delta diff applies, a window of a row-LWW table is
+        answered on the driver, with no Spark job, by the Arrow diff
+        the ``beehive_changes`` source runs (``sources/arrow_fold.py``)
+        when it also: asks no pre-images (``include_old=False``); holds
+        no rebucket (the diff is per bucket); holds none of the commits
+        the changelog stream refuses (``table_meta.
+        unstreamable_window_reason``: a backfill or a column alter,
+        whose renamed FROM-state columns the Arrow diff does not
+        bridge); and its added files fit, by uncompressed footer bytes,
+        under ``spark.sql.execution.arrow.localRelationThreshold``, the
+        size Spark hands over as a local relation. Other windows run
+        the Spark diffs above: patch tables need the cell fold, and
+        the rest would otherwise bring the rows onto the driver.
+
         Change detection: row-LWW compares op_sequence (state changed ⇔
         row seq advanced). Per-cell mode ALSO compares the _cell_seq
         fingerprints — a late out-of-order patch (seq below the row's
@@ -1485,14 +1511,28 @@ class SnapshotSink:
         floor_moved = old_snap.get("tombstone_floor", 0) != new_snap.get(
             "tombstone_floor", 0
         )
+        window = self._window_metrics(from_version, to_version)
         full = (
             to_version < from_version
             or floor_moved
-            or any(
-                "purge" in m or "rollback_to" in m
-                for m in self._window_metrics(from_version, to_version)
-            )
+            or any("purge" in m or "rollback_to" in m for m in window)
         )
+        if (
+            not full
+            and not self.patch
+            and not include_old
+            and old_snap["n_buckets"] == new_snap["n_buckets"]
+            and table_meta.unstreamable_window_reason(
+                from_version, to_version, window
+            ) is None
+        ):
+            parts = window_partitions(self.root, old_snap, new_snap)
+            added = [f for p in parts for f in p.added_files]
+            # the rows out are at most the added files' rows: they must
+            # fit the local relation _local_frame builds
+            limit = self.spark._jconf.arrowLocalRelationThreshold()
+            if uncompressed_bytes(added) <= limit:
+                return self._driver_changes(parts, new_snap, columns)
         diff = self._state_diff if full else self._delta_diff
         return diff(
             from_version,
@@ -1510,6 +1550,51 @@ class SnapshotSink:
             self.snapshot(v).get("metrics", {})
             for v in range(from_version + 1, to_version + 1)
         ]
+
+    def _local_frame(self, table: pa.Table, schema: T.StructType) -> DataFrame:
+        """An Arrow table as a DataFrame of ``schema``, with no Spark
+        job: under spark.sql.execution.arrow.localRelationThreshold,
+        createDataFrame builds a LocalRelation that the driver answers
+        alone. The table always goes over as at least one (possibly
+        empty) batch: pyspark 4.1 cannot build a frame with an array
+        column from zero batches."""
+        batches = table.to_batches() or [
+            pa.RecordBatch.from_pylist([], schema=table.schema)
+        ]
+        return self.spark.createDataFrame(
+            pa.Table.from_batches(batches, table.schema), schema
+        )
+
+    def _driver_changes(
+        self, parts: list[BucketWork], new_snap: dict, columns: list[str] | None
+    ) -> DataFrame:
+        """``_delta_diff``'s rows from the Arrow fold on the driver: per
+        touched bucket, the FROM and TO winners of the keys the window's
+        added files hold, diffed by ``read_changes_partition``."""
+        target = self._projection_target(new_snap, columns)
+        _, keep = self._changes_schema(target, False, False)
+        schema = self._changes_struct(target, keep)
+        arrow_schema = to_arrow_schema(schema)
+        batches = [b for p in parts for b in read_changes_partition(p, arrow_schema)]
+        return self._local_frame(
+            pa.Table.from_batches(batches, arrow_schema), schema
+        )
+
+    @staticmethod
+    def _changes_struct(target: T.StructType, keep: list[str]) -> T.StructType:
+        """The changelog's output schema for ``_changes_schema``'s
+        column lists: target types, ``change_type`` a string, and each
+        ``_old_<col>`` typed like its column."""
+        by_name = {f.name: f for f in target.fields}
+
+        def field(c: str) -> T.StructField:
+            if c == "change_type":
+                return T.StructField(c, T.StringType())
+            if c in by_name:
+                return by_name[c]
+            return T.StructField(c, by_name[c.removeprefix("_old_")].dataType)
+
+        return T.StructType([field(c) for c in keep])
 
     def _changes_schema(
         self, target: T.StructType, include_old: bool, include_cells: bool
@@ -1648,17 +1733,8 @@ class SnapshotSink:
             if fresh:
                 fresh_buckets[b_str] = fresh
         if not fresh_buckets:
-            by_name = {f.name: f for f in target.fields}
-
-            def field(c: str) -> T.StructField:
-                if c == "change_type":
-                    return T.StructField(c, T.StringType())
-                if c in by_name:
-                    return by_name[c]
-                return T.StructField(c, by_name[c.removeprefix("_old_")].dataType)
-
             return self.spark.createDataFrame(
-                [], T.StructType([field(c) for c in keep])
+                [], self._changes_struct(target, keep)
             )
         touched = [int(b) for b in fresh_buckets]
         # old images by OLD bucket numbering — identical to `touched`
@@ -1814,12 +1890,7 @@ class SnapshotSink:
         live = state.filter(~F.col("deleted"))
         if pred is not None:
             live = live.filter(pred)
-        payload = (
-            dict.fromkeys(columns)
-            if columns is not None
-            else [c for c in live.columns if c not in _INTERNAL]
-        )
-        return live.select(KEY, *[c for c in payload if c != KEY])
+        return live.select(*_live_columns(live.columns, columns))
 
     def lookup(
         self,
@@ -1851,13 +1922,18 @@ class SnapshotSink:
            key-sorted, so the pushed filter prunes row groups via
            parquet min/max stats on a compacted table.
 
-        LWW then folds only the surviving rows. When the probe touches
-        ONE bucket (every point read) they fold in one partition:
-        ``coalesce(1)`` before the fold drops the shuffle, so the scan,
-        the pushed filter and the fold run as one task of one Spark job.
-        A probe spanning many buckets (MERGE's target lookup, purge
-        counts) keeps the parallel shuffle fold. Tombstoned keys return
-        no row (a delete is the absence of the doc, as in read_final)."""
+        LWW then folds only the surviving rows. A probe that touches
+        ONE bucket of a row-LWW table (every single-key point read) is
+        answered on the driver, with no Spark job: the Arrow fold
+        (``sources/arrow_fold.py``) reads the files the key ranges
+        keep, in the row groups whose key statistics admit a probe,
+        keeps the probed keys' live winners, and hands them over as a
+        local relation (``_local_frame``). A probe spanning many
+        buckets (MERGE's target lookup, purge counts) and every probe
+        of a per-cell patch table keep the parallel Spark fold, with
+        the ``IN (ids)`` filter pushed into the parquet scan. Tombstoned
+        keys return no row (a delete is the absence of the doc, as in
+        read_final)."""
         if not ids:
             raise ValueError("lookup() needs at least one key")
         snap = self.current_snapshot() if version is None else self.snapshot(version)
@@ -1869,6 +1945,8 @@ class SnapshotSink:
         keys = _probe_keys(ids, key_field)
         n = snap["n_buckets"]
         buckets = sorted({bucket_of(k, n, key_field.dataType) for k in keys})
+        if len(buckets) == 1 and not self.patch:
+            return self._driver_lookup(snap, buckets[0], keys, target, columns)
         keys_sorted = sorted(keys)
         df = self._read_buckets(
             snap,
@@ -1885,12 +1963,37 @@ class SnapshotSink:
         if df is None:
             return self._live_rows(None, target, columns)
         df = df.filter(F.col(KEY).isin(keys))
-        if len(buckets) == 1:
-            # one bucket is at most one task's worth of rows (the layout
-            # sizes buckets to a shuffle partition, see the module
-            # docstring): fold it in place, without an Exchange
-            df = df.coalesce(1)
         return self._live_rows(self._fold(df, KEY, SEQ), target, columns)
+
+    def _driver_lookup(
+        self,
+        snap: dict,
+        bucket: int,
+        keys: list,
+        target: T.StructType,
+        columns: list[str] | None,
+    ) -> DataFrame:
+        """``lookup`` of one bucket's keys by the Arrow fold on the
+        driver: the same prunes (key ranges per entry and per file, row
+        groups by key statistics), the same live rows and columns."""
+        work = BucketWork(
+            bucket=bucket,
+            new_files=_bucket_files(self.root, snap, bucket, keys),
+            key_values=keys,
+        )
+        schema = to_arrow_schema(target)
+        live = pa.Table.from_batches(
+            list(read_state_partition(work, schema, internal=False)), schema
+        )
+        # the surviving row groups also hold unprobed keys, whose
+        # winners may be stale: keep exactly the probe
+        live = live.filter(
+            pc.is_in(live[KEY], value_set=pa.array(keys, schema.field(KEY).type))
+        )
+        names = _live_columns(target.fieldNames(), columns)
+        return self._local_frame(
+            live.select(names), T.StructType([target[c] for c in names])
+        )
 
     def scan_range(
         self,
@@ -4064,6 +4167,17 @@ class SnapshotSink:
             return [json.loads(line) for line in fh if line.strip()]
 
 
+def _live_columns(names: list[str], columns: list[str] | None) -> list[str]:
+    """A live read's output columns: the key first, then ``columns``
+    (default: every non-internal column of ``names``, in order)."""
+    payload = (
+        dict.fromkeys(columns)
+        if columns is not None
+        else [c for c in names if c not in _INTERNAL]
+    )
+    return [KEY, *[c for c in payload if c != KEY]]
+
+
 def _ddl(schema: T.StructType) -> str:
     return ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in schema.fields)
 
@@ -4224,16 +4338,6 @@ def _parquet_stats(
         (per_file if stats_ok and per_file else None),
         col_ranges,
     )
-
-
-def _range_may_contain(key_range, keys_sorted: list) -> bool:
-    """True unless the entry's recorded [min, max] proves NONE of the
-    (sorted) probe keys can be in the file. Missing/legacy range ⇒
-    True (never skip on absent evidence)."""
-    if not key_range or key_range[0] is None:
-        return True
-    i = bisect.bisect_left(keys_sorted, key_range[0])
-    return i < len(keys_sorted) and keys_sorted[i] <= key_range[1]
 
 
 def _range_intersects(key_range, lo, hi) -> bool:

@@ -48,11 +48,14 @@ Why this design is Spark-first rather than a wrapper API:
   partition, exactly where the sink's bucketing already co-located
   every version of a key.
 - **The executor path is Arrow.** ``read()`` yields
-  ``pyarrow.RecordBatch`` — files are read with pyarrow, the fold is a
-  vectorized two-pass (pass 1 reads only (key, seq, deleted) columns
-  and picks per-key winners with a pandas groupby-idxmax; pass 2
-  ``take``s exactly the winning rows with the full projection), so
-  loser versions never materialize their token arrays.
+  ``pyarrow.RecordBatch`` from the Arrow merge-on-read fold in
+  ``sources/arrow_fold.py`` (a vectorized two-pass: pass 1 reads only
+  (key, seq, deleted) columns and picks per-key winners, pass 2
+  ``take``s exactly the winning rows), so loser versions never
+  materialize their token arrays.  That module is Spark-free and is
+  the one Arrow fold: ``SnapshotSink`` runs the same functions on the
+  driver to answer one-bucket point reads and small changelog windows
+  without a Spark job.
 
 Semantics parity (pinned by tests/test_spark_datasource.py):
 
@@ -80,10 +83,11 @@ from __future__ import annotations
 import os
 import time
 import uuid
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 import pyarrow as pa
 
+from pyspark.sql import types as T
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceArrowWriter,
@@ -96,21 +100,29 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
-from beehive_data_etl_spark.sinks.snapshot import bucket_of
+from beehive_data_etl_spark.sinks.snapshot import _PY_TYPES, _probe_keys, bucket_of
 
+from . import arrow_fold
 from . import table_meta as tm
+from .arrow_fold import (
+    CHANGE,
+    BucketWork,
+    _bucket_files,
+    _refuse_patch,
+    read_changes_partition,
+    read_state_partition,
+)
 
 KEY, SEQ, DELETED, CELL = tm.KEY, tm.SEQ, tm.DELETED, tm.CELL
-CHANGE = "change_type"
 
 
 def register(spark) -> None:
     """Register the sources (and write paths) on a session.  Also
-    registers this module, table_meta and sinks.snapshot (whose
-    ``bucket_of`` the planner calls) for cloudpickle by-value
-    serialization, so Spark's Python planner/executor workers never
-    need the package importable on their own sys.path — the classes
-    travel inside the pickle."""
+    registers this module, arrow_fold (the fold the executors run),
+    table_meta and sinks.snapshot (whose ``bucket_of`` the planner
+    calls) for cloudpickle by-value serialization, so Spark's Python
+    planner/executor workers never need the package importable on
+    their own sys.path — the classes travel inside the pickle."""
     try:  # best-effort: falls back to by-reference (import) pickling
         from pyspark import cloudpickle
 
@@ -119,6 +131,7 @@ def register(spark) -> None:
         import beehive_data_etl_spark.sources.table_meta as _meta
 
         cloudpickle.register_pickle_by_value(_self)
+        cloudpickle.register_pickle_by_value(arrow_fold)
         cloudpickle.register_pickle_by_value(_meta)
         cloudpickle.register_pickle_by_value(_snapshot)
     except Exception:
@@ -179,55 +192,9 @@ def _resolve_version(root: str, ref) -> int:
     return head["version"]
 
 
-def _refuse_patch(snap: dict, root: str) -> None:
-    if snap.get("patch"):
-        raise RuntimeError(
-            f"table at {root} is per-cell (patch=True): the flat "
-            "data-source row cannot carry cell clocks, so a consumer "
-            "would silently diverge on late out-of-order patches. Read "
-            "it through SnapshotSink.read_final/read_changes "
-            "(include_cells=True) or replicate with a patch-mode "
-            "Replicator instead."
-        )
-
-
 @dataclass
-class BucketPartition(InputPartition):
-    """One table bucket's work: absolute delta-file paths in commit
-    order (new state), plus — for changelog windows — the FROM-version
-    file list and the window's newly added files (candidate keys)."""
-
-    bucket: int
-    new_files: list[str] = field(default_factory=list)
-    old_files: list[str] = field(default_factory=list)
-    added_files: list[str] = field(default_factory=list)
-    # pushed key-equality values (point reads): executors pass these as
-    # parquet row-group filters on BOTH fold passes — sound for LWW
-    # because every version of a key carries the key (the sink's own
-    # file-level key-prune argument), unlike payload predicates which
-    # must never prune below the fold
-    key_values: list[str] | None = None
-
-
-def _bucket_files(root: str, snap: dict, bucket: int) -> list[str]:
-    """Entry paths expanded to concrete parquet part files (an entry is
-    a directory of part files — one per write task, or several when
-    target_file_rows split a sorted rewrite)."""
-    import os
-
-    paths: list[str] = []
-    for ent in snap["buckets"].get(str(bucket), []):
-        p = os.path.join(root, ent["path"])
-        if os.path.isdir(p):
-            for dirpath, _, names in sorted(os.walk(p)):
-                paths.extend(
-                    os.path.join(dirpath, n)
-                    for n in sorted(names)
-                    if n.endswith(".parquet")
-                )
-        else:
-            paths.append(p)
-    return paths
+class BucketPartition(BucketWork, InputPartition):
+    """A ``BucketWork`` as a Spark input partition."""
 
 
 def plan_state_partitions(
@@ -237,16 +204,22 @@ def plan_state_partitions(
     filters on the KEY column) prune buckets: an EqualTo/In on doc_id
     maps each key to its bucket via ``snapshot.bucket_of``, the Python
     twin of the sink's ``_bucket_expr`` (parity pinned in tests) — a
-    point lookup through the data source then scans ONE bucket.  Pruning is
-    bucket-granular only: payload-predicate entry skipping would hit
-    the stale-winner trap the sink's scan_where documents."""
-    wanted = _buckets_for_filters(filters, snap["n_buckets"])
-    keys = _key_values_for_filters(filters)
+    point lookup through the data source then scans ONE bucket, and
+    only the entries and files whose recorded key ranges can hold a
+    probed key.  Payload predicates never prune: entry skipping on
+    them would hit the stale-winner trap the sink's scan_where
+    documents."""
+    key_field = _key_field(snap)
+    keys = _key_values_for_filters(filters, key_field)
+    n = snap["n_buckets"]
+    wanted = None
+    if keys is not None:
+        wanted = {bucket_of(k, n, key_field.dataType) for k in keys}
     parts = []
-    for b in range(snap["n_buckets"]):
+    for b in range(n):
         if wanted is not None and b not in wanted:
             continue
-        files = _bucket_files(root, snap, b)
+        files = _bucket_files(root, snap, b, keys)
         if files:
             parts.append(
                 BucketPartition(bucket=b, new_files=files, key_values=keys)
@@ -254,286 +227,49 @@ def plan_state_partitions(
     return parts
 
 
-def plan_window_partitions(
-    root: str, frm: int, to: int
-) -> list[BucketPartition]:
-    """Changelog window (frm, to]: per bucket, the FROM and TO file
-    lists plus the window-added files.  Buckets with no added files are
-    pruned (rewrite-only buckets change no state — compaction replaces
-    paths but every key's winning (seq, value) is unchanged, and
-    candidate keys from a rewrite-added file fold to zero diff rows)."""
-    if to <= frm:
-        return []
-    # frm == 0 is the bootstrap: a pure state copy of the TO version
-    # that never reads history, so the per-version marker walk is both
-    # unnecessary and wrong there (it would do O(history) JSON loads
-    # and crash on expired snapshots / old markers) — the same
-    # exemption Replicator.sync gives its initial full copy.
-    if frm > 0:
-        tm.refuse_unstreamable_window(root, frm, to)
-    new_snap = tm.load_snapshot(root, to)
-    _refuse_patch(new_snap, root)
-    old_snap = tm.load_snapshot(root, frm) if frm > 0 else None
-    if old_snap is not None and old_snap["n_buckets"] != new_snap["n_buckets"]:
-        raise RuntimeError(
-            f"rebucket inside stream window ({frm}, {to}]: bucket "
-            "identities shifted, the per-bucket diff is undefined. "
-            "Restart the stream from a fresh checkpoint with "
-            f"startingVersion={to} (full re-bootstrap), or re-point the "
-            "consumer after reconciling out of band."
-        )
-    if old_snap is not None and old_snap.get("tombstone_floor", 0) != new_snap.get(
-        "tombstone_floor", 0
-    ):
-        # expire_tombstones drops tombstones at the NEXT fold; a window
-        # spanning the floor advance could contain a delete whose
-        # tombstone was created AND folded away inside it — the key
-        # vanishes from every window-added file, so the candidate-key
-        # diff would silently miss the D row read_changes emits. The
-        # sink-side readers diff whole states and don't care; here we
-        # refuse, which is cheap to honor (consume faster than the
-        # tombstone retention horizon — the same contract a compacted
-        # Kafka topic imposes).
-        raise RuntimeError(
-            f"tombstone_floor advanced inside stream window ({frm}, "
-            f"{to}] (expire_tombstones ran): a delete folded away inside "
-            "the window would be missed. Consume in windows that don't "
-            "span a floor advance, or restart from a fresh checkpoint "
-            f"with startingVersion={to} after reconciling."
-        )
-    parts = []
-    for b in range(new_snap["n_buckets"]):
-        new_files = _bucket_files(root, new_snap, b)
-        old_files = (
-            _bucket_files(root, old_snap, b) if old_snap is not None else []
-        )
-        old_set = set(old_files)
-        added = [p for p in new_files if p not in old_set]
-        if not added:
-            continue
-        parts.append(
-            BucketPartition(
-                bucket=b,
-                new_files=new_files,
-                old_files=old_files,
-                added_files=added,
-            )
-        )
-    return parts
+def plan_window_partitions(root: str, frm: int, to: int) -> list[BucketPartition]:
+    """``arrow_fold.plan_window_partitions`` as Spark input partitions."""
+    return [
+        BucketPartition(**vars(w))
+        for w in arrow_fold.plan_window_partitions(root, frm, to)
+    ]
 
 
 # ------------------------------------------------------- key-hash pruning
-def _key_values_for_filters(filters: list | None) -> list | None:
-    """String values of the first key-equality conjunct, or None.
+def _key_field(snap: dict) -> T.StructField | None:
+    """The key column as a StructField, parsed from the snapshot DDL
+    without a JVM (planner workers have none); None for a key type
+    with no hash twin."""
+    items = dict(f.split(" ", 1) for f in _schema_fields(snap))
+    dtype = {t().simpleString(): t() for t in _PY_TYPES}.get(items[KEY])
+    return None if dtype is None else T.StructField(KEY, dtype)
+
+
+def _key_values_for_filters(
+    filters: list | None, key_field: T.StructField | None
+) -> list | None:
+    """Values of the first key-equality conjunct, normalised to the key
+    column's type by ``_probe_keys`` (the sink's lookup rule), or None.
     Restricting the scan to ONE conjunct's value set is sound for a
     conjunction (it keeps every row satisfying all of them); Spark
-    re-applies the full predicate anyway."""
-    for f in filters or ():
-        if isinstance(f, EqualTo) and f.attribute == (KEY,):
-            if isinstance(f.value, str):
-                return [f.value]
-        if isinstance(f, In) and f.attribute == (KEY,):
-            if all(isinstance(v, str) for v in f.value):
-                return list(f.value)
-    return None
-
-
-def _buckets_for_filters(filters: list | None, n_buckets: int) -> set | None:
-    """Bucket set provably covering the pushed filters, or None for
-    'all buckets'.  Only key-equality shapes prune — everything else is
-    re-applied by Spark anyway (pushFilters reports all filters as
-    unsupported, so pruning here can only SKIP work, never change
-    results beyond what the predicate already guarantees)."""
-    if not filters:
+    re-applies the full predicate anyway.  A conjunct whose values do
+    not fit the key type prunes nothing."""
+    if key_field is None:
         return None
-    for f in filters:
-        if isinstance(f, EqualTo) and f.attribute == (KEY,):
-            if isinstance(f.value, str):
-                return {bucket_of(f.value, n_buckets)}
-        if isinstance(f, In) and f.attribute == (KEY,):
-            if all(isinstance(v, str) for v in f.value):
-                return {bucket_of(v, n_buckets) for v in f.value}
-    return None
-
-
-# ------------------------------------------------------------ executor side
-def _matching_row_groups(pf, key_values: list) -> list[int]:
-    """Row groups whose key statistics admit any probed value —
-    stats-missing groups are kept (never prune on absence of proof,
-    the same rule as the sink's _range_may_contain).  Deterministic
-    function of (file, key_values): both fold passes select identical
-    groups, which is what keeps their row ordinals aligned."""
-    md = pf.metadata
-    leaf = next(
-        i for i in range(len(md.schema)) if md.schema.column(i).path == KEY
-    )
-    keep = []
-    for g in range(md.num_row_groups):
-        st = md.row_group(g).column(leaf).statistics
-        if (
-            st is None
-            or not st.has_min_max
-            or any(st.min <= v <= st.max for v in key_values)
-        ):
-            keep.append(g)
-    return keep
-
-
-def _read_cols(path: str, columns: list[str], key_values: list | None = None):
-    """Read a parquet file restricted to the columns it actually has
-    (older-schema deltas lack later columns).  ``key_values`` (point
-    reads) prunes row groups by key statistics — the I/O win on
-    compacted key-sorted buckets, where a probe decodes one row group
-    instead of the bucket (surviving groups are read whole; Spark
-    re-applies the predicate row-level, see pushFilters).  One footer
-    read per file: names, stats, and data all come off the same
-    ParquetFile.  CRITICAL ordinal contract: both fold passes of one
-    partition must pass the SAME key_values, because row ordinals
-    index the (identically) pruned read."""
-    import pyarrow.parquet as pq
-
-    pf = pq.ParquetFile(path)
-    have = set(pf.schema_arrow.names)
-    cols = [c for c in columns if c in have]
-    if key_values is None:
-        return pf.read(columns=cols), have
-    groups = _matching_row_groups(pf, key_values)
-    if not groups:
-        return pf.schema_arrow.empty_table().select(cols), have
-    return pf.read_row_groups(groups, columns=cols), have
-
-
-def _winners(files: list[str], key_values: list | None = None):
-    """Pass 1 of the merge-on-read fold: per-key LWW winner location.
-
-    Returns a pandas frame indexed by key with columns (seq, deleted,
-    f, r) — the winning row's file ordinal and row ordinal.  Only
-    (key, seq, deleted) bytes are ever read; token arrays of loser
-    versions never leave the parquet file.  Ties keep the first-read
-    row — duplicate deliveries are byte-identical by the envelope
-    contract (operators/lww.py), so either copy is the same row."""
-    import pandas as pd
-
-    frames = []
-    for i, path in enumerate(files):
-        t, _ = _read_cols(path, [KEY, SEQ, DELETED], key_values)
-        df = t.to_pandas()
-        df["f"] = i
-        df["r"] = range(len(df))
-        frames.append(df)
-    if not frames:
-        return pd.DataFrame(columns=[KEY, SEQ, DELETED, "f", "r"]).set_index(KEY)
-    allv = pd.concat(frames, ignore_index=True)
-    win = allv.loc[allv.groupby(KEY, sort=False)[SEQ].idxmax()]
-    return win.set_index(KEY)
-
-
-def _align(table: pa.Table, target: pa.Schema) -> pa.Table:
-    """pyarrow twin of ``operators/schema_evolution.align_to_schema``:
-    missing columns become typed nulls, widened columns cast."""
-    n = table.num_rows
-    cols = []
-    for fld in target:
-        if fld.name in table.column_names:
-            col = table.column(fld.name)
-            if col.type != fld.type:
-                col = col.cast(fld.type)
-            cols.append(col)
-        else:
-            cols.append(pa.nulls(n, fld.type))
-    return pa.Table.from_arrays(cols, schema=target)
-
-
-def _take_rows(
-    files: list[str],
-    win,
-    keys,
-    target: pa.Schema,
-    extra_cols: dict | None = None,
-    key_values: list | None = None,
-):
-    """Pass 2: materialize the winning rows of ``keys`` (an index into
-    ``win``), aligned to ``target``, optionally appending constant-ish
-    extra columns (the changelog's change_type), yielding one
-    RecordBatch per source file."""
-    import numpy as np
-
-    sel = win.loc[list(keys)] if keys is not None else win
-    read_cols = [f.name for f in target if f.name != CHANGE]
-    for i, path in enumerate(files):
-        rows = sel[sel["f"] == i]
-        if len(rows) == 0:
+    for f in filters or ():
+        if getattr(f, "attribute", None) != (KEY,):
             continue
-        order = np.sort(rows["r"].to_numpy())
-        t, _ = _read_cols(path, read_cols, key_values)
-        t = t.take(pa.array(order))
-        if extra_cols:
-            # map each taken row back to its key to fetch its tag
-            key_of = rows.reset_index().set_index("r").loc[order, KEY]
-            tags = pa.array([extra_cols[k] for k in key_of], pa.string())
-            t = _align(t, pa.schema([f_ for f_ in target if f_.name != CHANGE]))
-            t = t.append_column(CHANGE, tags)
+        if isinstance(f, EqualTo):
+            values = [f.value]
+        elif isinstance(f, In):
+            values = list(f.value)
         else:
-            t = _align(t, target)
-        for batch in t.to_batches():
-            yield batch
-
-
-def read_state_partition(part: BucketPartition, target: pa.Schema, internal: bool):
-    """Executor body of the batch source: fold the bucket, emit live
-    winners (read_final parity), or all winners when ``internal``."""
-    win = _winners(part.new_files, part.key_values)
-    if not internal and len(win) > 0:
-        win = win[~win[DELETED].astype(bool)]
-    yield from _take_rows(
-        part.new_files, win, None, target, key_values=part.key_values
-    )
-
-
-def read_changes_partition(part: BucketPartition, target: pa.Schema):
-    """Executor body of the changelog source: diff the bucket's FROM
-    and TO states restricted to keys seen in window-added files —
-    ``read_changes``'s I/U/D contract computed inside one partition."""
-    import numpy as np
-    import pyarrow.parquet as pq
-
-    new_win = _winners(part.new_files)
-    old_win = _winners(part.old_files)
-    cand: set = set()
-    for path in part.added_files:
-        t = pq.ParquetFile(path).read(columns=[KEY])
-        cand.update(t.column(KEY).to_pylist())
-    # vectorized I/U/D tagging over the candidate slice (read_changes'
-    # truth table): reindex the FROM-state winners onto the candidate
-    # keys — absent keys surface as NaN, i.e. not-old-live
-    idx = new_win.index.intersection(list(cand))
-    if len(idx) == 0:
-        return
-    nw = new_win.loc[idx]
-    old = old_win.reindex(idx)
-    new_live = ~nw[DELETED].astype(bool).to_numpy()
-    # NaN == False is False, so keys absent from the FROM state read as
-    # not-old-live without any dtype coercion
-    old_live = (old[DELETED] == False).to_numpy()  # noqa: E712
-    # reindex floats the seq column when keys are absent — float64 is
-    # exact for int seqs below 2^53, far above any real op_sequence
-    # clock (10^10-event replays sit near 2^34)
-    seq_adv = nw[SEQ].to_numpy() > old[SEQ].to_numpy(
-        dtype="float64", na_value=-(2.0**63)
-    )
-    tag = np.where(
-        new_live & ~old_live,
-        "I",
-        np.where(
-            new_live & old_live & seq_adv,
-            "U",
-            np.where(~new_live & old_live, "D", ""),
-        ),
-    )
-    tags = {k: t for k, t in zip(idx, tag) if t}
-    if not tags:
-        return
-    yield from _take_rows(part.new_files, new_win, tags.keys(), target, tags)
+            continue
+        try:
+            return _probe_keys(values, key_field)
+        except (TypeError, ValueError):
+            continue
+    return None
 
 
 def _to_arrow_schema(schema) -> pa.Schema:

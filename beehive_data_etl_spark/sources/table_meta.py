@@ -9,7 +9,9 @@ Everything those hooks need from the table is plain JSON under
 ``<root>/_snapshots/``, so this module re-implements exactly the
 metadata surface of ``sinks/snapshot.py`` (``current_snapshot``,
 ``snapshot``, ``resolve_ref``, ``tags``/``move_tag``, the Replicator's
-window-refusal guards) as standalone file I/O.  Behavioral parity with
+window-refusal guards) as standalone file I/O. The window policy
+(``unstreamable_window_reason``) is the one copy: the changelog stream
+refuses on it and ``SnapshotSink.read_changes`` routes on it.  Behavioral parity with
 the sink is pinned by ``tests/test_spark_datasource.py`` — if the sink
 ever changes its on-disk metadata, those tests break loudly here.
 
@@ -26,6 +28,7 @@ import fcntl
 import json
 import os
 import uuid
+from collections.abc import Iterable
 
 KEY = "doc_id"
 SEQ = "op_sequence"
@@ -122,19 +125,22 @@ def pin_tag(root: str, name: str, version: int, monotonic: bool = False) -> None
 
 
 # ------------------------------------------------------------ window guard
-def refuse_unstreamable_window(root: str, frm: int, to: int) -> None:
-    """Twin of ``Replicator._refuse_unreplicable_window``
-    (sinks/replicate.py), plus the column alters the DS stream cannot
-    bridge: a changelog window spanning a rollback / backfill / purge /
-    drop_column / rename_column cannot be expressed as forward change
-    events at truthful op_sequences (the per-case arguments live on the
-    Replicator).  The stream fails loudly with recovery guidance rather
-    than silently diverging its consumer."""
-    for v in range(frm + 1, to + 1):
-        m = load_snapshot(root, v).get("metrics", {})
+def unstreamable_window_reason(
+    frm: int, to: int, window_metrics: Iterable[dict]
+) -> str | None:
+    """Why the changelog window (frm, to] cannot be expressed as
+    forward change events, or None. ``window_metrics`` holds the commit
+    metrics of versions frm+1..to in order. A window spanning a
+    rollback / backfill / purge / drop_column / rename_column cannot be
+    expressed at truthful op_sequences (the per-case arguments live on
+    the Replicator, sinks/replicate.py). The stream raises the reason
+    (``refuse_unstreamable_window``); ``SnapshotSink.read_changes``
+    answers such windows with its Spark diffs instead of the Arrow
+    one."""
+    for v, m in enumerate(window_metrics, frm + 1):
         for marker in ("rollback_to", "backfill", "purge"):
             if marker in m:
-                raise RuntimeError(
+                return (
                     f"upstream {marker} at v{v} inside stream window "
                     f"({frm}, {to}]: no forward change event can express "
                     "it (see sinks/replicate.py for the per-case "
@@ -144,7 +150,7 @@ def refuse_unstreamable_window(root: str, frm: int, to: int) -> None:
                 )
         for op in ("drop_column", "rename_column"):
             if op in m:
-                raise RuntimeError(
+                return (
                     f"upstream {op} at v{v} inside stream window "
                     f"({frm}, {to}]: the stream's schema is fixed at "
                     "start and rewritten rows keep their op_sequence. "
@@ -152,6 +158,22 @@ def refuse_unstreamable_window(root: str, frm: int, to: int) -> None:
                     f"the stream from a fresh checkpoint with "
                     f"startingVersion={v}."
                 )
+    return None
+
+
+def refuse_unstreamable_window(root: str, frm: int, to: int) -> None:
+    """Twin of ``Replicator._refuse_unreplicable_window``
+    (sinks/replicate.py), plus the column alters the DS stream cannot
+    bridge: raises ``unstreamable_window_reason`` for the window of the
+    table's main chain, so the stream fails loudly with recovery
+    guidance rather than silently diverging its consumer."""
+    reason = unstreamable_window_reason(
+        frm,
+        to,
+        (load_snapshot(root, v).get("metrics", {}) for v in range(frm + 1, to + 1)),
+    )
+    if reason is not None:
+        raise RuntimeError(reason)
 
 
 # ----------------------------------------------------------- DDL utilities

@@ -13,7 +13,7 @@ FIXTURE_ROOT = "/tmp/beehive_fixtures"
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="beehive-tests", cores=8, shuffle_partitions=8)
+    s = get_spark(app_name="beehive-tests", shuffle_partitions=8)
     yield s
     s.stop()
 

@@ -23,6 +23,7 @@ from beehive_data_etl_spark.sinks.aggregates import (
     merge_agg,
 )
 from beehive_data_etl_spark.sinks.snapshot import SnapshotSink
+from beehive_data_etl_spark.sources.arrow_fold import window_partitions
 from beehive_data_etl_spark.streaming.replay import replay_incremental
 
 
@@ -88,10 +89,17 @@ def test_pruned_changelog_scan_is_delta_sized(spark, replayed):
     )
     sink.apply_batch(one, "tiny")
     v = sink.current_snapshot()["version"]
-    pruned = sink.read_changes_pruned(v_old, v)
+    assert [r["doc_id"] for r in sink.read_changes_pruned(v_old, v).collect()] == [
+        "zz-new-doc"
+    ]
+    # the window without pre-images is diffed on the driver, from the
+    # one touched bucket
+    assert len(window_partitions(sink.root, sink.snapshot(v_old), sink.snapshot(v))) == 1
+    # with pre-images it is a Spark diff: its scans read the same bucket
+    pruned = sink.read_changes_pruned(v_old, v, include_old=True)
     assert [r["doc_id"] for r in pruned.collect()] == ["zz-new-doc"]
     pruned_files = set(pruned.inputFiles())
-    assert set(sink.read_changes(v_old, v).inputFiles()) == pruned_files
+    assert set(sink.read_changes(v_old, v, include_old=True).inputFiles()) == pruned_files
     full_files = set(sink.read_state(version=v_old).inputFiles()) | set(
         sink.read_state(version=v).inputFiles()
     )

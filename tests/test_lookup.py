@@ -12,6 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from beehive_data_etl_spark.sinks.snapshot import KEY, SnapshotSink, _bucket_expr
+from beehive_data_etl_spark.sources.arrow_fold import _bucket_files
 from beehive_data_etl_spark.sources.eventlog import generate_event_log
 from beehive_data_etl_spark.streaming.replay import replay_incremental
 
@@ -49,26 +50,50 @@ def test_lookup_tombstoned_and_unknown_keys_absent(spark, sink):
     assert sorted(out[KEY]) == sorted(live)
 
 
-def test_lookup_reads_only_probed_buckets(spark, sink):
-    live = sink.read_final().select(KEY).limit(1).collect()[0][0]
-    bucket = (
+def _bucket_of(sink, key):
+    """The bucket Spark's own hash expression puts ``key`` in."""
+    return (
         sink.read_final()
-        .filter(F.col(KEY) == live)
+        .filter(F.col(KEY) == key)
         .select(_bucket_expr(sink.n_buckets).alias("b"))
         .collect()[0]
         .b
     )
-    files = sink.lookup([live]).inputFiles()
+
+
+def _spread(sink, k):
+    """``k`` live keys in ``k`` different buckets (Spark's hash): a
+    probe the Spark fold answers."""
+    rows = (
+        sink.read_final()
+        .select(KEY, _bucket_expr(sink.n_buckets).alias("b"))
+        .dropDuplicates(["b"])
+        .limit(k)
+        .collect()
+    )
+    assert len(rows) == k
+    return [r[KEY] for r in rows]
+
+
+def test_lookup_reads_only_probed_buckets(spark, sink):
+    live = sink.read_final().select(KEY).limit(1).collect()[0][0]
+    bucket = _bucket_of(sink, live)
+    # a one-bucket probe is planned on the driver: its file set
+    files = _bucket_files(sink.root, sink.current_snapshot(), bucket, [live])
     assert files
-    assert all(f"bucket={bucket}" in f or "_bucket=" not in f for f in files)
-    # stronger: no file from any OTHER bucket dir
+    assert all(f"bucket={bucket}/" in f for f in files), files
+    # a multi-bucket probe's Spark scan reads no file of any OTHER bucket
+    probe = _spread(sink, 2)
+    buckets = {_bucket_of(sink, k) for k in probe}
+    files = sink.lookup(probe).inputFiles()
+    assert files
     other = [f for f in files if re.search(r"bucket=(\d+)", f)
-             and int(re.search(r"bucket=(\d+)", f).group(1)) != bucket]
+             and int(re.search(r"bucket=(\d+)", f).group(1)) not in buckets]
     assert other == []
 
 
 def test_lookup_filter_reaches_parquet_scan(spark, sink):
-    live = [r[0] for r in sink.read_final().select(KEY).limit(3).collect()]
+    live = _spread(sink, 3)
     buf = io.StringIO()
     with redirect_stdout(buf):
         sink.lookup(live).explain("formatted")

@@ -7,9 +7,10 @@ JSON and run only the Spark work that produces rows:
   of ``read_state`` at the two versions over every commit kind
   (append, inline compaction, rename, rebucket, purge, rollback), for
   row-LWW and per-cell patch tables;
-- ``lookup`` is one Spark job: buckets come from the Python hash twin,
-  and the surviving rows fold in one partition (no Exchange), with the
-  key filter still pushed into the parquet scan."""
+- ``lookup`` buckets come from the Python hash twin: a one-bucket
+  probe is answered on the driver (no Spark job, a local relation), and
+  a multi-bucket probe keeps the key filter pushed into the parquet
+  scan of exactly its buckets."""
 
 import io
 import re
@@ -22,6 +23,7 @@ from pyspark.sql import functions as F
 
 from beehive_data_etl_spark.operators.patch import CELL
 from beehive_data_etl_spark.sinks.snapshot import KEY, SEQ, SnapshotSink, bucket_of
+from beehive_data_etl_spark.sources.arrow_fold import _bucket_files
 
 ROW_SCHEMA = (
     "op string, op_sequence long, doc_id string, tokens array<int>, "
@@ -77,12 +79,16 @@ def _layered(spark, root, n_deltas):
 def test_no_listing_job_for_wide_reads_and_compaction(spark, tmp_path):
     """A read over 16 buckets × 4 deltas (64 dirs, past Spark's default
     32-path parallel-listing threshold) runs no more jobs than the same
-    read over 16 × 2: every directory is listed on the driver."""
+    read over 16 × 2: every directory is listed on the driver. The read
+    asks for pre-images (``include_old``), so it plans Spark scans."""
     counts = {}
     for n in (2, 4):
         s = _layered(spark, str(tmp_path / f"t{n}"), n)
         v = s.current_snapshot()["version"]
-        _, changes = _jobs(spark, lambda: s.read_changes(v - 1, v).collect())
+        _, changes = _jobs(
+            spark, lambda: s.read_changes(v - 1, v, include_old=True).collect()
+        )
+        assert changes > 0
         m, write = _jobs(
             spark,
             lambda: s.apply_batch(
@@ -278,28 +284,59 @@ def served(spark, tmp_path_factory):
     return s
 
 
+def _spread(n_buckets: int, k: int = 3) -> list[str]:
+    """``k`` keys in ``k`` different buckets: a probe the Spark fold
+    answers."""
+    by_bucket = {}
+    for i in range(400):
+        by_bucket.setdefault(bucket_of(_key(i), n_buckets), _key(i))
+    return list(by_bucket.values())[:k]
+
+
 def test_lookup_plan_has_no_exchange_and_keeps_pushed_filter(served):
+    """A one-bucket probe plans no scan at all (a local relation); a
+    multi-bucket probe pushes the key filter into its parquet scan."""
     df = served.lookup([_key(5)])
     assert len(df.collect()) == 1
     plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan, plan
+    assert "Exchange" not in plan and "LocalTableScan" in plan, plan
     buf = io.StringIO()
     with redirect_stdout(buf):
-        df.explain("formatted")
+        served.lookup(_spread(served.n_buckets)).explain("formatted")
     m = re.search(r"PushedFilters: \[(.*?)\]", buf.getvalue())
     assert m and "doc_id" in m.group(1), buf.getvalue()[:2000]
 
 
-def test_lookup_is_one_spark_job(spark, served):
+def test_lookup_job_counts(spark, served):
+    """A one-bucket lookup runs no Spark job; a multi-bucket probe runs
+    its scan-and-fold as one job per stage (AQE submits the shuffle
+    map stage as its own job), the same count for 3 buckets as for 2."""
     served.lookup([_key(9)]).collect()  # warm
     rows, n = _jobs(spark, lambda: served.lookup([_key(9)]).collect())
-    assert len(rows) == 1 and n == 1
+    assert len(rows) == 1 and n == 0
+    counts = []
+    for k in (2, 3):
+        probe = _spread(served.n_buckets, k)
+        served.lookup(probe).collect()  # warm
+        rows, n = _jobs(spark, lambda: served.lookup(probe).collect())
+        assert len(rows) >= 1
+        counts.append(n)
+    assert counts[0] == counts[1] and 1 <= counts[0] <= 2, counts
 
 
 def test_lookup_reads_only_the_twins_bucket(served):
-    files = served.lookup([_key(12)]).inputFiles()
+    """The driver plans one-bucket probes from the twin's bucket alone;
+    a multi-bucket probe's scan reads only its buckets' files."""
+    snap = served.current_snapshot()
     b = bucket_of(_key(12), served.n_buckets)
+    files = _bucket_files(served.root, snap, b, [_key(12)])
     assert files and all(f"bucket={b}/" in f for f in files), files
+    probe = _spread(served.n_buckets)
+    buckets = {bucket_of(k, served.n_buckets) for k in probe}
+    files = served.lookup(probe).inputFiles()
+    assert files and all(
+        int(re.search(r"bucket=(\d+)/", f).group(1)) in buckets for f in files
+    ), files
 
 
 def test_lookup_wrong_typed_probe_raises_on_driver(spark, served):

@@ -635,9 +635,7 @@ def test_matching_row_groups_prunes_and_keeps_statless():
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from beehive_data_etl_spark.sources.spark_datasource import (
-        _matching_row_groups,
-    )
+    from beehive_data_etl_spark.sources.arrow_fold import _matching_row_groups
 
     keys = [f"k{i:04d}" for i in range(100)]
     t = pa.table(

@@ -21,7 +21,9 @@ from beehive_data_etl_spark.sinks.snapshot import (
     SnapshotSink,
     _range_intersects,
     _range_may_contain,
+    bucket_of,
 )
+from beehive_data_etl_spark.sources.arrow_fold import _bucket_files
 
 SCHEMA = (
     "op string, op_sequence long, doc_id string, tokens array<int>, "
@@ -71,7 +73,16 @@ def test_key_range_recorded_on_ingest_entries(sink):
 
 
 def test_lookup_skips_disjoint_prefix_files(sink):
-    files = sink.lookup(["a-0003", "a-0017"]).inputFiles()
+    """The driver's planner (one-bucket probes) and the Spark scan
+    (multi-bucket probes) both keep only the a-* batch's files."""
+    snap = sink.current_snapshot()
+    for key in ("a-0003", "a-0017"):
+        b = bucket_of(key, sink.n_buckets)
+        files = _bucket_files(sink.root, snap, b, [key])
+        assert files and all("ingest=b-a" in f for f in files), files
+    probe = [f"a-{i:04d}" for i in range(30)]
+    assert len({bucket_of(k, sink.n_buckets) for k in probe}) > 1
+    files = sink.lookup(probe).inputFiles()
     assert files
     assert all("ingest=b-a" in f for f in files), files
 
@@ -215,9 +226,9 @@ def test_target_file_rows_splits_and_prunes_within_bucket(spark, tmp_path):
     spans = sorted(fr.values())
     for (a_lo, a_hi), (b_lo, b_hi) in zip(spans, spans[1:]):
         assert a_hi < b_lo, spans
-    probe = s.lookup(["k-0042"])
-    assert len(probe.inputFiles()) == 1
-    assert probe.count() == 1
+    # one bucket: the probe is planned on the driver, from file_ranges
+    assert len(_bucket_files(root, snap, 0, ["k-0042"])) == 1
+    assert s.lookup(["k-0042"]).count() == 1
     # a range crossing one file boundary reads exactly two files
     rng = s.scan_range("k-0024", "k-0026")
     assert len(rng.inputFiles()) == 2, rng.inputFiles()
