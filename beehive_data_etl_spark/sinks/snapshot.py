@@ -2199,6 +2199,13 @@ class SnapshotSink:
         payload…). Returns commit metrics. Safe to call repeatedly with
         the same ``batch_id`` (exactly-once via manifests + snapshot
         pointer; SURVEY.md §3.3 state machine).
+
+        A batch (plus any inline-compacted buckets) that Spark estimates
+        at no more than ``spark.sql.autoBroadcastJoinThreshold`` folds and
+        writes in ONE task — one merge job, no Exchange; anything else,
+        including an input of unknown size, runs the parallel plan.
+        ``metrics["merge_plan"]`` records which ran and why
+        (``one_task``, ``est_bytes``, ``threshold_bytes``).
         """
         t0 = time.time()
         batch_id = self._phys_batch_id(str(batch_id))
@@ -2310,11 +2317,19 @@ class SnapshotSink:
         # legacy) fold nothing: keeping extra entries only duplicates
         # rows, which the LWW read fold de-duplicates.
 
-        # the ENTIRE batch dataflow is ONE Spark job:
-        #   scan batch → union with (delta files of compactable buckets,
-        #   semi-joined to the batch's touched buckets) → single
-        #   LWW aggregation (in-batch dedup + cross-delta fold in one
-        #   shuffle, hot keys salted per A8) → bucket-partitioned write
+        # the batch dataflow is ONE query: scan batch → union with (delta
+        # files of compactable buckets, semi-joined to the batch's
+        # touched buckets) → single LWW aggregation (in-batch dedup +
+        # cross-delta fold, hot keys salted per A8) → bucket-partitioned
+        # write. It runs in one of two shapes (see _merge_plan):
+        #   small input: coalesce(1) → fold → write, ONE task and no
+        #     Exchange — one merge job;
+        #   otherwise: fold shuffle on the key → repartition by bucket →
+        #     write; AQE runs each shuffle-map stage as its own job, so
+        #     3 merge jobs.
+        # An inline compaction adds two (the touched-bucket set's
+        # shuffle and its broadcast).
+        # Either way read_wal's schema inference is one more job before.
         if self.patch and CELL in events.columns:
             # pre-built cell events (replication from another patch
             # table): trust the incoming per-cell seqs verbatim — the
@@ -2408,13 +2423,17 @@ class SnapshotSink:
                 batch_buckets = state_rows.select("_bucket").distinct()
                 tgt = tgt.join(F.broadcast(batch_buckets), "_bucket", "left_semi")
                 merge_in = state_rows.unionByName(tgt)
+        plan = self._merge_plan(merge_in)
+        if plan["one_task"]:
+            merge_in = merge_in.coalesce(1)
         merged = self._fold(
             merge_in.drop("_bucket"), KEY, SEQ, salt_partials=self.salt_partials
         ).withColumn("_bucket", _bucket_expr(self.n_buckets))
 
         t_plan = time.time()
         staging, stats, t_job = self._stage_buckets(
-            merged.repartition(self.n_buckets, "_bucket"),
+            merged if plan["one_task"]
+            else merged.repartition(self.n_buckets, "_bucket"),
             after_write=lambda: self.crash_hook("after_data_write"),
         )
         # touched buckets = the partition dirs the job actually wrote
@@ -2426,6 +2445,7 @@ class SnapshotSink:
             "compacted_buckets": [b for b in written if b in compact_candidates],
             "appended_buckets": [b for b in written if b not in compact_candidates],
             "reused_buckets": sorted(manifested),
+            "merge_plan": plan,
         }
         # write-audit-publish: the gate runs on the STAGED files — the
         # real post-dedup, schema-aligned bytes about to be committed —
@@ -2469,12 +2489,31 @@ class SnapshotSink:
             folded=consumed_paths,
         )
 
+    def _merge_plan(self, merge_in: DataFrame) -> dict:
+        """Route an ingest merge: ``one_task`` when Spark's own size
+        estimate of ``merge_in`` is at most
+        ``spark.sql.autoBroadcastJoinThreshold`` — a relation Spark would
+        ship whole to every task is small enough to fold in one. The
+        fixed cost of each stage and job, not the data, bounds such a
+        batch. A threshold of -1 (broadcast off) and an input of unknown
+        size (a foreachBatch ``LogicalRDD`` reports
+        ``spark.sql.defaultSizeInBytes``) keep the parallel plan.
+        Driver-side planning only, no Spark job."""
+        est = merge_in._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+        threshold = self.spark._jconf.autoBroadcastJoinThreshold()
+        return {
+            "one_task": 0 <= est <= threshold,
+            "est_bytes": est,
+            "threshold_bytes": threshold,
+        }
+
     def _stage_buckets(self, df: DataFrame, after_write=None):
         """The staged write every data rewrite shares (ingest, compaction
         / rewrite, rebucket): ``df`` — already partitioned (and sorted)
-        by its ``_bucket`` column — lands as ``_bucket=N/`` dirs under a
-        fresh ``data/_stage-*`` dir with the sink's file options, then
-        every written bucket's footer stats are read in parallel.
+        by its ``_bucket`` column, or in one partition — lands as
+        ``_bucket=N/`` dirs under a fresh ``data/_stage-*`` dir with the
+        sink's file options, then every written bucket's footer stats
+        are read in parallel.
         Reading them on the STAGED dirs is safe (basenames survive the
         directory move) and keeps the slowest publish step outside the
         commit critical section. ``after_write`` runs right after the

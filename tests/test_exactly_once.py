@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 from beehive_data_etl_spark.sinks.snapshot import SnapshotSink
 from beehive_data_etl_spark.streaming.replay import replay_incremental
 from beehive_data_etl_spark.verify import compare_final, oracle_final_spark
+from test_merge_routes import route
 
 
 class _Boom(RuntimeError):
@@ -29,18 +30,30 @@ def _crash_once_at(point_name: str):
     return hook
 
 
+_CRASH_POINTS = ["after_data_write", "after_manifest", "before_pointer_swap"]
+
+
 @pytest.mark.parametrize(
-    "crash_point", ["after_data_write", "after_manifest", "before_pointer_swap"]
+    "crash_point,merge_route",
+    [pytest.param(p, "one_task", id=p) for p in _CRASH_POINTS]
+    + [pytest.param(p, "parallel", id=f"{p}-parallel") for p in _CRASH_POINTS],
 )
-def test_crash_and_resume(spark, smoke_log, tmp_path, crash_point):
+def test_crash_and_resume(spark, smoke_log, tmp_path, crash_point, merge_route):
+    """Small WAL batches merge in one task; the ``parallel`` cases turn
+    the size routing off so the bulk merge plan crashes and resumes
+    too."""
     root = str(tmp_path / "sink")
-    sink = SnapshotSink(spark, root, n_buckets=8)
-    sink.crash_hook = _crash_once_at(crash_point)
-    with pytest.raises(_Boom):
-        replay_incremental(spark, smoke_log, sink, files_per_batch=2)
-    # "restart": a fresh sink object over the same table directory
-    sink2 = SnapshotSink(spark, root, n_buckets=8)
-    replay_incremental(spark, smoke_log, sink2, files_per_batch=2)
+    with route(spark, merge_route):
+        sink = SnapshotSink(spark, root, n_buckets=8)
+        sink.crash_hook = _crash_once_at(crash_point)
+        with pytest.raises(_Boom):
+            replay_incremental(spark, smoke_log, sink, files_per_batch=2)
+        # "restart": a fresh sink object over the same table directory
+        sink2 = SnapshotSink(spark, root, n_buckets=8)
+        metrics = replay_incremental(spark, smoke_log, sink2, files_per_batch=2)
+    assert {
+        m["merge_plan"]["one_task"] for m in metrics if not m["skipped"]
+    } == {merge_route == "one_task"}
     state = sink2.read_state()
     report = compare_final(
         state.filter(~state.deleted), oracle_final_spark(spark, smoke_log)

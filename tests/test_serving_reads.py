@@ -35,8 +35,8 @@ PATCH_SCHEMA = (
 )
 
 
-def _jobs(spark, fn):
-    """(result of fn(), number of Spark jobs it ran)."""
+def _job_ids(spark, fn):
+    """(result of fn(), ids of the Spark jobs it ran)."""
     sc = spark.sparkContext
     group = f"count-{uuid.uuid4().hex}"
     sc.setJobGroup(group, group)
@@ -45,7 +45,13 @@ def _jobs(spark, fn):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+    return out, sc.statusTracker().getJobIdsForGroup(group)
+
+
+def _jobs(spark, fn):
+    """(result of fn(), number of Spark jobs it ran)."""
+    out, ids = _job_ids(spark, fn)
+    return out, len(ids)
 
 
 def _key(i: int) -> str:
