@@ -32,7 +32,7 @@ Scale shape:
 - the target side is the MINIMUM state the clauses need: with no
   by-source clause and a small source (<= ``lookup_cap`` keys), matched
   rows come from the sink's four-prune ``lookup()`` — bucket pruning,
-  entry key-range stats, pushed IN filter, row-group/bloom skipping —
+  entry key-range stats, pushed IN filter, row-group min/max skipping —
   so merging a 10k-row batch into a 10^10-row table reads O(batch)
   buckets, never the table. Larger sources fall back to one
   key-partitioned join against the live state (O(source + state), the

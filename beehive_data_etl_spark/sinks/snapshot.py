@@ -63,8 +63,10 @@ import uuid
 from concurrent.futures import ThreadPoolExecutor
 from contextlib import contextmanager
 
+import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -83,14 +85,20 @@ from beehive_data_etl_spark.operators.schema_evolution import (
 )
 from beehive_data_etl_spark.sources import table_meta
 from beehive_data_etl_spark.sources.arrow_fold import (
+    DELETED,
     BucketWork,
+    _align,
     _bucket_files,
     _range_may_contain,
+    _take_rows,
+    _versions,
+    _winners,
     read_changes_partition,
     read_state_partition,
     uncompressed_bytes,
     window_partitions,
 )
+from beehive_data_etl_spark.sources.readers import read_wal, schema_groups
 
 KEY = "doc_id"
 SEQ = "op_sequence"
@@ -226,7 +234,7 @@ def _probe_keys(ids: list, key_field: T.StructField) -> list:
     the scan's IN filter. Float keys are rounded to float32, the value
     the column stores, so the IN filter and the hash both see it; -0.0
     is probed as 0.0, the key Spark's grouping stored it under (the
-    parquet min/max and bloom filters would otherwise skip its file)."""
+    parquet min/max statistics would otherwise skip its file)."""
     dtype = key_field.dataType
     want = _PY_TYPES.get(type(dtype))
     if want is None:
@@ -318,7 +326,6 @@ class SnapshotSink:
         audit=None,
         patch: bool = False,
         target_file_rows: int | None = None,
-        bloom_filter: bool = True,
         ref: str = "main",
     ) -> None:
         self.spark = spark
@@ -359,23 +366,6 @@ class SnapshotSink:
         # the per-file stats then prune to ONE file per point probe.
         # None = Spark's default (no cap).
         self.target_file_rows = target_file_rows
-        # parquet bloom filter on the KEY column of every data file
-        # (Iceberg's write.parquet.bloom-filter-enabled analogue).
-        # Random doc_ids make per-file key [min, max] useless on
-        # UNCOMPACTED deltas (every file's range spans the keyspace),
-        # and cluster_by compaction sorts by payload first, loosening
-        # key stats on purpose — in both layouts the bloom is what
-        # lets a point lookup() skip row groups the key isn't in.
-        # Adaptive sizing (parquet-mr 1.13+): the writer keeps the
-        # smallest candidate meeting the target FPP from the ACTUAL
-        # per-file NDV, so small deltas pay ~64 KB, not a fixed
-        # worst-case filter. Measured here: warm point probe on an
-        # 8-file unsorted table 0.37 s -> 0.23 s at 4M rows, ~5% file
-        # size; the win grows with rows-per-file (row groups skipped
-        # without decoding). Read side is free: Spark's vectorized
-        # reader applies blooms during row-group filtering whenever
-        # spark.sql.parquet.filterPushdown is on (default).
-        self.bloom_filter = bloom_filter
         # test-only fault injection: called at named protocol points
         self.crash_hook = crash_hook or (lambda point: None)
         # pipelined replay (replay_incremental inflight>1): concurrent
@@ -766,7 +756,6 @@ class SnapshotSink:
             compact_threshold=self.compact_threshold,
             audit=self.audit,
             target_file_rows=self.target_file_rows,
-            bloom_filter=self.bloom_filter,
             ref=name,
         )
 
@@ -1181,23 +1170,17 @@ class SnapshotSink:
         return reusable
 
     def _file_options(self, writer):
-        """The sink's per-file parquet options, identical on every data
-        write (ingest staging, compaction/cluster rewrite, rebucket):
-        compression, the target-file-size row cap, and — when
-        ``bloom_filter`` (default) — an adaptively-sized parquet bloom
-        filter on the KEY column (see __init__ for the rationale and
-        measurements). One helper so a layout knob can never apply to
-        some write paths and not others."""
-        writer = writer.option("compression", _COMPRESSION).option(
+        """The sink's per-file parquet options for Spark's data writes
+        (ingest staging, compaction/cluster rewrite, rebucket):
+        compression and the target-file-size row cap. The driver's
+        Arrow write (``_stage_buckets``) applies the same two, so a
+        layout knob can never apply to some write paths and not
+        others."""
+        return writer.option("compression", _COMPRESSION).option(
             # 0 = Spark default (no cap); see target_file_rows
             "maxRecordsPerFile",
             self.target_file_rows or 0,
         )
-        if self.bloom_filter:
-            writer = writer.option(
-                f"parquet.bloom.filter.enabled#{KEY}", "true"
-            ).option("parquet.bloom.filter.adaptive.enabled", "true")
-        return writer
 
     def _write_manifest(self, batch_id: str, bucket: int, body: dict) -> None:
         path = self._manifest_path(batch_id, bucket)
@@ -1568,14 +1551,22 @@ class SnapshotSink:
     def _driver_changes(
         self, parts: list[BucketWork], new_snap: dict, columns: list[str] | None
     ) -> DataFrame:
-        """``_delta_diff``'s rows from the Arrow fold on the driver: per
-        touched bucket, the FROM and TO winners of the keys the window's
-        added files hold, diffed by ``read_changes_partition``."""
+        """``_delta_diff``'s rows from the Arrow fold on the driver: the
+        FROM and TO winners of the keys the window's added files hold,
+        diffed by ``read_changes_partition`` in ONE call over every
+        touched bucket (keys never straddle buckets of one bucket
+        count, so the union of the buckets folds like each alone)."""
         target = self._projection_target(new_snap, columns)
         _, keep = self._changes_schema(target, False, False)
         schema = self._changes_struct(target, keep)
         arrow_schema = to_arrow_schema(schema)
-        batches = [b for p in parts for b in read_changes_partition(p, arrow_schema)]
+        work = BucketWork(
+            bucket=-1,
+            new_files=[f for p in parts for f in p.new_files],
+            old_files=[f for p in parts for f in p.old_files],
+            added_files=[f for p in parts for f in p.added_files],
+        )
+        batches = list(read_changes_partition(work, arrow_schema))
         return self._local_frame(
             pa.Table.from_batches(batches, arrow_schema), schema
         )
@@ -2200,13 +2191,44 @@ class SnapshotSink:
         the same ``batch_id`` (exactly-once via manifests + snapshot
         pointer; SURVEY.md §3.3 state machine).
 
-        A batch (plus any inline-compacted buckets) that Spark estimates
-        at no more than ``spark.sql.autoBroadcastJoinThreshold`` folds and
-        writes in ONE task — one merge job, no Exchange; anything else,
-        including an input of unknown size, runs the parallel plan.
-        ``metrics["merge_plan"]`` records which ran and why
-        (``one_task``, ``est_bytes``, ``threshold_bytes``).
+        Two routes per table kind, chosen by Spark's own size estimate
+        of the merge input (the batch plus any inline-compacted
+        buckets) against ``spark.sql.autoBroadcastJoinThreshold``:
+
+        - within it, a row-LWW batch is collected to the driver with
+          ``toArrow()`` (one Spark job) and folded and written there by
+          the Arrow fold (``sources/arrow_fold.py``), together with the
+          files of the buckets it compacts; a patch table's batch folds
+          and writes in ONE Spark task (``coalesce(1)``: the cell fold
+          has no Arrow twin);
+        - anything else, including an input of unknown size and a
+          threshold of -1, runs the parallel Spark plan.
+
+        ``metrics["merge_plan"]`` records which ran and why: ``route``
+        (``arrow`` / ``one_task`` / ``parallel``), ``input``
+        (``dataframe``: ``est_bytes`` is Spark's estimate),
+        ``est_bytes`` and ``threshold_bytes``.
         """
+        return self._ingest(batch_df, batch_id)
+
+    def apply_wal(self, paths: list[str], batch_id: str | int) -> dict:
+        """``apply_batch(read_wal(spark, paths), batch_id)`` without
+        Spark when the batch is small: for an unaudited row-LWW table
+        whose WAL files plus the files of the buckets it compacts
+        inline fit under ``spark.sql.autoBroadcastJoinThreshold`` by
+        uncompressed footer bytes, the files are read with pyarrow
+        (``read_wal``'s footer-schema grouping and widening), bucketed
+        by ``bucket_of``, folded by the Arrow fold and written on the
+        driver — no Spark job. Any other batch runs ``apply_batch``'s
+        routes on ``read_wal``'s DataFrame. Same commit protocol,
+        manifests, crash points and metrics either way; ``merge_plan``
+        says ``input: "wal"`` and ``est_bytes`` is the footer bytes
+        when the driver route ran."""
+        return self._ingest(list(paths), batch_id)
+
+    def _ingest(self, batch, batch_id: str | int) -> dict:
+        """The exactly-once prologue both ingest entry points share;
+        ``batch`` is a DataFrame or a list of WAL file paths."""
         t0 = time.time()
         batch_id = self._phys_batch_id(str(batch_id))
         snap = self.current_snapshot()
@@ -2243,7 +2265,7 @@ class SnapshotSink:
         compact_candidates: list[int] = []
         try:
             return self._run_and_publish(
-                batch_df, batch_id, snap, compact_candidates, t0
+                batch, batch_id, snap, compact_candidates, t0
             )
         finally:
             with self._commit_lock:
@@ -2251,11 +2273,13 @@ class SnapshotSink:
                 self._inflight.discard(batch_id)
 
     def _run_and_publish(
-        self, batch_df: DataFrame, batch_id: str, snap: dict | None,
+        self, batch, batch_id: str, snap: dict | None,
         compact_candidates: list[int], t0: float,
     ) -> dict:
+        wal = None if isinstance(batch, DataFrame) else batch
+        batch_schema = schema_groups(wal)[0] if wal is not None else batch.schema
         payload_fields = [
-            f for f in batch_df.schema.fields
+            f for f in batch_schema.fields
             if f.name not in _ENVELOPE_META
             and f.name not in _INTERNAL
             # the mask column is envelope metadata only in patch mode; a
@@ -2272,8 +2296,6 @@ class SnapshotSink:
         # aligned at read time.
         table_schema = self._evolved_schema(snap, batch_payload_schema)[0]
 
-        # -- in-batch LWW dedup (A3) with explicit hot-key salting (A8)
-        events = batch_df.drop(*[c for c in _ENVELOPE_META if c in batch_df.columns and c != "op"])
         # crash-replay bookkeeping, all driver-side file metadata — no
         # Spark job: buckets already manifested for this batch_id are
         # excluded from recomputation and their outputs reused
@@ -2317,19 +2339,160 @@ class SnapshotSink:
         # legacy) fold nothing: keeping extra entries only duplicates
         # rows, which the LWW read fold de-duplicates.
 
-        # the batch dataflow is ONE query: scan batch → union with (delta
-        # files of compactable buckets, semi-joined to the batch's
-        # touched buckets) → single LWW aggregation (in-batch dedup +
-        # cross-delta fold, hot keys salted per A8) → bucket-partitioned
-        # write. It runs in one of two shapes (see _merge_plan):
-        #   small input: coalesce(1) → fold → write, ONE task and no
+        # The merge runs in one of three shapes (see apply_batch):
+        #   arrow: the batch as an Arrow table on the driver — read from
+        #     the WAL files by pyarrow (no Spark job) or collected with
+        #     toArrow (one job) — folded with the compacted buckets'
+        #     files by the Arrow fold and written by pyarrow;
+        #   one_task (patch tables): scan batch → union with (delta files
+        #     of compactable buckets, semi-joined to the batch's touched
+        #     buckets) → coalesce(1) → cell fold → write, one task, no
         #     Exchange — one merge job;
-        #   otherwise: fold shuffle on the key → repartition by bucket →
-        #     write; AQE runs each shuffle-map stage as its own job, so
-        #     3 merge jobs.
-        # An inline compaction adds two (the touched-bucket set's
-        # shuffle and its broadcast).
-        # Either way read_wal's schema inference is one more job before.
+        #   parallel: the same union → fold shuffle on the key (hot keys
+        #     salted per A8) → repartition by bucket → write; AQE runs
+        #     each shuffle-map stage as its own job, so 3 merge jobs, and
+        #     an inline compaction adds two (the touched-bucket set's
+        #     shuffle and its broadcast).
+        # A DataFrame read by read_wal runs one schema-inference job
+        # before any of them.
+        rows = None
+        if wal is not None:
+            rows, plan = self._wal_rows(
+                wal, snap, table_schema, manifested, compact_candidates
+            )
+            if rows is None:
+                batch = read_wal(self.spark, wal)
+        if rows is None:
+            rows, plan, obs = self._frame_rows(
+                batch, batch_id, snap, table_schema, manifested,
+                compact_candidates,
+            )
+        t_plan = time.time()
+        if isinstance(rows, pa.Table):
+            observed_events = rows.num_rows
+            merged = self._arrow_fold(rows, snap, table_schema, compact_candidates)
+        else:
+            merged = rows
+        staging, stats, t_job = self._stage_buckets(
+            merged, after_write=lambda: self.crash_hook("after_data_write"),
+        )
+        # touched buckets = the partition dirs the job actually wrote
+        written = sorted(stats)
+        metrics: dict = {
+            "batch_id": batch_id,
+            "skipped": False,
+            "touched_buckets": sorted(set(written) | manifested),
+            "compacted_buckets": [b for b in written if b in compact_candidates],
+            "appended_buckets": [b for b in written if b not in compact_candidates],
+            "reused_buckets": sorted(manifested),
+            "merge_plan": plan,
+        }
+        # write-audit-publish: the gate runs on the STAGED files — the
+        # real post-dedup, schema-aligned bytes about to be committed —
+        # before any manifest or pointer moves. A violation aborts
+        # crash-equivalently (staging cleaned, table untouched).
+        # Manifested buckets bypass: their manifests exist only because
+        # a prior attempt passed this same gate.
+        if self.audit is not None and written:
+            try:
+                self.audit(
+                    self.spark.read.parquet(staging), {"batch_id": batch_id}
+                )
+            except Exception:
+                shutil.rmtree(staging, ignore_errors=True)
+                raise
+
+        if self.lineage:
+            if not isinstance(rows, pa.Table):
+                # obs.get raises a JVM assertion when the CollectMetrics
+                # node was optimized away — AQE's empty-relation
+                # propagation does exactly that for an all-filtered
+                # batch (e.g. a rewrite-only replication window). Zero
+                # rows observed IS the right answer then. Read it BEFORE
+                # the commit critical section — the job already ran,
+                # this only fetches its metrics.
+                try:
+                    observed_events = obs.get["events"]
+                except Exception:
+                    observed_events = 0
+            metrics["lineage"] = {
+                "events": observed_events,
+                "input_files": sorted(
+                    os.path.basename(f) for f in wal or batch.inputFiles()
+                ),
+            }
+        return self._publish_and_commit(
+            staging, batch_id, snap, stats, metrics,
+            entry_ddl=_ddl(table_schema),
+            phases=(t0, t_plan, t_job),
+            batch_payload_schema=batch_payload_schema,
+            manifested=manifested,
+            folded=consumed_paths,
+        )
+
+    def _wal_rows(
+        self, wal: list[str], snap: dict | None, table_schema: T.StructType,
+        manifested: set[int], compact_candidates: list[int],
+    ) -> tuple[pa.Table | None, dict | None]:
+        """``apply_wal``'s driver route: the batch's stored rows (each
+        file aligned to the table schema, so widened like ``read_wal``;
+        ``deleted`` set, ``_bucket`` by ``bucket_of``, manifested
+        buckets dropped) read from the WAL files by pyarrow, and the
+        route record — or ``(None, None)`` when the table is patch-mode
+        or audited, its key has no hash twin or holds NULLs, or the WAL
+        files plus the files of the buckets the batch compacts exceed
+        the broadcast threshold by uncompressed footer bytes."""
+        key_type = table_schema[KEY].dataType
+        threshold = self.spark._jconf.autoBroadcastJoinThreshold()
+        if (
+            self.patch
+            or self.audit is not None
+            or self._table_audit_fn(snap) is not None
+            or type(key_type) not in _PY_TYPES
+        ):
+            return None, None
+        est = uncompressed_bytes(wal)
+        if est > threshold:
+            return None, None
+        target = to_arrow_schema(table_schema)
+        parts = []
+        for p in wal:
+            t = pq.ParquetFile(p).read()
+            deleted = pc.equal(t["op"], "D")
+            t = t.drop_columns([c for c in ("deleted",) if c in t.column_names])
+            parts.append(_align(t.append_column("deleted", deleted), target))
+        rows = pa.concat_tables(parts)
+        if rows[KEY].null_count:
+            return None, None
+        buckets = np.fromiter(
+            (bucket_of(k, self.n_buckets, key_type) for k in rows[KEY].to_pylist()),
+            np.int32, count=rows.num_rows,
+        )
+        if manifested:
+            keep = ~np.isin(buckets, sorted(manifested))
+            rows, buckets = rows.filter(pa.array(keep)), buckets[keep]
+        folds = set(buckets.tolist()) & set(compact_candidates)
+        est += uncompressed_bytes(
+            [f for b in sorted(folds) for f in _bucket_files(self.root, snap, b)]
+        )
+        if est > threshold:
+            return None, None
+        plan = {"route": "arrow", "input": "wal", "est_bytes": est,
+                "threshold_bytes": threshold}
+        return rows.append_column("_bucket", pa.array(buckets)), plan
+
+    def _frame_rows(
+        self, batch_df: DataFrame, batch_id: str, snap: dict | None,
+        table_schema: T.StructType, manifested: set[int],
+        compact_candidates: list[int],
+    ):
+        """``apply_batch``'s Spark side: the batch's stored rows, and the
+        route ``_merge_plan`` picks for them. Returns ``(rows, plan,
+        obs)``: on the ``arrow`` route ``rows`` is the batch collected
+        as an Arrow table (with ``_bucket``); on the others, the folded
+        DataFrame ``_stage_buckets`` writes, with the lineage
+        Observation riding its job."""
+        events = batch_df.drop(*[c for c in _ENVELOPE_META if c in batch_df.columns and c != "op"])
         if self.patch and CELL in events.columns:
             # pre-built cell events (replication from another patch
             # table): trust the incoming per-cell seqs verbatim — the
@@ -2391,6 +2554,21 @@ class SnapshotSink:
         )
         if manifested:
             state_rows = state_rows.filter(~F.col("_bucket").isin(sorted(manifested)))
+        tgt = None
+        if compact_candidates:
+            tgt = self._read_buckets(snap, compact_candidates, target=table_schema)
+            if tgt is not None:
+                tgt = tgt.withColumn("_bucket", _bucket_expr(self.n_buckets))
+                # compact only buckets this batch actually touches: a
+                # broadcast semi-join against the batch's bucket set
+                # (≤ n_buckets rows) — stays inside the same job
+                batch_buckets = state_rows.select("_bucket").distinct()
+                tgt = tgt.join(F.broadcast(batch_buckets), "_bucket", "left_semi")
+        plan = self._merge_plan(
+            state_rows if tgt is None else state_rows.unionByName(tgt)
+        )
+        if plan["route"] == "arrow":
+            return state_rows.toArrow(), plan, None
         obs = None
         if self.lineage:
             # lineage rides the merge job itself (A12 with ZERO extra
@@ -2404,113 +2582,86 @@ class SnapshotSink:
             state_rows = state_rows.observe(
                 obs, F.count(F.lit(1)).alias("events")
             )
-        merge_in = state_rows
-        if compact_candidates:
-            tgt = self._read_buckets(snap, compact_candidates, target=table_schema)
-            if tgt is not None:
-                # GC stickiness: the inline fold re-applies the table's
-                # tombstone retention floor to the TARGET side only
-                # (batch rows are never floor-filtered — an event below
-                # the floor arriving now is the caller's broken floor
-                # contract, not ours to hide)
-                ff = self._floor_filter(snap)
-                if ff is not None:
-                    tgt = tgt.filter(ff)
-                tgt = tgt.withColumn("_bucket", _bucket_expr(self.n_buckets))
-                # compact only buckets this batch actually touches: a
-                # broadcast semi-join against the batch's bucket set
-                # (≤ n_buckets rows) — stays inside the same job
-                batch_buckets = state_rows.select("_bucket").distinct()
-                tgt = tgt.join(F.broadcast(batch_buckets), "_bucket", "left_semi")
-                merge_in = state_rows.unionByName(tgt)
-        plan = self._merge_plan(merge_in)
-        if plan["one_task"]:
+        merge_in = state_rows if tgt is None else state_rows.unionByName(tgt)
+        if plan["route"] == "one_task":
             merge_in = merge_in.coalesce(1)
         merged = self._fold(
             merge_in.drop("_bucket"), KEY, SEQ, salt_partials=self.salt_partials
         ).withColumn("_bucket", _bucket_expr(self.n_buckets))
+        ff = self._floor_filter(snap)
+        if ff is not None and tgt is not None:
+            # GC stickiness: a compacted bucket's fold drops tombstones
+            # below the table's retention floor AFTER folding, as
+            # compact() does — dropping them before would let an older
+            # version they shadow win. Appended buckets keep theirs: an
+            # older version may sit in a delta this batch does not fold.
+            merged = merged.filter(ff | ~F.col("_bucket").isin(compact_candidates))
+        if plan["route"] == "parallel":
+            merged = merged.repartition(self.n_buckets, "_bucket")
+        return merged, plan, obs
 
-        t_plan = time.time()
-        staging, stats, t_job = self._stage_buckets(
-            merged if plan["one_task"]
-            else merged.repartition(self.n_buckets, "_bucket"),
-            after_write=lambda: self.crash_hook("after_data_write"),
-        )
-        # touched buckets = the partition dirs the job actually wrote
-        written = sorted(stats)
-        metrics: dict = {
-            "batch_id": batch_id,
-            "skipped": False,
-            "touched_buckets": sorted(set(written) | manifested),
-            "compacted_buckets": [b for b in written if b in compact_candidates],
-            "appended_buckets": [b for b in written if b not in compact_candidates],
-            "reused_buckets": sorted(manifested),
-            "merge_plan": plan,
-        }
-        # write-audit-publish: the gate runs on the STAGED files — the
-        # real post-dedup, schema-aligned bytes about to be committed —
-        # before any manifest or pointer moves. A violation aborts
-        # crash-equivalently (staging cleaned, table untouched).
-        # Manifested buckets bypass: their manifests exist only because
-        # a prior attempt passed this same gate.
-        if self.audit is not None and written:
-            try:
-                self.audit(
-                    self.spark.read.parquet(staging), {"batch_id": batch_id}
-                )
-            except Exception:
-                shutil.rmtree(staging, ignore_errors=True)
-                raise
-
-        if obs is not None:
-            # obs.get raises a JVM assertion when the CollectMetrics
-            # node was optimized away — AQE's empty-relation
-            # propagation does exactly that for an all-filtered
-            # batch (e.g. a rewrite-only replication window). Zero
-            # rows observed IS the right answer then. Read it BEFORE
-            # the commit critical section — the job already ran, this
-            # only fetches its metrics.
-            try:
-                observed_events = obs.get["events"]
-            except Exception:
-                observed_events = 0
-            metrics["lineage"] = {
-                "events": observed_events,
-                "input_files": sorted(
-                    os.path.basename(f) for f in batch_df.inputFiles()
-                ),
-            }
-        return self._publish_and_commit(
-            staging, batch_id, snap, stats, metrics,
-            entry_ddl=_ddl(table_schema),
-            phases=(t0, t_plan, t_job),
-            batch_payload_schema=batch_payload_schema,
-            manifested=manifested,
-            folded=consumed_paths,
-        )
+    def _arrow_fold(
+        self, rows: pa.Table, snap: dict | None, table_schema: T.StructType,
+        compact_candidates: list[int],
+    ) -> pa.Table:
+        """The ``arrow`` route's merge: ``rows`` (stored rows with
+        ``_bucket``) folded in one Arrow fold with every file of the
+        compaction candidates they touch; in those compacted buckets
+        ``_floor_filter``'s rule then drops expired tombstone winners.
+        Returns the winners, key-sorted, with ``_bucket`` — what
+        ``_stage_buckets`` writes."""
+        buckets = rows["_bucket"].to_numpy()
+        files = [
+            (b, f)
+            for b in sorted(set(buckets.tolist()) & set(compact_candidates))
+            for f in _bucket_files(self.root, snap, b)
+        ]
+        sources = [rows] + [f for _, f in files]
+        win = _winners(_versions(sources))
+        f, r = win["f"].to_numpy(), win["r"].to_numpy()
+        file_bucket = np.array([-1] + [b for b, _ in files], np.int32)
+        in_batch = f == 0
+        win_bucket = np.where(
+            in_batch, buckets[np.where(in_batch, r, 0)], file_bucket[f]
+        ).astype(np.int32)
+        win = win.append_column("_bucket", pa.array(win_bucket))
+        floor = 0 if snap is None else snap.get("tombstone_floor", 0)
+        if floor and files:
+            # the rule of the Spark route: see _frame_rows
+            expired = pc.and_kleene(
+                pc.and_kleene(win[DELETED], pc.less(win[SEQ], floor)),
+                pa.array(np.isin(win_bucket, file_bucket[1:])),
+            )
+            win = win.filter(pc.invert(expired))
+        target = to_arrow_schema(table_schema).append(pa.field("_bucket", pa.int32()))
+        return _take_rows(sources, win, target)
 
     def _merge_plan(self, merge_in: DataFrame) -> dict:
-        """Route an ingest merge: ``one_task`` when Spark's own size
-        estimate of ``merge_in`` is at most
-        ``spark.sql.autoBroadcastJoinThreshold`` — a relation Spark would
-        ship whole to every task is small enough to fold in one. The
-        fixed cost of each stage and job, not the data, bounds such a
-        batch. A threshold of -1 (broadcast off) and an input of unknown
-        size (a foreachBatch ``LogicalRDD`` reports
-        ``spark.sql.defaultSizeInBytes``) keep the parallel plan.
-        Driver-side planning only, no Spark job."""
+        """Route a DataFrame ingest merge: ``arrow`` (row-LWW) or
+        ``one_task`` (patch) when Spark's own size estimate of
+        ``merge_in`` is at most ``spark.sql.autoBroadcastJoinThreshold``
+        — a relation Spark would ship whole to every task is small
+        enough to fold in one place. The fixed cost of each stage and
+        job, not the data, bounds such a batch. A threshold of -1
+        (broadcast off) and an input of unknown size (a foreachBatch
+        ``LogicalRDD`` reports ``spark.sql.defaultSizeInBytes``) keep
+        the ``parallel`` plan. Driver-side planning only, no Spark
+        job."""
         est = merge_in._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
         threshold = self.spark._jconf.autoBroadcastJoinThreshold()
+        small = 0 <= est <= threshold
         return {
-            "one_task": 0 <= est <= threshold,
+            "route": ("one_task" if self.patch else "arrow") if small else "parallel",
+            "input": "dataframe",
             "est_bytes": est,
             "threshold_bytes": threshold,
         }
 
-    def _stage_buckets(self, df: DataFrame, after_write=None):
+    def _stage_buckets(self, rows, after_write=None):
         """The staged write every data rewrite shares (ingest, compaction
-        / rewrite, rebucket): ``df`` — already partitioned (and sorted)
-        by its ``_bucket`` column, or in one partition — lands as
+        / rewrite, rebucket): ``rows`` — a DataFrame already partitioned
+        (and sorted) by its ``_bucket`` column, or in one partition; or
+        an Arrow table with ``_bucket``, written by pyarrow — lands as
         ``_bucket=N/`` dirs under a fresh ``data/_stage-*`` dir with the
         sink's file options, then every written bucket's footer stats
         are read in parallel.
@@ -2520,9 +2671,12 @@ class SnapshotSink:
         write job (ingest's crash point). Returns ``(staging, {bucket:
         _parquet_stats}, write-job end time)``."""
         staging = os.path.join(self.root, "data", f"_stage-{uuid.uuid4().hex}")
-        self._file_options(
-            df.write.mode("overwrite").partitionBy("_bucket")
-        ).parquet(staging)
+        if isinstance(rows, pa.Table):
+            self._write_arrow(rows, staging)
+        else:
+            self._file_options(
+                rows.write.mode("overwrite").partitionBy("_bucket")
+            ).parquet(staging)
         t_written = time.time()
         if after_write is not None:
             after_write()
@@ -2537,6 +2691,33 @@ class SnapshotSink:
                 written,
             )))
         return staging, stats, t_written
+
+    def _write_arrow(self, rows: pa.Table, staging: str) -> None:
+        """pyarrow's half of ``_stage_buckets``: each bucket's rows, in
+        their order, as zstd files of at most ``target_file_rows``
+        rows, like Spark's ``maxRecordsPerFile``."""
+        os.makedirs(staging)
+        buckets = rows["_bucket"].to_numpy()
+        order = np.argsort(buckets, kind="stable")
+        buckets = buckets[order]
+        data = rows.drop_columns(["_bucket"]).take(pa.array(order))
+        cuts = [0, *(np.flatnonzero(np.diff(buckets)) + 1), len(buckets)]
+        files = []
+        for lo, hi in zip(cuts, cuts[1:]):
+            if hi == lo:
+                continue
+            d = os.path.join(staging, f"_bucket={buckets[lo]}")
+            os.makedirs(d)
+            step = self.target_file_rows or hi - lo
+            for j, start in enumerate(range(lo, hi, step)):
+                name = f"part-{j:05d}-{uuid.uuid4().hex}.{_COMPRESSION}.parquet"
+                files.append(
+                    (data.slice(start, min(step, hi - start)), os.path.join(d, name))
+                )
+        with ThreadPoolExecutor(max_workers=min(16, max(1, len(files)))) as ex:
+            list(ex.map(
+                lambda a: pq.write_table(a[0], a[1], compression=_COMPRESSION), files
+            ))
 
     def _move_staged(self, staging: str, buckets, tag: str) -> dict[int, str]:
         """Publish a rewrite's staged ``_bucket=N`` dirs as
@@ -2576,6 +2757,11 @@ class SnapshotSink:
         with content planned from a different head (review-found:
         the winner may have folded deltas this loser's append
         doesn't carry — silent row loss).
+
+        Durability: a commit survives process death — every manifest
+        and the pointer land by ``os.replace`` — but not power loss:
+        nothing calls ``fsync``, so a commit the OS had not flushed can
+        vanish with the machine.
 
         Spark-FREE by construction (file moves, footer-derived stats
         passed in, JSON metadata): the Python Data Source write path
@@ -4326,7 +4512,12 @@ def _parquet_stats(
                         continue
                     col_ok[c] = False
                     break
-                mn, mx = _json_stat(st.min), _json_stat(st.max)
+                try:
+                    mn, mx = _json_stat(st.min), _json_stat(st.max)
+                except pa.ArrowNotImplementedError:
+                    # pyarrow cannot decode some stats at all (Spark
+                    # stores a decimal of precision <= 18 as INT32/INT64)
+                    mn = mx = None
                 if mn is None or mx is None:
                     col_ok[c] = False
                     break

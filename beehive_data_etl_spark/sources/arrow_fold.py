@@ -1,21 +1,30 @@
 """The Arrow merge-on-read fold over SnapshotSink tables, Spark-free.
 
-One fold, two callers:
+One fold, three callers:
 
 - the ``beehive`` Data Sources (``sources/spark_datasource.py``) run it
   inside Spark's Python workers, one table bucket per input partition;
 - ``SnapshotSink`` (``sinks/snapshot.py``) runs it on the driver to
   answer one-bucket point reads (``lookup``) and small row-LWW
-  changelog windows (``read_changes``) without launching a Spark job.
+  changelog windows (``read_changes``, every touched bucket in one
+  call) without launching a Spark job;
+- ``SnapshotSink``'s small-batch ingest (``apply_wal`` and the small
+  row-LWW ``apply_batch``) folds a batch, held in memory, together
+  with the files of the buckets it compacts inline.
 
-The fold is a vectorized two-pass over a bucket's parquet files: pass 1
-reads only the (key, seq, deleted) columns and picks each key's LWW
-winner with a pandas groupby-idxmax; pass 2 ``take``s exactly the
-winning rows with the full projection, so loser versions never
-materialize their token arrays. A changelog window diffs the FROM and
-TO winners of the keys the window's added files hold (``read_changes``'
-I/U/D truth table). Parity with the sink's Spark fold is pinned by
-tests/test_spark_datasource.py and tests/test_driver_reads.py.
+The fold is a two-pass over sources (parquet files or in-memory Arrow
+tables) on pyarrow compute, whole columns per call: pass 1 reads only
+the (key, seq, deleted) columns of every source, tags each row with its
+source ordinal ``f`` and row ordinal ``r``, sorts by (key, seq desc, f,
+r) with ``sort_indices`` and keeps the first row of each key's run —
+the LWW winner, the first-read row on seq ties; pass 2 ``take``s
+exactly the winning rows with the full projection, so loser versions
+never materialize their token arrays. A changelog window diffs the
+FROM and TO winners of the keys the window's added files hold
+(``read_changes``' I/U/D truth table). Keys never straddle buckets, so
+one call may fold any set of whole buckets. Parity with the sink's
+Spark fold is pinned by tests/test_spark_datasource.py,
+tests/test_driver_reads.py and tests/test_merge_routes.py.
 
 Point reads plan from the snapshot's recorded key ranges: an entry
 whose ``key_range`` — or, inside a sorted rewrite, a file whose
@@ -24,7 +33,7 @@ whose ``key_range`` — or, inside a sorted rewrite, a file whose
 files that remain are read only in the row groups whose key statistics
 admit a probe.
 
-Everything here is plain file I/O plus pyarrow/pandas: no SparkSession,
+Everything here is plain file I/O plus pyarrow/numpy: no SparkSession,
 no JVM, no pyspark import.
 """
 
@@ -34,7 +43,9 @@ import bisect
 import os
 from dataclasses import dataclass, field
 
+import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 
 from . import table_meta as tm
 
@@ -226,113 +237,126 @@ def _matching_row_groups(pf, key_values: list) -> list[int]:
     return keep
 
 
-def _read_cols(path: str, columns: list[str], key_values: list | None = None):
-    """Read a parquet file restricted to the columns it actually has
-    (older-schema deltas lack later columns).  ``key_values`` (point
-    reads) prunes row groups by key statistics — the I/O win on
-    compacted key-sorted buckets, where a probe decodes one row group
-    instead of the bucket (surviving groups are read whole; callers
-    re-apply the key predicate row-level).  One footer read per file:
-    names, stats, and data all come off the same ParquetFile.
+def _read_cols(src, columns: list[str], key_values: list | None = None):
+    """A source's ``columns`` that it actually has (older-schema deltas
+    lack later columns). A source is an in-memory Arrow table or a
+    parquet file path; for a file, ``key_values`` (point reads) prunes
+    row groups by key statistics — the I/O win on compacted key-sorted
+    buckets, where a probe decodes one row group instead of the bucket
+    (surviving groups are read whole; callers re-apply the key
+    predicate row-level).  One footer read per file: names, stats, and
+    data all come off the same ParquetFile.
     CRITICAL ordinal contract: both fold passes of one partition must
     pass the SAME key_values, because row ordinals index the
     (identically) pruned read."""
+    if isinstance(src, pa.Table):
+        return src.select([c for c in columns if c in src.column_names])
     import pyarrow.parquet as pq
 
-    pf = pq.ParquetFile(path)
+    pf = pq.ParquetFile(src)
     have = set(pf.schema_arrow.names)
     cols = [c for c in columns if c in have]
     if key_values is None:
-        return pf.read(columns=cols), have
+        return pf.read(columns=cols)
     groups = _matching_row_groups(pf, key_values)
     if not groups:
-        return pf.schema_arrow.empty_table().select(cols), have
-    return pf.read_row_groups(groups, columns=cols), have
+        return pf.schema_arrow.empty_table().select(cols)
+    return pf.read_row_groups(groups, columns=cols)
 
 
-def _versions(files: list[str], key_values: list | None = None):
-    """Pass 1's input: every (key, seq, deleted) row of ``files`` as a
-    pandas frame with its file ordinal ``f`` and row ordinal ``r``.
-    Only those three columns' bytes are read; token arrays of loser
-    versions never leave the parquet file."""
-    import pandas as pd
+def _versions(sources: list, key_values: list | None = None) -> pa.Table:
+    """Pass 1's input: every (key, seq, deleted) row of ``sources`` with
+    its source ordinal ``f`` and row ordinal ``r``. Only those three
+    columns' bytes are read; token arrays of loser versions never leave
+    the parquet file. A key widened across sources (int → bigint)
+    reads as the widest type."""
+    tables = []
+    for i, src in enumerate(sources):
+        t = _read_cols(src, [KEY, SEQ, DELETED], key_values)
+        n = t.num_rows
+        tables.append(
+            t.append_column("f", pa.array(np.full(n, i, np.int32)))
+            .append_column("r", pa.array(np.arange(n, dtype=np.int64)))
+        )
+    if not tables:
+        return pa.table(
+            {KEY: pa.array([], pa.null()), SEQ: pa.array([], pa.int64()),
+             DELETED: pa.array([], pa.bool_()), "f": pa.array([], pa.int32()),
+             "r": pa.array([], pa.int64())}
+        )
+    return pa.concat_tables(tables, promote_options="permissive")
 
-    frames = []
-    for i, path in enumerate(files):
-        t, _ = _read_cols(path, [KEY, SEQ, DELETED], key_values)
-        df = t.to_pandas()
-        df["f"] = i
-        df["r"] = range(len(df))
-        frames.append(df)
-    if not frames:
-        return pd.DataFrame(columns=[KEY, SEQ, DELETED, "f", "r"])
-    return pd.concat(frames, ignore_index=True)
 
-
-def _winners(versions):
-    """Pass 1 of the merge-on-read fold: per-key LWW winner location
-    among ``_versions`` rows.
-
-    Returns a pandas frame indexed by key with columns (seq, deleted,
-    f, r) — the winning row's file ordinal and row ordinal.  Ties keep
-    the first-read row — duplicate deliveries are byte-identical by the
-    envelope contract (operators/lww.py), so either copy is the same
-    row."""
-    if len(versions) == 0:
-        return versions.set_index(KEY)
-    win = versions.loc[versions.groupby(KEY, sort=False)[SEQ].idxmax()]
-    return win.set_index(KEY)
+def _winners(versions: pa.Table) -> pa.Table:
+    """Pass 1 of the merge-on-read fold: each key's LWW winner among
+    ``_versions`` rows, sorted by key — its (key, seq, deleted) and the
+    source and row ordinals ``f``, ``r`` that locate it. One sort on
+    (key, seq desc, f, r) puts each key's winner first in its run, so
+    ties keep the first-read row — duplicate deliveries are
+    byte-identical by the envelope contract (operators/lww.py), so
+    either copy is the same row. NaN keys form one run, as Spark
+    groups them."""
+    if versions.num_rows == 0:
+        return versions
+    order = pc.sort_indices(
+        versions,
+        sort_keys=[(KEY, "ascending"), (SEQ, "descending"),
+                   ("f", "ascending"), ("r", "ascending")],
+    )
+    keys = versions[KEY].take(order).combine_chunks()
+    prev, cur = keys.slice(0, len(keys) - 1), keys.slice(1)
+    new_run = pc.fill_null(pc.not_equal(cur, prev), True)
+    if pa.types.is_floating(keys.type):
+        new_run = pc.and_not(new_run, pc.and_(pc.is_nan(cur), pc.is_nan(prev)))
+    first = pa.concat_arrays([pa.array([True]), new_run])
+    return versions.take(order.filter(first))
 
 
 def _align(table: pa.Table, target: pa.Schema) -> pa.Table:
     """pyarrow twin of ``operators/schema_evolution.align_to_schema``:
-    missing columns become typed nulls, widened columns cast."""
+    missing columns become typed nulls, widened columns cast (unchecked,
+    like Spark's cast)."""
     n = table.num_rows
     cols = []
     for fld in target:
         if fld.name in table.column_names:
             col = table.column(fld.name)
             if col.type != fld.type:
-                col = col.cast(fld.type)
+                col = col.cast(fld.type, safe=False)
             cols.append(col)
         else:
             cols.append(pa.nulls(n, fld.type))
     return pa.Table.from_arrays(cols, schema=target)
 
 
-def _take_rows(
-    files: list[str],
-    win,
-    keys,
-    target: pa.Schema,
-    extra_cols: dict | None = None,
-    key_values: list | None = None,
-):
-    """Pass 2: materialize the winning rows of ``keys`` (an index into
-    ``win``), aligned to ``target``, optionally appending constant-ish
-    extra columns (the changelog's change_type), yielding one
-    RecordBatch per source file."""
-    import numpy as np
+_ORDINALS = {KEY, SEQ, DELETED, "f", "r"}
 
-    sel = win.loc[list(keys)] if keys is not None else win
-    read_cols = [f.name for f in target if f.name != CHANGE]
-    for i, path in enumerate(files):
-        rows = sel[sel["f"] == i]
-        if len(rows) == 0:
-            continue
-        order = np.sort(rows["r"].to_numpy())
-        t, _ = _read_cols(path, read_cols, key_values)
-        t = t.take(pa.array(order))
-        if extra_cols:
-            # map each taken row back to its key to fetch its tag
-            key_of = rows.reset_index().set_index("r").loc[order, KEY]
-            tags = pa.array([extra_cols[k] for k in key_of], pa.string())
-            t = _align(t, pa.schema([f_ for f_ in target if f_.name != CHANGE]))
-            t = t.append_column(CHANGE, tags)
-        else:
-            t = _align(t, target)
-        for batch in t.to_batches():
-            yield batch
+
+def _take_rows(
+    sources: list, win: pa.Table, target: pa.Schema, key_values: list | None = None
+) -> pa.Table:
+    """Pass 2: the rows ``win`` locates, in ``win``'s order, aligned to
+    ``target``. Each source is read once, and only when it holds a
+    winner. A ``target`` column that ``win`` carries beyond the fold's
+    own (a changelog's change_type, ingest's bucket) comes from ``win``
+    rather than from the sources."""
+    extra = [f for f in target if f.name in win.column_names and f.name not in _ORDINALS]
+    data = pa.schema([f for f in target if f not in extra])
+    f = win["f"].to_numpy()
+    r = win["r"].to_numpy()
+    pieces, pos = [], []
+    for i, src in enumerate(sources):
+        idx = np.flatnonzero(f == i)
+        if idx.size:
+            t = _read_cols(src, data.names, key_values).take(pa.array(r[idx]))
+            pieces.append(_align(t, data))
+            pos.append(idx)
+    if not pieces:
+        return target.empty_table()
+    out = pa.concat_tables(pieces).take(pa.array(np.argsort(np.concatenate(pos))))
+    for fld in extra:
+        out = out.append_column(fld, win[fld.name].cast(fld.type))
+    return out.select(target.names)
 
 
 def read_state_partition(part: BucketWork, target: pa.Schema, internal: bool):
@@ -341,54 +365,48 @@ def read_state_partition(part: BucketWork, target: pa.Schema, internal: bool):
     unprobed keys in the surviving row groups may be stale: callers
     filter to the probed keys."""
     win = _winners(_versions(part.new_files, part.key_values))
-    if not internal and len(win) > 0:
-        win = win[~win[DELETED].astype(bool)]
+    if not internal:
+        win = win.filter(pc.invert(win[DELETED]))
     yield from _take_rows(
-        part.new_files, win, None, target, key_values=part.key_values
-    )
+        part.new_files, win, target, part.key_values
+    ).to_batches()
 
 
 def read_changes_partition(part: BucketWork, target: pa.Schema):
-    """Diff the bucket's FROM and TO states restricted to keys seen in
-    window-added files — ``read_changes``'s I/U/D contract computed
-    inside one partition."""
-    import numpy as np
-
+    """Diff the FROM and TO states restricted to keys seen in
+    window-added files — ``read_changes``'s I/U/D contract computed in
+    one call over one bucket, or over several whole buckets at once."""
     versions = _versions(part.new_files)
-    new_win = _winners(versions)
-    old_win = _winners(_versions(part.old_files))
-    # candidate keys: pass 1 already read every added file's keys
     added = set(part.added_files)
     touched = [i for i, p in enumerate(part.new_files) if p in added]
-    cand = versions.loc[versions["f"].isin(touched), KEY].unique()
-    # vectorized I/U/D tagging over the candidate slice (read_changes'
-    # truth table): reindex the FROM-state winners onto the candidate
-    # keys — absent keys surface as NaN, i.e. not-old-live
-    idx = new_win.index.intersection(cand)
-    if len(idx) == 0:
-        return
-    nw = new_win.loc[idx]
-    old = old_win.reindex(idx)
-    new_live = ~nw[DELETED].astype(bool).to_numpy()
-    # NaN == False is False, so keys absent from the FROM state read as
-    # not-old-live without any dtype coercion
-    old_live = (old[DELETED] == False).to_numpy()  # noqa: E712
-    # reindex floats the seq column when keys are absent — float64 is
-    # exact for int seqs below 2^53, far above any real op_sequence
-    # clock (10^10-event replays sit near 2^34)
-    seq_adv = nw[SEQ].to_numpy() > old[SEQ].to_numpy(
-        dtype="float64", na_value=-(2.0**63)
+    cand = pc.unique(
+        versions[KEY].filter(pc.is_in(versions["f"], pa.array(touched, pa.int32())))
     )
-    tag = np.where(
-        new_live & ~old_live,
-        "I",
-        np.where(
-            new_live & old_live & seq_adv,
-            "U",
-            np.where(~new_live & old_live, "D", ""),
-        ),
-    )
-    tags = {k: t for k, t in zip(idx, tag) if t}
-    if not tags:
+    new = _winners(versions)
+    new = new.filter(pc.is_in(new[KEY], value_set=cand))
+    if new.num_rows == 0:
         return
-    yield from _take_rows(part.new_files, new_win, tags.keys(), target, tags)
+    old = _winners(_versions(part.old_files))
+    n = new.num_rows
+    if old.num_rows:
+        # locate each candidate's FROM-state winner (null: absent there)
+        at = pc.index_in(new[KEY], value_set=old[KEY].combine_chunks().cast(new[KEY].type))
+        old_live = pc.fill_null(pc.invert(old[DELETED].take(at)), False).to_numpy(
+            zero_copy_only=False
+        )
+        seq_adv = pc.fill_null(
+            pc.greater(new[SEQ], old[SEQ].take(at)), True
+        ).to_numpy(zero_copy_only=False)
+    else:
+        old_live, seq_adv = np.zeros(n, bool), np.ones(n, bool)
+    new_live = ~new[DELETED].to_numpy(zero_copy_only=False)
+    tag = np.select(
+        [new_live & ~old_live, new_live & old_live & seq_adv, ~new_live & old_live],
+        ["I", "U", "D"],
+        "",
+    )
+    keep = tag != ""
+    if not keep.any():
+        return
+    new = new.filter(pa.array(keep)).append_column(CHANGE, pa.array(tag[keep]))
+    yield from _take_rows(part.new_files, new, target).to_batches()

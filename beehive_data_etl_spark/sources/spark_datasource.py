@@ -54,8 +54,8 @@ Why this design is Spark-first rather than a wrapper API:
   ``take``s exactly the winning rows), so loser versions never
   materialize their token arrays.  That module is Spark-free and is
   the one Arrow fold: ``SnapshotSink`` runs the same functions on the
-  driver to answer one-bucket point reads and small changelog windows
-  without a Spark job.
+  driver to answer one-bucket point reads and small changelog windows,
+  and to fold and write small ingest batches, without a Spark job.
 
 Semantics parity (pinned by tests/test_spark_datasource.py):
 
@@ -586,8 +586,7 @@ class BeehiveBatchWriter(DataSourceArrowWriter):
     DataFrame carries a JVM-computed ``_bucket`` column
     (``pmod(xxhash64(doc_id), n_buckets)`` — recommended for bulk:
     it also lets ``df.repartition(n, "_bucket")`` give one file per
-    bucket per task), and pyarrow writes no parquet bloom filters
-    (the next compaction rewrite adds them). The sink's in-batch LWW
+    bucket per task). The sink's in-batch LWW
     pre-fold is skipped too — the delta carries every event version
     and the merge-on-read fold dedups at read; heavy producers should
     prefer ``SnapshotSink.apply_batch``. Unlike the read path, commit

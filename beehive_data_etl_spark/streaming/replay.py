@@ -39,6 +39,9 @@ from typing import Protocol
 
 
 class CdcSink(Protocol):
+    """What the replayers need of a sink; ``apply_wal(paths,
+    batch_id)`` is optional (see ``replay_incremental``)."""
+
     def committed(self, batch_id: str) -> bool: ...
 
     def apply_batch(self, batch_df: DataFrame, batch_id): ...
@@ -187,7 +190,11 @@ def replay_incremental(
     """Replay an ordered WAL directory through the sink, one schema-aware
     micro-batch per ``files_per_batch`` files. Resumable: batch ids are
     deterministic functions of the file list, and committed ids are
-    skipped inside the sink. Returns per-batch commit metrics.
+    skipped inside the sink. Returns per-batch commit metrics. With no
+    ``transform``, a sink offering ``apply_wal`` (``SnapshotSink``) gets
+    the chunk's file paths instead of ``read_wal``'s DataFrame, so a
+    small chunk is read, folded and written on the driver with no Spark
+    job; a ``transform`` needs the DataFrame, so ``apply_batch`` runs.
 
     ``inflight > 1`` PIPELINES micro-batches: up to that many batch
     jobs run concurrently (driver threads submitting to the shared
@@ -254,6 +261,8 @@ def replay_incremental(
             return {"batch_id": batch_id, "skipped": True}
         if _prunable(chunk):
             return {"batch_id": batch_id, "skipped": True, "pruned": True}
+        if transform is None and hasattr(sink, "apply_wal"):
+            return sink.apply_wal(chunk, batch_id)
         df = read_wal(spark, chunk)
         if transform is not None:
             df = transform(df)

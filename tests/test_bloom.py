@@ -1,20 +1,9 @@
-"""Parquet bloom filters on the key column (SnapshotSink.bloom_filter,
-default on): the row-group-skipping lever for point lookups that
-per-file key [min, max] stats cannot provide — random doc_ids make
-every UNCOMPACTED delta file's range span the whole keyspace, and
-cluster_by compaction deliberately sorts by payload columns first.
-
-Pins: (1) the bloom is physically present in every data-write path's
-files (ingest delta, compact rewrite, rebucket) — byte-level evidence,
-a bloom-on file is strictly larger than the byte-identical bloom-off
-file; (2) lookup()/read_final() stay exact with blooms on, including
-negative probes (where a false skip would LOSE rows); (3) the knob
-actually disables it."""
-
-import glob
-import os
-
-from pyspark.sql import functions as F
+"""Point reads stay exact across the data layouts whose key statistics
+prune least: unsorted deltas (random doc_ids make every delta file's
+key [min, max] span the keyspace), key-sorted compaction, and
+cluster_by compaction (sorted by payload first, loosening key stats on
+purpose) — including negative probes, where a false skip would LOSE
+rows."""
 
 from beehive_data_etl_spark.sinks.snapshot import KEY, SnapshotSink
 
@@ -28,38 +17,6 @@ def _events(spark, lo, hi, op="I", seq_base=1000):
         "op string, op_sequence long, doc_id string, tokens array<int>, "
         "n_tok int, source string",
     )
-
-
-def _data_bytes(root):
-    return {
-        f: os.path.getsize(f)
-        for f in glob.glob(os.path.join(root, "data", "**", "*.parquet"),
-                           recursive=True)
-    }
-
-
-def test_bloom_written_on_every_data_path(spark, tmp_path):
-    """Same batches through two sinks differing only in bloom_filter:
-    every write path's files carry extra footer bytes (the bloom)."""
-    sizes = {}
-    for name, bloom in (("on", True), ("off", False)):
-        root = str(tmp_path / name)
-        s = SnapshotSink(
-            spark, root, n_buckets=2, bloom_filter=bloom, compact_threshold=100
-        )
-        s.apply_batch(_events(spark, 0, 400), "b1")
-        s.apply_batch(_events(spark, 400, 800, seq_base=5000), "b2")
-        delta = sum(_data_bytes(root).values())
-        s.compact()  # 2 deltas/bucket -> real rewrite
-        compacted = sum(_data_bytes(root).values())
-        s.rebucket(4)
-        rebucketed = sum(_data_bytes(root).values())
-        sizes[name] = (delta, compacted, rebucketed)
-    for i, path in enumerate(("ingest delta", "compact", "rebucket")):
-        on, off = sizes["on"][i], sizes["off"][i]
-        # adaptive blooms cost >=~10 KB/file even at this scale; the
-        # data bytes themselves are identical (same rows, same codec)
-        assert on > off + 10_000, f"{path}: bloom-on {on} !> bloom-off {off}"
 
 
 def test_lookup_exact_with_blooms_across_layouts(spark, tmp_path):
@@ -89,10 +46,3 @@ def test_lookup_exact_with_blooms_across_layouts(spark, tmp_path):
     s.compact(cluster_by=["source"])  # payload-clustered rewrite
     probe()  # (key stats loosened on purpose — the bloom's case)
     assert s.read_final().count() == 250
-
-
-def test_bloom_filter_knob_off(spark, tmp_path):
-    root = str(tmp_path / "t")
-    s = SnapshotSink(spark, root, n_buckets=2, bloom_filter=False)
-    s.apply_batch(_events(spark, 0, 10), "b1")
-    assert s.lookup(["doc-00003"]).count() == 1

@@ -35,13 +35,13 @@ _CRASH_POINTS = ["after_data_write", "after_manifest", "before_pointer_swap"]
 
 @pytest.mark.parametrize(
     "crash_point,merge_route",
-    [pytest.param(p, "one_task", id=p) for p in _CRASH_POINTS]
+    [pytest.param(p, "arrow", id=p) for p in _CRASH_POINTS]
     + [pytest.param(p, "parallel", id=f"{p}-parallel") for p in _CRASH_POINTS],
 )
 def test_crash_and_resume(spark, smoke_log, tmp_path, crash_point, merge_route):
-    """Small WAL batches merge in one task; the ``parallel`` cases turn
-    the size routing off so the bulk merge plan crashes and resumes
-    too."""
+    """Small WAL batches fold and write on the driver (``apply_wal``);
+    the ``parallel`` cases turn the size routing off so the bulk merge
+    plan crashes and resumes too."""
     root = str(tmp_path / "sink")
     with route(spark, merge_route):
         sink = SnapshotSink(spark, root, n_buckets=8)
@@ -52,8 +52,8 @@ def test_crash_and_resume(spark, smoke_log, tmp_path, crash_point, merge_route):
         sink2 = SnapshotSink(spark, root, n_buckets=8)
         metrics = replay_incremental(spark, smoke_log, sink2, files_per_batch=2)
     assert {
-        m["merge_plan"]["one_task"] for m in metrics if not m["skipped"]
-    } == {merge_route == "one_task"}
+        m["merge_plan"]["route"] for m in metrics if not m["skipped"]
+    } == {merge_route}
     state = sink2.read_state()
     report = compare_final(
         state.filter(~state.deleted), oracle_final_spark(spark, smoke_log)

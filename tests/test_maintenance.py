@@ -4,6 +4,8 @@ superseded-file removal) keep the MoR sink's read path bounded."""
 import glob
 import os
 
+import pytest
+
 from beehive_data_etl_spark.sinks.snapshot import SnapshotSink
 from beehive_data_etl_spark.streaming.replay import replay_incremental
 from beehive_data_etl_spark.verify import compare_final, oracle_final_spark
@@ -222,6 +224,43 @@ def test_tombstone_gc_is_sticky_through_stale_folds(spark, tmp_path):
     assert {r.doc_id: list(r.tokens) for r in sink.read_final().collect()} == {
         "y": [3]
     }
+
+
+@pytest.mark.parametrize("merge_route", ["arrow", "parallel"])
+def test_inline_compaction_drops_expired_tombstones_after_folding(
+    spark, tmp_path, merge_route
+):
+    """A tombstone below the table's floor still shadows the version it
+    deleted until a fold has folded both: an inline compaction of
+    deltas left unfolded by a one-bucket ``expire_tombstones`` must not
+    resurrect the key, on either merge route."""
+    from beehive_data_etl_spark.sinks.snapshot import bucket_of
+    from test_merge_routes import route
+
+    def _b(rows):
+        # read back from parquet: a list-built frame has no size
+        # estimate and would always take the parallel plan
+        path = str(tmp_path / f"in-{rows[0][1]}")
+        spark.createDataFrame(
+            rows, "op string, op_sequence long, doc_id string, v long"
+        ).write.parquet(path)
+        return spark.read.parquet(path)
+
+    k = "doc-a"
+    b = bucket_of(k, 2)
+    keys = [f"doc-{i}" for i in range(100)]
+    same = next(x for x in keys if bucket_of(x, 2) == b)
+    other = next(x for x in keys if bucket_of(x, 2) != b)
+    sink = SnapshotSink(spark, str(tmp_path / "t"), n_buckets=2, compact_threshold=2)
+    with route(spark, merge_route):
+        sink.apply_batch(_b([("U", 10, k, 10), ("U", 11, other, 11)]), "b1")
+        sink.apply_batch(_b([("D", 20, k, 20), ("U", 21, other, 21)]), "b2")
+        sink.expire_tombstones(30, buckets=[1 - b])
+        m = sink.apply_batch(_b([("U", 40, same, 40)]), "b3")
+    assert m["compacted_buckets"] == [b]
+    assert sink.lookup([k]).count() == 0
+    assert k not in {r.doc_id for r in sink.read_state().collect()}
+    assert m["merge_plan"]["route"] == merge_route
 
 
 def test_trim_committed_batches_bounds_metadata(spark, smoke_log, tmp_path):

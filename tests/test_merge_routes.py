@@ -1,23 +1,32 @@
-"""Ingest's two merge plans give the same table.
+"""Ingest's routes give the same table.
 
-``SnapshotSink._run_and_publish`` folds and writes a batch whose
-estimated size is within ``spark.sql.autoBroadcastJoinThreshold`` in one
-Spark task (``coalesce(1)``, no Exchange), and any other batch with the
-parallel plan (fold shuffle, then ``repartition`` by bucket). These
-tests run the same batch sequence under the default threshold and under
-``-1`` (broadcast off, so every batch is parallel) and check that both
-routes commit the same states, changelogs, manifests and lineage, and
-that both equal independent oracles. They also pin the job and stage
-counts of each shape and the ``merge_plan`` record of every commit."""
+``SnapshotSink`` merges a batch whose merge input fits within
+``spark.sql.autoBroadcastJoinThreshold`` on a small-batch route — for a
+row-LWW table the Arrow fold on the driver (``arrow``: WAL files read by
+pyarrow through ``apply_wal``, or a DataFrame collected with
+``toArrow``), for a patch table one Spark task (``one_task``) — and any
+other batch with the parallel plan (fold shuffle, then ``repartition``
+by bucket). These tests run the same batch sequence under the default
+threshold and under ``-1`` (broadcast off, so every batch is parallel)
+and check that both routes commit the same states, changelogs,
+manifests and lineage, and that both equal independent oracles. They
+also pin the job and stage counts of each shape and the ``merge_plan``
+record of every commit."""
 
+import datetime
+import decimal
 import json
+import os
 from contextlib import contextmanager
 
 import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 
 from beehive_data_etl_spark.sinks.snapshot import KEY, SnapshotSink
-from beehive_data_etl_spark.streaming.replay import replay_incremental
+from beehive_data_etl_spark.sources.spark_datasource import register
+from beehive_data_etl_spark.streaming.replay import _log_files, replay_incremental
 from beehive_data_etl_spark.verify import (
     oracle_final_duckdb,
     oracle_patch_final_spark,
@@ -25,7 +34,7 @@ from beehive_data_etl_spark.verify import (
 from test_serving_reads import ROW_SCHEMA, _job_ids
 
 THRESHOLD = "spark.sql.autoBroadcastJoinThreshold"
-ROUTES = ["one_task", "parallel"]
+ROUTES = ["arrow", "parallel"]
 
 
 @contextmanager
@@ -62,14 +71,16 @@ def _manifests(sink, metrics) -> dict:
 
 
 def _table_facts(sink, metrics) -> dict:
-    """Everything a reader can see of the table, per version and window."""
+    """What a reader can see of the table: every version's state, and
+    the changelog of every one-commit window and of the whole history
+    (a window spanning the floor advance is a full-state diff)."""
     head = sink.current_snapshot()["version"]
-    versions = range(head - len(metrics) + 1, head + 1)
+    versions = range(1, head + 1)
     return {
         "states": {v: _by_key(sink.read_state(version=v)) for v in versions},
         "changes": {
             (a, b): _by_key(sink.read_changes(a, b))
-            for a in versions for b in versions if a < b
+            for a, b in [(v - 1, v) for v in versions[1:]] + [(1, head)]
         },
         "manifests": _manifests(sink, metrics),
         "files_per_entry": {
@@ -77,38 +88,68 @@ def _table_facts(sink, metrics) -> dict:
             for v in versions
             for b, entries in sink.snapshot(v)["buckets"].items()
         },
-        "lineage": [m["lineage"]["events"] for m in metrics],
+        "lineage": [m["lineage"] for m in metrics],
     }
+
+
+def _identity(df):
+    return df
+
+
+# (route, merge_plan input) per table kind: ``wal`` batches are folded
+# from their files by ``apply_wal``, ``dataframe`` ones by
+# ``apply_batch``
+_RUNS = {
+    "row": [("arrow", "wal"), ("arrow", "dataframe"), ("parallel", "dataframe")],
+    "patch": [("one_task", "dataframe"), ("parallel", "dataframe")],
+}
 
 
 @pytest.mark.parametrize("kind", ["row", "patch"])
 def test_routes_commit_the_same_table(
     spark, evolution_log, patch_log, tmp_path, kind
 ):
-    """I/U/D, duplicate deliveries, late events and a widened column
-    (the evolution log), or masked partial updates (the patch log),
-    replayed into a salted, file-capped, lineage-tracking table whose
-    third batch compacts inline."""
+    """I/U/D, duplicate deliveries, late events, a widened and an added
+    column (the evolution log), or masked partial updates (the patch
+    log), replayed into a salted, file-capped, lineage-tracking table.
+    After two batches a tombstone floor below every later event is
+    declared while rewriting bucket 0 only, so the third batch's inline
+    compaction of the other buckets drops their expired tombstones."""
     log = evolution_log if kind == "row" else patch_log
-    facts = {}
-    for name in ROUTES:
+    later = _log_files(log)[4:]
+    floor = min(
+        pq.read_table(f, columns=["op_sequence"])["op_sequence"].to_numpy().min()
+        for f in later
+    )
+    facts = []
+    for name, batch_input in _RUNS[kind]:
+        # a transform makes the replay call apply_batch; off the arrow
+        # route apply_wal hands the batch to apply_batch by itself
+        transform = _identity if (name, batch_input) == ("arrow", "dataframe") else None
         sink = SnapshotSink(
-            spark, str(tmp_path / name), n_buckets=4, compact_threshold=2,
-            salt_partials=4, target_file_rows=40, lineage=True,
-            patch=kind == "patch",
+            spark, str(tmp_path / f"{name}-{batch_input}"), n_buckets=4,
+            compact_threshold=2, salt_partials=4, target_file_rows=40,
+            lineage=True, patch=kind == "patch",
         )
         with route(spark, name):
-            metrics = replay_incremental(spark, log, sink, files_per_batch=2)
+            metrics = replay_incremental(
+                spark, log, sink, files_per_batch=2, max_batches=2,
+                transform=transform,
+            )
+            sink.expire_tombstones(int(floor), buckets=[0])
+            metrics += replay_incremental(
+                spark, log, sink, files_per_batch=2, transform=transform,
+            )[2:]
         assert len(metrics) == 4
-        assert any(m["compacted_buckets"] for m in metrics)
-        assert all(
-            m["merge_plan"]["one_task"] == (name == "one_task") for m in metrics
-        )
-        facts[name] = _table_facts(sink, metrics)
-    assert facts["one_task"] == facts["parallel"]
+        assert metrics[2]["compacted_buckets"] == [1, 2, 3]
+        assert {
+            (m["merge_plan"]["route"], m["merge_plan"]["input"]) for m in metrics
+        } == {(name, batch_input)}
+        facts.append(_table_facts(sink, metrics))
+    assert all(f == facts[-1] for f in facts)
 
     cols = ["doc_id", "op_sequence", "tokens", "n_tok", "source"]
-    got = _live(facts["one_task"]["states"][max(facts["one_task"]["states"])], cols)
+    got = _live(facts[0]["states"][max(facts[0]["states"])], cols)
     if kind == "row":
         want = oracle_final_duckdb(log)[cols]
     else:
@@ -128,14 +169,12 @@ def test_pipelined_replay_routes_agree(spark, smoke_log, tmp_path):
             metrics = replay_incremental(
                 spark, smoke_log, sink, files_per_batch=1, inflight=2
             )
-        assert {m["merge_plan"]["one_task"] for m in metrics} == {
-            name == "one_task"
-        }
+        assert {m["merge_plan"]["route"] for m in metrics} == {name}
         finals[name] = _by_key(sink.read_state())
-    assert finals["one_task"] == finals["parallel"]
+    assert finals["arrow"] == finals["parallel"]
     cols = ["doc_id", "op_sequence", "tokens"]
     _assert_frames_equal(
-        _live(finals["one_task"], cols), oracle_final_duckdb(smoke_log)[cols]
+        _live(finals["arrow"], cols), oracle_final_duckdb(smoke_log)[cols]
     )
 
 
@@ -157,6 +196,109 @@ def _assert_frames_equal(got: pd.DataFrame, want: pd.DataFrame) -> None:
     assert got.to_dict("records") == want.to_dict("records")
 
 
+# ------------------------------------------------------ typed round trip
+_TS0 = datetime.datetime(2024, 1, 1, tzinfo=datetime.timezone.utc)
+
+
+def _typed_wal(path, rows, n_type) -> None:
+    """One WAL file of (op, seq, key) rows with a payload column of each
+    kind; ``n`` is ``n_type`` (int32 early in the log, int64 later)."""
+    seqs = [s for _, s, _ in rows]
+    pq.write_table(pa.table({
+        "op": [op for op, _, _ in rows],
+        "op_sequence": pa.array(seqs, pa.int64()),
+        "doc_id": [f"k-{k:03d}" for _, _, k in rows],
+        "n": pa.array([s % 1000 for s in seqs], n_type),
+        "big": pa.array([s * 10_000_000_000 for s in seqs], pa.int64()),
+        "score": pa.array([s / 7 + 0.5 for s in seqs], pa.float64()),
+        "label": [f"v{s}" for s in seqs],
+        "day": pa.array(
+            [datetime.date(2024, 1, 1) + datetime.timedelta(days=s % 50) for s in seqs],
+            pa.date32(),
+        ),
+        "at": pa.array(
+            [_TS0 + datetime.timedelta(seconds=s) for s in seqs],
+            pa.timestamp("us", tz="UTC"),
+        ),
+        "price": pa.array(
+            [decimal.Decimal(s) / 100 for s in seqs], pa.decimal128(10, 2)
+        ),
+        "tokens": pa.array([[s, s + 1] for s in seqs], pa.list_(pa.int32())),
+    }), path)
+
+
+def _typed_log(root) -> str:
+    """Five WAL files: inserts, updates with an in-batch same-seq
+    duplicate and a delete, the column ``n`` widened to bigint, then a
+    redelivery of an event the compaction already folded."""
+    os.makedirs(root)
+    ins = [("I", 100 + k, k) for k in range(40)]
+    upd = [("U", 200 + k, k) for k in range(0, 40, 3)]
+    files = [
+        (ins[:20], pa.int32()),
+        (ins[20:] + upd[:3] + upd[:1] + [("D", 250, 4)], pa.int32()),
+        (upd[3:] + [("U", 300, 41)], pa.int64()),
+        ([("U", 310 + k, k) for k in range(1, 40, 4)], pa.int64()),
+        ([("U", 310 + 1, 1), ("I", 400, 42)], pa.int64()),
+    ]
+    for i, (rows, n_type) in enumerate(files):
+        _typed_wal(os.path.join(root, f"part-{i:05d}.parquet"), rows, n_type)
+    return root
+
+
+def _entries(sink) -> dict:
+    """Per version and bucket, the recorded footer stats of each entry
+    (file names aside: they differ between writers)."""
+    head = sink.current_snapshot()["version"]
+    return {
+        (v, b): [
+            (e["key_range"], sorted((e["file_ranges"] or {}).values()),
+             e["col_ranges"], e["compacted"])
+            for e in entries
+        ]
+        for v in range(1, head + 1)
+        for b, entries in sink.snapshot(v)["buckets"].items()
+    }
+
+
+def test_typed_round_trip(spark, tmp_path):
+    """int, bigint, double, string, date, timestamp, decimal and
+    array<int> payloads, with ``n`` widened mid-table, read back equal
+    from both routes through every reader; same-seq duplicates fold to
+    one row within a batch and against a compacted file."""
+    log = _typed_log(str(tmp_path / "wal"))
+    register(spark)
+    seen = {}
+    for name in ROUTES:
+        sink = SnapshotSink(spark, str(tmp_path / name), n_buckets=4, compact_threshold=3)
+        with route(spark, name):
+            metrics = replay_incremental(spark, log, sink, files_per_batch=1)
+        assert {m["merge_plan"]["route"] for m in metrics} == {name}
+        assert metrics[3]["compacted_buckets"]
+        head = sink.current_snapshot()["version"]
+        keys = [f"k-{k:03d}" for k in (0, 1, 4, 41, 42, 99)]
+        seen[name] = {
+            "states": {v: _by_key(sink.read_state(version=v)) for v in range(1, head + 1)},
+            "lookups": {k: _by_key(sink.lookup([k])) for k in keys},
+            "changes": {v: _by_key(sink.read_changes(v - 1, v)) for v in range(2, head + 1)},
+            "ds": _by_key(spark.read.format("beehive").load(sink.root)),
+            "entries": _entries(sink),
+            "schema": sink.current_snapshot()["schema"],
+        }
+    assert seen["arrow"] == seen["parallel"]
+    got = seen["arrow"]
+    assert "n bigint" in got["schema"]
+    final = got["states"][max(got["states"])]
+    assert len(final) == 42 and final["k-004"]["deleted"]
+    assert final["k-001"]["op_sequence"] == 311
+    assert final["k-042"]["price"] == decimal.Decimal("4.00")
+    assert final["k-041"]["at"] == datetime.datetime(2024, 1, 1, 0, 5)
+    assert got["lookups"]["k-042"]["k-042"]["tokens"] == [400, 401]
+    assert not got["lookups"]["k-004"] and not got["lookups"]["k-099"]
+    # the redelivered, already-compacted event changes nothing
+    assert set(got["changes"][max(got["changes"])]) == {"k-042"}
+
+
 # -------------------------------------------------------- plan shapes
 def _small_batch(spark, tmp_path, name, seq0, keys):
     """A WAL-like parquet batch, read before any job is counted."""
@@ -176,10 +318,13 @@ def _jobs_and_stages(spark, fn):
 
 
 def test_small_append_is_one_job_one_stage(spark, tmp_path):
+    """A small DataFrame is collected by one job; the fold and the
+    write run on the driver."""
     sink = SnapshotSink(spark, str(tmp_path / "t"), n_buckets=8)
     df = _small_batch(spark, tmp_path, "b0", 0, range(200))
     m, n_jobs, n_stages = _jobs_and_stages(spark, lambda: sink.apply_batch(df, "b0"))
-    assert m["merge_plan"]["one_task"]
+    assert m["merge_plan"]["route"] == "arrow"
+    assert m["merge_plan"]["input"] == "dataframe"
     assert 0 < m["merge_plan"]["est_bytes"] <= m["merge_plan"]["threshold_bytes"]
     assert (n_jobs, n_stages) == (1, 1)
     # one file per touched bucket, as the parallel plan writes
@@ -194,8 +339,25 @@ def test_small_compacting_batch_job_count(spark, tmp_path):
         sink.apply_batch(_small_batch(spark, tmp_path, f"b{i}", 1000 * i, range(200)), f"b{i}")
     df = _small_batch(spark, tmp_path, "b2", 2000, range(0, 200, 3))
     m, n_jobs, _ = _jobs_and_stages(spark, lambda: sink.apply_batch(df, "b2"))
-    assert m["merge_plan"]["one_task"] and m["compacted_buckets"]
-    assert n_jobs <= 3
+    assert m["merge_plan"]["route"] == "arrow" and m["compacted_buckets"]
+    assert n_jobs == 1
+
+
+def test_replayed_small_batches_run_no_spark_job(spark, smoke_log, tmp_path):
+    """``replay_incremental`` hands WAL paths to ``apply_wal``: a small
+    append and a small compacting batch read, fold and write on the
+    driver."""
+    sink = SnapshotSink(spark, str(tmp_path / "t"), n_buckets=8, compact_threshold=2)
+    ms, n_jobs, _ = _jobs_and_stages(
+        spark, lambda: replay_incremental(spark, smoke_log, sink, files_per_batch=1)
+    )
+    assert [m["merge_plan"]["route"] for m in ms] == ["arrow"] * len(ms)
+    assert {m["merge_plan"]["input"] for m in ms} == {"wal"}
+    assert not ms[0]["compacted_buckets"] and ms[2]["compacted_buckets"]
+    assert n_jobs == 0
+    assert [m["lineage"]["input_files"] for m in ms] == [
+        [os.path.basename(f)] for f in _log_files(smoke_log)
+    ]
 
 
 def test_threshold_off_keeps_the_parallel_plan(spark, tmp_path):
@@ -206,7 +368,7 @@ def test_threshold_off_keeps_the_parallel_plan(spark, tmp_path):
     df = _small_batch(spark, tmp_path, "b0", 0, range(200))
     with route(spark, "parallel"):
         m, _, n_stages = _jobs_and_stages(spark, lambda: sink.apply_batch(df, "b0"))
-    assert not m["merge_plan"]["one_task"]
+    assert m["merge_plan"]["route"] == "parallel"
     assert m["merge_plan"]["threshold_bytes"] == -1
     assert n_stages > 1
 
@@ -225,7 +387,8 @@ def test_merge_plan_is_recorded(spark, tmp_path):
     )
     sink.apply_batch(rdd_batch, "b2")
     recorded = [m["merge_plan"] for m in sink.read_metrics()]
-    assert [p["one_task"] for p in recorded] == [True, False, False]
+    assert [p["route"] for p in recorded] == ["arrow", "parallel", "parallel"]
+    assert {p["input"] for p in recorded} == {"dataframe"}
     assert recorded[1]["threshold_bytes"] == -1
     assert recorded[2]["est_bytes"] > recorded[2]["threshold_bytes"] > 0
     assert sink.current_snapshot()["metrics"]["merge_plan"] == recorded[2]
