@@ -85,7 +85,6 @@ from beehive_data_etl_spark.operators.schema_evolution import (
 )
 from beehive_data_etl_spark.sources import table_meta
 from beehive_data_etl_spark.sources.arrow_fold import (
-    DELETED,
     BucketWork,
     _align,
     _bucket_files,
@@ -93,6 +92,7 @@ from beehive_data_etl_spark.sources.arrow_fold import (
     _take_rows,
     _versions,
     _winners,
+    canonical_keys,
     read_changes_partition,
     read_state_partition,
     uncompressed_bytes,
@@ -223,7 +223,10 @@ def _hash_input(value, dtype: T.DataType) -> bytes:
 def bucket_of(value, n_buckets: int, dtype: T.DataType | None = None) -> int:
     """Python twin of ``_bucket_expr``: pmod(xxhash64(key), n) for a key
     of ``dtype`` (default: string). Python's ``%`` of a positive modulus
-    is already non-negative, like pmod."""
+    is already non-negative, like pmod. A NULL key hashes to the seed,
+    as in Spark, which skips null inputs."""
+    if value is None:
+        return 42 % n_buckets
     return _xxhash64(_hash_input(value, dtype or T.StringType())) % n_buckets
 
 
@@ -2219,11 +2222,15 @@ class SnapshotSink:
         uncompressed footer bytes, the files are read with pyarrow
         (``read_wal``'s footer-schema grouping and widening), bucketed
         by ``bucket_of``, folded by the Arrow fold and written on the
-        driver — no Spark job. Any other batch runs ``apply_batch``'s
-        routes on ``read_wal``'s DataFrame. Same commit protocol,
-        manifests, crash points and metrics either way; ``merge_plan``
-        says ``input: "wal"`` and ``est_bytes`` is the footer bytes
-        when the driver route ran."""
+        driver — no Spark job. A batch over the threshold runs the
+        parallel plan on ``read_wal``'s DataFrame: one size rule per
+        batch, so Spark's estimate never sends it to the driver after
+        all. A patch-mode or audited table, or a key type with no
+        Python hash twin, hands ``read_wal``'s DataFrame to
+        ``apply_batch``'s routes. Same commit protocol, manifests, crash
+        points and metrics either way; ``merge_plan`` says ``input:
+        "wal"`` and ``est_bytes`` is the footer bytes whenever the
+        footer rule decided."""
         return self._ingest(list(paths), batch_id)
 
     def _ingest(self, batch, batch_id: str | int) -> dict:
@@ -2355,7 +2362,9 @@ class SnapshotSink:
         #     shuffle and its broadcast).
         # A DataFrame read by read_wal runs one schema-inference job
         # before any of them.
-        rows = None
+        # A WAL batch the footer-byte rule refused keeps that answer:
+        # its plan (route parallel) rides into _frame_rows.
+        rows = plan = None
         if wal is not None:
             rows, plan = self._wal_rows(
                 wal, snap, table_schema, manifested, compact_candidates
@@ -2365,7 +2374,7 @@ class SnapshotSink:
         if rows is None:
             rows, plan, obs = self._frame_rows(
                 batch, batch_id, snap, table_schema, manifested,
-                compact_candidates,
+                compact_candidates, plan,
             )
         t_plan = time.time()
         if isinstance(rows, pa.Table):
@@ -2438,12 +2447,14 @@ class SnapshotSink:
         file aligned to the table schema, so widened like ``read_wal``;
         ``deleted`` set, ``_bucket`` by ``bucket_of``, manifested
         buckets dropped) read from the WAL files by pyarrow, and the
-        route record — or ``(None, None)`` when the table is patch-mode
-        or audited, its key has no hash twin or holds NULLs, or the WAL
-        files plus the files of the buckets the batch compacts exceed
-        the broadcast threshold by uncompressed footer bytes."""
+        route record. Both size checks — the WAL files, then with the
+        files of the buckets the batch compacts, by uncompressed footer
+        bytes against the broadcast threshold — run on footers and the
+        key column alone, before any whole file is read. A batch over
+        the threshold returns ``(None, plan)`` with route ``parallel``;
+        a patch-mode or audited table, or a key with no hash twin,
+        ``(None, None)``: ``apply_batch``'s rule decides."""
         key_type = table_schema[KEY].dataType
-        threshold = self.spark._jconf.autoBroadcastJoinThreshold()
         if (
             self.patch
             or self.audit is not None
@@ -2451,9 +2462,21 @@ class SnapshotSink:
             or type(key_type) not in _PY_TYPES
         ):
             return None, None
-        est = uncompressed_bytes(wal)
-        if est > threshold:
-            return None, None
+        plan = {"route": "arrow", "input": "wal", "est_bytes": uncompressed_bytes(wal),
+                "threshold_bytes": self.spark._jconf.autoBroadcastJoinThreshold()}
+        if plan["est_bytes"] <= plan["threshold_bytes"]:
+            buckets = np.array(
+                [bucket_of(k, self.n_buckets, key_type)
+                 for p in wal for k in pq.read_table(p, columns=[KEY])[KEY].to_pylist()],
+                np.int32,
+            )
+            keep = ~np.isin(buckets, sorted(manifested))
+            folds = set(buckets[keep].tolist()) & set(compact_candidates)
+            plan["est_bytes"] += uncompressed_bytes(
+                [f for b in sorted(folds) for f in _bucket_files(self.root, snap, b)]
+            )
+        if plan["est_bytes"] > plan["threshold_bytes"]:
+            return None, {**plan, "route": "parallel"}
         target = to_arrow_schema(table_schema)
         parts = []
         for p in wal:
@@ -2461,37 +2484,21 @@ class SnapshotSink:
             deleted = pc.equal(t["op"], "D")
             t = t.drop_columns([c for c in ("deleted",) if c in t.column_names])
             parts.append(_align(t.append_column("deleted", deleted), target))
-        rows = pa.concat_tables(parts)
-        if rows[KEY].null_count:
-            return None, None
-        buckets = np.fromiter(
-            (bucket_of(k, self.n_buckets, key_type) for k in rows[KEY].to_pylist()),
-            np.int32, count=rows.num_rows,
-        )
-        if manifested:
-            keep = ~np.isin(buckets, sorted(manifested))
-            rows, buckets = rows.filter(pa.array(keep)), buckets[keep]
-        folds = set(buckets.tolist()) & set(compact_candidates)
-        est += uncompressed_bytes(
-            [f for b in sorted(folds) for f in _bucket_files(self.root, snap, b)]
-        )
-        if est > threshold:
-            return None, None
-        plan = {"route": "arrow", "input": "wal", "est_bytes": est,
-                "threshold_bytes": threshold}
-        return rows.append_column("_bucket", pa.array(buckets)), plan
+        rows = pa.concat_tables(parts).append_column("_bucket", pa.array(buckets))
+        return rows.filter(pa.array(keep)), plan
 
     def _frame_rows(
         self, batch_df: DataFrame, batch_id: str, snap: dict | None,
         table_schema: T.StructType, manifested: set[int],
-        compact_candidates: list[int],
+        compact_candidates: list[int], plan: dict | None = None,
     ):
         """``apply_batch``'s Spark side: the batch's stored rows, and the
-        route ``_merge_plan`` picks for them. Returns ``(rows, plan,
-        obs)``: on the ``arrow`` route ``rows`` is the batch collected
-        as an Arrow table (with ``_bucket``); on the others, the folded
-        DataFrame ``_stage_buckets`` writes, with the lineage
-        Observation riding its job."""
+        route ``_merge_plan`` picks for them, unless ``plan`` already
+        holds one. Returns ``(rows, plan, obs)``: on the ``arrow`` route
+        ``rows`` is the batch collected as an Arrow table (with
+        ``_bucket``); on the others, the folded DataFrame
+        ``_stage_buckets`` writes, with the lineage Observation riding
+        its job."""
         events = batch_df.drop(*[c for c in _ENVELOPE_META if c in batch_df.columns and c != "op"])
         if self.patch and CELL in events.columns:
             # pre-built cell events (replication from another patch
@@ -2564,7 +2571,7 @@ class SnapshotSink:
                 # (≤ n_buckets rows) — stays inside the same job
                 batch_buckets = state_rows.select("_bucket").distinct()
                 tgt = tgt.join(F.broadcast(batch_buckets), "_bucket", "left_semi")
-        plan = self._merge_plan(
+        plan = plan or self._merge_plan(
             state_rows if tgt is None else state_rows.unionByName(tgt)
         )
         if plan["route"] == "arrow":
@@ -2610,6 +2617,7 @@ class SnapshotSink:
         ``_floor_filter``'s rule then drops expired tombstone winners.
         Returns the winners, key-sorted, with ``_bucket`` — what
         ``_stage_buckets`` writes."""
+        rows = canonical_keys(rows)
         buckets = rows["_bucket"].to_numpy()
         files = [
             (b, f)
@@ -2625,14 +2633,10 @@ class SnapshotSink:
             in_batch, buckets[np.where(in_batch, r, 0)], file_bucket[f]
         ).astype(np.int32)
         win = win.append_column("_bucket", pa.array(win_bucket))
-        floor = 0 if snap is None else snap.get("tombstone_floor", 0)
-        if floor and files:
+        ff = self._floor_filter(snap, pc.field)
+        if ff is not None and files:
             # the rule of the Spark route: see _frame_rows
-            expired = pc.and_kleene(
-                pc.and_kleene(win[DELETED], pc.less(win[SEQ], floor)),
-                pa.array(np.isin(win_bucket, file_bucket[1:])),
-            )
-            win = win.filter(pc.invert(expired))
+            win = win.filter(ff | ~pc.field("_bucket").isin(compact_candidates))
         target = to_arrow_schema(table_schema).append(pa.field("_bucket", pa.int32()))
         return _take_rows(sources, win, target)
 
@@ -3244,9 +3248,11 @@ class SnapshotSink:
         )
 
     @staticmethod
-    def _floor_filter(snap: dict | None):
+    def _floor_filter(snap: dict | None, col=F.col):
         """Predicate dropping tombstones below the table's recorded
-        retention floor, or None when no floor was ever declared.
+        retention floor, or None when no floor was ever declared: a
+        Spark Column, or with ``col=pc.field`` the same rule as a
+        pyarrow expression (the Arrow fold's).
         Applied at EVERY fold (inline compaction, compact(), rebucket)
         so tombstone GC is monotone-sticky: a stale fold that
         re-includes an expired tombstone (a crash-replayed manifest, a
@@ -3257,7 +3263,7 @@ class SnapshotSink:
         floor = 0 if snap is None else snap.get("tombstone_floor", 0)
         if not floor:
             return None
-        return ~(F.col("deleted") & (F.col(SEQ) < F.lit(floor)))
+        return ~(col("deleted") & (col(SEQ) < floor))
 
     def rebucket(self, new_n_buckets: int) -> dict:
         """Online partition evolution: rewrite the table into a new

@@ -294,8 +294,8 @@ def _winners(versions: pa.Table) -> pa.Table:
     (key, seq desc, f, r) puts each key's winner first in its run, so
     ties keep the first-read row — duplicate deliveries are
     byte-identical by the envelope contract (operators/lww.py), so
-    either copy is the same row. NaN keys form one run, as Spark
-    groups them."""
+    either copy is the same row. As in Spark's grouping, -0.0 and 0.0
+    keys form one run, all NaN keys one, and all NULL keys one."""
     if versions.num_rows == 0:
         return versions
     order = pc.sort_indices(
@@ -305,11 +305,28 @@ def _winners(versions: pa.Table) -> pa.Table:
     )
     keys = versions[KEY].take(order).combine_chunks()
     prev, cur = keys.slice(0, len(keys) - 1), keys.slice(1)
-    new_run = pc.fill_null(pc.not_equal(cur, prev), True)
+    same = pc.or_(
+        pc.fill_null(pc.equal(cur, prev), False),
+        pc.and_(pc.is_null(cur), pc.is_null(prev)),
+    )
     if pa.types.is_floating(keys.type):
-        new_run = pc.and_not(new_run, pc.and_(pc.is_nan(cur), pc.is_nan(prev)))
-    first = pa.concat_arrays([pa.array([True]), new_run])
+        same = pc.or_(same, pc.fill_null(pc.and_(pc.is_nan(cur), pc.is_nan(prev)), False))
+    first = pa.concat_arrays([pa.array([True]), pc.invert(same)])
     return versions.take(order.filter(first))
+
+
+def canonical_keys(table: pa.Table) -> pa.Table:
+    """``table`` with its float keys stored as Spark's grouping stores
+    them: -0.0 as 0.0 and every NaN as the canonical NaN. Ingest runs
+    it on a batch before the fold, so both routes write the same key
+    bits."""
+    key = table[KEY]
+    if not pa.types.is_floating(key.type):
+        return table
+    zero, nan = pa.scalar(0.0, key.type), pa.scalar(float("nan"), key.type)
+    key = pc.if_else(pc.equal(key, zero), zero, key)
+    key = pc.if_else(pc.is_nan(key), nan, key)
+    return table.set_column(table.column_names.index(KEY), KEY, key)
 
 
 def _align(table: pa.Table, target: pa.Schema) -> pa.Table:

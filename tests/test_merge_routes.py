@@ -17,6 +17,7 @@ import datetime
 import decimal
 import json
 import os
+import struct
 from contextlib import contextmanager
 
 import pandas as pd
@@ -24,7 +25,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-from beehive_data_etl_spark.sinks.snapshot import KEY, SnapshotSink
+from beehive_data_etl_spark.sinks.snapshot import KEY, SEQ, SnapshotSink
 from beehive_data_etl_spark.sources.spark_datasource import register
 from beehive_data_etl_spark.streaming.replay import _log_files, replay_incremental
 from beehive_data_etl_spark.verify import (
@@ -71,16 +72,23 @@ def _manifests(sink, metrics) -> dict:
 
 
 def _table_facts(sink, metrics) -> dict:
-    """What a reader can see of the table: every version's state, and
-    the changelog of every one-commit window and of the whole history
-    (a window spanning the floor advance is a full-state diff)."""
+    """What a reader can see of the table: every version's state, the
+    changelog of every window that does not span the tombstone-floor
+    advance (delta diffs), and of the whole history, which does (a
+    full-state diff)."""
     head = sink.current_snapshot()["version"]
     versions = range(1, head + 1)
+    floors = {v: sink.snapshot(v).get("tombstone_floor", 0) for v in versions}
+    advances = [v for v in versions[1:] if floors[v] != floors[v - 1]]
+    windows = [
+        (a, b) for a in versions for b in versions
+        if a < b and not any(a < v <= b for v in advances)
+    ]
     return {
         "states": {v: _by_key(sink.read_state(version=v)) for v in versions},
         "changes": {
             (a, b): _by_key(sink.read_changes(a, b))
-            for a, b in [(v - 1, v) for v in versions[1:]] + [(1, head)]
+            for a, b in windows + [(1, head)]
         },
         "manifests": _manifests(sink, metrics),
         "files_per_entry": {
@@ -96,11 +104,11 @@ def _identity(df):
     return df
 
 
-# (route, merge_plan input) per table kind: ``wal`` batches are folded
-# from their files by ``apply_wal``, ``dataframe`` ones by
-# ``apply_batch``
+# (route, merge_plan input) per table kind: ``wal`` batches are routed
+# by ``apply_wal`` on footer bytes, ``dataframe`` ones by
+# ``apply_batch`` on Spark's estimate
 _RUNS = {
-    "row": [("arrow", "wal"), ("arrow", "dataframe"), ("parallel", "dataframe")],
+    "row": [("arrow", "wal"), ("arrow", "dataframe"), ("parallel", "wal")],
     "patch": [("one_task", "dataframe"), ("parallel", "dataframe")],
 }
 
@@ -123,8 +131,8 @@ def test_routes_commit_the_same_table(
     )
     facts = []
     for name, batch_input in _RUNS[kind]:
-        # a transform makes the replay call apply_batch; off the arrow
-        # route apply_wal hands the batch to apply_batch by itself
+        # a transform makes the replay call apply_batch; on a patch
+        # table apply_wal hands the batch to apply_batch by itself
         transform = _identity if (name, batch_input) == ("arrow", "dataframe") else None
         sink = SnapshotSink(
             spark, str(tmp_path / f"{name}-{batch_input}"), n_buckets=4,
@@ -146,6 +154,8 @@ def test_routes_commit_the_same_table(
             (m["merge_plan"]["route"], m["merge_plan"]["input"]) for m in metrics
         } == {(name, batch_input)}
         facts.append(_table_facts(sink, metrics))
+    # v3 advances the floor: (1, 5) spans it, the rest are delta diffs
+    assert sorted(facts[-1]["changes"]) == [(1, 2), (1, 5), (3, 4), (3, 5), (4, 5)]
     assert all(f == facts[-1] for f in facts)
 
     cols = ["doc_id", "op_sequence", "tokens", "n_tok", "source"]
@@ -297,6 +307,75 @@ def test_typed_round_trip(spark, tmp_path):
     assert not got["lookups"]["k-004"] and not got["lookups"]["k-099"]
     # the redelivered, already-compacted event changes nothing
     assert set(got["changes"][max(got["changes"])]) == {"k-042"}
+
+
+# ------------------------------------------------------ key grouping
+def _bits(k):
+    """A float key as its stored bits (NaN != NaN, and -0.0 == 0.0)."""
+    return None if k is None else struct.pack("<d", k).hex()
+
+
+def test_float_and_null_keys_group_as_spark(spark, tmp_path):
+    """-0.0 and 0.0 keys fold into one row stored as 0.0, NaNs of any
+    payload into one canonical NaN, and NULL keys into one row, on
+    every route — within a batch, across batches and through an inline
+    compaction."""
+    wal = tmp_path / "wal"
+    wal.mkdir()
+    odd_nan = struct.unpack("<d", struct.pack("<Q", 0x7FF8000000000123))[0]
+    batches = [
+        [("I", 1, 0.0), ("I", 2, -0.0), ("I", 3, float("nan")), ("I", 4, odd_nan),
+         ("I", 5, None), ("I", 6, None), ("I", 7, 1.5)],
+        [("U", 9, -0.0), ("U", 10, None), ("U", 11, odd_nan), ("U", 12, 2.5)],
+        [("U", 13, 0.0), ("D", 14, None), ("U", 15, -0.0)],
+    ]
+    for i, rows in enumerate(batches):
+        pq.write_table(pa.table({
+            "op": [op for op, _, _ in rows],
+            "op_sequence": pa.array([s for _, s, _ in rows], pa.int64()),
+            "doc_id": pa.array([k for _, _, k in rows], pa.float64()),
+            "v": [f"v{s}" for _, s, _ in rows],
+        }), str(wal / f"part-{i:05d}.parquet"))
+    register(spark)
+    seen = {}
+    for name, batch_input in _RUNS["row"]:
+        transform = _identity if (name, batch_input) == ("arrow", "dataframe") else None
+        sink = SnapshotSink(spark, str(tmp_path / f"{name}-{batch_input}"),
+                            n_buckets=4, compact_threshold=2)
+        with route(spark, name):
+            metrics = replay_incremental(spark, str(wal), sink, files_per_batch=1,
+                                         transform=transform)
+        assert {(m["merge_plan"]["route"], m["merge_plan"]["input"]) for m in metrics} \
+            == {(name, batch_input)}
+        assert metrics[2]["compacted_buckets"]
+
+        def keyed(rows):
+            if not isinstance(rows, list):
+                rows = [r.asDict() for r in rows.collect()]
+            return sorted(
+                ((_bits(r[KEY]), r.get(SEQ), r["v"], r.get("deleted", r.get("change_type")))
+                 for r in rows),
+                key=str,
+            )
+
+        seen[(name, batch_input)] = {
+            # the key bits each entry's files hold
+            "stored": {
+                (b, i): keyed(pq.read_table(os.path.join(sink.root, e["path"])).to_pylist())
+                for b, entries in sink.current_snapshot()["buckets"].items()
+                for i, e in enumerate(entries)
+            },
+            "ds": keyed(spark.read.format("beehive").load(sink.root)),
+            "states": [keyed(sink.read_state(version=v)) for v in (1, 2, 3)],
+            "changes": [keyed(sink.read_changes(v - 1, v)) for v in (2, 3)],
+        }
+    assert all(s == seen[("parallel", "wal")] for s in seen.values())
+    zero, nan = _bits(0.0), _bits(float("nan"))
+    assert seen[("arrow", "wal")]["states"][-1] == sorted(
+        [(zero, 15, "v15", False), (_bits(1.5), 7, "v7", False),
+         (_bits(2.5), 12, "v12", False), (nan, 11, "v11", False),
+         (None, 14, "v14", True)], key=str,
+    )
 
 
 # -------------------------------------------------------- plan shapes
