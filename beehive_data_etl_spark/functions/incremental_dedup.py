@@ -63,6 +63,7 @@ from beehive_data_etl_spark.functions.dedup import (
     spread_if_narrow,
     token_shingles,
 )
+from beehive_data_etl_spark.sources import table_meta as tm
 
 _STORE_SCHEMA = (
     "id string, band int, band_hash string, op_sequence long, deleted boolean"
@@ -307,7 +308,6 @@ class SignatureStore:
         folded) — under a nonzero horizon the steady state is ONE live
         file plus aging superseded sets, so the compact threshold
         cannot re-trigger a full refold every batch."""
-        import json
         import time as _time
 
         self.gc_superseded(older_than_s)
@@ -317,10 +317,7 @@ class SignatureStore:
         out = os.path.join(self.root, f"compact-{uuid.uuid4().hex}.parquet")
         self._latest(files).write.mode("overwrite").parquet(out)
         marker = os.path.join(self.root, f"superseded-{uuid.uuid4().hex}.json")
-        tmp = marker + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump({"ts": _time.time(), "files": files}, fh)
-        os.replace(tmp, marker)
+        tm.write_json(marker, {"ts": _time.time(), "files": files})
         self.gc_superseded(older_than_s)
 
     def maybe_compact(self) -> None:
@@ -498,26 +495,10 @@ class NearDupView:
         )
         self._write_lock = threading.Lock()
         os.makedirs(root, exist_ok=True)
-
-    def _ptr_path(self) -> str:
-        return os.path.join(self.root, "CURRENT")
+        self._ptr = tm.Pointer(os.path.join(root, "CURRENT"))
 
     def current(self) -> dict | None:
-        import json
-
-        try:
-            with open(self._ptr_path()) as fh:
-                return json.load(fh)
-        except FileNotFoundError:
-            return None
-
-    def _swap(self, version: int, pairs_dirs: list[str]) -> None:
-        import json
-
-        tmp = self._ptr_path() + f".tmp-{uuid.uuid4().hex}"
-        with open(tmp, "w") as fh:
-            json.dump({"version": version, "pairs_dirs": pairs_dirs}, fh)
-        os.replace(tmp, self._ptr_path())
+        return self._ptr.read()
 
     def _reap_crash_artifacts(self, committed: int) -> None:
         """Delete every store batch file / pairs dir whose version is
@@ -539,26 +520,6 @@ class NearDupView:
             if m and int(m.group(1)) > committed:
                 _sh.rmtree(os.path.join(self.root, d), ignore_errors=True)
 
-    def _reap_unlisted_aged(self, listed: set[str]) -> None:
-        """Superseded (post-fold) pairs dirs: unlisted, at-or-below the
-        pointer — invisible to NEW readers but possibly pinned by a
-        reader holding the previous list, so reap only past the age
-        horizon (TokenIndex.compact's reasoning)."""
-        import time as _t
-
-        now = _t.time()
-        for d in os.listdir(self.root):
-            full = os.path.join(self.root, d)
-            if (
-                d.startswith("pairs-")
-                and d not in listed
-                and os.path.isdir(full)
-                and now - os.path.getmtime(full) >= self.reap_older_than_s
-            ):
-                import shutil as _sh
-
-                _sh.rmtree(full, ignore_errors=True)
-
     def refresh(self) -> dict:
         with self._write_lock:
             return self._refresh_locked()
@@ -569,21 +530,35 @@ class NearDupView:
             return {"mode": "noop", "reason": "sink has no snapshot"}
         v_new = snap["version"]
         cur = self.current()
-        if cur is not None and cur["version"] == v_new:
+        w = tm.classify_window(
+            tm.ACCUMULATING_VIEW,
+            cur and cur["version"],
+            snap,
+            self.sink.snapshot,
+            ["tokens"],
+        )
+        if w.action == tm.NOOP:
             return {"mode": "noop", "version": v_new}
-        if cur is not None and cur["version"] < snap.get("snapshot_floor", 1):
+        if w.marker == "snapshot_floor":
             # the incremental window was expired (expire_snapshots) and
-            # — unlike AggregateView/TokenIndex/ShardExport — this view
-            # ACCUMULATES pair history that a silent full re-process
-            # would drop or double-count against the signature store:
-            # refuse with the recovery spelled out
+            # — unlike the views that rebuild — this view ACCUMULATES
+            # pair history that a silent full re-process would drop or
+            # double-count against the signature store: refuse with the
+            # recovery spelled out
             raise ValueError(
                 f"near-dup view at v{cur['version']} lags the source's "
-                f"snapshot_floor {snap.get('snapshot_floor', 1)}: the "
-                "incremental window was expired. Delete the view "
-                "directory and rebuild, or size MAINTAIN_SNAPSHOT_KEEP "
-                "above the view's refresh lag"
+                f"snapshot_floor {w.version}: the incremental window was "
+                "expired. Delete the view directory and rebuild, or size "
+                "MAINTAIN_SNAPSHOT_KEEP above the view's refresh lag"
             )
+        if w.marker == "rollback_to":
+            raise RuntimeError(
+                f"rollback at v{w.version} inside the refresh window: state "
+                "regressed to lower op_sequences and the accumulated pairs "
+                "cannot follow — delete the view directory and rebuild"
+            )
+        if w.action == tm.REFUSE:
+            raise tm.altered_columns_error(w)
         committed = cur["version"] if cur is not None else -1
         self._reap_crash_artifacts(committed)
         if cur is None:
@@ -609,8 +584,11 @@ class NearDupView:
                 os.path.join(self.root, fold_name)
             )
             listed = [fold_name]
-        self._swap(v_new, listed)
-        self._reap_unlisted_aged(set(listed))
+        self._ptr.commit({"version": v_new, "pairs_dirs": listed})
+        # superseded (post-fold) pairs dirs: unlisted, at or below the
+        # pointer — invisible to NEW readers but possibly pinned by a
+        # reader holding the previous list, so reaped past the horizon
+        self._ptr.reap("pairs-", listed, self.reap_older_than_s)
         return {"mode": mode, "version": v_new, "pairs_dirs": len(listed)}
 
     def _read_dirs(self, names: list[str]) -> DataFrame:

@@ -42,14 +42,14 @@ rather than hidden — ``verify()`` does an exact compare.
 
 from __future__ import annotations
 
-import json
 import os
-import shutil
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..sources import table_meta as tm
 
 COUNT_COL = "n_rows"
 _DIRTY = "_dirty"
@@ -248,17 +248,15 @@ class AggregateView:
             x for c in self.sum_cols for x in (c, f"_nn_{c}")
         ]
         os.makedirs(root, exist_ok=True)
+        self._ptr = tm.Pointer(
+            os.path.join(root, "CURRENT"),
+            pins=self._ptr_extra,
+            refs=lambda p: [os.path.basename(p["path"])],
+        )
 
     # ------------------------------------------------------------ pointer
-    def _ptr_path(self) -> str:
-        return os.path.join(self.root, "CURRENT")
-
     def current(self) -> dict | None:
-        try:
-            with open(self._ptr_path()) as fh:
-                return json.load(fh)
-        except FileNotFoundError:
-            return None
+        return self._ptr.read()
 
     def _ptr_extra(self) -> dict:
         """Extra fields a subclass pins into the CURRENT pointer (e.g.
@@ -267,87 +265,15 @@ class AggregateView:
         return {}
 
     def _commit(self, df: DataFrame, version: int) -> None:
-        prev = self.current()
         out = os.path.join(self.root, f"agg-v{version:06d}-{uuid.uuid4().hex}")
         df.write.mode("overwrite").parquet(out)
-        tmp = self._ptr_path() + f".tmp-{uuid.uuid4().hex}"
-        with open(tmp, "w") as fh:
-            json.dump({"version": version, "path": out, **self._ptr_extra()}, fh)
-        os.replace(tmp, self._ptr_path())  # THE commit point
-        # reap the generation BEFORE prev (prev itself stays one more
-        # refresh: a reader that loaded the old pointer may still be
-        # scanning it)
-        keep = {out, prev["path"]} if prev else {out}
-        for d in os.listdir(self.root):
-            full = os.path.join(self.root, d)
-            if d.startswith("agg-v") and full not in keep:
-                shutil.rmtree(full, ignore_errors=True)
+        self._ptr.commit({"version": version, "path": out}, reap="agg-v")
 
     def _maintained_cols(self) -> list[str]:
         """The payload columns this view stores aggregates of — the
         guard preamble (column-existence, alter-window) protects
         exactly these. Subclasses (MinMaxView) override."""
         return self.sum_cols
-
-    def _refresh_window(self, snap: dict):
-        """The IVM refresh preamble every view shares: no-op detection,
-        the expired-incremental-window -> full-rebuild fallback, the
-        dropped/renamed-column refusals. Returns ``(v_new, cur)`` where
-        ``cur`` is None when a FULL build is required, or the string
-        ``"noop"`` in place of the tuple when already current."""
-        v_new = snap["version"]
-        cur = self.current()
-        if cur is not None and cur["version"] == v_new:
-            return "noop"
-        if cur is not None and cur["version"] < snap.get("snapshot_floor", 1):
-            # expire_snapshots retired the incremental window out from
-            # under a lagging view (only replication cursors clamp the
-            # floor via tags) — fall back to a FULL rebuild, which is
-            # exact by construction, instead of failing every refresh
-            # forever (review-found)
-            cur = None
-        table_cols = {
-            f.name for f in T.StructType.fromDDL(snap["schema"]).fields
-        }
-        mine = self.group_cols + self._maintained_cols()
-        gone = [c for c in mine if c not in table_cols]
-        if gone:
-            # a drop_column/rename_column removed a column this view is
-            # keyed on — the stored aggregate cannot be bridged (its
-            # groups reference the old identity); fail with guidance
-            # instead of an AnalysisException deep in the delta job
-            raise ValueError(
-                f"view columns {gone} no longer exist in the table "
-                "(dropped or renamed): delete the view directory and "
-                "rebuild it against the current schema"
-            )
-        if cur is not None:
-            # current-schema presence is NOT enough: a drop + re-add of
-            # the same name INSIDE the refresh window nulled every
-            # stored value changelog-silently, so the stale aggregate
-            # would merge cleanly and be wrong (review-found). Walk the
-            # window's alter commits; schema_version equality proves
-            # there were none (every alter bumps it).
-            from_snap = self.sink.snapshot(cur["version"])
-            if from_snap.get("schema_version", 0) != snap.get("schema_version", 0):
-                mine = set(mine)
-                for v in range(cur["version"] + 1, v_new + 1):
-                    m = self.sink.snapshot(v).get("metrics", {})
-                    touched = set()
-                    if "drop_column" in m:
-                        touched.add(m.get("dropped"))
-                    rm = m.get("rename_map")
-                    if rm:
-                        touched |= {rm["old"], rm["new"]}
-                    hit = sorted(mine & touched)
-                    if hit:
-                        raise ValueError(
-                            f"column(s) {hit} were dropped/renamed at "
-                            f"v{v} inside the refresh window: the stored "
-                            "aggregate references their old identity — "
-                            "delete the view directory and rebuild"
-                        )
-        return (v_new, cur)
 
     # --------------------------------------------------- refresh (template)
     # The dirty-group refresh skeleton is shared by every derived
@@ -396,14 +322,31 @@ class AggregateView:
         snap = self.sink.current_snapshot()
         if snap is None:
             return {"mode": "noop", "reason": "sink has no snapshot"}
-        win = self._refresh_window(snap)
-        if win == "noop":
-            return {"mode": "noop", "version": snap["version"]}
-        v_new, cur = win
-        # the hook gets the RAW pointer, not the fallback-adjusted cur:
-        # identity pins must fire even when the refresh will full-rebuild
-        self._pre_refresh_check(snap, self.current())
-        if cur is None:
+        v_new = snap["version"]
+        mine = self.group_cols + self._maintained_cols()
+        table_cols = set(T.StructType.fromDDL(snap["schema"]).names)
+        gone = [c for c in mine if c not in table_cols]
+        if gone:
+            # a drop_column/rename_column removed a column this view is
+            # keyed on — fail with guidance instead of an
+            # AnalysisException deep in the delta job
+            raise ValueError(
+                f"view columns {gone} no longer exist in the table "
+                "(dropped or renamed): delete the view directory and "
+                "rebuild it against the current schema"
+            )
+        cur = self.current()
+        w = tm.classify_window(
+            tm.COLUMN_VIEW, cur and cur["version"], snap, self.sink.snapshot, mine
+        )
+        if w.action == tm.NOOP:
+            return {"mode": "noop", "version": v_new}
+        if w.action == tm.REFUSE:
+            raise tm.altered_columns_error(w)
+        # the hook gets the RAW pointer even when the window forces a
+        # full rebuild: identity pins must fire either way
+        self._pre_refresh_check(snap, cur)
+        if w.action == tm.FULL:
             live = self.sink.read_state(
                 version=v_new, columns=self._view_cols()
             ).filter(~F.col("deleted"))

@@ -42,16 +42,15 @@ tie-break) rather than silently vanishing.
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
-import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
 from ..functions.similarity import cosine_expr
+from ..sources import table_meta as tm
 from .snapshot import KEY
 
 
@@ -79,20 +78,22 @@ class AnnIndex:
         # reaping bounding a violation to lost compaction work
         self._write_lock = threading.Lock()
         os.makedirs(root, exist_ok=True)
+        self._ptr = tm.Pointer(
+            os.path.join(root, "CURRENT"),
+            pins=lambda: {"n_cells": self.n_cells, "vec_col": self.vec_col},
+        )
 
     @classmethod
     def open(cls, spark, sink, root: str, **kwargs) -> "AnnIndex":
         """Reopen an EXISTING index reading vec_col and n_cells from
         its own pointer (restating n_cells wrong is refused anyway —
         this is the maintenance-job path that cannot drift)."""
-        try:
-            with open(os.path.join(root, "CURRENT")) as fh:
-                cur = json.load(fh)
-        except FileNotFoundError:
+        cur = tm.read_json(os.path.join(root, "CURRENT"))
+        if cur is None:
             raise ValueError(
                 f"no index at {root} (never refreshed) — construct "
                 "AnnIndex directly to create one"
-            ) from None
+            )
         for k in ("vec_col", "n_cells"):
             if k in kwargs:
                 raise ValueError(
@@ -105,16 +106,9 @@ class AnnIndex:
         )
 
     # ------------------------------------------------------------ pointer
-    def _ptr_path(self) -> str:
-        return os.path.join(self.root, "CURRENT")
-
     def current(self) -> dict | None:
-        try:
-            with open(self._ptr_path()) as fh:
-                cur = json.load(fh)
-        except FileNotFoundError:
-            return None
-        if cur.get("n_cells") != self.n_cells:
+        cur = self._ptr.read()
+        if cur is not None and cur.get("n_cells") != self.n_cells:
             raise ValueError(
                 f"index at {self.root} was built with "
                 f"n_cells={cur.get('n_cells')}, opened with {self.n_cells} "
@@ -122,30 +116,13 @@ class AnnIndex:
             )
         return cur
 
-    def _swap(self, version: int, files: list[str]) -> None:
-        tmp = self._ptr_path() + f".tmp-{uuid.uuid4().hex}"
-        with open(tmp, "w") as fh:
-            json.dump(
-                {
-                    "version": version,
-                    "files": files,
-                    "n_cells": self.n_cells,
-                    "vec_col": self.vec_col,
-                },
-                fh,
-            )
-        os.replace(tmp, self._ptr_path())  # THE commit point
-
     # ---------------------------------------------------------- centroids
     def _cent_path(self) -> str:
         return os.path.join(self.root, "centroids.json")
 
     def centroids(self) -> list[list[float]] | None:
-        try:
-            with open(self._cent_path()) as fh:
-                return json.load(fh)["vecs"]
-        except FileNotFoundError:
-            return None
+        cents = tm.read_json(self._cent_path())
+        return None if cents is None else cents["vecs"]
 
     def _seed_centroids(self, version: int) -> list[list[float]]:
         """Pin the codebook at first build: live vectors of the
@@ -169,10 +146,7 @@ class AnnIndex:
         dims = {len(v) for v in vecs}
         if len(dims) != 1:
             raise ValueError(f"mixed embedding dimensions {sorted(dims)}")
-        tmp = self._cent_path() + f".tmp-{uuid.uuid4().hex}"
-        with open(tmp, "w") as fh:
-            json.dump({"vecs": vecs, "dim": dims.pop()}, fh)
-        os.replace(tmp, self._cent_path())
+        tm.write_json(self._cent_path(), {"vecs": vecs, "dim": dims.pop()})
         return vecs
 
     def _cent_df(self, vecs: list[list[float]]) -> DataFrame:
@@ -295,20 +269,26 @@ class AnnIndex:
                 "reason": f"column {self.vec_col!r} not in schema yet",
             }
         cur = self.current()
-        if cur is not None and cur["version"] == v_new:
+        w = tm.classify_window(
+            tm.COLUMN_VIEW,
+            cur and cur["version"],
+            snap,
+            self.sink.snapshot,
+            [self.vec_col],
+        )
+        if w.action == tm.NOOP:
             return {"mode": "noop", "version": v_new}
-        if cur is not None and cur["version"] < snap.get("snapshot_floor", 1):
-            # incremental window expired (expire_snapshots): rebuild on
-            # the EXISTING codebook (cell space must stay stable for
-            # the old postings' readers; re-seeding is an explicit
-            # rebuild-from-scratch decision)
-            cur = None
+        if w.action == tm.REFUSE:
+            raise tm.altered_columns_error(w)
         if self.centroids() is None and self._seed_centroids(v_new) is None:
             return {
                 "mode": "noop",
                 "reason": "no live vectors to seed the codebook yet",
             }
-        if cur is None:
+        if w.action == tm.FULL:
+            # a rebuild keeps the EXISTING codebook (cell space must stay
+            # stable for the old postings' readers; re-seeding is an
+            # explicit rebuild-from-scratch decision)
             live = (
                 self.sink.read_state(version=v_new, columns=[self.vec_col])
                 .filter(~F.col("deleted") & F.col(self.vec_col).isNotNull())
@@ -325,9 +305,9 @@ class AnnIndex:
             if not any(d.startswith("cell=") for d in os.listdir(out)):
                 # husk (no live vectors): advance over an empty list
                 shutil.rmtree(out, ignore_errors=True)
-                self._swap(v_new, [])
+                self._ptr.commit({"version": v_new, "files": []})
                 return {"mode": "full-empty", "version": v_new}
-            self._swap(v_new, [out])
+            self._ptr.commit({"version": v_new, "files": [out]})
             return {"mode": "full", "version": v_new}
         ch = self.sink.read_changes_pruned(
             cur["version"], v_new, include_old=True, columns=[self.vec_col]
@@ -399,13 +379,13 @@ class AnnIndex:
             # pure-rewrite window (compact/rebucket/GC): no change rows,
             # drop the schema-less husk dir and advance the pointer
             shutil.rmtree(out, ignore_errors=True)
-            self._swap(v_new, list(cur["files"]))
+            self._ptr.commit({"version": v_new, "files": cur["files"]})
             return {
                 "mode": "noop-delta",
                 "version": v_new,
                 "from_version": cur["version"],
             }
-        self._swap(v_new, cur["files"] + [out])
+        self._ptr.commit({"version": v_new, "files": cur["files"] + [out]})
         return {
             "mode": "incremental",
             "version": v_new,
@@ -536,23 +516,13 @@ class AnnIndex:
                 or head["files"] != cur["files"]
             ):
                 return {"aborted": True, "reason": "pointer advanced during fold"}
-            self._swap(cur["version"], [out])
-            now = time.time()
-            reaped = 0
-            for d in os.listdir(self.root):
-                full = os.path.join(self.root, d)
-                if (
-                    d.startswith("ann-")
-                    and full != out
-                    and os.path.isdir(full)
-                    and now - os.path.getmtime(full) >= orphan_older_than_s
-                ):
-                    shutil.rmtree(full, ignore_errors=True)
-                    reaped += 1
+            self._ptr.commit({"version": cur["version"], "files": [out]})
             return {
                 "version": cur["version"],
                 "files_folded": len(cur["files"]),
-                "dirs_reaped": reaped,
+                "dirs_reaped": self._ptr.reap(
+                    "ann-", {os.path.basename(out)}, orphan_older_than_s
+                ),
             }
 
     def verify(self) -> dict:

@@ -39,12 +39,13 @@ Design decisions, stated:
   per refresh — correct, and the honest fallback cost. More changed
   dim keys than ``max_dim_keys`` (a dim full-reload) degrades to a
   full rebuild, which is cheaper than a giant IN anyway.
-- **Schema changes degrade to a full rebuild.** A drop/rename on
-  either table inside the refresh window (detected via
-  ``schema_version``) makes bridging the stored rows' identity
-  error-prone (the AggregateView review history); the join view can
-  always rebuild exactly, so it does. Same for an
-  ``expire_snapshots``-retired incremental window.
+- **Windows a replica must refuse degrade to a full rebuild.** Each
+  side's window is classified as a replica's (``table_meta.
+  WINDOW_POLICY``): the view applies forward change events, so a
+  rollback, backfill, purge or drop/rename on either table inside the
+  refresh window, or an ``expire_snapshots``-retired window, cannot be
+  applied — but the join view can always rebuild exactly, so it does.
+  Add/widen evolution passes: the view carries its resolved columns.
 
 Left-join semantics throughout: a fact row with no (or a deleted) dim
 match keeps NULL dim columns; a fact delete deletes the enriched row;
@@ -53,15 +54,14 @@ a dim delete NULLs its columns on every holder at the refresh's clock.
 
 from __future__ import annotations
 
-import json
 import os
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..operators.refetch import next_op_sequence
+from ..sources import table_meta as tm
 from .snapshot import _INTERNAL, KEY, SEQ, SnapshotSink
 
 
@@ -121,6 +121,7 @@ class EnrichView:
             # inline compaction keeps delta counts bounded
         )
         os.makedirs(os.path.join(dest_root, "_enrich"), exist_ok=True)
+        self._ptr = tm.Pointer(os.path.join(dest_root, "_enrich", "CURRENT"))
 
     def _resolve(self) -> None:
         """Validate the column config against the (now existing)
@@ -174,21 +175,8 @@ class EnrichView:
         ]
 
     # ------------------------------------------------------------ pointer
-    def _ptr_path(self) -> str:
-        return os.path.join(self.dest.root, "_enrich", "CURRENT")
-
     def current(self) -> dict | None:
-        try:
-            with open(self._ptr_path()) as fh:
-                return json.load(fh)
-        except FileNotFoundError:
-            return None
-
-    def _write_ptr(self, fv: int, dv: int) -> None:
-        tmp = self._ptr_path() + f".tmp-{uuid.uuid4().hex}"
-        with open(tmp, "w") as fh:
-            json.dump({"fact_version": fv, "dim_version": dv}, fh)
-        os.replace(tmp, self._ptr_path())
+        return self._ptr.read()
 
     # ------------------------------------------------------------- joins
     def _dim_live(self, dv: int) -> DataFrame:
@@ -246,47 +234,40 @@ class EnrichView:
                 "EnrichView against the current schema (the dest table "
                 "can be kept — the first refresh rebuilds it)"
             )
-        fv_new, dv_new = fsnap["version"], dsnap["version"]
         cur = self.current()
-        if cur is not None and (
-            cur["fact_version"] == fv_new and cur["dim_version"] == dv_new
-        ):
+        # each side's window as a replica would consume it: forward
+        # change events into the dest table. Where a replica must
+        # refuse (rollback, backfill, purge, column alter, expired
+        # window), this view rebuilds exactly instead; the rebuild's
+        # anti-join tombstones purged/rolled-back leavers
+        wins = [
+            tm.classify_window(
+                tm.REPLICA, cur and cur[f"{side}_version"], snap, sink.snapshot
+            )
+            for side, snap, sink in (
+                ("fact", fsnap, self.fact), ("dim", dsnap, self.dim)
+            )
+        ]
+        fv_new, dv_new = fsnap["version"], dsnap["version"]
+        if all(w.action == tm.NOOP for w in wins):
             return {"mode": "noop", "fact_version": fv_new, "dim_version": dv_new}
-        full_reason = None
-        if cur is None:
-            full_reason = "first build"
-        else:
-            fv0, dv0 = cur["fact_version"], cur["dim_version"]
-            if fv0 < fsnap.get("snapshot_floor", 1) or dv0 < dsnap.get(
-                "snapshot_floor", 1
-            ):
-                full_reason = "incremental window expired (expire_snapshots)"
-            elif self.fact.snapshot(fv0).get("schema_version", 0) != fsnap.get(
-                "schema_version", 0
-            ) or self.dim.snapshot(dv0).get("schema_version", 0) != dsnap.get(
-                "schema_version", 0
-            ):
-                # a drop/rename landed in the window: bridging the
-                # stored rows' column identity is exactly the trap the
-                # AggregateView review history documents — the join
-                # view can always rebuild exactly, so it does
-                full_reason = "schema changed inside the refresh window"
+        for w in wins:
+            if w.action not in (tm.FULL, tm.REFUSE):
+                continue
+            if w.marker is None:
+                reason = "first build"
+            elif w.marker == "snapshot_floor":
+                reason = "incremental window expired (expire_snapshots)"
+            elif w.marker in ("drop_column", "rename_column"):
+                # bridging the stored rows' column identity is exactly
+                # the trap the AggregateView review history documents
+                reason = (
+                    "schema changed inside the refresh window "
+                    f"({w.marker} at v{w.version})"
+                )
             else:
-                # rollback / backfill / purge / rebucket / tombstone-GC
-                # windows cannot be consumed as forward change events
-                # (the Replicator's refusal list) — but a VIEW, unlike
-                # a replica, can always recompute exactly: map them to
-                # a full rebuild instead of failing. The rebuild's
-                # anti-join tombstones purged/rolled-back leavers.
-                from ..sources.table_meta import refuse_unstreamable_window
-
-                try:
-                    refuse_unstreamable_window(self.fact.root, fv0, fv_new)
-                    refuse_unstreamable_window(self.dim.root, dv0, dv_new)
-                except RuntimeError as e:
-                    full_reason = f"unstreamable window: {e}"
-        if full_reason is not None:
-            return self._full_build(fv_new, dv_new, full_reason)
+                reason = f"unstreamable window: {w.marker} at v{w.version}"
+            return self._full_build(fv_new, dv_new, reason)
         return self._incremental(cur, fv_new, dv_new)
 
     def _full_build(self, fv: int, dv: int, reason: str) -> dict:
@@ -311,7 +292,7 @@ class EnrichView:
             events = events.unionByName(dead)
         bid = f"enrich-full-f{fv}-d{dv}"
         metrics = self.dest.apply_batch(events, bid)
-        self._write_ptr(fv, dv)
+        self._ptr.commit({"fact_version": fv, "dim_version": dv})
         return {
             "mode": "full",
             "reason": reason,
@@ -385,7 +366,7 @@ class EnrichView:
             # rewrite-only windows on both sides (compact/GC bumped
             # versions, changed no rows): nothing to apply, just move
             # the cursor
-            self._write_ptr(fv_new, dv_new)
+            self._ptr.commit({"fact_version": fv_new, "dim_version": dv_new})
             return {
                 "mode": "noop",
                 "fact_window": (fv0, fv_new),
@@ -402,7 +383,7 @@ class EnrichView:
         events = events.dropDuplicates([KEY])
         bid = f"enrich-f{fv0}.{fv_new}-d{dv0}.{dv_new}"
         metrics = self.dest.apply_batch(events, bid)
-        self._write_ptr(fv_new, dv_new)
+        self._ptr.commit({"fact_version": fv_new, "dim_version": dv_new})
         return {
             "mode": "incremental",
             "fact_window": (fv0, fv_new),

@@ -67,7 +67,6 @@ deleted as soon as the swap lands — byte destruction is the point.
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 import uuid
@@ -79,6 +78,7 @@ from pyspark.sql.window import Window
 
 from beehive_data_etl_spark.operators.schema_evolution import align_to_schema
 from beehive_data_etl_spark.sinks.snapshot import CELL, KEY, SEQ
+from beehive_data_etl_spark.sources import table_meta as tm
 
 VFROM = "_v_from"
 CHANGE = "change_type"
@@ -122,37 +122,11 @@ class HistoryView:
         # unavailable and as_of() refuses versions below it.
         self.bootstrap = bootstrap
         os.makedirs(root, exist_ok=True)
+        self._ptr = tm.Pointer(os.path.join(root, "CURRENT"))
 
     # ------------------------------------------------------------ pointer
-    def _ptr_path(self) -> str:
-        return os.path.join(self.root, "CURRENT")
-
     def current(self) -> dict | None:
-        try:
-            with open(self._ptr_path()) as fh:
-                return json.load(fh)
-        except FileNotFoundError:
-            return None
-
-    def _swap(self, version: int, baseline: int, files: list[dict]) -> None:
-        tmp = self._ptr_path() + f".tmp-{uuid.uuid4().hex}"
-        with open(tmp, "w") as fh:
-            json.dump(
-                {"version": version, "baseline": baseline, "files": files}, fh
-            )
-        os.replace(tmp, self._ptr_path())  # THE commit point
-
-    def _reap_unreferenced(self) -> None:
-        """Crash hygiene at refresh entry: delete store dirs no pointer
-        references — leftovers of a refresh that died before its swap,
-        or dirs an alter rewrite superseded last refresh (kept one
-        generation for readers holding the old pointer)."""
-        cur = self.current()
-        keep = {f["path"] for f in cur["files"]} if cur else set()
-        for d in os.listdir(self.root):
-            full = os.path.join(self.root, d)
-            if d.startswith("hv-") and full not in keep:
-                shutil.rmtree(full, ignore_errors=True)
+        return self._ptr.read()
 
     # ------------------------------------------------------------ store IO
     def _row_schema(self, table_ddl: str) -> T.StructType:
@@ -203,7 +177,14 @@ class HistoryView:
         cur = self.current()
         if cur is not None and cur["version"] == head:
             return {"mode": "noop", "version": head}
-        self._reap_unreferenced()
+        # crash hygiene: delete store dirs no pointer references —
+        # leftovers of a refresh that died before its commit, or dirs an
+        # alter rewrite superseded last refresh (kept one generation for
+        # readers holding the old pointer)
+        self._ptr.reap(
+            "hv-",
+            {os.path.basename(f["path"]) for f in cur["files"]} if cur else (),
+        )
         # pin the window end BEFORE any read (Replicator discipline):
         # at every crash point at least one tag covers each version the
         # walk (or its retry) still needs
@@ -311,7 +292,7 @@ class HistoryView:
                 _flush()
 
         _flush()
-        self._swap(head, baseline, files)
+        self._ptr.commit({"version": head, "baseline": baseline, "files": files})
         for d in purge_doomed:  # byte destruction — after the swap lands
             shutil.rmtree(d, ignore_errors=True)
         self.sink.move_tag(f"hist-{self.name}", head)
@@ -426,7 +407,7 @@ class HistoryView:
         target = self._row_schema(ddl)
         df = self._read_files(cur["files"], target)
         merged = self._write_dir(df, ddl)
-        self._swap(cur["version"], cur["baseline"], [merged])
+        self._ptr.commit({**cur, "files": [merged]})
         return {"compacted": len(cur["files"]), "version": cur["version"]}
 
     # ------------------------------------------------------------ reads

@@ -76,7 +76,7 @@ _BATCHES_SCHEMA = T.StructType(
 )
 
 # markers the commit paths actually record in snapshot metrics (the
-# same keys the Replicator's window guard keys on, plus the rewrite
+# same keys table_meta.classify_window keys on, plus the rewrite
 # family's op_label) — a snapshot carrying none is a plain
 # ingest append/merge
 _OPERATIONS = (

@@ -61,15 +61,14 @@ sandbox, same pattern as ``read_kafka_stream``).
 
 from __future__ import annotations
 
-import json
 import os
 import re
-import tempfile
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from beehive_data_etl_spark.sinks.snapshot import SnapshotSink
+from beehive_data_etl_spark.sources import table_meta as tm
 
 _INTERNAL = {"change_type", "deleted", "op", "op_sequence", "doc_id"}
 
@@ -166,23 +165,11 @@ class Outbox:
         self.n_partitions = n_partitions
         self.tombstones = tombstones
         os.makedirs(out_dir, exist_ok=True)
+        self._ptr = tm.Pointer(os.path.join(out_dir, f"_{name}.json"))
 
     # ------------------------------------------------------------ pointer
-    @property
-    def _pointer_path(self) -> str:
-        return os.path.join(self.out_dir, f"_{self.name}.json")
-
     def _pointer(self) -> dict:
-        if not os.path.exists(self._pointer_path):
-            return {"cursor": 0, "next_offsets": {}}
-        with open(self._pointer_path) as f:
-            return json.load(f)
-
-    def _swap_pointer(self, ptr: dict) -> None:
-        fd, tmp = tempfile.mkstemp(dir=self.out_dir, prefix=".outbox-")
-        with os.fdopen(fd, "w") as f:
-            json.dump(ptr, f)
-        os.replace(tmp, self._pointer_path)
+        return self._ptr.read() or {"cursor": 0, "next_offsets": {}}
 
     def cursor(self) -> int:
         return self._pointer()["cursor"]
@@ -205,6 +192,19 @@ class Outbox:
         frm = ptr["cursor"]
         if to <= frm:
             return {"skipped": True, "from": frm, "to": to}
+        # outbox consumers are replicas: same window classes (see
+        # sinks/replicate.py for the per-case arguments)
+        w = tm.classify_window(
+            tm.REPLICA, frm, self.src.snapshot(to), self.src.snapshot
+        )
+        if w.action == tm.REFUSE:
+            raise RuntimeError(
+                f"upstream {w.marker} at v{w.version} inside outbox window "
+                f"({frm}, {to}]: no forward change event can express it "
+                f"(see sinks/replicate.py). Publish up to v{w.version - 1} "
+                "first, reconcile every consumer out of band, then "
+                f"mark_synced({w.version})."
+            )
 
         if frm == 0:
             state = self.src.read_state(version=to)
@@ -220,14 +220,12 @@ class Outbox:
                 "op", F.when(F.col("deleted"), F.lit("D")).otherwise(F.lit("U"))
             ).drop("deleted")
         elif self.where is not None:
-            self._refuse_unpublishable_window(frm, to)
             from beehive_data_etl_spark.sinks.replicate import (
                 filtered_window_env,
             )
 
             df = filtered_window_env(self.src, self.where, frm, to)
         else:
-            self._refuse_unpublishable_window(frm, to)
             changes = self.src.read_changes_pruned(frm, to)
             df = changes.withColumn(
                 "op",
@@ -302,7 +300,7 @@ class Outbox:
             for p in tb.column(0).to_pylist():
                 counts[str(p)] = counts.get(str(p), 0) + 1
                 published += 1
-        self._swap_pointer({"cursor": to, "next_offsets": counts})
+        self._ptr.commit({"cursor": to, "next_offsets": counts})
         self._advance_retention_tag(to)
         return {"published": published, "from": frm, "to": to, "path": path}
 
@@ -314,26 +312,9 @@ class Outbox:
         ptr = self._pointer()
         if to <= ptr["cursor"]:
             return {"skipped": True, "from": ptr["cursor"], "to": to}
-        self._swap_pointer({**ptr, "cursor": to})
+        self._ptr.commit({**ptr, "cursor": to})
         self._advance_retention_tag(to)
         return {"marked": to}
-
-    def _refuse_unpublishable_window(self, frm: int, to: int) -> None:
-        """Same classes as Replicator._refuse_unreplicable_window —
-        outbox consumers are replicas; see sinks/replicate.py for the
-        per-case arguments."""
-        for v in range(frm + 1, to + 1):
-            m = self.src.snapshot(v).get("metrics", {})
-            for op in ("rollback_to", "backfill", "purge", "drop_column",
-                       "rename_column"):
-                if op in m:
-                    raise RuntimeError(
-                        f"upstream {op} at v{v} inside outbox window "
-                        f"({frm}, {to}]: no forward change event can "
-                        "express it (see sinks/replicate.py). Publish "
-                        f"up to v{v - 1} first, reconcile every "
-                        f"consumer out of band, then mark_synced({v})."
-                    )
 
     def _advance_retention_tag(self, to: int) -> None:
         self.src.move_tag(f"outbox-{self.name}", to)

@@ -63,6 +63,7 @@ from beehive_data_etl_spark.sinks.snapshot import (
     SnapshotSink,
     _conjunct_expr,
 )
+from beehive_data_etl_spark.sources import table_meta as tm
 
 
 def predicate_expr(where: list[tuple] | None, prefix: str = "") -> "F.Column":
@@ -114,6 +115,50 @@ def filtered_window_env(src, where: list[tuple], frm: int, to: int):
         F.when(is_del, F.lit("D")).otherwise(F.lit("U")).alias("op"),
         # when() without otherwise = typed NULL on the delete arm
         *[F.when(~is_del, F.col(c)).alias(c) for c in payload],
+    )
+
+
+def _unreplicable(w: tm.Window, frm: int, to: int) -> str:
+    """Why a replica refuses the window (frm, to] (the replica column of
+    ``table_meta.WINDOW_POLICY``), with the recovery runbook."""
+    v, window = w.version, f"replication window ({frm}, {to}]"
+    if w.marker == "rollback_to":
+        return (
+            f"upstream rolled back at v{v} inside {window}: forward change "
+            "events cannot express it (no tombstone carries the removal's "
+            "op_sequence). Roll the downstream back to a tag at or below "
+            f"v{frm}, or re-bootstrap it, then mark_synced(to) to resume."
+        )
+    if w.marker == "backfill":
+        return (
+            f"upstream backfill at v{v} inside {window}: backfilled rows "
+            "keep their op_sequence (the changelog is silent about them), "
+            "so syncing would silently diverge the replica. Run the same "
+            "backfill on the downstream table, then mark_synced(to) past it."
+        )
+    if w.marker == "purge":
+        return (
+            f"upstream purge at v{v} inside {window}: a purge removes rows "
+            "WITHOUT a tombstone, so no forward delete event exists at a "
+            "truthful op_sequence (forging one would shadow a legitimate "
+            "later re-insert). Run the same purge_keys on the downstream "
+            "table, then mark_synced(to) past it — takedown completeness "
+            "requires purging every replica anyway."
+        )
+    if w.marker == "snapshot_floor":
+        return (
+            f"{window} starts below the snapshot_floor v{v}: "
+            "expire_snapshots retired it (a cursor tag pins the floor; was "
+            "it dropped?). Re-bootstrap the downstream, or reconcile it out "
+            "of band and mark_synced(to, force=True)."
+        )
+    return (
+        f"upstream {w.marker} at v{v} inside {window}: rewritten rows keep "
+        "their op_sequence (silent in the changelog) and no forward event "
+        "can drop or rename a replica's column. Recover IN ORDER: "
+        f"sync({v - 1}) first (replicating the genuine changes before the "
+        f"alter), run the same {w.marker} on the downstream table, then "
+        f"mark_synced({v}) past it and resume."
     )
 
 
@@ -227,11 +272,16 @@ class Replicator:
         if self.dst.committed(bid):
             return {"skipped": True, "batch_id": bid, "reason": "already committed"}
 
+        w = tm.classify_window(
+            tm.REPLICA, frm, self.src.snapshot(to), self.src.snapshot
+        )
+        if w.action == tm.REFUSE:
+            raise RuntimeError(_unreplicable(w, frm, to))
         if frm == 0:
             # initial sync: full state INCLUDING tombstones (see module
             # docstring); op_sequence carries over so replica-side LWW
-            # matches the source clock. Deliberately EXEMPT from the
-            # rollback/backfill window refusal below — a state copy
+            # matches the source clock. Exempt from the window refusal
+            # above (classify_window's first build) — a state copy
             # carries rewritten values by construction, only the
             # changelog is blind to them.
             #
@@ -263,10 +313,8 @@ class Replicator:
                 "op", F.when(F.col("deleted"), F.lit("D")).otherwise(F.lit("U"))
             ).drop("deleted")
         elif self.where is not None:
-            self._refuse_unreplicable_window(frm, to)
             env = self._filtered_window_env(frm, to)
         else:
-            self._refuse_unreplicable_window(frm, to)
             # patch-mode source: carry the per-cell seqs so the (patch-
             # mode) destination folds cells exactly — full images alone
             # cannot order a late out-of-order patch's state change
@@ -324,51 +372,6 @@ class Replicator:
         out = self.dst.apply_batch(env, self._batch_id(frm, to))
         self._advance_retention_tag(to)
         return out
-
-    def _refuse_unreplicable_window(self, frm: int, to: int) -> None:
-        for v in range(frm + 1, to + 1):
-            m = self.src.snapshot(v).get("metrics", {})
-            if "rollback_to" in m:
-                raise RuntimeError(
-                    f"upstream rolled back at v{v} inside replication "
-                    f"window ({frm}, {to}]: forward change events cannot "
-                    "express it (no tombstone carries the removal's "
-                    "op_sequence). Roll the downstream back to a tag at "
-                    f"or below v{frm}, or re-bootstrap it, then "
-                    "mark_synced(to) to resume."
-                )
-            if "backfill" in m:
-                raise RuntimeError(
-                    f"upstream backfill at v{v} inside replication window "
-                    f"({frm}, {to}]: backfilled rows keep their "
-                    "op_sequence (the changelog is silent about them), so "
-                    "syncing would silently diverge the replica. Run the "
-                    "same backfill on the downstream table, then "
-                    "mark_synced(to) past it."
-                )
-            if "purge" in m:
-                raise RuntimeError(
-                    f"upstream purge at v{v} inside replication window "
-                    f"({frm}, {to}]: a purge removes rows WITHOUT a "
-                    "tombstone, so no forward delete event exists at a "
-                    "truthful op_sequence (forging one would shadow a "
-                    "legitimate later re-insert). Run the same purge_keys "
-                    "on the downstream table, then mark_synced(to) past it "
-                    "— takedown completeness requires purging every "
-                    "replica anyway."
-                )
-            for op in ("drop_column", "rename_column"):
-                if op in m:
-                    raise RuntimeError(
-                        f"upstream {op} at v{v} inside replication window "
-                        f"({frm}, {to}]: rewritten rows keep their "
-                        "op_sequence (silent in the changelog) and no "
-                        "forward event can drop or rename a replica's "
-                        f"column. Recover IN ORDER: sync({v - 1}) first "
-                        "(replicating the genuine changes before the "
-                        f"alter), run the same {op} on the downstream "
-                        f"table, then mark_synced({v}) past it and resume."
-                    )
 
     def _advance_retention_tag(self, to: int) -> None:
         # atomic move — no crash window where the pin is absent

@@ -35,10 +35,13 @@ Refresh walks the sink's pre-image-free changelog
 one shard; purge windows are honest ``D`` rows (the pruned reader
 degrades those windows itself); pure-rewrite windows (compact,
 tombstone GC) emit no change rows and advance the pointer with zero
-shard rewrites. Two window kinds force a FULL re-export, both detected
-from snapshot metadata: a rebucket (n_buckets changed ⇒ the alignment
-function changed for every key) and a schema change (shard files must
-all carry the evolved schema — training loaders read one schema).
+shard rewrites. The windows a whole-row view cannot consume that way
+(the whole-row column of ``table_meta.WINDOW_POLICY``) force a FULL
+re-export: a rebucket (n_buckets changed ⇒ the alignment function
+changed for every key), any schema change (shard files must all carry
+the evolved schema — training loaders read one schema), a rollback or
+backfill (rows changed at op_sequences the changelog cannot see) and
+an ``expire_snapshots``-retired window.
 
 Commit protocol mirrors the other derived views: rewritten shards land
 in a fresh generation directory, the ``CURRENT`` pointer (an atomic
@@ -53,9 +56,7 @@ may still be scanning it).
 
 from __future__ import annotations
 
-import json
 import os
-import shutil
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -63,6 +64,7 @@ from pyspark.sql import functions as F
 
 from .snapshot import _INTERNAL, KEY, _bucket_expr
 from ..functions.hashing import portable_hash32
+from ..sources import table_meta as tm
 
 SHARD = "shard"
 
@@ -87,35 +89,20 @@ class ShardExport:
         if self.k < 1:
             raise ValueError("k must be >= 1")
         os.makedirs(root, exist_ok=True)
+        self._ptr = tm.Pointer(
+            os.path.join(root, "CURRENT"), refs=self._generations
+        )
 
     # ------------------------------------------------------------ pointer
-    def _ptr_path(self) -> str:
-        return os.path.join(self.root, "CURRENT")
-
     def current(self) -> dict | None:
-        try:
-            with open(self._ptr_path()) as fh:
-                return json.load(fh)
-        except FileNotFoundError:
-            return None
+        return self._ptr.read()
 
-    def _swap(self, ptr: dict) -> None:
-        prev = self.current()
-        tmp = self._ptr_path() + f".tmp-{uuid.uuid4().hex}"
-        with open(tmp, "w") as fh:
-            json.dump(ptr, fh)
-        os.replace(tmp, self._ptr_path())  # THE commit point
-        # reap generations referenced by neither the new nor the
-        # previous pointer (prev's survive one more refresh: a reader
-        # that loaded it may still be scanning)
-        keep: set[str] = set()
-        for p in (ptr, prev) if prev else (ptr,):
-            for d in p["shards"].values():
-                # shard dirs live inside generation dirs
-                keep.add(os.path.relpath(d, self.root).split(os.sep)[0])
-        for d in os.listdir(self.root):
-            if d.startswith("gen-") and d not in keep:
-                shutil.rmtree(os.path.join(self.root, d), ignore_errors=True)
+    def _generations(self, ptr: dict) -> set[str]:
+        # shard dirs live inside generation dirs
+        return {
+            os.path.relpath(d, self.root).split(os.sep)[0]
+            for d in ptr["shards"].values()
+        }
 
     # ------------------------------------------------------------ write
     def _payload_cols(self, df: DataFrame) -> list[str]:
@@ -145,6 +132,18 @@ class ShardExport:
                 out[d.split("=", 1)[1]] = os.path.join(gen, d)
         return out
 
+    def _commit(self, snap: dict, shards: dict[str, str]) -> None:
+        self._ptr.commit(
+            {
+                "version": snap["version"],
+                "k": self.k,
+                "n_buckets": snap["n_buckets"],
+                "schema": snap["schema"],
+                "shards": shards,
+            },
+            reap="gen-",
+        )
+
     # ------------------------------------------------------------ refresh
     def refresh(self) -> dict:
         """Advance the layout to the sink's CURRENT snapshot. Full
@@ -160,27 +159,15 @@ class ShardExport:
             )
         v_new = snap["version"]
         cur = self.current()
-        if cur is not None and cur["version"] == v_new:
-            return {"mode": "noop", "version": v_new}
-        full = (
-            cur is None
-            or cur["n_buckets"] != snap["n_buckets"]
-            or cur["schema"] != snap["schema"]
-            # expire_snapshots retired the incremental window: full
-            # re-export instead of failing every refresh (review-found)
-            or cur["version"] < snap.get("snapshot_floor", 1)
+        w = tm.classify_window(
+            tm.WHOLE_ROW_VIEW, cur and cur["version"], snap, self.sink.snapshot
         )
-        if full:
+        if w.action == tm.NOOP:
+            return {"mode": "noop", "version": v_new}
+        if w.action == tm.FULL:
             live = self.sink.read_state(version=v_new).filter(~F.col("deleted"))
             shards = self._write_generation(live, snap["n_buckets"])
-            ptr = {
-                "version": v_new,
-                "k": self.k,
-                "n_buckets": snap["n_buckets"],
-                "schema": snap["schema"],
-                "shards": shards,
-            }
-            self._swap(ptr)
+            self._commit(snap, shards)
             return {"mode": "full", "version": v_new, "rewritten": len(shards)}
         # dirty shards derive from the KEY alone (shard = bucket range
         # of doc_id) — project every payload column out of the scan.
@@ -217,14 +204,7 @@ class ShardExport:
                     shards[str(s)] = written[str(s)]
                 else:
                     shards.pop(str(s), None)  # shard emptied out
-        ptr = {
-            "version": v_new,
-            "k": self.k,
-            "n_buckets": snap["n_buckets"],
-            "schema": snap["schema"],
-            "shards": shards,
-        }
-        self._swap(ptr)
+        self._commit(snap, shards)
         return {
             "mode": "incremental",
             "version": v_new,

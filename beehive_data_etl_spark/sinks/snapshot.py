@@ -51,6 +51,7 @@ this file are bounded by ``n_buckets``, never by data volume.
 from __future__ import annotations
 
 import fcntl
+import functools
 import glob
 import json
 import os
@@ -516,11 +517,7 @@ class SnapshotSink:
 
     def _write_snapshot(self, snap: dict) -> None:
         name = self._snap_name(snap["version"])
-        path = os.path.join(self.root, "_snapshots", name)
-        tmp = path + f".tmp-{uuid.uuid4().hex}"
-        with open(tmp, "w") as fh:
-            json.dump(snap, fh)
-        os.replace(tmp, path)
+        table_meta.write_json(os.path.join(self.root, "_snapshots", name), snap)
         self.crash_hook("before_pointer_swap")
         if self._is_main():
             ptr_tmp = self._current_path() + f".tmp-{uuid.uuid4().hex}"
@@ -532,11 +529,8 @@ class SnapshotSink:
             if ptr is None:
                 raise RuntimeError(f"branch {self.ref!r} was deleted")
             ptr["head"] = name
-            ptr_path = self._branch_ptr_path(self.ref)
-            ptr_tmp = ptr_path + f".tmp-{uuid.uuid4().hex}"
-            with open(ptr_tmp, "w") as fh:
-                json.dump(ptr, fh)
-            os.replace(ptr_tmp, ptr_path)  # THE commit point (branch)
+            # THE commit point (branch)
+            table_meta.write_json(self._branch_ptr_path(self.ref), ptr)
 
     def _commit_next(
         self, head: dict | None, metrics: dict, t0: float | None = None,
@@ -668,10 +662,7 @@ class SnapshotSink:
         return v
 
     def _write_tags(self, tags: dict[str, int]) -> None:
-        tmp = self._tags_path() + f".tmp-{uuid.uuid4().hex}"
-        with open(tmp, "w") as fh:
-            json.dump(tags, fh)
-        os.replace(tmp, self._tags_path())
+        table_meta.write_json(self._tags_path(), tags)
 
     # ------------------------------------------------------------ branches
     def branches(self) -> dict[str, dict]:
@@ -728,12 +719,10 @@ class SnapshotSink:
             # clear husks of a dead same-named incarnation (crashed
             # cleanup) — they would shadow main's files in snapshot()
             self._drop_branch_chain(name)
-            ptr = {"head": f"v{base:06d}.json", "base": base}
-            ptr_path = self._branch_ptr_path(name)
-            tmp = ptr_path + f".tmp-{uuid.uuid4().hex}"
-            with open(tmp, "w") as fh:
-                json.dump(ptr, fh)
-            os.replace(tmp, ptr_path)
+            table_meta.write_json(
+                self._branch_ptr_path(name),
+                {"head": f"v{base:06d}.json", "base": base},
+            )
         return {"branch": name, "base": base}
 
     def branch(self, name: str) -> "SnapshotSink":
@@ -1188,10 +1177,7 @@ class SnapshotSink:
     def _write_manifest(self, batch_id: str, bucket: int, body: dict) -> None:
         path = self._manifest_path(batch_id, bucket)
         os.makedirs(os.path.dirname(path), exist_ok=True)
-        tmp = path + f".tmp-{uuid.uuid4().hex}"
-        with open(tmp, "w") as fh:
-            json.dump(body, fh)
-        os.replace(tmp, path)
+        table_meta.write_json(path, body)
 
     # ------------------------------------------------------------- reads
     def _read_buckets(
@@ -1449,11 +1435,11 @@ class SnapshotSink:
         answered on the driver, with no Spark job, by the Arrow diff
         the ``beehive_changes`` source runs (``sources/arrow_fold.py``)
         when it also: asks no pre-images (``include_old=False``); holds
-        no rebucket (the diff is per bucket); holds none of the commits
-        the changelog stream refuses (``table_meta.
-        unstreamable_window_reason``: a backfill or a column alter,
-        whose renamed FROM-state columns the Arrow diff does not
-        bridge); and its added files fit, by uncompressed footer bytes,
+        none of the windows the changelog stream refuses (the
+        ``STREAM`` column of ``table_meta.WINDOW_POLICY``: a rebucket,
+        as the diff is per bucket; a backfill or a column alter, whose
+        renamed FROM-state columns the Arrow diff does not bridge); and
+        its added files fit, by uncompressed footer bytes,
         under ``spark.sql.execution.arrow.localRelationThreshold``, the
         size Spark hands over as a local relation. Other windows run
         the Spark diffs above: patch tables need the cell fold, and
@@ -1492,12 +1478,16 @@ class SnapshotSink:
         view wants; a consumer that must see EVERY changed row of a
         patch table (full-row replication, shard dirtiness) must read
         unprojected (``columns=None``)."""
-        old_snap = self.snapshot(from_version)
-        new_snap = self.snapshot(to_version)
+        load = functools.cache(self.snapshot)
+        old_snap = load(from_version)
+        new_snap = load(to_version)
         floor_moved = old_snap.get("tombstone_floor", 0) != new_snap.get(
             "tombstone_floor", 0
         )
-        window = self._window_metrics(from_version, to_version)
+        window = [
+            load(v).get("metrics", {})
+            for v in range(from_version + 1, to_version + 1)
+        ]
         full = (
             to_version < from_version
             or floor_moved
@@ -1507,10 +1497,9 @@ class SnapshotSink:
             not full
             and not self.patch
             and not include_old
-            and old_snap["n_buckets"] == new_snap["n_buckets"]
-            and table_meta.unstreamable_window_reason(
-                from_version, to_version, window
-            ) is None
+            and table_meta.classify_window(
+                table_meta.STREAM, from_version, new_snap, load
+            ).action != table_meta.REFUSE
         ):
             parts = window_partitions(self.root, old_snap, new_snap)
             added = [f for p in parts for f in p.added_files]
@@ -1529,13 +1518,6 @@ class SnapshotSink:
             include_old=include_old,
             columns=columns,
         )
-
-    def _window_metrics(self, from_version: int, to_version: int) -> list[dict]:
-        """Commit metrics of every version in (from, to], in order."""
-        return [
-            self.snapshot(v).get("metrics", {})
-            for v in range(from_version + 1, to_version + 1)
-        ]
 
     def _local_frame(self, table: pa.Table, schema: T.StructType) -> DataFrame:
         """An Arrow table as a DataFrame of ``schema``, with no Spark
@@ -1838,20 +1820,26 @@ class SnapshotSink:
         LOWER op_sequences, which no forward change event can express
         (the ``seq > old_seq`` predicate is the correctness of
         everything downstream) — a diff would silently miss the
-        reverted rows; rebuild the consumer from the restored state."""
-        for v, m in enumerate(
-            self._window_metrics(from_version, to_version), from_version + 1
-        ):
-            if "rollback_to" in m:
-                raise RuntimeError(
-                    f"rollback at v{v} inside changelog window "
-                    f"({from_version}, {to_version}]: state regressed to "
-                    "lower op_sequences, which no forward change event can "
-                    "express — a pruned or full diff would silently miss "
-                    "the reverted rows. Rebuild this consumer from the "
-                    "rolled-back state (or resume from a version at/after "
-                    "the rollback)."
-                )
+        reverted rows; rebuild the consumer from the restored state.
+        (The accumulating-view row of ``table_meta.WINDOW_POLICY``, with
+        no maintained columns: an expired window raises in
+        ``read_changes`` itself.)"""
+        w = table_meta.classify_window(
+            table_meta.ACCUMULATING_VIEW,
+            from_version,
+            self.snapshot(to_version),
+            self.snapshot,
+        )
+        if w.marker == "rollback_to":
+            raise RuntimeError(
+                f"rollback at v{w.version} inside changelog window "
+                f"({from_version}, {to_version}]: state regressed to "
+                "lower op_sequences, which no forward change event can "
+                "express — a pruned or full diff would silently miss "
+                "the reverted rows. Rebuild this consumer from the "
+                "rolled-back state (or resume from a version at/after "
+                "the rollback)."
+            )
         return self.read_changes(
             from_version,
             to_version,
@@ -1933,9 +1921,8 @@ class SnapshotSink:
         snap = self.current_snapshot() if version is None else self.snapshot(version)
         if snap is None:
             raise ValueError("no snapshot yet")
-        table_schema = T.StructType.fromDDL(snap["schema"])
-        key_field = next(f for f in table_schema.fields if f.name == KEY)
-        target = self._projection_target(snap, columns)
+        target = self._projection_target(snap, columns)  # always keeps KEY
+        key_field = target[KEY]
         keys = _probe_keys(ids, key_field)
         n = snap["n_buckets"]
         buckets = sorted({bucket_of(k, n, key_field.dataType) for k in keys})
@@ -3646,12 +3633,12 @@ class SnapshotSink:
 
         - **The changelog is silent about backfills** (rewritten rows
           keep their op_sequence, exactly like compaction — the LWW
-          clock belongs to the SOURCE and must not be forged). Derived
-          consumers that read the transformed columns (AggregateView
-          over them, replicas) must re-run the same backfill or
-          rebuild; ``sinks.replicate.Replicator`` detects a backfill
-          commit inside a sync window and refuses it with instructions
-          instead of silently diverging.
+          clock belongs to the SOURCE and must not be forged), and the
+          commit records no column list. Derived views that can
+          recompute rebuild across a backfill window; replicas, outboxes
+          and the changelog stream refuse it with instructions instead
+          of silently diverging; NearDupView, which cannot rebuild,
+          does not see it (``table_meta.WINDOW_POLICY``).
         - **Rows ingested concurrently are not transformed.** Deploy
           the forward path (the ingest transform stage emitting the new
           column) FIRST, then backfill history — the standard two-step;

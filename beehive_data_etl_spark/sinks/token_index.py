@@ -34,10 +34,8 @@ the row-level changelog instead:
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
-import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -51,6 +49,7 @@ from beehive_data_etl_spark.sinks.snapshot import (
     _probe_keys,
     bucket_of,
 )
+from beehive_data_etl_spark.sources import table_meta as tm
 
 
 def _token_bucket_expr(n_buckets: int):
@@ -84,22 +83,16 @@ class TokenIndex:
 
         self._write_lock = threading.Lock()
         os.makedirs(root, exist_ok=True)
+        self._ptr = tm.Pointer(os.path.join(root, "CURRENT"), pins=self._pins)
 
     # ------------------------------------------------------------ pointer
-    def _ptr_path(self) -> str:
-        return os.path.join(self.root, "CURRENT")
-
     def current(self) -> dict | None:
-        try:
-            with open(self._ptr_path()) as fh:
-                cur = json.load(fh)
-        except FileNotFoundError:
-            return None
+        cur = self._ptr.read()
         # layout guards (mirrors SnapshotSink's stored-n_buckets check):
         # opening an existing index with a different bucket count would
         # make lookup() probe absent subdirs and silently return missing
         # rows — fail loudly instead
-        stored = cur.get("n_buckets")
+        stored = cur and cur.get("n_buckets")
         if stored is not None and stored != self.n_buckets:
             raise ValueError(
                 f"index at {self.root} was built with n_buckets={stored}, "
@@ -107,22 +100,14 @@ class TokenIndex:
             )
         return cur
 
-    def _swap(self, version: int, files: list[str]) -> None:
-        tmp = self._ptr_path() + f".tmp-{uuid.uuid4().hex}"
-        with open(tmp, "w") as fh:
-            json.dump(
-                {
-                    "version": version,
-                    "files": files,
-                    "n_buckets": self.n_buckets,
-                    # the element type postings were HASHED under —
-                    # pinned because xxhash64(int) != xxhash64(long):
-                    # a widened probe type would bucket differently
-                    "elem": self._sink_elem_type().simpleString(),
-                },
-                fh,
-            )
-        os.replace(tmp, self._ptr_path())  # THE commit point
+    def _pins(self) -> dict:
+        # the element type postings were HASHED under — pinned because
+        # xxhash64(int) != xxhash64(long): a widened probe type would
+        # bucket differently
+        return {
+            "n_buckets": self.n_buckets,
+            "elem": self._sink_elem_type().simpleString(),
+        }
 
     # ------------------------------------------------------------ schema
     def _table_schema(self) -> T.StructType:
@@ -206,14 +191,19 @@ class TokenIndex:
             return {"mode": "noop", "reason": "sink has no snapshot"}
         v_new = snap["version"]
         cur = self.current()
-        if cur is not None and cur["version"] == v_new:
+        w = tm.classify_window(
+            tm.COLUMN_VIEW,
+            cur and cur["version"],
+            snap,
+            self.sink.snapshot,
+            [self.token_col],
+        )
+        if w.action == tm.NOOP:
             return {"mode": "noop", "version": v_new}
-        if cur is not None and cur["version"] < snap.get("snapshot_floor", 1):
-            # the incremental window was expired (expire_snapshots):
-            # full rebuild instead of failing every refresh forever
-            cur = None
+        if w.action == tm.REFUSE:
+            raise tm.altered_columns_error(w)
         tokens = F.col(self.token_col)
-        if cur is None:
+        if w.action == tm.FULL:
             live = self.sink.read_state(
                 version=v_new, columns=[self.token_col]
             ).filter(~F.col("deleted"))
@@ -230,9 +220,9 @@ class TokenIndex:
             # tbucket= subdirs — don't list it
             if not any(d.startswith("tbucket=") for d in os.listdir(out)):
                 shutil.rmtree(out, ignore_errors=True)
-                self._swap(v_new, [])
+                self._ptr.commit({"version": v_new, "files": []})
                 return {"mode": "full-empty", "version": v_new}
-            self._swap(v_new, [out])
+            self._ptr.commit({"version": v_new, "files": [out]})
             return {"mode": "full", "version": v_new}
         ch = self.sink.read_changes_pruned(
             cur["version"],
@@ -281,10 +271,10 @@ class TokenIndex:
         # and advance the pointer over the unchanged file list.
         if not any(d.startswith("tbucket=") for d in os.listdir(out)):
             shutil.rmtree(out, ignore_errors=True)
-            self._swap(v_new, list(cur["files"]))
+            self._ptr.commit({"version": v_new, "files": cur["files"]})
             return {"mode": "noop-delta", "version": v_new,
                     "from_version": cur["version"]}
-        self._swap(v_new, cur["files"] + [out])
+        self._ptr.commit({"version": v_new, "files": cur["files"] + [out]})
         return {"mode": "incremental", "version": v_new, "from_version": cur["version"]}
 
     # ------------------------------------------------------------ read
@@ -378,23 +368,13 @@ class TokenIndex:
             head = self.current()
             if head is None or head["version"] != cur["version"] or head["files"] != cur["files"]:
                 return {"aborted": True, "reason": "pointer advanced during fold"}
-            self._swap(cur["version"], [out])
-            now = time.time()
-            reaped = 0
-            for d in os.listdir(self.root):
-                full = os.path.join(self.root, d)
-                if (
-                    d.startswith("ix-")
-                    and full != out
-                    and os.path.isdir(full)
-                    and now - os.path.getmtime(full) >= orphan_older_than_s
-                ):
-                    shutil.rmtree(full, ignore_errors=True)
-                    reaped += 1
+            self._ptr.commit({"version": cur["version"], "files": [out]})
             return {
                 "version": cur["version"],
                 "files_folded": len(cur["files"]),
-                "dirs_reaped": reaped,
+                "dirs_reaped": self._ptr.reap(
+                    "ix-", {os.path.basename(out)}, orphan_older_than_s
+                ),
             }
 
     # ------------------------------------------------------------ verify

@@ -134,42 +134,12 @@ def plan_window_partitions(root: str, frm: int, to: int) -> list[BucketWork]:
     if to <= frm:
         return []
     # frm == 0 is the bootstrap: a pure state copy of the TO version
-    # that never reads history, so the per-version marker walk is both
-    # unnecessary and wrong there (it would do O(history) JSON loads
-    # and crash on expired snapshots / old markers) — the same
-    # exemption Replicator.sync gives its initial full copy.
-    if frm > 0:
-        tm.refuse_unstreamable_window(root, frm, to)
+    # that never reads history (classify_window's first build, the same
+    # exemption Replicator.sync gives its initial full copy)
+    tm.refuse_unstreamable_window(root, frm, to)
     new_snap = tm.load_snapshot(root, to)
     _refuse_patch(new_snap, root)
     old_snap = tm.load_snapshot(root, frm) if frm > 0 else None
-    if old_snap is not None and old_snap["n_buckets"] != new_snap["n_buckets"]:
-        raise RuntimeError(
-            f"rebucket inside stream window ({frm}, {to}]: bucket "
-            "identities shifted, the per-bucket diff is undefined. "
-            "Restart the stream from a fresh checkpoint with "
-            f"startingVersion={to} (full re-bootstrap), or re-point the "
-            "consumer after reconciling out of band."
-        )
-    if old_snap is not None and old_snap.get("tombstone_floor", 0) != new_snap.get(
-        "tombstone_floor", 0
-    ):
-        # expire_tombstones drops tombstones at the NEXT fold; a window
-        # spanning the floor advance could contain a delete whose
-        # tombstone was created AND folded away inside it — the key
-        # vanishes from every window-added file, so the candidate-key
-        # diff would silently miss the D row read_changes emits. The
-        # sink-side readers diff whole states and don't care; here we
-        # refuse, which is cheap to honor (consume faster than the
-        # tombstone retention horizon — the same contract a compacted
-        # Kafka topic imposes).
-        raise RuntimeError(
-            f"tombstone_floor advanced inside stream window ({frm}, "
-            f"{to}] (expire_tombstones ran): a delete folded away inside "
-            "the window would be missed. Consume in windows that don't "
-            "span a floor advance, or restart from a fresh checkpoint "
-            f"with startingVersion={to} after reconciling."
-        )
     return window_partitions(root, old_snap, new_snap)
 
 

@@ -8,12 +8,15 @@ streaming reader lives in its own long-running driver-side worker.
 Everything those hooks need from the table is plain JSON under
 ``<root>/_snapshots/``, so this module re-implements exactly the
 metadata surface of ``sinks/snapshot.py`` (``current_snapshot``,
-``snapshot``, ``resolve_ref``, ``tags``/``move_tag``, the Replicator's
-window-refusal guards) as standalone file I/O. The window policy
-(``unstreamable_window_reason``) is the one copy: the changelog stream
-refuses on it and ``SnapshotSink.read_changes`` routes on it.  Behavioral parity with
-the sink is pinned by ``tests/test_spark_datasource.py`` — if the sink
-ever changes its on-disk metadata, those tests break loudly here.
+``snapshot``, ``resolve_ref``, ``tags``/``move_tag``) as standalone
+file I/O. Behavioral parity with the sink is pinned by
+``tests/test_spark_datasource.py`` — if the sink ever changes its
+on-disk metadata, those tests break loudly here.
+
+It also holds the protocol every derived view, replica and changelog
+consumer shares, JVM-free: ``Pointer`` (read, atomic commit, reap) and
+``classify_window`` with its one policy table, ``WINDOW_POLICY``: which
+windows a consumer applies incrementally, rebuilds from or refuses.
 
 Also here: ``_split_top``, the tiny DDL tokenizer the data source uses
 to project the stored schema DDL (``snapshot._ddl`` output) down to a
@@ -27,8 +30,11 @@ from __future__ import annotations
 import fcntl
 import json
 import os
+import shutil
+import time
 import uuid
 from collections.abc import Iterable
+from typing import NamedTuple
 
 KEY = "doc_id"
 SEQ = "op_sequence"
@@ -74,11 +80,7 @@ def load_snapshot(root: str, version: int) -> dict:
 
 
 def load_tags(root: str) -> dict[str, int]:
-    try:
-        with open(os.path.join(snapshots_dir(root), "TAGS.json")) as fh:
-            return json.load(fh)
-    except FileNotFoundError:
-        return {}
+    return read_json(os.path.join(snapshots_dir(root), "TAGS.json")) or {}
 
 
 def resolve_ref(root: str, ref) -> int:
@@ -114,66 +116,244 @@ def pin_tag(root: str, name: str, version: int, monotonic: bool = False) -> None
             return
         load_snapshot(root, version)  # must exist (raises otherwise)
         tags[name] = int(version)
-        path = os.path.join(snapshots_dir(root), "TAGS.json")
-        tmp = path + f".tmp-{uuid.uuid4().hex}"
-        with open(tmp, "w") as fh:
-            json.dump(tags, fh)
-        os.replace(tmp, path)
+        write_json(os.path.join(snapshots_dir(root), "TAGS.json"), tags)
     finally:
         fcntl.flock(lock_fd, fcntl.LOCK_UN)
         os.close(lock_fd)
 
 
-# ------------------------------------------------------------ window guard
-def unstreamable_window_reason(
-    frm: int, to: int, window_metrics: Iterable[dict]
-) -> str | None:
-    """Why the changelog window (frm, to] cannot be expressed as
-    forward change events, or None. ``window_metrics`` holds the commit
-    metrics of versions frm+1..to in order. A window spanning a
-    rollback / backfill / purge / drop_column / rename_column cannot be
-    expressed at truthful op_sequences (the per-case arguments live on
-    the Replicator, sinks/replicate.py). The stream raises the reason
-    (``refuse_unstreamable_window``); ``SnapshotSink.read_changes``
-    answers such windows with its Spark diffs instead of the Arrow
-    one."""
-    for v, m in enumerate(window_metrics, frm + 1):
-        for marker in ("rollback_to", "backfill", "purge"):
-            if marker in m:
-                return (
-                    f"upstream {marker} at v{v} inside stream window "
-                    f"({frm}, {to}]: no forward change event can express "
-                    "it (see sinks/replicate.py for the per-case "
-                    "argument). Reconcile the consumer out of band, then "
-                    "restart the stream from a fresh checkpoint with "
-                    f"startingVersion={to}."
-                )
-        for op in ("drop_column", "rename_column"):
+# ---------------------------------------------------------------- pointers
+def read_json(path: str) -> dict | None:
+    try:
+        with open(path) as fh:
+            return json.load(fh)
+    except FileNotFoundError:
+        return None
+
+
+def write_json(path: str, body) -> None:
+    """Atomically replace ``path`` by ``body`` as JSON: a uniquely named
+    sibling tmp file, then ``os.replace`` — a reader sees the old file
+    or the new one, never a torn write. The replace survives process
+    death, not power loss (nothing calls fsync)."""
+    tmp = f"{path}.tmp-{uuid.uuid4().hex}"
+    with open(tmp, "w") as fh:
+        json.dump(body, fh)
+    os.replace(tmp, path)
+
+
+class Pointer:
+    """The pointer JSON of a derived structure (a view, an index, an
+    outbox cursor): the one file its readers trust. Data directories
+    beside it are written BEFORE ``commit``, so a crash leaves orphans
+    that no reader lists and the previous pointer stays live.
+
+    ``pins()`` returns the fields every commit carries (the layout a
+    handle must agree with: bucket counts, sketch precision, ...);
+    ``refs(pointer)`` names the entries beside the pointer it
+    references, for the keep-one-generation reap."""
+
+    def __init__(self, path: str, pins=dict, refs=None) -> None:
+        self.path = path
+        self.root = os.path.dirname(path)
+        self.pins = pins
+        self.refs = refs
+
+    def read(self) -> dict | None:
+        return read_json(self.path)
+
+    def commit(self, body: dict, reap: str | None = None) -> None:
+        """THE commit point: replace the pointer by ``body`` plus the
+        pins. With ``reap`` (a name prefix), then delete the prefixed
+        entries that neither the new nor the previous pointer
+        references — the previous generation survives one more commit,
+        for a reader that loaded the old pointer and is still scanning."""
+        prev = self.read() if reap else None
+        body = {**body, **self.pins()}
+        write_json(self.path, body)
+        if reap:
+            keep = set(self.refs(body)) | (set(self.refs(prev)) if prev else set())
+            self.reap(reap, keep)
+
+    def reap(self, prefix: str, keep, older_than_s: float = 0.0) -> int:
+        """Delete the entries beside the pointer named ``prefix*`` and
+        not in ``keep``; with ``older_than_s``, only those unmodified
+        for that long (readers holding an older pointer finish first —
+        the age cutoff of ``SnapshotSink.vacuum``). Returns the count."""
+        now = time.time()
+        reaped = 0
+        for d in os.listdir(self.root):
+            full = os.path.join(self.root, d)
+            if not d.startswith(prefix) or d in keep:
+                continue
+            if older_than_s and now - os.path.getmtime(full) < older_than_s:
+                continue
+            shutil.rmtree(full, ignore_errors=True)
+            reaped += 1
+        return reaped
+
+
+# ----------------------------------------------------------- window policy
+# Every consumer of a changelog window (cursor, head] asks one question:
+# can it apply the window as forward changes, must it rebuild, or must
+# it refuse? The answer depends on the commits inside the window and on
+# what kind of consumer asks.
+COLUMN_VIEW = "column view"  # AggregateView family, Token/ValueIndex, AnnIndex
+WHOLE_ROW_VIEW = "whole-row view"  # ShardExport
+ACCUMULATING_VIEW = "accumulating view"  # NearDupView, read_changes_pruned
+REPLICA = "replica"  # Replicator, Outbox; EnrichView rebuilds on refuse
+STREAM = "changelog stream"  # beehive_changes, read_changes' driver route
+KINDS = (COLUMN_VIEW, WHOLE_ROW_VIEW, ACCUMULATING_VIEW, REPLICA, STREAM)
+
+NOOP, FULL, INCREMENTAL, REFUSE = "noop", "full", "incremental", "refuse"
+_I, _F, _R = INCREMENTAL, FULL, REFUSE
+_RANK = {INCREMENTAL: 0, FULL: 1, REFUSE: 2}
+
+# The one policy table (one column per entry of KINDS). Why each cell:
+# - snapshot_floor: expire_snapshots retired the cursor's snapshot, so
+#   no diff from it exists. Views that can recompute rebuild; the rest
+#   lose history they cannot recover.
+# - rollback_to regresses state to LOWER op_sequences and backfill
+#   rewrites rows at their old ones: the changelog (``seq > old_seq``)
+#   cannot see either. A backfill records no column list, so a column
+#   view cannot tell whether its columns changed: it rebuilds too. An
+#   accumulating view cannot rebuild, and a backfill of its own column
+#   goes unseen (see ``SnapshotSink.backfill``).
+# - purge removes keys with no tombstone: the state diff reports them as
+#   D rows with no forward clock, fine for a diff consumer, not for a
+#   replica whose LWW needs a truthful op_sequence.
+# - drop_column / rename_column rewrite rows changelog-silently. A view
+#   over the altered column would merge stale values into its old
+#   identity (a drop + re-add of the same name passes any current-schema
+#   check): "maintained_column" refuses. Alters of other columns pass a
+#   column-scoped view; a whole-row view re-exports every row.
+# - rebucket renumbers buckets (the stream diffs per bucket, ShardExport
+#   aligns shards to buckets); tombstone_floor means a delete may have
+#   been folded away inside the window, which only the stream's
+#   per-bucket key diff misses; schema_version (any evolution) changes
+#   every row a whole-row view exports.
+WINDOW_POLICY = {
+    #                     column whole-row accumulating replica stream
+    "snapshot_floor":    (_F, _F, _R, _R, _R),
+    "rollback_to":       (_F, _F, _R, _R, _R),
+    "backfill":          (_F, _F, _I, _R, _R),
+    "purge":             (_I, _I, _I, _R, _R),
+    "maintained_column": (_R, _F, _R, _R, _R),
+    "drop_column":       (_I, _F, _I, _R, _R),
+    "rename_column":     (_I, _F, _I, _R, _R),
+    "rebucket":          (_I, _F, _I, _I, _R),
+    "tombstone_floor":   (_I, _I, _I, _I, _R),
+    "schema_version":    (_I, _F, _I, _I, _I),
+}
+# markers read off the two endpoint snapshots: (marker, snapshot field)
+_ENDPOINT_MARKERS = (
+    ("rebucket", "n_buckets"),
+    ("tombstone_floor", "tombstone_floor"),
+    ("schema_version", "schema_version"),
+)
+
+
+class Window(NamedTuple):
+    """A consumer's verdict on one window: the action, and the commit
+    marker that decided it, at ``version``, with the maintained
+    ``columns`` an alter touched."""
+
+    action: str
+    marker: str | None = None
+    version: int | None = None
+    columns: tuple = ()
+
+
+def classify_window(
+    kind: str, cursor: int | None, head: dict, load, columns: Iterable[str] = ()
+) -> Window:
+    """How a consumer of ``kind`` at ``cursor`` (None or 0: never built)
+    consumes the window up to ``head`` (a snapshot dict). ``load(v)``
+    returns snapshot ``v`` and raises ValueError for one
+    ``expire_snapshots`` retired; ``columns`` are the payload columns
+    the consumer maintains. The verdict is the strongest action among
+    the window's markers (refuse > full > incremental), the first in
+    version order among equals. Driver-side JSON only: O(window)."""
+    to = head["version"]
+    if not cursor:
+        return Window(FULL)
+    if cursor >= to:
+        return Window(NOOP)
+    col = KINDS.index(kind)
+    try:
+        base = load(cursor)
+    except ValueError:
+        floor = head.get("snapshot_floor", 1)
+        return Window(WINDOW_POLICY["snapshot_floor"][col], "snapshot_floor", floor)
+    mine = set(columns)
+    found = []  # (policy row, marker, version, touched maintained columns)
+    for v in range(cursor + 1, to + 1):
+        m = load(v).get("metrics", {})
+        found += [(k, k, v, ()) for k in ("rollback_to", "backfill", "purge") if k in m]
+        for op, names in (
+            ("drop_column", [m.get("dropped")]),
+            ("rename_column", list(m.get("rename_map", {}).values())),
+        ):
             if op in m:
-                return (
-                    f"upstream {op} at v{v} inside stream window "
-                    f"({frm}, {to}]: the stream's schema is fixed at "
-                    "start and rewritten rows keep their op_sequence. "
-                    "Apply the same alter on the consumer, then restart "
-                    f"the stream from a fresh checkpoint with "
-                    f"startingVersion={v}."
-                )
-    return None
+                hit = tuple(sorted(mine.intersection(names)))
+                found.append(("maintained_column" if hit else op, op, v, hit))
+    found += [
+        (k, k, to, ()) for k, f in _ENDPOINT_MARKERS if base.get(f, 0) != head.get(f, 0)
+    ]
+    best = Window(INCREMENTAL)
+    for row, marker, v, hit in found:
+        action = WINDOW_POLICY[row][col]
+        if _RANK[action] > _RANK[best.action]:
+            best = Window(action, marker, v, hit)
+    return best
+
+
+def altered_columns_error(w: Window) -> ValueError:
+    """The refusal of a column-scoped view whose maintained column was
+    dropped or renamed inside its window."""
+    return ValueError(
+        f"column(s) {list(w.columns)} were dropped/renamed at v{w.version} "
+        "inside the refresh window: the stored view references their old "
+        "identity — delete the view directory and rebuild"
+    )
 
 
 def refuse_unstreamable_window(root: str, frm: int, to: int) -> None:
-    """Twin of ``Replicator._refuse_unreplicable_window``
-    (sinks/replicate.py), plus the column alters the DS stream cannot
-    bridge: raises ``unstreamable_window_reason`` for the window of the
-    table's main chain, so the stream fails loudly with recovery
-    guidance rather than silently diverging its consumer."""
-    reason = unstreamable_window_reason(
-        frm,
-        to,
-        (load_snapshot(root, v).get("metrics", {}) for v in range(frm + 1, to + 1)),
+    """The changelog stream's refusal: raises with recovery guidance
+    when the window (frm, to] of the table's main chain cannot be
+    streamed as forward change events (``STREAM`` in WINDOW_POLICY), so
+    the stream fails loudly rather than silently diverging its
+    consumer."""
+    w = classify_window(STREAM, frm, load_snapshot(root, to), lambda v: load_snapshot(root, v))
+    if w.action != REFUSE:
+        return
+    win = f"stream window ({frm}, {to}]"
+    if w.marker in ("drop_column", "rename_column"):
+        raise RuntimeError(
+            f"upstream {w.marker} at v{w.version} inside {win}: the "
+            "stream's schema is fixed at start and rewritten rows keep "
+            "their op_sequence. Apply the same alter on the consumer, then "
+            "restart the stream from a fresh checkpoint with "
+            f"startingVersion={w.version}."
+        )
+    what = {
+        "snapshot_floor": f"{win} starts below the snapshot_floor "
+        f"v{w.version} (expire_snapshots retired its start)",
+        "rebucket": f"rebucket inside {win}: bucket identities shifted, "
+        "the per-bucket diff is undefined",
+        "tombstone_floor": f"tombstone_floor advanced inside {win} "
+        "(expire_tombstones ran): a delete folded away inside the window "
+        "would be missed",
+    }.get(
+        w.marker,
+        f"upstream {w.marker} at v{w.version} inside {win}: no forward "
+        "change event can express it (see sinks/replicate.py for the "
+        "per-case argument)",
     )
-    if reason is not None:
-        raise RuntimeError(reason)
+    raise RuntimeError(
+        f"{what}. Reconcile the consumer out of band, then restart the "
+        f"stream from a fresh checkpoint with startingVersion={to}."
+    )
 
 
 # ----------------------------------------------------------- DDL utilities

@@ -408,13 +408,23 @@ def test_alter_all_or_nothing_when_bucket_claimed(spark, replayed):
 def test_aggregate_view_catches_drop_readd_inside_window(spark, replayed, tmp_path):
     """Review-found: drop + re-add of the SAME name inside one refresh
     window passes a current-schema check but the stored aggregate is
-    stale (the drop nulled every value changelog-silently)."""
+    stale (the drop nulled every value changelog-silently). Every
+    column-scoped view refuses such a window: the value and token
+    indexes used to refresh across it incrementally and keep stale
+    postings. All views share the one replayed table."""
     from beehive_data_etl_spark.sinks.aggregates import AggregateView
+    from beehive_data_etl_spark.sinks.token_index import TokenIndex, ValueIndex
 
     sink = replayed
     view = AggregateView(spark, sink, str(tmp_path / "agg"), ["source"], [])
-    view.refresh()
+    vix = ValueIndex(
+        spark, sink, str(tmp_path / "vix"), token_col="source", n_buckets=4
+    )
+    tix = TokenIndex(spark, sink, str(tmp_path / "tix"), n_buckets=4)
+    for v in (view, vix, tix):
+        v.refresh()
     sink.drop_column("source")
+    sink.drop_column("tokens")
     key = sink.read_final().select("doc_id").first()[0]
     ev = spark.createDataFrame(
         [("U", 10_000_000, key, [1], 1, "back", None, 0)],
@@ -422,5 +432,6 @@ def test_aggregate_view_catches_drop_readd_inside_window(spark, replayed, tmp_pa
         "n_tok int, source string, event_ts timestamp, batch_hint int",
     )
     sink.apply_batch(ev, "re-add")
-    with pytest.raises(ValueError, match="dropped/renamed at"):
-        view.refresh()
+    for v in (view, vix, tix):
+        with pytest.raises(ValueError, match="dropped/renamed at"):
+            v.refresh()

@@ -172,7 +172,7 @@ def test_crash_between_commit_and_pointer_retries(spark, tables, tmp_path):
     out1 = v.refresh()
     assert out1["mode"] == "incremental" and not out1["skipped"]
     # simulate the crash: rewind the pointer as if it never wrote
-    v._write_ptr(cur_before["fact_version"], cur_before["dim_version"])
+    v._ptr.commit(cur_before)
     out2 = v.refresh()  # same window -> same batch id -> dest dedupes
     assert out2["mode"] == "incremental" and out2["skipped"]
     assert v.current()["fact_version"] == out1["fact_window"][1]

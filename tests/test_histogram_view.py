@@ -15,6 +15,7 @@ from beehive_data_etl_spark.sinks.histogram import (
     log_edges,
 )
 from beehive_data_etl_spark.sinks.snapshot import SnapshotSink
+from beehive_data_etl_spark.sources import table_meta as tm
 
 EDGES = [0.0, 10.0, 20.0, 50.0, 100.0]
 
@@ -203,11 +204,12 @@ def test_histogram_edges_pin_fires_even_on_full_rebuild(spark, pair, monkeypatch
         spark, sink, view.root, ["grp"], "v", [0.0, 99.0]
     )
     _apply(spark, sink, "b2", [("I", 2, "d2", "g0", 6.0)])
-    # simulate the expired-incremental-window fallback: the guard
-    # returns cur=None (full rebuild) while the pointer still exists
-    snap = sink.current_snapshot()
+    # simulate the expired-incremental-window fallback: the classifier
+    # says full rebuild while the pointer still exists
     monkeypatch.setattr(
-        other, "_refresh_window", lambda s: (s["version"], None)
+        tm,
+        "classify_window",
+        lambda *a, **k: tm.Window(tm.FULL, "snapshot_floor", 2),
     )
     with pytest.raises(ValueError, match="different bin edges"):
         other.refresh()

@@ -151,15 +151,15 @@ def test_crash_before_swap_is_idempotent(spark, smoke_log, replayed, tmp_path):
         "n_tok int, source string, event_ts timestamp, batch_hint int",
     )
     replayed.apply_batch(one, "crash-batch")
-    real_swap = hv._swap
+    real_commit = hv._ptr.commit
 
     def boom(*a, **k):
         raise RuntimeError("crash before swap")
 
-    hv._swap = boom
+    hv._ptr.commit = boom
     with pytest.raises(RuntimeError, match="crash before swap"):
         hv.refresh()
-    hv._swap = real_swap
+    hv._ptr.commit = real_commit
     assert hv.current() == ptr_before  # old pointer still live
     out = hv.refresh()
     assert out["mode"] == "incremental"

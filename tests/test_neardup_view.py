@@ -93,11 +93,11 @@ def test_crash_between_store_append_and_swap_is_idempotent(spark, sink, tmp_path
     )
     # crash AFTER process_batch (store appended, pairs dir written)
     # but BEFORE the pointer swap
-    real_swap = view._swap
-    view._swap = lambda *a: (_ for _ in ()).throw(RuntimeError("crash"))
+    real_commit = view._ptr.commit
+    view._ptr.commit = lambda *a: (_ for _ in ()).throw(RuntimeError("crash"))
     with pytest.raises(RuntimeError):
         view.refresh()
-    view._swap = real_swap
+    view._ptr.commit = real_commit
     # pairs() ignores the orphan dir above the pointer
     assert _norm(view.pairs()) == set()
     # retry heals: batch_id discard keeps the store single-copy, the
@@ -121,11 +121,11 @@ def test_crash_then_retry_at_later_version_leaves_no_ghost(spark, sink, tmp_path
     sink.apply_batch(
         spark.createDataFrame([_ev("I", 2, "k", BASE)], SCHEMA), "b2"
     )
-    real_swap = view._swap
-    view._swap = lambda *a: (_ for _ in ()).throw(RuntimeError("crash"))
+    real_commit = view._ptr.commit
+    view._ptr.commit = lambda *a: (_ for _ in ()).throw(RuntimeError("crash"))
     with pytest.raises(RuntimeError):
         view.refresh()
-    view._swap = real_swap
+    view._ptr.commit = real_commit
     # sink advances to v3 where k is DELETED -> the v1->v3 window has
     # no row for k at all
     sink.apply_batch(

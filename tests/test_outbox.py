@@ -88,7 +88,7 @@ def test_outbox_crash_republish_is_deterministic(spark, smoke_log, tmp_path):
     ob.sync()
     replay_incremental(spark, smoke_log, src, files_per_batch=2)
 
-    ptr_before = json.load(open(ob._pointer_path))
+    ptr_before = json.load(open(ob._ptr.path))
     r = ob.sync()
     first = {
         (x.partition, x.offset): bytes(x.key)
@@ -96,7 +96,7 @@ def test_outbox_crash_republish_is_deterministic(spark, smoke_log, tmp_path):
     }
     # crash simulation: restore the pre-sync pointer (write landed,
     # swap did not), then retry through a FRESH outbox object
-    json.dump(ptr_before, open(ob._pointer_path, "w"))
+    json.dump(ptr_before, open(ob._ptr.path, "w"))
     ob2 = Outbox(src, out, n_partitions=4)
     r2 = ob2.sync()
     assert r2["path"] == r["path"]

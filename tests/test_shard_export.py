@@ -179,13 +179,14 @@ def test_crash_before_pointer_swap_is_invisible(
     v1 = exp.current()["version"]
     replay_incremental(spark, smoke_log, replayed, files_per_batch=2)
 
-    real_swap = exp._swap
     monkeypatch.setattr(
-        exp, "_swap", lambda ptr: (_ for _ in ()).throw(RuntimeError("crash"))
+        exp._ptr,
+        "commit",
+        lambda *a, **k: (_ for _ in ()).throw(RuntimeError("crash")),
     )
     with pytest.raises(RuntimeError):
         exp.refresh()
-    monkeypatch.setattr(exp, "_swap", real_swap)
+    monkeypatch.undo()
     assert exp.current()["version"] == v1  # pointer unmoved
     # orphan generation exists; re-refresh commits and reaps it later
     out = exp.refresh()

@@ -130,11 +130,11 @@ def test_crash_before_pointer_swap_is_invisible(spark, smoke_log, replayed, tmp_
     replay_incremental(spark, smoke_log, sink, files_per_batch=2)
 
     # crash injection: the delta dir is written but the swap never runs
-    real_swap = ix._swap
-    ix._swap = lambda *a, **k: (_ for _ in ()).throw(RuntimeError("crash"))
+    real_commit = ix._ptr.commit
+    ix._ptr.commit = lambda *a, **k: (_ for _ in ()).throw(RuntimeError("crash"))
     with pytest.raises(RuntimeError):
         ix.refresh()
-    ix._swap = real_swap
+    ix._ptr.commit = real_commit
     # the orphan dir exists but no reader lists it
     orphans = [d for d in os.listdir(ix.root) if d.startswith("ix-")]
     assert len(orphans) > len(ix.current()["files"])
