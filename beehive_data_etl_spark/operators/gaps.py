@@ -43,11 +43,11 @@ duplicates. Three tools, smallest-plan-first:
 from __future__ import annotations
 
 import json
-import os
-import tempfile
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from beehive_data_etl_spark.sources import table_meta
 
 _GRP = "__gap_grp"
 
@@ -177,21 +177,18 @@ class GapMonitor:
     ):
         self.seq, self.by, self.strict = seq, list(by or []), strict
         self.state_path = state_path
-        self._hwm: dict[tuple, int] = {}
-        if state_path and os.path.exists(state_path):
-            with open(state_path) as f:
-                self._hwm = {
-                    tuple(json.loads(k)): v for k, v in json.load(f).items()
-                }
+        saved = (state_path and table_meta.read_json(state_path)) or {}
+        self._hwm: dict[tuple, int] = {
+            tuple(json.loads(k)): v for k, v in saved.items()
+        }
 
     def _save(self) -> None:
         if not self.state_path:
             return
-        d = os.path.dirname(self.state_path) or "."
-        fd, tmp = tempfile.mkstemp(dir=d, prefix=".gapmon-")
-        with os.fdopen(fd, "w") as f:
-            json.dump({json.dumps(list(k)): v for k, v in self._hwm.items()}, f)
-        os.replace(tmp, self.state_path)
+        table_meta.write_json(
+            self.state_path,
+            {json.dumps(list(k)): v for k, v in self._hwm.items()},
+        )
 
     def check_batch(self, batch: DataFrame) -> list[dict]:
         df, grp = _grouped(batch, self.seq, self.by)

@@ -1415,8 +1415,11 @@ class SnapshotSink:
         bucket space, so the old side reads every old bucket.
 
         Three commit kinds break the fresh-files argument; a window
-        holding one is answered by the full diff of the two LWW states
-        (a full-outer join on the key, O(state)) instead:
+        holding one (or running backwards, ``to_version <
+        from_version``) is diffed over the buckets whose entries changed
+        in EITHER direction: their whole TO state, full-outer joined on
+        the key to their FROM state, so the cost is O(the changed
+        buckets' state):
 
         - ``purge_keys`` REMOVES live keys without writing any fresh
           row for them: the purged keys surface as ``D`` rows with NULL
@@ -1428,10 +1431,7 @@ class SnapshotSink:
           delete whose tombstone was written AND folded away inside the
           window leaves no fresh row behind.
 
-        These are rare administrative ops, so the one O(state) pass is
-        the documented cost.
-
-        Where the delta diff applies, a window of a row-LWW table is
+        Where the fresh files suffice, a window of a row-LWW table is
         answered on the driver, with no Spark job, by the Arrow diff
         the ``beehive_changes`` source runs (``sources/arrow_fold.py``)
         when it also: asks no pre-images (``include_old=False``); holds
@@ -1442,7 +1442,7 @@ class SnapshotSink:
         its added files fit, by uncompressed footer bytes,
         under ``spark.sql.execution.arrow.localRelationThreshold``, the
         size Spark hands over as a local relation. Other windows run
-        the Spark diffs above: patch tables need the cell fold, and
+        the Spark diff above: patch tables need the cell fold, and
         the rest would otherwise bring the rows onto the driver.
 
         Change detection: row-LWW compares op_sequence (state changed ⇔
@@ -1508,8 +1508,7 @@ class SnapshotSink:
             limit = self.spark._jconf.arrowLocalRelationThreshold()
             if uncompressed_bytes(added) <= limit:
                 return self._driver_changes(parts, new_snap, columns)
-        diff = self._state_diff if full else self._delta_diff
-        return diff(
+        return self._delta_diff(
             from_version,
             to_version,
             old_snap,
@@ -1517,6 +1516,7 @@ class SnapshotSink:
             include_cells=include_cells,
             include_old=include_old,
             columns=columns,
+            full=full,
         )
 
     def _local_frame(self, table: pa.Table, schema: T.StructType) -> DataFrame:
@@ -1625,62 +1625,6 @@ class SnapshotSink:
             )
         return o
 
-    def _state_diff(
-        self,
-        from_version: int,
-        to_version: int,
-        old_snap: dict,
-        new_snap: dict,
-        include_cells: bool,
-        include_old: bool,
-        columns: list[str] | None,
-    ) -> DataFrame:
-        """read_changes as a full-outer join of the two whole LWW
-        states on the key — O(state); only for the windows the delta
-        diff cannot express (see read_changes)."""
-        target = self._projection_target(new_snap, columns)
-        payload, keep = self._changes_schema(target, include_old, include_cells)
-        o_raw = self._bridged_old(
-            old_snap,
-            list(range(old_snap["n_buckets"])),
-            target,
-            from_version,
-            to_version,
-        )
-        n_raw = self._read_buckets(
-            new_snap, list(range(new_snap["n_buckets"])), target=target
-        )
-        empty = self.spark.createDataFrame([], target)
-        old = empty if o_raw is None else self._fold(o_raw, KEY, SEQ)
-        new = empty if n_raw is None else self._fold(n_raw, KEY, SEQ)
-        o_cols = [
-            F.col(KEY),
-            F.col(SEQ).alias("_old_seq"),
-            F.col("deleted").alias("_old_del"),
-        ]
-        if self.patch:
-            o_cols.append(_cell_fp(F.col(CELL)).alias("_old_fp"))
-        if include_old:
-            o_cols += [F.col(c).alias(f"_old_{c}") for c in payload]
-        o = old.select(*o_cols)
-        n = new.select(KEY, *payload, *([CELL] if self.patch else []))
-        j = n.join(o, KEY, "full_outer")
-        old_live = F.col("_old_del").isNotNull() & ~F.col("_old_del")
-        new_live = F.col("deleted").isNotNull() & ~F.col("deleted")
-        u_changed = F.col(SEQ) > F.col("_old_seq")
-        if self.patch:
-            u_changed = u_changed | (_cell_fp(F.col(CELL)) != F.col("_old_fp"))
-        change = (
-            F.when(new_live & ~old_live, F.lit("I"))
-            .when(new_live & old_live & u_changed, F.lit("U"))
-            .when(~new_live & old_live, F.lit("D"))
-        )
-        return (
-            j.withColumn("change_type", change)
-            .filter(F.col("change_type").isNotNull())
-            .select(*keep)
-        )
-
     def _delta_diff(
         self,
         from_version: int,
@@ -1690,29 +1634,36 @@ class SnapshotSink:
         include_cells: bool,
         include_old: bool,
         columns: list[str] | None,
+        full: bool = False,
     ) -> DataFrame:
         """read_changes from the window's fresh delta files joined to
-        the old state of the buckets they touch (see read_changes)."""
+        the old state of the buckets they touch (see read_changes).
+        ``full``: the window may remove or regress rows, so a bucket
+        whose entries changed in EITHER direction is touched, its whole
+        TO state is the new side, and the join is full-outer — a key
+        gone from the TO state surfaces as ``D``."""
         target = self._projection_target(new_snap, columns)
         payload, keep = self._changes_schema(target, include_old, include_cells)
         rebucketed = old_snap["n_buckets"] != new_snap["n_buckets"]
-        old_paths = {
-            e["path"] for ents in old_snap["buckets"].values() for e in ents
-        }
-        fresh_buckets: dict[str, list[dict]] = {}
-        for b_str, ents in new_snap["buckets"].items():
-            fresh = (
-                list(ents)
-                if rebucketed
-                else [e for e in ents if e["path"] not in old_paths]
-            )
-            if fresh:
-                fresh_buckets[b_str] = fresh
-        if not fresh_buckets:
+
+        def fresh(snap: dict, other: dict) -> dict[str, list[dict]]:
+            """Per bucket of ``snap``, the entries ``other`` lacks —
+            every entry across a rebucket, which renumbers the space."""
+            have = {e["path"] for ents in other["buckets"].values() for e in ents}
+            out = {
+                b: [e for e in ents if rebucketed or e["path"] not in have]
+                for b, ents in snap["buckets"].items()
+            }
+            return {b: ents for b, ents in out.items() if ents}
+
+        added = fresh(new_snap, old_snap)
+        touched = sorted(
+            int(b) for b in {*added, *(fresh(old_snap, new_snap) if full else ())}
+        )
+        if not touched:
             return self.spark.createDataFrame(
                 [], self._changes_struct(target, keep)
             )
-        touched = [int(b) for b in fresh_buckets]
         # old images by OLD bucket numbering — identical to `touched`
         # unless a rebucket renumbered the space (then: all old buckets,
         # since any old bucket may hold a touched key's pre-image)
@@ -1740,12 +1691,14 @@ class SnapshotSink:
                 ),
             )
         old_state = None if o is None else self._fold(o, KEY, SEQ)
-        fresh_raw = self._read_buckets(
-            {"schema": new_snap["schema"], "buckets": fresh_buckets},
+        new_raw = self._read_buckets(
+            new_snap if full else {"schema": new_snap["schema"], "buckets": added},
             touched,
             target=target,
         )
-        if self.patch and old_state is not None:
+        if new_raw is None:  # a full window may empty every touched bucket
+            new_raw = self.spark.createDataFrame([], target)
+        if self.patch and old_state is not None and not full:
             # per-cell mode: a fresh PATCH delta alone is NOT the new
             # row image — its unmasked cells are unset. Fold the old
             # state in (folded rows re-enter the fold losslessly), so
@@ -1756,12 +1709,13 @@ class SnapshotSink:
             # dropped when the consumer's DataFrame is GC'd
             # (review-found double scan).
             old_state = old_state.persist()
-            d = self._fold(fresh_raw.unionByName(old_state), KEY, SEQ)
+            d = self._fold(new_raw.unionByName(old_state), KEY, SEQ)
         else:
             # row-LWW: the fold of just the fresh files IS the new state
             # image for every key it wins (full state fold is
-            # max(old row, fresh rows))
-            d = self._fold(fresh_raw, KEY, SEQ)
+            # max(old row, fresh rows)); a full window reads the whole
+            # TO state of its buckets
+            d = self._fold(new_raw, KEY, SEQ)
         if old_state is None:
             types = {f.name: f.dataType for f in target.fields}
             j = d.select(
@@ -1781,12 +1735,18 @@ class SnapshotSink:
                 *[F.col(c).alias(f"_old_{c}") for c in old_cols],
                 *([_cell_fp(F.col(CELL)).alias("_old_fp")] if self.patch else []),
             )
-            j = d.join(old_img, KEY, "left_outer")
+            j = d.join(old_img, KEY, "full_outer" if full else "left_outer")
         old_live = F.col("_old_deleted").isNotNull() & ~F.col("_old_deleted")
-        new_live = ~F.col("deleted")
+        new_live = F.col("deleted").isNotNull() & ~F.col("deleted")
         changed = F.col(f"_old_{SEQ}").isNull() | (
             F.col(SEQ) > F.col(f"_old_{SEQ}")
         )
+        if full:
+            # a liveness flip is a change too: a purged key has no new
+            # row, so its NULL seq compares to nothing. Only here: off
+            # full windows the new side is the fresh rows alone, and a
+            # stale one may differ in liveness from the row that wins
+            changed = changed | (new_live != old_live)
         if self.patch:
             # a late out-of-order patch (seq below the row's max)
             # changes state WITHOUT advancing the row seq — the seq
@@ -3878,9 +3838,9 @@ class SnapshotSink:
           exist; ``ignore_tags=True`` proceeds and the tagged bytes
           survive until the tags drop and a later vacuum runs.
         - **The changelog stays correct**: the changelog readers
-          detect the purge commit and answer that window with the
-          full state diff, where purged live keys surface as ``D``
-          rows — index/aggregate refreshes stay exact. REPLICATION
+          detect the purge commit and diff that window over the whole
+          state of the buckets it rewrote, where purged live keys
+          surface as ``D`` rows — index/aggregate refreshes stay exact. REPLICATION
           refuses the window instead (no forward delete event exists
           at a truthful op_sequence): purge each replica directly,
           then ``mark_synced`` past it.

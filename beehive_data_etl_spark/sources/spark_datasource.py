@@ -1008,14 +1008,8 @@ class BeehiveStreamWriter(BeehiveBatchWriter, DataSourceStreamArrowWriter):
         return os.path.join(self.root, "_streams", f"{self.stream_id}.json")
 
     def commit(self, messages, batchId: int):
-        import json
-
-        last = -1
-        try:
-            with open(self._epoch_path()) as fh:
-                last = json.load(fh)["last_epoch"]
-        except FileNotFoundError:
-            pass
+        saved = tm.read_json(self._epoch_path())
+        last = -1 if saved is None else saved["last_epoch"]
         if batchId < last:
             import shutil
 
@@ -1030,10 +1024,7 @@ class BeehiveStreamWriter(BeehiveBatchWriter, DataSourceStreamArrowWriter):
         self.batch_id = f"stream-{self.stream_id}-{batchId}"
         super().commit(messages)
         os.makedirs(os.path.dirname(self._epoch_path()), exist_ok=True)
-        tmp = self._epoch_path() + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump({"last_epoch": batchId}, fh)
-        os.replace(tmp, self._epoch_path())
+        tm.write_json(self._epoch_path(), {"last_epoch": batchId})
 
     def abort(self, messages, batchId: int):
         super().abort(messages)

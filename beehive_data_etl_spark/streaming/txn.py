@@ -62,6 +62,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from beehive_data_etl_spark.sources.table_meta import read_json, write_json
 from beehive_data_etl_spark.streaming.replay import CdcSink
 
 MARKER_COMMIT = "C"
@@ -86,13 +87,6 @@ def _has_parquet(directory: str) -> bool:
         if any(f.endswith(".parquet") for f in files):
             return True
     return False
-
-
-def _write_json_atomic(path: str, body: dict) -> None:
-    tmp = path + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump(body, fh)
-    os.replace(tmp, path)
 
 
 def release_filter(
@@ -135,11 +129,7 @@ class TxnCoordinator:
         return os.path.join(self.root, "HEAD.json")
 
     def _head(self) -> dict | None:
-        try:
-            with open(self._head_path()) as fh:
-                return json.load(fh)
-        except FileNotFoundError:
-            return None
+        return read_json(self._head_path())
 
     def _point_path(self, n: int, batch_id: str) -> str:
         return os.path.join(
@@ -189,7 +179,7 @@ class TxnCoordinator:
             return json.load(fh)
 
     def _publish_point(self, n: int, batch_id: str, versions: dict) -> None:
-        _write_json_atomic(
+        write_json(
             self._point_path(n, batch_id),
             {"batch_id": batch_id, "n": n, "versions": versions},
         )
@@ -415,7 +405,7 @@ class TxnCoordinator:
                 open_bounds.append(min(expected) - 1)
             floor = max(floor, min(open_bounds))
             released_list = [t for t in released_list if t > floor]
-        _write_json_atomic(
+        write_json(
             os.path.join(self.root, stage, "markers.json"),
             {
                 "expected": {str(t): n for t, n in expected.items()},
@@ -454,7 +444,7 @@ class TxnCoordinator:
             snap = sink.current_snapshot()
             versions[table] = None if snap is None else snap["version"]
         n = this_point
-        _write_json_atomic(
+        write_json(
             self._head_path(),
             {"batch_id": batch_id, "n": n, "stage": stage, "versions": versions},
         )
@@ -564,7 +554,7 @@ class TxnCoordinator:
             for t in expired:
                 markers["expected"].pop(str(t), None)
             markers["quarantined_txns"] = sorted(q)
-            _write_json_atomic(
+            write_json(
                 os.path.join(self.root, head["stage"], "markers.json"), markers
             )
         return {"expired": expired, "cutoff_point": cutoff}

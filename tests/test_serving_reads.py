@@ -228,7 +228,10 @@ def _got(df):
     return {r[KEY]: r.asDict() for r in df.collect()}
 
 
-WINDOWS = [(v - 1, v) for v in range(2, 11)] + [(1, 7), (6, 9), (7, 10), (2, 2)]
+# (3, 1) runs backwards over deletes and inserts, before the rename
+WINDOWS = [(v - 1, v) for v in range(2, 11)] + [
+    (1, 7), (6, 9), (7, 10), (2, 2), (3, 1)
+]
 
 
 @pytest.mark.parametrize("patch", [False, True], ids=["row_lww", "patch"])
@@ -269,6 +272,23 @@ def test_tombstone_written_and_expired_inside_window(spark, tmp_path):
     for reader in (s.read_changes, s.read_changes_pruned):
         got = _got(reader(1, 3))
         assert {k: r["change_type"] for k, r in got.items()} == {_key(2): "D"}
+
+
+def test_purge_window_reads_only_the_purged_bucket(spark, tmp_path):
+    """A purge window is diffed over the buckets whose entries changed:
+    one purged key reads its own bucket of the two versions, not all 16."""
+    s = SnapshotSink(spark, str(tmp_path / "t"), n_buckets=16, lineage=False)
+    s.apply_batch(_row_batch(spark, [("I", 10 + i, i) for i in range(64)]), "b0")
+    s.apply_batch(_row_batch(spark, [("U", 100 + i, i) for i in range(0, 64, 2)]), "b1")
+    before = s.current_snapshot()["version"]
+    k = _key(7)
+    s.purge_keys([k], skip_vacuum=True)
+    ch = s.read_changes(before, s.current_snapshot()["version"])
+    assert [(r[KEY], r["change_type"]) for r in ch.collect()] == [(k, "D")]
+    files = ch.inputFiles()
+    assert files and all(
+        f"/bucket={bucket_of(k, 16)}/" in f for f in files
+    ), files
 
 
 # ------------------------------------------------------------------- lookup
