@@ -44,6 +44,7 @@ import os
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..sources import table_meta as tm
 from .snapshot import KEY, SEQ, _bucket_expr, _parquet_stats
 
 
@@ -63,9 +64,7 @@ def fsck(sink, deep: bool = False) -> dict:
     missing_versions = [
         v
         for v in range(floor, head["version"] + 1)
-        if not os.path.exists(
-            os.path.join(sink.root, "_snapshots", f"v{v:06d}.json")
-        )
+        if not os.path.exists(tm.snapshot_path(sink.root, v))
     ]
     if missing_versions:
         errors.append(f"missing snapshot JSONs for versions {missing_versions}")

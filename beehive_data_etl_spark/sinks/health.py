@@ -21,6 +21,8 @@ import glob as _glob
 import os
 from concurrent.futures import ThreadPoolExecutor
 
+from ..sources import table_meta as tm
+
 
 def _dir_rows(path: str) -> list[int]:
     """Per-file row counts of a delta dir — the ONLY footer fact the
@@ -108,11 +110,7 @@ def table_report(sink, small_file_rows: int | None = None) -> dict:
     )
     median_bucket = all_rows[len(all_rows) // 2]
     max_bucket = all_rows[-1]
-    n_json = sum(
-        1
-        for f in os.listdir(os.path.join(sink.root, "_snapshots"))
-        if f.startswith("v") and f.endswith(".json")
-    )
+    n_json = len(tm.chain_versions(sink.root))
 
     recs: list[dict] = []
     # advisory bar, NOT the sink's inline compact_threshold: a table

@@ -26,16 +26,18 @@ interface onto ``MERGE INTO`` + ``ALTER TABLE``):
   events inside a new batch lose the LWW reduction against the target
   rows (``op_sequence`` comparison), so re-application is idempotent.
 
-Snapshot JSON format: ``_snapshots/vNNNNNN.json`` holds ``version``,
-``parent``, ``n_buckets``, ``schema`` / ``schema_version``,
-``buckets`` (bucket → its commit entries), ``committed_batches``,
-``tombstone_floor``, ``snapshot_floor``, ``rollback_epoch``,
-``patch``, ``audit`` and the commit's ``metrics`` (every commit stamps
-``commit_ts``). ``SnapshotSink._commit_next`` is the one writer: it
-carries every field forward from the head and changes only what the
-commit names. A bucket entry (data path, schema, fold-or-delta flag,
-footer stats) is built by ``_entry`` alone; the per-``(batch_id,
-bucket)`` manifest is that entry plus the crash-replay facts.
+Snapshot JSON format: a snapshot holds ``version``, ``parent``,
+``n_buckets``, ``schema`` / ``schema_version``, ``buckets`` (bucket →
+its commit entries), ``committed_batches``, ``tombstone_floor``,
+``snapshot_floor``, ``rollback_epoch``, ``patch``, ``audit`` and the
+commit's ``metrics`` (every commit stamps ``commit_ts``).
+``SnapshotSink._commit_next`` is the one writer: it carries every field
+forward from the head and changes only what the commit names. A bucket
+entry (data path, schema, fold-or-delta flag, footer stats) is built by
+``_entry`` alone; the per-``(batch_id, bucket)`` manifest is that entry
+plus the crash-replay facts. Where snapshots live on disk — file names
+per ref, the ``CURRENT``/branch pointers and their swap, tags, the
+table lock — is ``sources/table_meta.py``'s alone.
 
 Deletes are kept as tombstone rows (``deleted=true``) so a late stale
 update can never resurrect a deleted doc (SURVEY.md §7.3). Tombstone GC
@@ -50,7 +52,6 @@ this file are bounded by ``n_buckets``, never by data volume.
 
 from __future__ import annotations
 
-import fcntl
 import functools
 import glob
 import json
@@ -62,7 +63,6 @@ import threading
 import time
 import uuid
 from concurrent.futures import ThreadPoolExecutor
-from contextlib import contextmanager
 
 import numpy as np
 import pyarrow as pa
@@ -409,9 +409,7 @@ class SnapshotSink:
         runs in a JVM-less worker and only touches the file protocol).
         Other constructor knobs (audit, compact_threshold, …) pass
         through ``kwargs``."""
-        from ..sources.table_meta import current_snapshot as _head
-
-        head = _head(root)
+        head = table_meta.current_snapshot(root)
         if head is None:
             raise ValueError(
                 f"no table at {root} (no snapshot) — open() is for "
@@ -433,9 +431,6 @@ class SnapshotSink:
         )
 
     # ------------------------------------------------------------- snapshots
-    def _current_path(self) -> str:
-        return os.path.join(self.root, "_snapshots", "CURRENT")
-
     def _is_main(self) -> bool:
         return self.ref == "main"
 
@@ -445,23 +440,6 @@ class SnapshotSink:
                 f"{op} is a table-level operation; this handle writes "
                 f"branch {self.ref!r} — run it on the main ref"
             )
-
-    def _snap_name(self, version: int) -> str:
-        return (
-            f"v{version:06d}.json"
-            if self._is_main()
-            else f"b-{self.ref}-v{version:06d}.json"
-        )
-
-    def _branch_ptr_path(self, name: str) -> str:
-        return os.path.join(self.root, "_snapshots", f"BRANCH-{name}.json")
-
-    def _read_branch_ptr(self, name: str) -> dict | None:
-        try:
-            with open(self._branch_ptr_path(name)) as fh:
-                return json.load(fh)
-        except FileNotFoundError:
-            return None
 
     def _phys_batch_id(self, batch_id: str) -> str:
         """Physical namespace for a batch id: data dirs and manifests
@@ -473,64 +451,15 @@ class SnapshotSink:
             batch_id if self._is_main() else f"b.{self.ref}.{batch_id}"
         )
 
-    @contextmanager
-    def _table_lock(self):
-        """CROSS-PROCESS commit mutex (flock on a lockfile under the
-        table): ``_commit_lock`` serializes threads of one sink object,
-        but two objects/processes over the same root would otherwise
-        interleave head-read → pointer-swap and the last swap would
-        silently DROP the other commit's bucket entries (the batch
-        stays un-committed and is replayable, but nothing reports it).
-        flock blocks across file descriptors even within one process,
-        so it also covers the two-objects-one-process case. This is
-        the sandbox stand-in for Iceberg's optimistic catalog-CAS
-        commit; flock is advisory and not NFS-reliable — an object
-        store deployment uses the catalog, not this file."""
-        fd = os.open(
-            os.path.join(self.root, "_snapshots", "LOCK"),
-            os.O_CREAT | os.O_RDWR,
-        )
-        try:
-            fcntl.flock(fd, fcntl.LOCK_EX)
-            yield
-        finally:
-            fcntl.flock(fd, fcntl.LOCK_UN)
-            os.close(fd)
-
     def current_snapshot(self) -> dict | None:
-        try:
-            if self._is_main():
-                with open(self._current_path()) as fh:
-                    name = fh.read().strip()
-            else:
-                ptr = self._read_branch_ptr(self.ref)
-                if ptr is None:
-                    raise RuntimeError(
-                        f"no branch {self.ref!r} at {self.root} — "
-                        "create_branch() it on the main handle first"
-                    )
-                name = ptr["head"]
-            with open(os.path.join(self.root, "_snapshots", name)) as fh:
-                return json.load(fh)
-        except FileNotFoundError:
-            return None
+        return table_meta.current_snapshot(self.root, self.ref)
 
     def _write_snapshot(self, snap: dict) -> None:
-        name = self._snap_name(snap["version"])
-        table_meta.write_json(os.path.join(self.root, "_snapshots", name), snap)
+        table_meta.write_json(
+            table_meta.snapshot_path(self.root, snap["version"], self.ref), snap
+        )
         self.crash_hook("before_pointer_swap")
-        if self._is_main():
-            ptr_tmp = self._current_path() + f".tmp-{uuid.uuid4().hex}"
-            with open(ptr_tmp, "w") as fh:
-                fh.write(name)
-            os.replace(ptr_tmp, self._current_path())  # THE commit point
-        else:
-            ptr = self._read_branch_ptr(self.ref)
-            if ptr is None:
-                raise RuntimeError(f"branch {self.ref!r} was deleted")
-            ptr["head"] = name
-            # THE commit point (branch)
-            table_meta.write_json(self._branch_ptr_path(self.ref), ptr)
+        table_meta.set_head(self.root, snap["version"], self.ref)  # THE commit point
 
     def _commit_next(
         self, head: dict | None, metrics: dict, t0: float | None = None,
@@ -597,28 +526,24 @@ class SnapshotSink:
         )
 
     # ------------------------------------------------------------- refs
-    def _tags_path(self) -> str:
-        return os.path.join(self.root, "_snapshots", "TAGS.json")
-
     def tags(self) -> dict[str, int]:
         """Named refs (Iceberg tags): name → committed snapshot version.
         A tagged version's data files are RETAINED by ``vacuum()`` even
         once superseded — the retention mechanism that makes audit
         pins / reproducible-training snapshots ("the corpus as of the
         v3 run") survive routine maintenance."""
-        try:
-            with open(self._tags_path()) as fh:
-                return json.load(fh)
-        except FileNotFoundError:
-            return {}
+        return table_meta.load_tags(self.root)
 
     def tag(self, name: str, version: int | None = None) -> int:
         """Pin ``name`` to a committed snapshot (default: CURRENT).
         Re-tagging the same version is an idempotent no-op; moving an
         existing tag is refused (drop it first) — silent moves are how
-        audit pins get lost."""
+        audit pins get lost. A name that reads as a version number (a
+        digit string) is refused too: ``resolve_ref`` would never reach
+        the tag."""
         self._require_main("tag")
-        with self._commit_lock, self._table_lock():
+        table_meta.check_tag_name(name)
+        with self._commit_lock, table_meta.table_lock(self.root):
             snap = self.current_snapshot()
             if snap is None:
                 raise ValueError("no snapshot yet — nothing to tag")
@@ -631,7 +556,7 @@ class SnapshotSink:
                     "drop_tag() it before re-pointing"
                 )
             tags[name] = v
-            self._write_tags(tags)
+            table_meta.write_tags(self.root, tags)
         return v
 
     def move_tag(self, name: str, version: int | None = None) -> int:
@@ -640,7 +565,8 @@ class SnapshotSink:
         cursor). One tags-file write, so no crash window where the pin
         is absent (a drop_tag + tag sequence would have one)."""
         self._require_main("move_tag")
-        with self._commit_lock, self._table_lock():
+        table_meta.check_tag_name(name)
+        with self._commit_lock, table_meta.table_lock(self.root):
             snap = self.current_snapshot()
             if snap is None:
                 raise ValueError("no snapshot yet — nothing to tag")
@@ -648,43 +574,24 @@ class SnapshotSink:
             self.snapshot(v)  # must exist (raises otherwise)
             tags = self.tags()
             tags[name] = v
-            self._write_tags(tags)
+            table_meta.write_tags(self.root, tags)
         return v
 
     def drop_tag(self, name: str) -> int:
         self._require_main("drop_tag")
-        with self._commit_lock, self._table_lock():
+        with self._commit_lock, table_meta.table_lock(self.root):
             tags = self.tags()
             if name not in tags:
                 raise KeyError(f"no tag {name!r}")
             v = tags.pop(name)
-            self._write_tags(tags)
+            table_meta.write_tags(self.root, tags)
         return v
-
-    def _write_tags(self, tags: dict[str, int]) -> None:
-        table_meta.write_json(self._tags_path(), tags)
 
     # ------------------------------------------------------------ branches
     def branches(self) -> dict[str, dict]:
         """Live branches: name → {"base": fork version, "head": head
         version}. Works from any handle (read-only)."""
-        out = {}
-        sdir = os.path.join(self.root, "_snapshots")
-        for f in os.listdir(sdir):
-            m = re.fullmatch(r"BRANCH-(.+)\.json", f)
-            if not m:
-                continue
-            try:
-                with open(os.path.join(sdir, f)) as fh:
-                    ptr = json.load(fh)
-            except FileNotFoundError:
-                continue  # deleted between listdir and read
-            hm = re.search(r"v(\d+)\.json$", ptr["head"])
-            out[m.group(1)] = {
-                "base": ptr["base"],
-                "head": int(hm.group(1)) if hm else ptr["base"],
-            }
-        return out
+        return table_meta.branches(self.root)
 
     def create_branch(self, name: str, at: int | str | None = None) -> dict:
         """Fork a BRANCH at a committed snapshot (default: head) —
@@ -705,11 +612,11 @@ class SnapshotSink:
         self._require_main("create_branch")
         if not re.fullmatch(r"[A-Za-z0-9_\-]{1,64}", name) or name == "main":
             raise ValueError(f"invalid branch name {name!r}")
-        with self._commit_lock, self._table_lock():
+        with self._commit_lock, table_meta.table_lock(self.root):
             head = self.current_snapshot()
             if head is None:
                 raise ValueError("no snapshot yet — nothing to branch from")
-            if self._read_branch_ptr(name) is not None:
+            if table_meta.branch(self.root, name) is not None:
                 raise ValueError(f"branch {name!r} already exists")
             base = head["version"] if at is None else self.resolve_ref(at)
             # the base snapshot must be readable (floor + file checks
@@ -718,10 +625,10 @@ class SnapshotSink:
             self.snapshot(base)
             # clear husks of a dead same-named incarnation (crashed
             # cleanup) — they would shadow main's files in snapshot()
-            self._drop_branch_chain(name)
+            table_meta.drop_snapshots(self.root, name)
             table_meta.write_json(
-                self._branch_ptr_path(name),
-                {"head": f"v{base:06d}.json", "base": base},
+                table_meta.branch_path(self.root, name),
+                {"head": table_meta.snapshot_name(base), "base": base},
             )
         return {"branch": name, "base": base}
 
@@ -734,7 +641,7 @@ class SnapshotSink:
         rebucket, snapshot/tombstone GC, purge, column DDL, tags,
         audit contract) are refused — run those on main."""
         self._require_main("branch")
-        if self._read_branch_ptr(name) is None:
+        if table_meta.branch(self.root, name) is None:
             raise ValueError(
                 f"no branch {name!r} (known: {sorted(self.branches())})"
             )
@@ -751,30 +658,15 @@ class SnapshotSink:
             ref=name,
         )
 
-    def _drop_branch_chain(self, name: str) -> int:
-        """Remove a branch's own snapshot JSONs (not the pointer).
-        Shared by delete_branch, both fast_forward exits, AND
-        create_branch — a crashed cleanup can leave b-<name>-v*.json
-        husks, and a re-created branch's snapshot() would prefer those
-        over main's same-numbered files (stale-history shadowing)."""
-        sdir = os.path.join(self.root, "_snapshots")
-        dropped = 0
-        for f in os.listdir(sdir):
-            if re.fullmatch(rf"b-{re.escape(name)}-v\d+\.json", f):
-                os.remove(os.path.join(sdir, f))
-                dropped += 1
-        return dropped
-
     def delete_branch(self, name: str) -> dict:
         """Drop a branch: the pointer and the branch's own snapshot
         JSONs go now; its data files become unreferenced and the next
         age-gated ``vacuum`` reclaims them."""
         self._require_main("delete_branch")
-        with self._commit_lock, self._table_lock():
-            if self._read_branch_ptr(name) is None:
+        with self._commit_lock, table_meta.table_lock(self.root):
+            if table_meta.branch(self.root, name) is None:
                 raise ValueError(f"no branch {name!r}")
-            os.remove(self._branch_ptr_path(name))
-            dropped = self._drop_branch_chain(name)
+            dropped = table_meta.drop_branch(self.root, name)
         return {"branch": name, "snapshots_dropped": dropped}
 
     def fast_forward(self, name: str) -> dict:
@@ -795,22 +687,29 @@ class SnapshotSink:
         Crash-safe: snapshot copies land before the pointer swap; a
         crash leaves inert above-head JSONs that a re-run overwrites."""
         self._require_main("fast_forward")
-        with self._commit_lock, self._table_lock():
-            ptr = self._read_branch_ptr(name)
-            if ptr is None:
+        with self._commit_lock, table_meta.table_lock(self.root):
+            br = table_meta.branch(self.root, name)
+            if br is None:
                 raise ValueError(f"no branch {name!r}")
             head = self.current_snapshot()
             if head is None:
                 raise ValueError("no snapshot yet")
-            base = ptr["base"]
-            hm = re.search(r"v(\d+)\.json$", ptr["head"])
-            b_head = int(hm.group(1))
+            base, b_head = br["base"], br["head"]
             if b_head == base:
-                os.remove(self._branch_ptr_path(name))
+                table_meta.drop_branch(self.root, name)
                 return {"branch": name, "fast_forwarded": 0,
                         "version": head["version"]}
             prefix = f"b.{name}."
-            sdir = os.path.join(self.root, "_snapshots")
+
+            def published(v: int) -> dict:
+                # branch snapshot v as main holds it: batch ids un-namespaced
+                s = table_meta.read_snapshot(self.root, v, name)
+                s["committed_batches"] = [
+                    b[len(prefix):] if b.startswith(prefix) else b
+                    for b in s["committed_batches"]
+                ]
+                return s
+
             if head["version"] != base:
                 # already published? (a prior fast_forward crashed
                 # between the pointer swap and the branch cleanup).
@@ -818,21 +717,10 @@ class SnapshotSink:
                 # main's same-numbered snapshot — not a batch-id
                 # heuristic, which misses batch-less (compact-only)
                 # branches and could false-positive on replays
-                with open(os.path.join(
-                    sdir, f"b-{name}-v{b_head:06d}.json"
-                )) as fh:
-                    b_snap = json.load(fh)
-                b_snap["committed_batches"] = [
-                    b[len(prefix):] if b.startswith(prefix) else b
-                    for b in b_snap["committed_batches"]
-                ]
-                try:
-                    with open(
-                        os.path.join(sdir, f"v{b_head:06d}.json")
-                    ) as fh:
-                        m_snap = json.load(fh)
-                except FileNotFoundError:
-                    m_snap = None
+                b_snap = published(b_head)
+                m_snap = table_meta.read_json(
+                    table_meta.snapshot_path(self.root, b_head)
+                )
                 if (
                     head["version"] >= b_head
                     and m_snap is not None
@@ -841,8 +729,7 @@ class SnapshotSink:
                     == b_snap["committed_batches"]
                 ):
                     # finish the crashed cleanup
-                    os.remove(self._branch_ptr_path(name))
-                    self._drop_branch_chain(name)
+                    table_meta.drop_branch(self.root, name)
                     return {"branch": name, "fast_forwarded": 0,
                             "already_published": True,
                             "version": head["version"]}
@@ -852,32 +739,16 @@ class SnapshotSink:
                     "re-apply the branch's batches to main (exactly-once "
                     "dedupes any overlap) or delete_branch()"
                 )
-            last = None
             for v in range(base + 1, b_head + 1):
-                with open(
-                    os.path.join(sdir, f"b-{name}-v{v:06d}.json")
-                ) as fh:
-                    s = json.load(fh)
-                s["committed_batches"] = [
-                    b[len(prefix):] if b.startswith(prefix) else b
-                    for b in s["committed_batches"]
-                ]
-                dst = os.path.join(sdir, f"v{v:06d}.json")
-                tmp = dst + f".tmp-{uuid.uuid4().hex}"
-                with open(tmp, "w") as fh:
-                    json.dump(s, fh)
-                os.replace(tmp, dst)
-                last = f"v{v:06d}.json"
+                table_meta.write_json(
+                    table_meta.snapshot_path(self.root, v), published(v)
+                )
             self.crash_hook("before_pointer_swap")
-            ptr_tmp = self._current_path() + f".tmp-{uuid.uuid4().hex}"
-            with open(ptr_tmp, "w") as fh:
-                fh.write(last)
-            os.replace(ptr_tmp, self._current_path())  # THE publish point
+            table_meta.set_head(self.root, b_head)  # THE publish point
             # consume the branch (best-effort; inert leftovers if we
             # crash here — a re-run's already-published check and
             # create_branch's husk sweep both finish the cleanup)
-            os.remove(self._branch_ptr_path(name))
-            self._drop_branch_chain(name)
+            table_meta.drop_branch(self.root, name)
         return {
             "branch": name,
             "fast_forwarded": b_head - base,
@@ -885,32 +756,21 @@ class SnapshotSink:
         }
 
     def resolve_ref(self, ref: int | str) -> int:
-        """A version number passes through; a string resolves via the
-        tag table. Every time-travel entry point (``read_state``,
-        ``lookup``, ``read_changes*``) accepts either."""
-        if isinstance(ref, str):
-            tags = self.tags()
-            if ref not in tags:
-                raise KeyError(f"no tag {ref!r} (known: {sorted(tags)})")
-            return tags[ref]
-        return int(ref)
+        """A version number (an int or a digit string) passes through;
+        any other string resolves via the tag table. Every time-travel
+        entry point (``read_state``, ``lookup``, ``read_changes*``)
+        accepts either."""
+        return table_meta.resolve_ref(self.root, ref)
 
     def commit_time(self, v: int) -> float:
         """A committed version's wall-clock time: the recorded
         ``metrics.commit_ts`` (every commit stamps it, see
-        _commit_next), falling back to the snapshot JSON's mtime for
-        snapshots written before every commit kind recorded it. Shared by
-        ``as_of_version`` and the metadata tables (sinks/meta.py) so
-        the snapshot-file naming and fallback live in one place."""
-        snap = self.snapshot(v)
-        ct = snap.get("metrics", {}).get("commit_ts")
-        if ct is not None:
-            return float(ct)
-        for name in (self._snap_name(v), f"v{v:06d}.json"):
-            p = os.path.join(self.root, "_snapshots", name)
-            if os.path.exists(p):
-                return os.path.getmtime(p)
-        raise FileNotFoundError(f"no snapshot file for v{v}")
+        _commit_next). Shared by ``as_of_version`` and the metadata
+        tables (sinks/meta.py). A snapshot without it raises."""
+        ct = self.snapshot(v).get("metrics", {}).get("commit_ts")
+        if ct is None:
+            raise ValueError(f"snapshot v{v} records no commit_ts")
+        return float(ct)
 
     def as_of_version(self, ts: float | str) -> int:
         """Timestamp time travel (Iceberg's ``as-of-timestamp``): the
@@ -928,8 +788,7 @@ class SnapshotSink:
         assumption Iceberg's history table makes); a clock regression
         between commits can off-by-one the boundary within the skewed
         interval, never outside it. Each version's time is its recorded
-        ``metrics.commit_ts``, falling back to the snapshot JSON's
-        mtime for snapshots that predate the field.
+        ``metrics.commit_ts`` (``commit_time``).
 
         Raises if ``ts`` predates the oldest readable version —
         including when the true answer was retired by
@@ -1012,7 +871,7 @@ class SnapshotSink:
                 f"dir(s) already vacuumed (first: {missing[0]}); tag "
                 "versions you may need to restore"
             )
-        with self._commit_lock, self._table_lock():
+        with self._commit_lock, table_meta.table_lock(self.root):
             # quiesce check INSIDE the commit critical section — a
             # separate check-then-lock had a window where apply_batch
             # could register in-flight between the two acquisitions
@@ -1088,16 +947,12 @@ class SnapshotSink:
         must survive main-side GC exactly like tagged versions."""
         heads = []
         for name in self.branches():
-            ptr = self._read_branch_ptr(name)
-            if ptr is None:
-                continue  # deleted concurrently
             try:
-                with open(
-                    os.path.join(self.root, "_snapshots", ptr["head"])
-                ) as fh:
-                    heads.append(json.load(fh))
-            except FileNotFoundError:
-                continue
+                head = table_meta.current_snapshot(self.root, name)
+            except RuntimeError:
+                continue  # deleted concurrently
+            if head is not None:
+                heads.append(head)
         return heads
 
     def _referenced_paths(self, snap: dict | None) -> set[str]:
@@ -1242,35 +1097,7 @@ class SnapshotSink:
         removed files; ``expire_snapshots`` additionally retires the
         JSON metadata below a recorded floor (tagged versions kept) —
         reads below it fail here with the floor named."""
-        version = self.resolve_ref(version)
-        try:
-            if not self._is_main():
-                # branch chain first; versions <= the fork point fall
-                # through to the main chain's files (shared history)
-                try:
-                    with open(
-                        os.path.join(
-                            self.root, "_snapshots", self._snap_name(version)
-                        )
-                    ) as fh:
-                        return json.load(fh)
-                except FileNotFoundError:
-                    pass
-            with open(
-                os.path.join(self.root, "_snapshots", f"v{version:06d}.json")
-            ) as fh:
-                return json.load(fh)
-        except FileNotFoundError:
-            head = self.current_snapshot()
-            floor = 1 if head is None else head.get("snapshot_floor", 1)
-            if version < floor:
-                raise ValueError(
-                    f"snapshot v{version} was expired (snapshot_floor="
-                    f"{floor}); time travel / changelog windows below "
-                    "the floor are gone — tag versions you need to keep "
-                    "before expire_snapshots()"
-                ) from None
-            raise
+        return table_meta.load_snapshot(self.root, self.resolve_ref(version), self.ref)
 
     def _projection_target(
         self, snap: dict, columns: list[str] | None, extra: set[str] = frozenset()
@@ -2735,7 +2562,7 @@ class SnapshotSink:
         new_entries: dict[str, dict] = {}
         bucket_rows: dict[int, int] = {}
         dest_root = os.path.join(self.root, "data", f"ingest={batch_id}")
-        with self._commit_lock, self._table_lock():
+        with self._commit_lock, table_meta.table_lock(self.root):
             head = self.current_snapshot()
             if self._is_committed_in(head, batch_id):
                 shutil.rmtree(staging, ignore_errors=True)
@@ -3277,7 +3104,7 @@ class SnapshotSink:
                 ddl = _ddl(table_schema)
                 for b, path in self._move_staged(staging, sorted(stats), tag).items():
                     moved[str(b)] = [_entry(path, ddl, stats[b], True)]
-            with self._commit_lock, self._table_lock():
+            with self._commit_lock, table_meta.table_lock(self.root):
                 head = self.current_snapshot()
                 if head["version"] != snap["version"]:
                     # a cross-object batch committed mid-rebucket: its
@@ -3346,7 +3173,7 @@ class SnapshotSink:
             raise ValueError("max_rows must be non-negative")
         if max_n_tok <= 0:
             raise ValueError("max_n_tok must be positive")
-        with self._commit_lock, self._table_lock():
+        with self._commit_lock, table_meta.table_lock(self.root):
             head = self.current_snapshot()
             if head is None:
                 raise ValueError("no snapshot yet")
@@ -3378,7 +3205,7 @@ class SnapshotSink:
         """Remove the table-level write contract (one metadata-only
         commit)."""
         self._require_main("drop_table_audit")
-        with self._commit_lock, self._table_lock():
+        with self._commit_lock, table_meta.table_lock(self.root):
             head = self.current_snapshot()
             if head is None:
                 raise ValueError("no snapshot yet")
@@ -3441,7 +3268,7 @@ class SnapshotSink:
         self._require_main("trim_committed_batches")
         if retain_last < 0:
             raise ValueError(f"retain_last must be >= 0, got {retain_last}")
-        with self._commit_lock, self._table_lock():
+        with self._commit_lock, table_meta.table_lock(self.root):
             head = self.current_snapshot()
             if head is None:
                 raise ValueError("no snapshot yet")
@@ -3496,7 +3323,7 @@ class SnapshotSink:
         self._require_main("expire_snapshots")
         if keep_last < 1:
             raise ValueError(f"keep_last must be >= 1, got {keep_last}")
-        with self._commit_lock, self._table_lock():
+        with self._commit_lock, table_meta.table_lock(self.root):
             head = self.current_snapshot()
             if head is None:
                 raise ValueError("no snapshot yet")
@@ -3513,40 +3340,18 @@ class SnapshotSink:
             if branches:
                 cand = min(cand, min(b["base"] for b in branches.values()) + 1)
             # fork points keep their JSONs like tagged versions do
-            bases = {b["base"] for b in branches.values()}
+            pinned = set(tags.values()) | {b["base"] for b in branches.values()}
             floor = max(cur_floor, cand)
 
-            def _sweep(below: int, keep: set) -> int:
-                n = 0
-                sdir = os.path.join(self.root, "_snapshots")
-                for f in os.listdir(sdir):
-                    if not (f.startswith("v") and f.endswith(".json")):
-                        continue
-                    # parse the WHOLE version field, not 6 digits:
-                    # f"v{v:06d}" stops zero-padding at 10^6, exactly
-                    # the chain length this feature exists for — a
-                    # 6-digit slice would mis-parse v1000000.json as
-                    # 100000 and reap live above-floor JSONs
-                    # (review-found)
-                    try:
-                        v = int(f[1:-5])
-                    except ValueError:
-                        continue  # foreign file; never delete it
-                    if v < below and v not in keep:
-                        os.remove(os.path.join(sdir, f))
-                        n += 1
-                return n
+            def _sweep(below: int) -> int:
+                return table_meta.drop_snapshots(
+                    self.root, keep=lambda v: v >= below or v in pinned
+                )
 
             if floor == cur_floor:
                 # unchanged floor still sweeps: a tag dropped since the
                 # last expiry may have released versions below it
-                return {
-                    "expired": _sweep(
-                        cur_floor,
-                        set(tags.values()) | bases,
-                    ),
-                    "snapshot_floor": cur_floor,
-                }
+                return {"expired": _sweep(cur_floor), "snapshot_floor": cur_floor}
             new_snap = self._commit_next(
                 head,
                 {"expire_snapshots": True, "snapshot_floor": floor},
@@ -3556,7 +3361,7 @@ class SnapshotSink:
             # range: a version kept below the old floor only because a
             # tag pinned it (since dropped) would otherwise leak
             # forever, as would leftovers of a crashed delete pass
-            expired = _sweep(floor, set(tags.values()) | bases)
+            expired = _sweep(floor)
         return {
             "expired": expired,
             "snapshot_floor": floor,
@@ -3775,7 +3580,7 @@ class SnapshotSink:
             label, extra = "rename_column", {"rename_map": {"old": old, "new": new}}
         if not any(ents for ents in snap["buckets"].values()):
             # no data files: the alter is a metadata-only schema commit
-            with self._commit_lock, self._table_lock():
+            with self._commit_lock, table_meta.table_lock(self.root):
                 head = self.current_snapshot()
                 if head["version"] != snap["version"]:
                     raise RuntimeError(
@@ -4116,7 +3921,7 @@ class SnapshotSink:
                 str(b): {e["path"] for e in snap["buckets"].get(str(b), [])}
                 for b in todo
             }
-            with self._commit_lock, self._table_lock():
+            with self._commit_lock, table_meta.table_lock(self.root):
                 head = self.current_snapshot()
                 if head["n_buckets"] != self.n_buckets:
                     raise RuntimeError(
@@ -4234,7 +4039,7 @@ class SnapshotSink:
         atomic against concurrent commits; it cannot cover publishes
         that haven't reached their critical section."""
         self._require_main("vacuum")
-        with self._commit_lock, self._table_lock():
+        with self._commit_lock, table_meta.table_lock(self.root):
             return self._vacuum_locked(older_than_s)
 
     def _vacuum_locked(self, older_than_s: float = 0.0) -> dict:

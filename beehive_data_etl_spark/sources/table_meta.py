@@ -1,17 +1,16 @@
-"""SparkSession-free access to a SnapshotSink table's metadata.
+"""SparkSession-free owner of a SnapshotSink table's metadata layout.
 
-The Spark Python Data Source (``sources/spark_datasource.py``) plans
-partitions and resolves offsets inside Python worker processes that
-have **no SparkSession and no JVM** — ``DataSource.schema()`` /
-``reader.partitions()`` run in a forked planner worker, and the
-streaming reader lives in its own long-running driver-side worker.
-Everything those hooks need from the table is plain JSON under
-``<root>/_snapshots/``, so this module re-implements exactly the
-metadata surface of ``sinks/snapshot.py`` (``current_snapshot``,
-``snapshot``, ``resolve_ref``, ``tags``/``move_tag``) as standalone
-file I/O. Behavioral parity with the sink is pinned by
-``tests/test_spark_datasource.py`` — if the sink ever changes its
-on-disk metadata, those tests break loudly here.
+Everything under ``<root>/_snapshots/`` is named, parsed, read, written
+and locked here and nowhere else: the snapshot files (``vNNNNNN.json``
+on main, ``b-<ref>-vNNNNNN.json`` on a branch), the ``CURRENT`` pointer,
+the ``BRANCH-<name>.json`` pointers, ``TAGS.json`` and the ``LOCK``
+flock. ``SnapshotSink`` (``sinks/snapshot.py``), ``fsck`` and ``health``
+call these functions, and so does the Spark Python Data Source
+(``sources/spark_datasource.py``), whose hooks run in Python worker
+processes with **no SparkSession and no JVM** — ``DataSource.schema()``
+/ ``reader.partitions()`` run in a forked planner worker, and the
+streaming reader lives in its own long-running driver-side worker. So
+this module imports no pyspark.
 
 It also holds the protocol every derived view, replica and changelog
 consumer shares, JVM-free: ``Pointer`` (read, atomic commit, reap) and
@@ -34,12 +33,14 @@ import shutil
 import time
 import uuid
 from collections.abc import Iterable
+from contextlib import contextmanager
 from typing import NamedTuple
 
 KEY = "doc_id"
 SEQ = "op_sequence"
 CELL = "_cell_seq"
 DELETED = "deleted"
+MAIN = "main"
 
 
 # --------------------------------------------------------------- snapshots
@@ -47,27 +48,142 @@ def snapshots_dir(root: str) -> str:
     return os.path.join(root, "_snapshots")
 
 
-def current_snapshot(root: str) -> dict | None:
-    """Twin of ``SnapshotSink.current_snapshot`` (snapshot.py)."""
-    try:
+def snapshot_name(version: int, ref: str = MAIN) -> str:
+    """The file name of snapshot ``version`` on ``ref``'s own chain."""
+    return f"v{version:06d}.json" if ref == MAIN else f"b-{ref}-v{version:06d}.json"
+
+
+def parse_snapshot_name(name: str, ref: str = MAIN) -> int | None:
+    """The version a file name on ``ref``'s own chain carries; None for
+    any other file. Parses the WHOLE version field: ``f"v{v:06d}"``
+    stops zero-padding at 10^6, so a 6-digit slice would read
+    v1000000.json as 100000 (and expire_snapshots would reap live
+    JSONs)."""
+    prefix = "v" if ref == MAIN else f"b-{ref}-v"
+    if not (name.startswith(prefix) and name.endswith(".json")):
+        return None
+    digits = name[len(prefix) : -len(".json")]
+    return int(digits) if digits.isascii() and digits.isdigit() else None
+
+
+def snapshot_path(root: str, version: int, ref: str = MAIN) -> str:
+    return os.path.join(snapshots_dir(root), snapshot_name(version, ref))
+
+
+def chain_versions(root: str, ref: str = MAIN) -> list[int]:
+    """Versions of the snapshot files on ``ref``'s own chain, unordered
+    (a branch's chain holds only its commits above the fork)."""
+    found = (parse_snapshot_name(f, ref) for f in os.listdir(snapshots_dir(root)))
+    return [v for v in found if v is not None]
+
+
+def drop_snapshots(root: str, ref: str = MAIN, keep=lambda v: False) -> int:
+    """Delete the files on ``ref``'s own chain whose version ``keep``
+    rejects; foreign files are never touched. Returns the count."""
+    dropped = 0
+    for v in chain_versions(root, ref):
+        if not keep(v):
+            os.remove(snapshot_path(root, v, ref))
+            dropped += 1
+    return dropped
+
+
+def branch_path(root: str, name: str) -> str:
+    """The pointer of branch ``name``: ``{"head": <snapshot file name>,
+    "base": <fork version>}``; the head names a main-chain file until
+    the branch's first commit."""
+    return os.path.join(snapshots_dir(root), f"BRANCH-{name}.json")
+
+
+def branch(root: str, name: str) -> dict | None:
+    """Branch ``name``'s {"base": fork version, "head": head version};
+    None when there is no such branch."""
+    ptr = read_json(branch_path(root, name))
+    if ptr is None:
+        return None
+    head = parse_snapshot_name(ptr["head"], name)
+    if head is None:
+        head = parse_snapshot_name(ptr["head"])
+    return {"base": ptr["base"], "head": ptr["base"] if head is None else head}
+
+
+def branches(root: str) -> dict[str, dict]:
+    """Every live branch: name → ``branch(root, name)``."""
+    names = [
+        f[len("BRANCH-") : -len(".json")]
+        for f in os.listdir(snapshots_dir(root))
+        if f.startswith("BRANCH-") and f.endswith(".json")
+    ]
+    found = {n: branch(root, n) for n in names}
+    return {n: b for n, b in found.items() if b is not None}  # None: deleted meanwhile
+
+
+def drop_branch(root: str, name: str) -> int:
+    """Remove branch ``name``: the pointer first, then its own snapshot
+    files — a crash in between leaves husks that ``create_branch``
+    sweeps before a same-named branch could read them. Returns the
+    number of snapshot files dropped."""
+    os.remove(branch_path(root, name))
+    return drop_snapshots(root, name)
+
+
+def _head_name(root: str, ref: str) -> str:
+    if ref == MAIN:
         with open(os.path.join(snapshots_dir(root), "CURRENT")) as fh:
-            name = fh.read().strip()
+            return fh.read().strip()
+    ptr = read_json(branch_path(root, ref))
+    if ptr is None:
+        raise RuntimeError(
+            f"no branch {ref!r} at {root} — create_branch() it on the main handle first"
+        )
+    return ptr["head"]
+
+
+def current_snapshot(root: str, ref: str = MAIN) -> dict | None:
+    """The head snapshot of ``ref`` (None before the first commit)."""
+    try:
+        name = _head_name(root, ref)
         with open(os.path.join(snapshots_dir(root), name)) as fh:
             return json.load(fh)
     except FileNotFoundError:
         return None
 
 
-def load_snapshot(root: str, version: int) -> dict:
-    """Twin of ``SnapshotSink.snapshot``: loads one committed snapshot,
-    naming the expire_snapshots floor when the version was retired."""
+def set_head(root: str, version: int, ref: str = MAIN) -> None:
+    """THE commit point: swap ``ref``'s pointer to snapshot ``version``
+    (written before), one atomic replace — ``CURRENT`` holds the bare
+    file name on main, the branch pointer's ``head`` on a branch."""
+    name = snapshot_name(version, ref)
+    if ref == MAIN:
+        _replace(os.path.join(snapshots_dir(root), "CURRENT"), name)
+        return
+    ptr = read_json(branch_path(root, ref))
+    if ptr is None:
+        raise RuntimeError(f"branch {ref!r} was deleted")
+    write_json(branch_path(root, ref), {**ptr, "head": name})
+
+
+def read_snapshot(root: str, version: int, ref: str = MAIN) -> dict:
+    """Snapshot ``version`` from ``ref``'s own chain file only
+    (FileNotFoundError when absent)."""
+    with open(snapshot_path(root, version, ref)) as fh:
+        return json.load(fh)
+
+
+def load_snapshot(root: str, version: int, ref: str = MAIN) -> dict:
+    """Loads one committed snapshot as ``ref`` sees it — a branch's own
+    chain first, then main's files (versions at or below the fork point
+    are shared history) — naming the expire_snapshots floor when the
+    version was retired."""
     try:
-        with open(
-            os.path.join(snapshots_dir(root), f"v{version:06d}.json")
-        ) as fh:
-            return json.load(fh)
+        if ref != MAIN:
+            try:
+                return read_snapshot(root, version, ref)
+            except FileNotFoundError:
+                pass
+        return read_snapshot(root, version)
     except FileNotFoundError:
-        head = current_snapshot(root)
+        head = current_snapshot(root, ref)
         floor = 1 if head is None else head.get("snapshot_floor", 1)
         if version < floor:
             raise ValueError(
@@ -79,25 +195,69 @@ def load_snapshot(root: str, version: int) -> dict:
         raise
 
 
+@contextmanager
+def table_lock(root: str):
+    """CROSS-PROCESS commit mutex (flock on ``_snapshots/LOCK``): a
+    sink's ``_commit_lock`` serializes threads of one object, but two
+    objects/processes over the same root would otherwise interleave
+    head-read → pointer-swap and the last swap would silently DROP the
+    other commit's bucket entries (the batch stays un-committed and is
+    replayable, but nothing reports it). flock blocks across file
+    descriptors even within one process, so it also covers the
+    two-objects-one-process case. This is the sandbox stand-in for
+    Iceberg's optimistic catalog-CAS commit; flock is advisory and not
+    NFS-reliable — an object store deployment uses the catalog, not
+    this file."""
+    fd = os.open(os.path.join(snapshots_dir(root), "LOCK"), os.O_CREAT | os.O_RDWR)
+    try:
+        fcntl.flock(fd, fcntl.LOCK_EX)
+        yield
+    finally:
+        fcntl.flock(fd, fcntl.LOCK_UN)
+        os.close(fd)
+
+
+# --------------------------------------------------------------------- refs
+def _is_version(ref) -> bool:
+    """The one ref rule: an int or a digit string is a version number
+    (Data Source options are always strings); any other string names a
+    tag."""
+    return not isinstance(ref, str) or ref.lstrip("-").isdigit()
+
+
 def load_tags(root: str) -> dict[str, int]:
     return read_json(os.path.join(snapshots_dir(root), "TAGS.json")) or {}
 
 
+def write_tags(root: str, tags: dict[str, int]) -> None:
+    """One atomic tags-file replace. Caller holds ``table_lock``."""
+    write_json(os.path.join(snapshots_dir(root), "TAGS.json"), tags)
+
+
+def check_tag_name(name) -> None:
+    """Refuse a tag name ``resolve_ref`` would read as a version."""
+    if _is_version(name):
+        raise ValueError(
+            f"tag name {name!r} reads as a version number (a digit "
+            "string is a version everywhere a ref is taken) — pick a "
+            "name with a non-digit character"
+        )
+
+
 def resolve_ref(root: str, ref) -> int:
-    """Twin of ``SnapshotSink.resolve_ref``: ints pass through, strings
-    resolve via the tag table (numeric strings pass through too, so
-    option values — always strings — can carry plain versions)."""
-    if isinstance(ref, str) and not ref.lstrip("-").isdigit():
-        tags = load_tags(root)
-        if ref not in tags:
-            raise KeyError(f"no tag {ref!r} (known: {sorted(tags)})")
-        return tags[ref]
-    return int(ref)
+    """A version number (an int or a digit string) passes through; any
+    other string resolves via the tag table."""
+    if _is_version(ref):
+        return int(ref)
+    tags = load_tags(root)
+    if ref not in tags:
+        raise KeyError(f"no tag {ref!r} (known: {sorted(tags)})")
+    return tags[ref]
 
 
 def pin_tag(root: str, name: str, version: int, monotonic: bool = False) -> None:
-    """Twin of ``SnapshotSink.move_tag`` for cursor-style tags, under
-    the same cross-process flock the sink's tag writers hold — so a
+    """``SnapshotSink.move_tag`` for cursor-style tags, JVM-free, under
+    the same ``table_lock`` the sink's tag writers hold — so a
     streaming reader's retention pin can never interleave with a
     concurrent ``tag``/``drop_tag``/``move_tag`` through a sink object
     and silently drop either write.  One atomic tags-file replace: no
@@ -106,20 +266,14 @@ def pin_tag(root: str, name: str, version: int, monotonic: bool = False) -> None
     forward-only check runs INSIDE the lock, so two racing pinners
     (the stream's eager partitions-time pin vs its lazy commit-time
     pin) can never move the cursor backward."""
-    lock_fd = os.open(
-        os.path.join(snapshots_dir(root), "LOCK"), os.O_CREAT | os.O_RDWR
-    )
-    try:
-        fcntl.flock(lock_fd, fcntl.LOCK_EX)
+    check_tag_name(name)
+    with table_lock(root):
         tags = load_tags(root)
         if monotonic and tags.get(name, 0) >= int(version):
             return
         load_snapshot(root, version)  # must exist (raises otherwise)
         tags[name] = int(version)
-        write_json(os.path.join(snapshots_dir(root), "TAGS.json"), tags)
-    finally:
-        fcntl.flock(lock_fd, fcntl.LOCK_UN)
-        os.close(lock_fd)
+        write_tags(root, tags)
 
 
 # ---------------------------------------------------------------- pointers
@@ -136,9 +290,13 @@ def write_json(path: str, body) -> None:
     sibling tmp file, then ``os.replace`` — a reader sees the old file
     or the new one, never a torn write. The replace survives process
     death, not power loss (nothing calls fsync)."""
+    _replace(path, json.dumps(body))
+
+
+def _replace(path: str, text: str) -> None:
     tmp = f"{path}.tmp-{uuid.uuid4().hex}"
     with open(tmp, "w") as fh:
-        json.dump(body, fh)
+        fh.write(text)
     os.replace(tmp, path)
 
 

@@ -16,6 +16,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from beehive_data_etl_spark.sinks.snapshot import SnapshotSink
+from beehive_data_etl_spark.sources import table_meta as tm
 from beehive_data_etl_spark.sources.readers import read_wal
 from beehive_data_etl_spark.streaming.replay import replay_incremental
 from beehive_data_etl_spark.verify import compare_final, oracle_final_spark
@@ -70,6 +71,13 @@ def test_tag_semantics(spark, smoke_log, tmp_path):
         sink.drop_tag("nope")
     with pytest.raises(KeyError, match="no tag"):
         sink.read_state(version="nope")
+    # one ref rule for the sink and the Data Source options: a digit
+    # string is a version, so no tag may be named like one
+    with pytest.raises(ValueError, match="version number"):
+        sink.tag("3")
+    with pytest.raises(ValueError, match="version number"):
+        sink.move_tag("3", v1)
+    assert sink.resolve_ref("1") == 1 == tm.resolve_ref(sink.root, "1")
 
 
 def test_vacuum_retains_tagged_files(spark, smoke_log, tmp_path):
