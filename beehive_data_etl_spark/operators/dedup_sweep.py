@@ -53,11 +53,10 @@ one) and sweeps — one cron-able pass alongside compact/vacuum.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql import types as T
 
 from ..functions.dedup import token_shingles
 from ..functions.graph import connected_components, connected_components_star
-from ..sinks.snapshot import CELL, KEY, SEQ
+from ..sinks.snapshot import CELL, KEY, SEQ, parse_schema
 from .refetch import next_op_sequence
 
 
@@ -377,7 +376,7 @@ def dedup_sweep(
     # stable across crash-retries, unique per logical sweep even after
     # a tombstone GC regresses the raw max seq (delete_where's lesson)
     seq = next_op_sequence(sink)
-    schema = T.StructType.fromDDL(snap["schema"])
+    schema = parse_schema(snap["schema"])
     payload = [
         f for f in schema.fields if f.name not in (KEY, SEQ, "deleted", CELL)
     ]

@@ -61,9 +61,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from ..sinks.snapshot import _INTERNAL, CELL, KEY, SEQ
+from ..sinks.snapshot import _INTERNAL, CELL, KEY, SEQ, parse_schema
 from .refetch import _malformed_key_error, next_op_sequence
 
 # columns no clause may SET/INSERT: the envelope + internals
@@ -214,7 +213,7 @@ def merge_into(
         )
     table_payload_fields = []
     if snap is not None:
-        schema = T.StructType.fromDDL(snap["schema"])
+        schema = parse_schema(snap["schema"])
         table_payload_fields = [
             f for f in schema.fields if f.name not in _INTERNAL and f.name != KEY
         ]

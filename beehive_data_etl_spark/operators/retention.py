@@ -38,9 +38,8 @@ width), never a driver-side collect."""
 from __future__ import annotations
 
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from ..sinks.snapshot import CELL, KEY, SEQ
+from ..sinks.snapshot import CELL, KEY, SEQ, parse_schema
 from .refetch import next_op_sequence
 
 
@@ -83,7 +82,7 @@ def delete_where(
     # sweep's commit, so (version, seq) is unique per logical sweep
     # while staying stable across crash-retries.
     seq = next_op_sequence(sink)
-    schema = T.StructType.fromDDL(snap["schema"])
+    schema = parse_schema(snap["schema"])
     payload = [
         f
         for f in schema.fields
@@ -176,7 +175,7 @@ def update_where(
     snap = sink.current_snapshot()
     if snap is None:
         raise ValueError("no snapshot yet")
-    schema = T.StructType.fromDDL(snap["schema"])
+    schema = parse_schema(snap["schema"])
     payload_fields = [
         f for f in schema.fields if f.name not in (KEY, SEQ, "deleted", CELL)
     ]

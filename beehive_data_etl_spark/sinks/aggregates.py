@@ -50,6 +50,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..sources import table_meta as tm
+from .snapshot import parse_schema
 
 COUNT_COL = "n_rows"
 _DIRTY = "_dirty"
@@ -324,7 +325,7 @@ class AggregateView:
             return {"mode": "noop", "reason": "sink has no snapshot"}
         v_new = snap["version"]
         mine = self.group_cols + self._maintained_cols()
-        table_cols = set(T.StructType.fromDDL(snap["schema"]).names)
+        table_cols = set(parse_schema(snap["schema"]).names)
         gone = [c for c in mine if c not in table_cols]
         if gone:
             # a drop_column/rename_column removed a column this view is

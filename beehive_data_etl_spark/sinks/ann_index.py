@@ -51,7 +51,7 @@ from pyspark.sql import types as T
 
 from ..functions.similarity import cosine_expr
 from ..sources import table_meta as tm
-from .snapshot import KEY
+from .snapshot import KEY, parse_schema
 
 
 class AnnIndex:
@@ -170,7 +170,7 @@ class AnnIndex:
         snap = self.sink.current_snapshot()
         if snap is None:
             raise ValueError("sink has no snapshot")
-        schema = T.StructType.fromDDL(snap["schema"])
+        schema = parse_schema(snap["schema"])
         try:
             f = next(f for f in schema.fields if f.name == self.vec_col)
         except StopIteration:

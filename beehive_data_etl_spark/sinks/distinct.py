@@ -69,6 +69,7 @@ from .aggregates import (
     eq_nullsafe_on,
     explode_contributions,
 )
+from .snapshot import parse_schema
 
 _SKETCHABLE = (T.IntegerType, T.LongType, T.StringType, T.BinaryType)
 
@@ -238,7 +239,7 @@ class DistinctView(AggregateView):
     def _check_sketchable(self, snap: dict) -> None:
         types = {
             f.name: f.dataType
-            for f in T.StructType.fromDDL(snap["schema"]).fields
+            for f in parse_schema(snap["schema"]).fields
         }
         for c in self._maintained_cols():
             if not isinstance(types[c], _SKETCHABLE):

@@ -58,11 +58,10 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..operators.refetch import next_op_sequence
 from ..sources import table_meta as tm
-from .snapshot import _INTERNAL, KEY, SEQ, SnapshotSink
+from .snapshot import _INTERNAL, KEY, SEQ, SnapshotSink, parse_schema
 
 
 class EnrichView:
@@ -167,7 +166,7 @@ class EnrichView:
         snap = sink.current_snapshot()
         if snap is None:
             raise ValueError(f"table at {sink.root} has no snapshot yet")
-        schema = T.StructType.fromDDL(snap["schema"])
+        schema = parse_schema(snap["schema"])
         return [
             f.name
             for f in schema.fields
@@ -302,13 +301,9 @@ class EnrichView:
         }
 
     def _dead_cols(self, seq: int):
-        fact_schema = T.StructType.fromDDL(
-            self.fact.current_snapshot()["schema"]
-        )
+        fact_schema = parse_schema(self.fact.current_snapshot()["schema"])
         ftypes = {f.name: f.dataType for f in fact_schema.fields}
-        dim_schema = T.StructType.fromDDL(
-            self.dim.current_snapshot()["schema"]
-        )
+        dim_schema = parse_schema(self.dim.current_snapshot()["schema"])
         dtypes = {f.name: f.dataType for f in dim_schema.fields}
         return [
             F.lit("D").alias("op"),

@@ -42,10 +42,9 @@ import glob
 import os
 
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..sources import table_meta as tm
-from .snapshot import KEY, SEQ, _bucket_expr, _parquet_stats
+from .snapshot import KEY, SEQ, _bucket_expr, _parquet_stats, parse_schema
 
 
 def fsck(sink, deep: bool = False) -> dict:
@@ -106,7 +105,7 @@ def fsck(sink, deep: bool = False) -> dict:
                     errors.append(f"v{v} bucket {b}: missing dir {e['path']}")
                     continue
                 try:
-                    T.StructType.fromDDL(e["schema"])
+                    parse_schema(e["schema"])
                 except Exception:
                     errors.append(
                         f"v{v} bucket {b}: unparseable schema {e['schema']!r}"

@@ -39,6 +39,7 @@ from .aggregates import (
     full_agg,
     merge_agg,
 )
+from .snapshot import parse_schema
 
 _BIN = "_hbin"
 
@@ -121,7 +122,7 @@ class HistogramView(AggregateView):
     def _pre_refresh_check(self, snap: dict, cur: dict | None) -> None:
         types = {
             f.name: f.dataType
-            for f in T.StructType.fromDDL(snap["schema"]).fields
+            for f in parse_schema(snap["schema"]).fields
         }
         if not isinstance(types[self.value_col], _NUMERIC):
             raise ValueError(

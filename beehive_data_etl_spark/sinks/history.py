@@ -77,7 +77,7 @@ from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from beehive_data_etl_spark.operators.schema_evolution import align_to_schema
-from beehive_data_etl_spark.sinks.snapshot import CELL, KEY, SEQ
+from beehive_data_etl_spark.sinks.snapshot import CELL, KEY, SEQ, parse_schema
 from beehive_data_etl_spark.sources import table_meta as tm
 
 VFROM = "_v_from"
@@ -134,7 +134,7 @@ class HistoryView:
         key + op_sequence + payload (incl. ``deleted``) + change_type +
         commit version. The internal ``_cell_seq`` column of patch
         tables is never stored — history rows are full images."""
-        table = T.StructType.fromDDL(table_ddl)
+        table = parse_schema(table_ddl)
         fields = [f for f in table.fields if f.name != CELL]
         fields.append(T.StructField(CHANGE, T.StringType()))
         fields.append(T.StructField(VFROM, T.LongType()))

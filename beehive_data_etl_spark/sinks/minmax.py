@@ -54,6 +54,7 @@ from .aggregates import (
     eq_nullsafe_on,
     explode_contributions,
 )
+from .snapshot import parse_schema
 
 _ORDERABLE = (
     T.ByteType, T.ShortType, T.IntegerType, T.LongType, T.FloatType,
@@ -239,7 +240,7 @@ class MinMaxView(AggregateView):
     def _check_orderable(self, snap: dict) -> None:
         types = {
             f.name: f.dataType
-            for f in T.StructType.fromDDL(snap["schema"]).fields
+            for f in parse_schema(snap["schema"]).fields
         }
         for c in self._maintained_cols():
             if not isinstance(types[c], _ORDERABLE):

@@ -61,6 +61,7 @@ from .aggregates import (
     eq_nullsafe_on,
     explode_contributions,
 )
+from .snapshot import parse_schema
 
 _HASH_SPACE = float(1 << 32)  # portable_hash32 range [0, 2^32)
 _ENTRY = "struct<h:bigint,id:string>"
@@ -271,7 +272,7 @@ class SampleView(AggregateView):
     def _pre_refresh_check(self, snap: dict, cur: dict | None) -> None:
         types = {
             f.name: f.dataType
-            for f in T.StructType.fromDDL(snap["schema"]).fields
+            for f in parse_schema(snap["schema"]).fields
         }
         if not isinstance(types[self.id_col], T.StringType):
             raise ValueError(

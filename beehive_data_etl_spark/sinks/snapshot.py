@@ -71,7 +71,12 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.pandas.serializers import ArrowStreamSerializer
+from pyspark.sql.pandas.types import (
+    _check_arrow_table_timestamps_localize,
+    to_arrow_schema,
+)
+from pyspark.sql.utils import get_active_spark_context
 
 from beehive_data_etl_spark.operators.lww import lww_dedup
 from beehive_data_etl_spark.operators.patch import (
@@ -94,6 +99,7 @@ from beehive_data_etl_spark.sources.arrow_fold import (
     _versions,
     _winners,
     canonical_keys,
+    opened_sources,
     read_changes_partition,
     read_state_partition,
     uncompressed_bytes,
@@ -118,6 +124,29 @@ _COMPRESSION = "zstd"
 
 def _bucket_expr(n_buckets: int):
     return F.pmod(F.xxhash64(F.col(KEY)), F.lit(n_buckets)).cast("int")
+
+
+@functools.cache
+def _sql_utils(jvm):
+    """The JVM's ``PythonSQLUtils`` class, resolved once per gateway:
+    each ``jvm.PythonSQLUtils`` lookup is a py4j round trip."""
+    return jvm.PythonSQLUtils
+
+
+@functools.lru_cache(maxsize=1024)
+def _ddl_json(ddl: str) -> str:
+    return _sql_utils(get_active_spark_context()._jvm).ddlToJson(ddl)
+
+
+def parse_schema(ddl: str) -> T.StructType:
+    """``StructType.fromDDL(ddl)`` with one JVM parse per distinct DDL
+    string in the process: the parse is memoized as JSON, and each call
+    builds a fresh StructType from it, so a caller may mutate what it
+    gets. A snapshot's schema string changes only when its table's
+    schema does, while every read and write of the table parses it.
+    Like ``fromDDL``, ``timestamp`` parses per
+    ``spark.sql.timestampType``, here as it stood at the first parse."""
+    return T.StructType.fromJson(json.loads(_ddl_json(ddl)))
 
 
 # ------------------------------------------- Python twin of _bucket_expr
@@ -397,6 +426,12 @@ class SnapshotSink:
             raise ValueError(
                 f"table bucketed with {snap['n_buckets']}, got n_buckets={n_buckets}"
             )
+
+    @functools.cached_property
+    def _sql_conf(self):
+        """The session's live SQLConf: a setting read through it is one
+        py4j call, where ``spark._jconf`` re-fetches the object (three)."""
+        return self.spark._jsparkSession.sessionState().conf()
 
     @classmethod
     def open(cls, spark, root: str, **kwargs) -> "SnapshotSink":
@@ -971,14 +1006,12 @@ class SnapshotSink:
             for e in ents
         }
 
-    def _manifested_buckets(
-        self, batch_id: str, rollback_epoch: int = 0,
-        referenced: set[str] | None = None,
-    ) -> set[int]:
+    def _manifested_buckets(self, batch_id: str, snap: dict | None = None) -> set[int]:
         d = os.path.join(self.root, "_manifests", str(batch_id))
         if not os.path.isdir(d):
             return set()
-        referenced = referenced or set()
+        rollback_epoch = 0 if snap is None else snap.get("rollback_epoch", 0)
+        referenced = None
         found = {
             int(f.split(".")[0]) for f in os.listdir(d) if f.endswith(".json")
         }
@@ -1009,10 +1042,15 @@ class SnapshotSink:
             if not os.path.isdir(os.path.join(self.root, rel)):
                 continue
             if (
-                m.get("n_buckets") == self.n_buckets
-                and m.get("rollback_epoch", 0) == rollback_epoch
-                and rel not in referenced
+                m.get("n_buckets") != self.n_buckets
+                or m.get("rollback_epoch", 0) != rollback_epoch
             ):
+                continue
+            if referenced is None:
+                # reads every tagged snapshot and lists _snapshots/:
+                # paid by a crash-replay only, once
+                referenced = self._referenced_paths(snap)
+            if rel not in referenced:
                 reusable.add(b)
         return reusable
 
@@ -1058,7 +1096,7 @@ class SnapshotSink:
         missing range (``None`` — legacy entries / stats-less footers);
         LWW folding the surviving rows stays exact because a skipped
         file holds no version of any surviving key."""
-        target = target or T.StructType.fromDDL(snap["schema"])
+        target = target or parse_schema(snap["schema"])
         by_schema: dict[str, list[str]] = {}
         for b in buckets:
             for ent in snap["buckets"].get(str(b), []):
@@ -1080,7 +1118,7 @@ class SnapshotSink:
                 by_schema.setdefault(ent["schema"], []).extend(paths)
         parts = []
         for ddl, paths in by_schema.items():
-            df = self.spark.read.schema(T.StructType.fromDDL(ddl)).parquet(*paths)
+            df = self.spark.read.schema(parse_schema(ddl)).parquet(*paths)
             parts.append(align_to_schema(df, target))
         if not parts:
             return None
@@ -1120,7 +1158,7 @@ class SnapshotSink:
         ``extra``: internal-use columns that must survive the fold but
         are NOT part of the caller's requested output (e.g. scan_where
         predicate columns)."""
-        full = T.StructType.fromDDL(snap["schema"])
+        full = parse_schema(snap["schema"])
         if columns is None:
             return full
         names = {f.name for f in full.fields}
@@ -1332,7 +1370,7 @@ class SnapshotSink:
             added = [f for p in parts for f in p.added_files]
             # the rows out are at most the added files' rows: they must
             # fit the local relation _local_frame builds
-            limit = self.spark._jconf.arrowLocalRelationThreshold()
+            limit = self._sql_conf.arrowLocalRelationThreshold()
             if uncompressed_bytes(added) <= limit:
                 return self._driver_changes(parts, new_snap, columns)
         return self._delta_diff(
@@ -1348,17 +1386,51 @@ class SnapshotSink:
 
     def _local_frame(self, table: pa.Table, schema: T.StructType) -> DataFrame:
         """An Arrow table as a DataFrame of ``schema``, with no Spark
-        job: under spark.sql.execution.arrow.localRelationThreshold,
-        createDataFrame builds a LocalRelation that the driver answers
-        alone. The table always goes over as at least one (possibly
-        empty) batch: pyspark 4.1 cannot build a frame with an array
-        column from zero batches."""
+        job: under spark.sql.execution.arrow.localRelationThreshold the
+        JVM builds a LocalRelation that the driver answers alone.
+
+        The hand-over is the tail of pyspark's
+        ``createDataFrame(arrow_table, schema)`` and nothing else:
+        timestamps localized to the session time zone, the cast to
+        ``to_arrow_schema(schema)``, the batches streamed to the JVM
+        (``_serialize_to_jvm``: a temp file, or a socket when I/O
+        encryption is on) and ``PythonSQLUtils.toDataFrame``. That is
+        three py4j calls: the stream read, ``toDataFrame`` and the read
+        of ``spark.sql.execution.arrow.useLargeVarTypes``, by which the
+        JVM reads the batches (a string column cast the other way
+        crashes it). ``createDataFrame`` also re-fetches the session's
+        conf per setting and sets the active session on every call
+        (~20 more round trips). The time zone is read only for a
+        schema that holds a ``timestamp`` at some depth. The table is
+        localized as at least one (possibly empty) chunk: pyspark 4.1
+        cannot walk a nested column of zero chunks."""
         batches = table.to_batches() or [
             pa.RecordBatch.from_pylist([], schema=table.schema)
         ]
-        return self.spark.createDataFrame(
-            pa.Table.from_batches(batches, table.schema), schema
+        table = pa.Table.from_batches(batches, table.schema)
+        zoned = T._has_type(schema, T.TimestampType)
+        tz = self._sql_conf.sessionLocalTimeZone() if zoned else None
+        table = _check_arrow_table_timestamps_localize(table, schema, True, tz).cast(
+            to_arrow_schema(
+                schema,
+                error_on_duplicated_field_names_in_struct=True,
+                prefers_large_types=self._sql_conf.arrowUseLargeVarTypes(),
+            )
         )
+        sc = self.spark.sparkContext
+        utils = _sql_utils(sc._jvm)
+        jiter = sc._serialize_to_jvm(
+            table.to_batches(),
+            ArrowStreamSerializer(),
+            utils.readArrowStreamFromFile,
+            lambda: sc._jvm.ArrowIteratorServer(),
+        )
+        df = DataFrame(
+            utils.toDataFrame(jiter, schema.json(), self.spark._jsparkSession),
+            self.spark,
+        )
+        df._schema = schema
+        return df
 
     def _driver_changes(
         self, parts: list[BucketWork], new_snap: dict, columns: list[str] | None
@@ -1846,7 +1918,7 @@ class SnapshotSink:
         snap = self.current_snapshot() if version is None else self.snapshot(version)
         if snap is None:
             raise ValueError("no snapshot yet")
-        names = {f.name for f in T.StructType.fromDDL(snap["schema"]).fields}
+        names = {f.name for f in parse_schema(snap["schema"]).fields}
         for col, _, _ in preds:
             if col not in names or col in _INTERNAL or col == "_bucket":
                 raise ValueError(f"scan_where: no such payload column {col!r}")
@@ -2080,11 +2152,7 @@ class SnapshotSink:
         # crash-replay bookkeeping, all driver-side file metadata — no
         # Spark job: buckets already manifested for this batch_id are
         # excluded from recomputation and their outputs reused
-        manifested = self._manifested_buckets(
-            batch_id,
-            0 if snap is None else snap.get("rollback_epoch", 0),
-            referenced=self._referenced_paths(snap),
-        )
+        manifested = self._manifested_buckets(batch_id, snap)
         # merge-on-read planning (also metadata-only): buckets at the
         # delta threshold are COMPACTED on touch (fold all deltas +
         # batch into one file); everything else APPENDS its delta —
@@ -2237,7 +2305,7 @@ class SnapshotSink:
         ):
             return None, None
         plan = {"route": "arrow", "input": "wal", "est_bytes": uncompressed_bytes(wal),
-                "threshold_bytes": self.spark._jconf.autoBroadcastJoinThreshold()}
+                "threshold_bytes": self._sql_conf.autoBroadcastJoinThreshold()}
         if plan["est_bytes"] <= plan["threshold_bytes"]:
             buckets = np.array(
                 [bucket_of(k, self.n_buckets, key_type)
@@ -2398,21 +2466,21 @@ class SnapshotSink:
             for b in sorted(set(buckets.tolist()) & set(compact_candidates))
             for f in _bucket_files(self.root, snap, b)
         ]
-        sources = [rows] + [f for _, f in files]
-        win = _winners(_versions(sources))
-        f, r = win["f"].to_numpy(), win["r"].to_numpy()
-        file_bucket = np.array([-1] + [b for b, _ in files], np.int32)
-        in_batch = f == 0
-        win_bucket = np.where(
-            in_batch, buckets[np.where(in_batch, r, 0)], file_bucket[f]
-        ).astype(np.int32)
-        win = win.append_column("_bucket", pa.array(win_bucket))
-        ff = self._floor_filter(snap, pc.field)
-        if ff is not None and files:
-            # the rule of the Spark route: see _frame_rows
-            win = win.filter(ff | ~pc.field("_bucket").isin(compact_candidates))
         target = to_arrow_schema(table_schema).append(pa.field("_bucket", pa.int32()))
-        return _take_rows(sources, win, target)
+        with opened_sources([rows] + [f for _, f in files]) as sources:
+            win = _winners(_versions(sources))
+            f, r = win["f"].to_numpy(), win["r"].to_numpy()
+            file_bucket = np.array([-1] + [b for b, _ in files], np.int32)
+            in_batch = f == 0
+            win_bucket = np.where(
+                in_batch, buckets[np.where(in_batch, r, 0)], file_bucket[f]
+            ).astype(np.int32)
+            win = win.append_column("_bucket", pa.array(win_bucket))
+            ff = self._floor_filter(snap, pc.field)
+            if ff is not None and files:
+                # the rule of the Spark route: see _frame_rows
+                win = win.filter(ff | ~pc.field("_bucket").isin(compact_candidates))
+            return _take_rows(sources, win, target)
 
     def _merge_plan(self, merge_in: DataFrame) -> dict:
         """Route a DataFrame ingest merge: ``arrow`` (row-LWW) or
@@ -2426,7 +2494,7 @@ class SnapshotSink:
         the ``parallel`` plan. Driver-side planning only, no Spark
         job."""
         est = merge_in._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        threshold = self.spark._jconf.autoBroadcastJoinThreshold()
+        threshold = self._sql_conf.autoBroadcastJoinThreshold()
         small = 0 <= est <= threshold
         return {
             "route": ("one_task" if self.patch else "arrow") if small else "parallel",
@@ -2646,7 +2714,9 @@ class SnapshotSink:
                     for e in ents
                 }
             )
-            referenced = self._referenced_paths(head)
+            # only a dest dir already on disk can be retained data, so
+            # a first attempt never reads the retained set
+            referenced = None
             skipped_live: set[int] = set()
             dests: dict[int, str] = {}
             alt_root = None
@@ -2657,7 +2727,9 @@ class SnapshotSink:
                     skipped_live.add(b)
                     shutil.rmtree(src_dir, ignore_errors=True)
                     continue
-                if os.path.relpath(dest, self.root) in referenced:
+                if os.path.isdir(dest) and referenced is None:
+                    referenced = self._referenced_paths(head)
+                if referenced and os.path.relpath(dest, self.root) in referenced:
                     if alt_root is None:
                         alt_root = os.path.join(
                             self.root,
@@ -2759,7 +2831,7 @@ class SnapshotSink:
                 [],
                 0,
             )
-        table_schema = T.StructType.fromDDL(snap["schema"])
+        table_schema = parse_schema(snap["schema"])
         payload_only = T.StructType(
             [f for f in table_schema.fields if f.name not in _INTERNAL]
         )
@@ -2787,8 +2859,8 @@ class SnapshotSink:
         keeps any newer concurrent appends), and swap the pointer.
 
         ``batch_payload_schema=None`` is the JVM-less fast path (the
-        Data Source write commit runs in a Python worker where
-        StructType.fromDDL cannot parse): NO schema evolution — the
+        Data Source write commit runs in a Python worker, with no JVM
+        to parse a schema): NO schema evolution — the
         head's schema string is kept verbatim (the DS writer already
         refused non-subset batches at plan time), or
         ``bootstrap_schema_ddl`` seeds an empty table."""
@@ -2885,7 +2957,7 @@ class SnapshotSink:
             snap = self.current_snapshot()
             if snap is None:
                 return {"compacted": []}
-            names = {f.name for f in T.StructType.fromDDL(snap["schema"]).fields}
+            names = {f.name for f in parse_schema(snap["schema"]).fields}
             for c in cluster_by:
                 if c in _INTERNAL or c == "_bucket" or c == KEY:
                     raise ValueError(f"cluster_by: invalid column {c!r}")
@@ -2930,7 +3002,7 @@ class SnapshotSink:
         recorded stats. An all-NULL column quantizes as constant 0."""
         from ..operators.zorder import zorder_expr
 
-        schema = T.StructType.fromDDL(snap["schema"])
+        schema = parse_schema(snap["schema"])
         fields = {f.name: f.dataType for f in schema.fields}
         need = [
             c for c in cluster_by
@@ -3087,7 +3159,7 @@ class SnapshotSink:
             self._rebucketing = True
             self._inflight.add(tag)  # shields staging/ingest dirs from vacuum
         try:
-            table_schema = T.StructType.fromDDL(snap["schema"])
+            table_schema = parse_schema(snap["schema"])
             old_buckets = [int(b) for b in snap["buckets"]]
             raw = self._read_buckets(snap, old_buckets, target=table_schema)
             moved: dict[str, list] = {}
@@ -3511,7 +3583,7 @@ class SnapshotSink:
         snap = self.current_snapshot()
         if snap is None:
             raise ValueError("no snapshot yet")
-        schema = T.StructType.fromDDL(snap["schema"])
+        schema = parse_schema(snap["schema"])
         names = {f.name for f in schema.fields}
         # _bucket is the rewrite's own partitioning column (renaming a
         # payload column onto it would be silently OVERWRITTEN by bucket
@@ -3688,7 +3760,7 @@ class SnapshotSink:
                 "purge it too, then mark_synced past the purge), or pass "
                 "ignore_tags=True to purge the untagged history only."
             )
-        table_schema = T.StructType.fromDDL(snap["schema"])
+        table_schema = parse_schema(snap["schema"])
         key_field = next(f for f in table_schema.fields if f.name == KEY)
         keys = _probe_keys(keys, key_field)
         targets = sorted(
@@ -3732,7 +3804,7 @@ class SnapshotSink:
         snap = self.current_snapshot()
         if snap is None:
             return {"hits": 0, "files_scanned": 0}
-        table_schema = T.StructType.fromDDL(snap["schema"])
+        table_schema = parse_schema(snap["schema"])
         key_field = next(f for f in table_schema.fields if f.name == KEY)
         files = glob.glob(
             os.path.join(self.root, "data", "**", "*.parquet"), recursive=True
@@ -3799,7 +3871,7 @@ class SnapshotSink:
         with self._commit_lock:
             self._inflight.add(tag)
         try:
-            table_schema = T.StructType.fromDDL(snap["schema"])
+            table_schema = parse_schema(snap["schema"])
             folded = self._fold(
                 self._read_buckets(snap, todo, target=table_schema), KEY, SEQ
             )

@@ -48,6 +48,7 @@ from beehive_data_etl_spark.sinks.snapshot import (
     _INTERNAL,
     _probe_keys,
     bucket_of,
+    parse_schema,
 )
 from beehive_data_etl_spark.sources import table_meta as tm
 
@@ -114,7 +115,7 @@ class TokenIndex:
         snap = self.sink.current_snapshot()
         if snap is None:
             raise ValueError("sink has no snapshot")
-        return T.StructType.fromDDL(snap["schema"])
+        return parse_schema(snap["schema"])
 
     def _sink_elem_type(self) -> T.DataType:
         f = next(
@@ -135,7 +136,7 @@ class TokenIndex:
         sink_t = self._sink_elem_type()
         cur = self.current()
         if cur is not None and "elem" in cur:
-            stored = T.StructType.fromDDL(f"x {cur['elem']}")[0].dataType
+            stored = parse_schema(f"x {cur['elem']}")[0].dataType
             if stored != sink_t:
                 raise ValueError(
                     f"index built over {self.token_col} element type "
@@ -476,7 +477,7 @@ class ValueIndex(TokenIndex):
         if not keys:
             # same column set as the non-empty path (sink.lookup drops
             # the sink's internal columns)
-            schema = T.StructType.fromDDL(snap["schema"])
+            schema = parse_schema(snap["schema"])
             return self.spark.createDataFrame([], schema).drop(*_INTERNAL)
         rows = self.sink.lookup(keys)
         # exactness under staleness: lookup() returns CURRENT rows, so

@@ -19,12 +19,15 @@ source ordinal ``f`` and row ordinal ``r``, sorts by (key, seq desc, f,
 r) with ``sort_indices`` and keeps the first row of each key's run —
 the LWW winner, the first-read row on seq ties; pass 2 ``take``s
 exactly the winning rows with the full projection, so loser versions
-never materialize their token arrays. A changelog window diffs the
-FROM and TO winners of the keys the window's added files hold
-(``read_changes``' I/U/D truth table). Keys never straddle buckets, so
-one call may fold any set of whole buckets. Parity with the sink's
-Spark fold is pinned by tests/test_spark_datasource.py,
-tests/test_driver_reads.py and tests/test_merge_routes.py.
+never materialize their token arrays. Each parquet source is opened
+once per call and both passes read from that handle. A changelog
+window diffs the FROM and TO winners of the keys the window's added
+files hold (``read_changes``' I/U/D truth table), reading the (key,
+seq, deleted) columns of each distinct file of the two versions once.
+Keys never straddle buckets, so one call may fold any set of whole
+buckets. Parity with the sink's Spark fold is pinned by
+tests/test_spark_datasource.py, tests/test_driver_reads.py and
+tests/test_merge_routes.py.
 
 Point reads plan from the snapshot's recorded key ranges: an entry
 whose ``key_range`` — or, inside a sorted rewrite, a file whose
@@ -41,6 +44,7 @@ from __future__ import annotations
 
 import bisect
 import os
+from contextlib import ExitStack, contextmanager
 from dataclasses import dataclass, field
 
 import numpy as np
@@ -207,42 +211,59 @@ def _matching_row_groups(pf, key_values: list) -> list[int]:
     return keep
 
 
+@contextmanager
+def opened_sources(sources: list):
+    """Each source as the fold reads it: an in-memory Arrow table as
+    is, a parquet file path opened once — one footer read — so both
+    passes of a call share the handle; the files close on exit."""
+    import pyarrow.parquet as pq
+
+    with ExitStack() as stack:
+        yield [
+            s if isinstance(s, pa.Table) else stack.enter_context(pq.ParquetFile(s))
+            for s in sources
+        ]
+
+
 def _read_cols(src, columns: list[str], key_values: list | None = None):
     """A source's ``columns`` that it actually has (older-schema deltas
-    lack later columns). A source is an in-memory Arrow table or a
-    parquet file path; for a file, ``key_values`` (point reads) prunes
-    row groups by key statistics — the I/O win on compacted key-sorted
-    buckets, where a probe decodes one row group instead of the bucket
-    (surviving groups are read whole; callers re-apply the key
-    predicate row-level).  One footer read per file: names, stats, and
-    data all come off the same ParquetFile.
+    lack later columns). A source is an in-memory Arrow table or an
+    opened ``ParquetFile`` (``opened_sources``); for a file,
+    ``key_values`` (point reads) prunes row groups by key statistics —
+    the I/O win on compacted key-sorted buckets, where a probe decodes
+    one row group instead of the bucket (surviving groups are read
+    whole; callers re-apply the key predicate row-level).
     CRITICAL ordinal contract: both fold passes of one partition must
     pass the SAME key_values, because row ordinals index the
     (identically) pruned read."""
     if isinstance(src, pa.Table):
         return src.select([c for c in columns if c in src.column_names])
-    import pyarrow.parquet as pq
-
-    pf = pq.ParquetFile(src)
-    have = set(pf.schema_arrow.names)
+    have = set(src.schema_arrow.names)
     cols = [c for c in columns if c in have]
     if key_values is None:
-        return pf.read(columns=cols)
-    groups = _matching_row_groups(pf, key_values)
+        return src.read(columns=cols)
+    groups = _matching_row_groups(src, key_values)
     if not groups:
-        return pf.schema_arrow.empty_table().select(cols)
-    return pf.read_row_groups(groups, columns=cols)
+        return src.schema_arrow.empty_table().select(cols)
+    return src.read_row_groups(groups, columns=cols)
 
 
 def _versions(sources: list, key_values: list | None = None) -> pa.Table:
-    """Pass 1's input: every (key, seq, deleted) row of ``sources`` with
-    its source ordinal ``f`` and row ordinal ``r``. Only those three
-    columns' bytes are read; token arrays of loser versions never leave
-    the parquet file. A key widened across sources (int → bigint)
-    reads as the widest type."""
+    """Pass 1's input: every (key, seq, deleted) row of the opened
+    ``sources`` with its source ordinal ``f`` and row ordinal ``r``.
+    Only those three columns' bytes are read; token arrays of loser
+    versions never leave the parquet file."""
+    return _tag_versions(
+        [_read_cols(src, [KEY, SEQ, DELETED], key_values) for src in sources]
+    )
+
+
+def _tag_versions(reads: list[pa.Table]) -> pa.Table:
+    """``reads`` (one (key, seq, deleted) table per source) as one
+    table with source ordinals ``f`` and row ordinals ``r``. A key
+    widened across sources (int → bigint) reads as the widest type."""
     tables = []
-    for i, src in enumerate(sources):
-        t = _read_cols(src, [KEY, SEQ, DELETED], key_values)
+    for i, t in enumerate(reads):
         n = t.num_rows
         tables.append(
             t.append_column("f", pa.array(np.full(n, i, np.int32)))
@@ -323,10 +344,11 @@ def _take_rows(
     sources: list, win: pa.Table, target: pa.Schema, key_values: list | None = None
 ) -> pa.Table:
     """Pass 2: the rows ``win`` locates, in ``win``'s order, aligned to
-    ``target``. Each source is read once, and only when it holds a
-    winner. A ``target`` column that ``win`` carries beyond the fold's
-    own (a changelog's change_type, ingest's bucket) comes from ``win``
-    rather than from the sources."""
+    ``target``, from the opened ``sources`` pass 1 read. Each source is
+    read once, and only when it holds a winner. A ``target`` column
+    that ``win`` carries beyond the fold's own (a changelog's
+    change_type, ingest's bucket) comes from ``win`` rather than from
+    the sources."""
     extra = [f for f in target if f.name in win.column_names and f.name not in _ORDINALS]
     data = pa.schema([f for f in target if f not in extra])
     f = win["f"].to_numpy()
@@ -351,29 +373,44 @@ def read_state_partition(part: BucketWork, target: pa.Schema, internal: bool):
     winners when ``internal``. With ``key_values`` set, winners of
     unprobed keys in the surviving row groups may be stale: callers
     filter to the probed keys."""
-    win = _winners(_versions(part.new_files, part.key_values))
-    if not internal:
-        win = win.filter(pc.invert(win[DELETED]))
-    yield from _take_rows(
-        part.new_files, win, target, part.key_values
-    ).to_batches()
+    with opened_sources(part.new_files) as sources:
+        win = _winners(_versions(sources, part.key_values))
+        if not internal:
+            win = win.filter(pc.invert(win[DELETED]))
+        rows = _take_rows(sources, win, target, part.key_values)
+    yield from rows.to_batches()
 
 
 def read_changes_partition(part: BucketWork, target: pa.Schema):
     """Diff the FROM and TO states restricted to keys seen in
     window-added files — ``read_changes``'s I/U/D contract computed in
-    one call over one bucket, or over several whole buckets at once."""
-    versions = _versions(part.new_files)
+    one call over one bucket, or over several whole buckets at once.
+    Each distinct file of FROM ∪ TO is opened once and its (key, seq,
+    deleted) read once, shared by both states; both are cut to the
+    candidate keys before their winner sorts."""
+    paths = list(dict.fromkeys(part.new_files + part.old_files))
+    with opened_sources(paths) as handles:
+        rows = _changed_rows(part, dict(zip(paths, handles)), target)
+    if rows is not None:
+        yield from rows.to_batches()
+
+
+def _changed_rows(
+    part: BucketWork, handles: dict, target: pa.Schema
+) -> pa.Table | None:
+    """``read_changes_partition`` over the opened files, by path."""
+    reads = {p: _read_cols(h, [KEY, SEQ, DELETED]) for p, h in handles.items()}
+    versions = _tag_versions([reads[p] for p in part.new_files])
     added = set(part.added_files)
     touched = [i for i, p in enumerate(part.new_files) if p in added]
     cand = pc.unique(
         versions[KEY].filter(pc.is_in(versions["f"], pa.array(touched, pa.int32())))
     )
-    new = _winners(versions)
-    new = new.filter(pc.is_in(new[KEY], value_set=cand))
+    new = _winners(versions.filter(pc.is_in(versions[KEY], value_set=cand)))
     if new.num_rows == 0:
-        return
-    old = _winners(_versions(part.old_files))
+        return None
+    old = _tag_versions([reads[p] for p in part.old_files])
+    old = _winners(old.filter(pc.is_in(old[KEY].cast(cand.type), value_set=cand)))
     n = new.num_rows
     if old.num_rows:
         # locate each candidate's FROM-state winner (null: absent there)
@@ -394,6 +431,6 @@ def read_changes_partition(part: BucketWork, target: pa.Schema):
     )
     keep = tag != ""
     if not keep.any():
-        return
+        return None
     new = new.filter(pa.array(keep)).append_column(CHANGE, pa.array(tag[keep]))
-    yield from _take_rows(part.new_files, new, target).to_batches()
+    return _take_rows([handles[p] for p in part.new_files], new, target)

@@ -326,6 +326,68 @@ def test_read_changes_driver_path_parity(spark, history, frm, to):
         assert sorted(map(tuple, rows), key=repr) == _state_diff_rows(s, frm, to, cols)
 
 
+# ------------------------------------------------------------ typed payload
+TYPED = (
+    "op string, op_sequence long, doc_id string, ts timestamp, "
+    "ntz timestamp_ntz, amount decimal(12,3), "
+    "events array<struct<a:timestamp,b:string>>"
+)
+SESSION_CONFS = {
+    "zone": ("spark.sql.session.timeZone", "America/Los_Angeles"),
+    "large_var_types": ("spark.sql.execution.arrow.useLargeVarTypes", "true"),
+}
+
+
+@pytest.mark.parametrize("conf", list(SESSION_CONFS))
+def test_typed_payload_driver_reads_match_spark(spark, tmp_path, conf):
+    """Timestamp, timestamp_ntz, decimal and array<struct<timestamp,
+    string>> payloads read the same from a driver lookup and a driver
+    changelog as from the Spark fold, under a non-UTC session time zone
+    and under large Arrow var types."""
+    import datetime
+    import decimal
+
+    name, value = SESSION_CONFS[conf]
+    prev = spark.conf.get(name)
+    spark.conf.set(name, value)
+    try:
+        s = SnapshotSink(spark, str(tmp_path / "t"), n_buckets=4, lineage=False)
+        t = lambda h: datetime.datetime(2024, 3, 10, h, 30, 15, 123456)  # noqa: E731
+
+        def row(op, seq, i, h):
+            return (
+                op, seq, f"k{i}", t(h), t(h + 1),
+                decimal.Decimal(f"{i}{h}.125"), [(t(h + 2), f"e{i}"), (None, None)],
+            )
+
+        s.apply_batch(
+            spark.createDataFrame([row("I", 10 + i, i, i) for i in range(8)], TYPED),
+            "b1",
+        )
+        s.apply_batch(
+            spark.createDataFrame(
+                [row("U", 100, 1, 20), row("D", 101, 2, 0), row("I", 102, 9, 5)],
+                TYPED,
+            ),
+            "b2",
+        )
+        for i in (0, 1, 2, 9):
+            if _one_bucket(s, [f"k{i}"]):
+                _assert_driver_lookup(spark, s, [f"k{i}"])
+        got, n = _jobs(spark, lambda: s.read_changes(1, 2))
+        rows, n_collect = _jobs(spark, got.collect)
+        assert n == 0 and n_collect == 0, (n, n_collect)
+        want = s._delta_diff(
+            1, 2, s.snapshot(1), s.snapshot(2), include_cells=False,
+            include_old=False, columns=None,
+        )
+        assert got.schema == want.schema, (got.schema, want.schema)
+        assert sorted(map(tuple, rows), key=repr) == _rows(want)
+        assert {r["change_type"] for r in rows} == {"I", "U", "D"}
+    finally:
+        spark.conf.set(name, prev)
+
+
 def test_refused_windows_keep_spark(spark, tmp_path, monkeypatch):
     """Windows holding a rebucket, a column alter, a purge, a rollback or
     a tombstone-floor advance, and include_old=True, keep the Spark
