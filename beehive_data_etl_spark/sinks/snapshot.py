@@ -122,6 +122,27 @@ _PATCH_MASK = "patch_cols"
 _COMPRESSION = "zstd"
 
 
+def arrow_file_options(table: pa.Table) -> dict:
+    """pyarrow's parquet options for a data file written from Arrow
+    (the driver ingest route, its inline compactions included, and the
+    ``beehive`` Data Source writer): the sink's codec, and dictionary
+    encoding only on a flat column whose distinct values are at most
+    half its rows. pyarrow's default dictionary-encodes every column;
+    on token lists (``list<int>``) and near-unique columns that made
+    files ~40% larger than Spark's writer, which drops a dictionary
+    that does not pay."""
+    half = table.num_rows / 2
+    return {
+        "compression": _COMPRESSION,
+        "use_dictionary": [
+            f.name
+            for f, col in zip(table.schema, table.columns)
+            if not pa.types.is_nested(f.type)
+            and pc.count_distinct(col, mode="all").as_py() <= half
+        ],
+    }
+
+
 def _bucket_expr(n_buckets: int):
     return F.pmod(F.xxhash64(F.col(KEY)), F.lit(n_buckets)).cast("int")
 
@@ -2042,7 +2063,9 @@ class SnapshotSink:
 
         Two routes per table kind, chosen by Spark's own size estimate
         of the merge input (the batch plus any inline-compacted
-        buckets) against ``spark.sql.autoBroadcastJoinThreshold``:
+        buckets) against
+        ``spark.sql.execution.arrow.localRelationThreshold``, the one
+        size rule of every driver route, reads and ingest alike:
 
         - within it, a row-LWW batch is collected to the driver with
           ``toArrow()`` (one Spark job) and folded and written there by
@@ -2051,12 +2074,14 @@ class SnapshotSink:
           and writes in ONE Spark task (``coalesce(1)``: the cell fold
           has no Arrow twin);
         - anything else, including an input of unknown size and a
-          threshold of -1, runs the parallel Spark plan.
+          threshold of 0, runs the parallel Spark plan.
 
         ``metrics["merge_plan"]`` records which ran and why: ``route``
         (``arrow`` / ``one_task`` / ``parallel``), ``input``
         (``dataframe``: ``est_bytes`` is Spark's estimate),
-        ``est_bytes`` and ``threshold_bytes``.
+        ``est_bytes`` and ``threshold_bytes``; on the ``arrow`` route
+        also ``arrow_bytes``, the collected table's real size (Spark's
+        estimate counts an ``array<int>`` at a default size).
         """
         return self._ingest(batch_df, batch_id)
 
@@ -2064,8 +2089,10 @@ class SnapshotSink:
         """``apply_batch(read_wal(spark, paths), batch_id)`` without
         Spark when the batch is small: for an unaudited row-LWW table
         whose WAL files plus the files of the buckets it compacts
-        inline fit under ``spark.sql.autoBroadcastJoinThreshold`` by
-        uncompressed footer bytes, the files are read with pyarrow
+        inline fit under
+        ``spark.sql.execution.arrow.localRelationThreshold`` (the size
+        rule of every driver route) by uncompressed footer bytes, the
+        files are read with pyarrow
         (``read_wal``'s footer-schema grouping and widening), bucketed
         by ``bucket_of``, folded by the Arrow fold and written on the
         driver — no Spark job. A batch over the threshold runs the
@@ -2289,12 +2316,14 @@ class SnapshotSink:
         file aligned to the table schema, so widened like ``read_wal``;
         ``deleted`` set, ``_bucket`` by ``bucket_of``, manifested
         buckets dropped) read from the WAL files by pyarrow, and the
-        route record. Both size checks — the WAL files, then with the
-        files of the buckets the batch compacts, by uncompressed footer
-        bytes against the broadcast threshold — run on footers and the
-        key column alone, before any whole file is read. A batch over
-        the threshold returns ``(None, plan)`` with route ``parallel``;
-        a patch-mode or audited table, or a key with no hash twin,
+        route record. Two size checks by uncompressed footer bytes
+        against ``spark.sql.execution.arrow.localRelationThreshold``,
+        the size every driver route uses: first the WAL files alone;
+        then, after each file is read once, with the files of the
+        buckets the batch compacts (a batch refused there wasted its
+        read). A batch over the threshold returns ``(None, plan)``
+        with route ``parallel``; a
+        patch-mode or audited table, or a key with no hash twin,
         ``(None, None)``: ``apply_batch``'s rule decides."""
         key_type = table_schema[KEY].dataType
         if (
@@ -2305,18 +2334,7 @@ class SnapshotSink:
         ):
             return None, None
         plan = {"route": "arrow", "input": "wal", "est_bytes": uncompressed_bytes(wal),
-                "threshold_bytes": self._sql_conf.autoBroadcastJoinThreshold()}
-        if plan["est_bytes"] <= plan["threshold_bytes"]:
-            buckets = np.array(
-                [bucket_of(k, self.n_buckets, key_type)
-                 for p in wal for k in pq.read_table(p, columns=[KEY])[KEY].to_pylist()],
-                np.int32,
-            )
-            keep = ~np.isin(buckets, sorted(manifested))
-            folds = set(buckets[keep].tolist()) & set(compact_candidates)
-            plan["est_bytes"] += uncompressed_bytes(
-                [f for b in sorted(folds) for f in _bucket_files(self.root, snap, b)]
-            )
+                "threshold_bytes": self._sql_conf.arrowLocalRelationThreshold()}
         if plan["est_bytes"] > plan["threshold_bytes"]:
             return None, {**plan, "route": "parallel"}
         target = to_arrow_schema(table_schema)
@@ -2326,7 +2344,19 @@ class SnapshotSink:
             deleted = pc.equal(t["op"], "D")
             t = t.drop_columns([c for c in ("deleted",) if c in t.column_names])
             parts.append(_align(t.append_column("deleted", deleted), target))
-        rows = pa.concat_tables(parts).append_column("_bucket", pa.array(buckets))
+        rows = pa.concat_tables(parts)
+        buckets = np.array(
+            [bucket_of(k, self.n_buckets, key_type) for k in rows[KEY].to_pylist()],
+            np.int32,
+        )
+        keep = ~np.isin(buckets, sorted(manifested))
+        folds = set(buckets[keep].tolist()) & set(compact_candidates)
+        plan["est_bytes"] += uncompressed_bytes(
+            [f for b in sorted(folds) for f in _bucket_files(self.root, snap, b)]
+        )
+        if plan["est_bytes"] > plan["threshold_bytes"]:
+            return None, {**plan, "route": "parallel"}
+        rows = rows.append_column("_bucket", pa.array(buckets))
         return rows.filter(pa.array(keep)), plan
 
     def _frame_rows(
@@ -2417,7 +2447,8 @@ class SnapshotSink:
             state_rows if tgt is None else state_rows.unionByName(tgt)
         )
         if plan["route"] == "arrow":
-            return state_rows.toArrow(), plan, None
+            rows = state_rows.toArrow()
+            return rows, {**plan, "arrow_bytes": rows.nbytes}, None
         obs = None
         if self.lineage:
             # lineage rides the merge job itself (A12 with ZERO extra
@@ -2485,16 +2516,17 @@ class SnapshotSink:
     def _merge_plan(self, merge_in: DataFrame) -> dict:
         """Route a DataFrame ingest merge: ``arrow`` (row-LWW) or
         ``one_task`` (patch) when Spark's own size estimate of
-        ``merge_in`` is at most ``spark.sql.autoBroadcastJoinThreshold``
-        — a relation Spark would ship whole to every task is small
-        enough to fold in one place. The fixed cost of each stage and
-        job, not the data, bounds such a batch. A threshold of -1
-        (broadcast off) and an input of unknown size (a foreachBatch
-        ``LogicalRDD`` reports ``spark.sql.defaultSizeInBytes``) keep
-        the ``parallel`` plan. Driver-side planning only, no Spark
-        job."""
+        ``merge_in`` is at most
+        ``spark.sql.execution.arrow.localRelationThreshold`` — the
+        Arrow data Spark itself keeps on the driver, and the limit of
+        every other driver route (the driver changelog, ``apply_wal``).
+        The fixed cost of each stage and job, not the data, bounds such
+        a batch. A threshold of 0 (for an input that holds a row) and
+        an input of unknown size (a foreachBatch ``LogicalRDD`` reports
+        ``spark.sql.defaultSizeInBytes``) keep the ``parallel`` plan.
+        Driver-side planning only, no Spark job."""
         est = merge_in._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        threshold = self._sql_conf.autoBroadcastJoinThreshold()
+        threshold = self._sql_conf.arrowLocalRelationThreshold()
         small = 0 <= est <= threshold
         return {
             "route": ("one_task" if self.patch else "arrow") if small else "parallel",
@@ -2540,8 +2572,9 @@ class SnapshotSink:
 
     def _write_arrow(self, rows: pa.Table, staging: str) -> None:
         """pyarrow's half of ``_stage_buckets``: each bucket's rows, in
-        their order, as zstd files of at most ``target_file_rows``
-        rows, like Spark's ``maxRecordsPerFile``."""
+        their order, as files of at most ``target_file_rows`` rows,
+        like Spark's ``maxRecordsPerFile``, written with
+        ``arrow_file_options``."""
         os.makedirs(staging)
         buckets = rows["_bucket"].to_numpy()
         order = np.argsort(buckets, kind="stable")
@@ -2562,7 +2595,7 @@ class SnapshotSink:
                 )
         with ThreadPoolExecutor(max_workers=min(16, max(1, len(files)))) as ex:
             list(ex.map(
-                lambda a: pq.write_table(a[0], a[1], compression=_COMPRESSION), files
+                lambda a: pq.write_table(a[0], a[1], **arrow_file_options(a[0])), files
             ))
 
     def _move_staged(self, staging: str, buckets, tag: str) -> dict[int, str]:

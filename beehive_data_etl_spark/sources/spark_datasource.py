@@ -100,7 +100,12 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
-from beehive_data_etl_spark.sinks.snapshot import _PY_TYPES, _probe_keys, bucket_of
+from beehive_data_etl_spark.sinks.snapshot import (
+    _PY_TYPES,
+    _probe_keys,
+    arrow_file_options,
+    bucket_of,
+)
 
 from . import arrow_fold
 from . import table_meta as tm
@@ -769,7 +774,7 @@ class BeehiveBatchWriter(DataSourceArrowWriter):
                         pq.ParquetWriter(
                             os.path.join(d, name),
                             part.schema,
-                            compression="zstd",
+                            **arrow_file_options(part),
                         ),
                         name,
                         0,

@@ -1,17 +1,17 @@
 """Ingest's routes give the same table.
 
 ``SnapshotSink`` merges a batch whose merge input fits within
-``spark.sql.autoBroadcastJoinThreshold`` on a small-batch route — for a
-row-LWW table the Arrow fold on the driver (``arrow``: WAL files read by
-pyarrow through ``apply_wal``, or a DataFrame collected with
-``toArrow``), for a patch table one Spark task (``one_task``) — and any
-other batch with the parallel plan (fold shuffle, then ``repartition``
-by bucket). These tests run the same batch sequence under the default
-threshold and under ``-1`` (broadcast off, so every batch is parallel)
-and check that both routes commit the same states, changelogs,
-manifests and lineage, and that both equal independent oracles. They
-also pin the job and stage counts of each shape and the ``merge_plan``
-record of every commit."""
+``spark.sql.execution.arrow.localRelationThreshold`` on a small-batch
+route — for a row-LWW table the Arrow fold on the driver (``arrow``:
+WAL files read by pyarrow through ``apply_wal``, or a DataFrame
+collected with ``toArrow``), for a patch table one Spark task
+(``one_task``) — and any other batch with the parallel plan (fold
+shuffle, then ``repartition`` by bucket). These tests run the same batch sequence under the default
+threshold and under ``0`` (every batch is parallel) and check that both
+routes commit the same states, changelogs, manifests and lineage, and
+that both equal independent oracles. They also pin the job and stage
+counts of each shape, the ``merge_plan`` record of every commit, and
+that the files written from Arrow are as compact as Spark's."""
 
 import datetime
 import decimal
@@ -34,7 +34,7 @@ from beehive_data_etl_spark.verify import (
 )
 from test_serving_reads import ROW_SCHEMA, _job_ids
 
-THRESHOLD = "spark.sql.autoBroadcastJoinThreshold"
+THRESHOLD = "spark.sql.execution.arrow.localRelationThreshold"
 ROUTES = ["arrow", "parallel"]
 
 
@@ -43,7 +43,8 @@ def route(spark, name):
     """Run the body with every small batch on ``name``'s merge plan."""
     prev = spark.conf.get(THRESHOLD)
     if name == "parallel":
-        spark.conf.set(THRESHOLD, "-1")
+        # Spark refuses -1 for this setting
+        spark.conf.set(THRESHOLD, "0")
     try:
         yield
     finally:
@@ -440,7 +441,7 @@ def test_replayed_small_batches_run_no_spark_job(spark, smoke_log, tmp_path):
 
 
 def test_threshold_off_keeps_the_parallel_plan(spark, tmp_path):
-    """Broadcast off (-1) routes even a tiny batch to the bulk shape:
+    """A threshold of 0 routes even a tiny batch to the bulk shape:
     the fold's and the bucket repartition's shuffles are separate
     stages."""
     sink = SnapshotSink(spark, str(tmp_path / "t"), n_buckets=8)
@@ -448,7 +449,7 @@ def test_threshold_off_keeps_the_parallel_plan(spark, tmp_path):
     with route(spark, "parallel"):
         m, _, n_stages = _jobs_and_stages(spark, lambda: sink.apply_batch(df, "b0"))
     assert m["merge_plan"]["route"] == "parallel"
-    assert m["merge_plan"]["threshold_bytes"] == -1
+    assert m["merge_plan"]["threshold_bytes"] == 0
     assert n_stages > 1
 
 
@@ -468,7 +469,80 @@ def test_merge_plan_is_recorded(spark, tmp_path):
     recorded = [m["merge_plan"] for m in sink.read_metrics()]
     assert [p["route"] for p in recorded] == ["arrow", "parallel", "parallel"]
     assert {p["input"] for p in recorded} == {"dataframe"}
-    assert recorded[1]["threshold_bytes"] == -1
+    assert recorded[1]["threshold_bytes"] == 0
+    # the collected table's real size rides the arrow route's record
+    assert recorded[0]["arrow_bytes"] > 0
+    assert not any("arrow_bytes" in p for p in recorded[1:])
     assert recorded[2]["est_bytes"] > recorded[2]["threshold_bytes"] > 0
     assert sink.current_snapshot()["metrics"]["merge_plan"] == recorded[2]
     assert sink.snapshot(1)["metrics"]["merge_plan"] == recorded[0]
+
+
+def test_the_driver_size_rule_is_the_local_relation_threshold(
+    spark, smoke_log, tmp_path
+):
+    """Ingest sizes a batch by the setting the driver reads use, not by
+    the broadcast-join threshold: with the latter at 1 KiB, a WAL batch
+    and a DataFrame batch far over it still fold on the driver."""
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1024")
+    try:
+        wal, frame = (
+            SnapshotSink(spark, str(tmp_path / name), n_buckets=4)
+            for name in ("wal", "frame")
+        )
+        files = _log_files(smoke_log)[:2]
+        plans = [
+            wal.apply_wal(files, "b0")["merge_plan"],
+            frame.apply_batch(spark.read.parquet(*files), "b0")["merge_plan"],
+        ]
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    limit = wal._sql_conf.arrowLocalRelationThreshold()
+    for plan, batch_input in zip(plans, ["wal", "dataframe"]):
+        assert plan["route"] == "arrow" and plan["input"] == batch_input, plan
+        assert 1024 < plan["est_bytes"] <= plan["threshold_bytes"] == limit, plan
+
+
+def _files(root) -> list[str]:
+    return sorted(
+        os.path.join(d, f)
+        for d, _, names in os.walk(os.path.join(root, "data"))
+        for f in names if f.endswith(".parquet")
+    )
+
+
+def _encodings(path, column) -> set:
+    md = pq.read_metadata(path)
+    leaf = next(
+        i for i in range(md.num_columns)
+        if md.schema.column(i).path == column
+    )
+    return {
+        e for g in range(md.num_row_groups)
+        for e in md.row_group(g).column(leaf).encodings
+    }
+
+
+def test_arrow_written_files_are_as_compact_as_sparks(spark, smoke_log, tmp_path):
+    """The same token batch applied on each route: the files written
+    from Arrow (the driver route and the ``beehive`` Data Source
+    writer) keep a dictionary on the low-cardinality ``source`` column
+    but not on the token list, and the driver route's table is within
+    5% of the parallel route's bytes."""
+    files = _log_files(smoke_log)[:4]
+    sizes = {}
+    for name in ROUTES:
+        sink = SnapshotSink(spark, str(tmp_path / name), n_buckets=2)
+        with route(spark, name):
+            assert sink.apply_wal(files, "b0")["merge_plan"]["route"] == name
+        sizes[name] = sum(os.path.getsize(f) for f in _files(sink.root))
+    register(spark)
+    ds_root = str(tmp_path / "ds")
+    spark.read.parquet(*files).write.format("beehive").option(
+        "batchId", "b0"
+    ).option("nBuckets", "2").mode("append").save(ds_root)
+    for f in _files(str(tmp_path / "arrow")) + _files(ds_root):
+        assert "RLE_DICTIONARY" not in _encodings(f, "tokens.list.element"), f
+        assert "RLE_DICTIONARY" in _encodings(f, "source"), f
+    assert sizes["arrow"] <= 1.05 * sizes["parallel"], sizes

@@ -6,7 +6,8 @@
   ``parse_schema`` returns is the caller's own;
 - the Arrow fold opens each parquet file once per call: a driver
   lookup once per file it reads, a driver changelog once per distinct
-  file of its FROM and TO versions;
+  file of its FROM and TO versions, and ``apply_wal`` reads each WAL
+  file of a driver batch once;
 - a first-attempt ingest never gathers the retained paths of tagged
   and branch snapshots (``_referenced_paths``), which only a
   crash-replay or a re-delivered batch needs."""
@@ -17,6 +18,7 @@ from pyspark.sql import types as T
 
 from beehive_data_etl_spark.sinks.snapshot import SnapshotSink, bucket_of, parse_schema
 from beehive_data_etl_spark.sources.arrow_fold import _bucket_files, window_partitions
+from beehive_data_etl_spark.sources.eventlog import generate_event_log
 from beehive_data_etl_spark.streaming.replay import _log_files
 
 
@@ -39,18 +41,24 @@ def jvm_calls(spark, monkeypatch):
 
 @pytest.fixture
 def parquet_opens(monkeypatch):
-    """Paths of every ``pq.ParquetFile`` the engine constructs while
-    the test runs. Footer-only reads (``pq.read_metadata``, the driver
-    changelog's size check) are not counted."""
+    """Paths of every ``pq.ParquetFile`` the engine constructs and
+    every ``pq.read_table`` it calls while the test runs. Footer-only
+    reads (``pq.read_metadata``, the size checks) are not counted."""
     opened: list[str] = []
     real = pq.ParquetFile
+    real_read = pq.read_table
 
     class Counting(real):
         def __init__(self, source, *args, **kwargs):
             opened.append(source)
             super().__init__(source, *args, **kwargs)
 
+    def read_table(source, *args, **kwargs):
+        opened.append(source)
+        return real_read(source, *args, **kwargs)
+
     monkeypatch.setattr(pq, "ParquetFile", Counting)
+    monkeypatch.setattr(pq, "read_table", read_table)
     return opened
 
 
@@ -122,6 +130,21 @@ def test_driver_changelog_opens_each_file_once(spark, table, parquet_opens):
     parquet_opens.clear()
     assert s.read_changes(v - 1, v).count() > 0
     assert sorted(parquet_opens) == sorted(distinct)
+
+
+def test_driver_ingest_reads_each_wal_file_once(spark, tmp_path, parquet_opens):
+    """A 20-file batch (the serve prebuild's shape) folds on the
+    driver, reading each WAL file whole once; the fresh table has no
+    bucket to compact, so nothing else is opened."""
+    log = generate_event_log(
+        str(tmp_path / "wal"), n_docs=200, n_events=2000, n_files=20
+    )
+    wal = _log_files(log)
+    s = SnapshotSink(spark, str(tmp_path / "t"), n_buckets=4)
+    parquet_opens.clear()
+    m = s.apply_wal(wal, "b0")
+    assert m["merge_plan"]["route"] == "arrow", m["merge_plan"]
+    assert sorted(parquet_opens) == sorted(wal)
 
 
 def test_first_attempt_ingest_skips_retained_paths(spark, table, monkeypatch):
