@@ -63,6 +63,7 @@ import threading
 import time
 import uuid
 from concurrent.futures import ThreadPoolExecutor
+from urllib.parse import unquote, urlparse
 
 import numpy as np
 import pyarrow as pa
@@ -99,10 +100,10 @@ from beehive_data_etl_spark.sources.arrow_fold import (
     _versions,
     _winners,
     canonical_keys,
+    decoded_bytes,
     opened_sources,
     read_changes_partition,
     read_state_partition,
-    uncompressed_bytes,
     window_partitions,
 )
 from beehive_data_etl_spark.sources.readers import read_wal, schema_groups
@@ -122,24 +123,20 @@ _PATCH_MASK = "patch_cols"
 _COMPRESSION = "zstd"
 
 
-def arrow_file_options(table: pa.Table) -> dict:
+def arrow_file_options(schema: pa.Schema) -> dict:
     """pyarrow's parquet options for a data file written from Arrow
     (the driver ingest route, its inline compactions included, and the
     ``beehive`` Data Source writer): the sink's codec, and dictionary
-    encoding only on a flat column whose distinct values are at most
-    half its rows. pyarrow's default dictionary-encodes every column;
-    on token lists (``list<int>``) and near-unique columns that made
-    files ~40% larger than Spark's writer, which drops a dictionary
-    that does not pay."""
-    half = table.num_rows / 2
+    encoding on the flat columns only. pyarrow's default also
+    dictionary-encodes token lists (``list<int>``), which made files
+    ~40% larger than Spark's writer. A rule of the schema alone, so
+    every file of a schema is encoded alike whatever rows come first:
+    on the benchmark's tables it writes 0.7% more bytes than keeping
+    the dictionary only on columns with at most one distinct value
+    per two rows."""
     return {
         "compression": _COMPRESSION,
-        "use_dictionary": [
-            f.name
-            for f, col in zip(table.schema, table.columns)
-            if not pa.types.is_nested(f.type)
-            and pc.count_distinct(col, mode="all").as_py() <= half
-        ],
+        "use_dictionary": [f.name for f in schema if not pa.types.is_nested(f.type)],
     }
 
 
@@ -1325,7 +1322,8 @@ class SnapshotSink:
         ``STREAM`` column of ``table_meta.WINDOW_POLICY``: a rebucket,
         as the diff is per bucket; a backfill or a column alter, whose
         renamed FROM-state columns the Arrow diff does not bridge); and
-        its added files fit, by uncompressed footer bytes,
+        its added files fit, by their Arrow size from the footers
+        (``decoded_bytes``),
         under ``spark.sql.execution.arrow.localRelationThreshold``, the
         size Spark hands over as a local relation. Other windows run
         the Spark diff above: patch tables need the cell fold, and
@@ -1392,7 +1390,7 @@ class SnapshotSink:
             # the rows out are at most the added files' rows: they must
             # fit the local relation _local_frame builds
             limit = self._sql_conf.arrowLocalRelationThreshold()
-            if uncompressed_bytes(added) <= limit:
+            if decoded_bytes(added) <= limit:
                 return self._driver_changes(parts, new_snap, columns)
         return self._delta_diff(
             from_version,
@@ -2061,27 +2059,29 @@ class SnapshotSink:
         the same ``batch_id`` (exactly-once via manifests + snapshot
         pointer; SURVEY.md §3.3 state machine).
 
-        Two routes per table kind, chosen by Spark's own size estimate
-        of the merge input (the batch plus any inline-compacted
-        buckets) against
+        Two routes per table kind, chosen by the size of the merge
+        input (the batch plus any inline-compacted buckets: Spark's
+        own estimate, or the Arrow size of the files it reads if that
+        is larger) against
         ``spark.sql.execution.arrow.localRelationThreshold``, the one
         size rule of every driver route, reads and ingest alike:
 
         - within it, a row-LWW batch is collected to the driver with
           ``toArrow()`` (one Spark job) and folded and written there by
           the Arrow fold (``sources/arrow_fold.py``), together with the
-          files of the buckets it compacts; a patch table's batch folds
-          and writes in ONE Spark task (``coalesce(1)``: the cell fold
-          has no Arrow twin);
+          files of the buckets it compacts; a patch table's batch that
+          also fits ``spark.sql.autoBroadcastJoinThreshold`` folds and
+          writes in ONE Spark task (``coalesce(1)``: the cell fold has
+          no Arrow twin, and one core is slower than the parallel plan
+          past that size);
         - anything else, including an input of unknown size and a
           threshold of 0, runs the parallel Spark plan.
 
         ``metrics["merge_plan"]`` records which ran and why: ``route``
         (``arrow`` / ``one_task`` / ``parallel``), ``input``
-        (``dataframe``: ``est_bytes`` is Spark's estimate),
-        ``est_bytes`` and ``threshold_bytes``; on the ``arrow`` route
-        also ``arrow_bytes``, the collected table's real size (Spark's
-        estimate counts an ``array<int>`` at a default size).
+        (``dataframe``), ``est_bytes`` (the size the rule compared) and
+        ``threshold_bytes``; on the ``arrow`` route also
+        ``arrow_bytes``, the collected table's real size.
         """
         return self._ingest(batch_df, batch_id)
 
@@ -2091,8 +2091,8 @@ class SnapshotSink:
         whose WAL files plus the files of the buckets it compacts
         inline fit under
         ``spark.sql.execution.arrow.localRelationThreshold`` (the size
-        rule of every driver route) by uncompressed footer bytes, the
-        files are read with pyarrow
+        rule of every driver route) by their Arrow size from the
+        footers (``decoded_bytes``), the files are read with pyarrow
         (``read_wal``'s footer-schema grouping and widening), bucketed
         by ``bucket_of``, folded by the Arrow fold and written on the
         driver — no Spark job. A batch over the threshold runs the
@@ -2102,7 +2102,7 @@ class SnapshotSink:
         Python hash twin, hands ``read_wal``'s DataFrame to
         ``apply_batch``'s routes. Same commit protocol, manifests, crash
         points and metrics either way; ``merge_plan`` says ``input:
-        "wal"`` and ``est_bytes`` is the footer bytes whenever the
+        "wal"`` and ``est_bytes`` is the footer size whenever the
         footer rule decided."""
         return self._ingest(list(paths), batch_id)
 
@@ -2316,15 +2316,15 @@ class SnapshotSink:
         file aligned to the table schema, so widened like ``read_wal``;
         ``deleted`` set, ``_bucket`` by ``bucket_of``, manifested
         buckets dropped) read from the WAL files by pyarrow, and the
-        route record. Two size checks by uncompressed footer bytes
-        against ``spark.sql.execution.arrow.localRelationThreshold``,
-        the size every driver route uses: first the WAL files alone;
-        then, after each file is read once, with the files of the
-        buckets the batch compacts (a batch refused there wasted its
-        read). A batch over the threshold returns ``(None, plan)``
-        with route ``parallel``; a
-        patch-mode or audited table, or a key with no hash twin,
-        ``(None, None)``: ``apply_batch``'s rule decides."""
+        route record. Two size checks by Arrow size from the footers
+        (``decoded_bytes``) against
+        ``spark.sql.execution.arrow.localRelationThreshold``, the size
+        every driver route uses: first the WAL files alone; then,
+        after each file is read once, with the files of the buckets the
+        batch compacts (a batch refused there wasted its read). A batch
+        over the threshold returns ``(None, plan)`` with route
+        ``parallel``; a patch-mode or audited table, or a key with no
+        hash twin, ``(None, None)``: ``apply_batch``'s rule decides."""
         key_type = table_schema[KEY].dataType
         if (
             self.patch
@@ -2333,7 +2333,7 @@ class SnapshotSink:
             or type(key_type) not in _PY_TYPES
         ):
             return None, None
-        plan = {"route": "arrow", "input": "wal", "est_bytes": uncompressed_bytes(wal),
+        plan = {"route": "arrow", "input": "wal", "est_bytes": decoded_bytes(wal),
                 "threshold_bytes": self._sql_conf.arrowLocalRelationThreshold()}
         if plan["est_bytes"] > plan["threshold_bytes"]:
             return None, {**plan, "route": "parallel"}
@@ -2351,7 +2351,7 @@ class SnapshotSink:
         )
         keep = ~np.isin(buckets, sorted(manifested))
         folds = set(buckets[keep].tolist()) & set(compact_candidates)
-        plan["est_bytes"] += uncompressed_bytes(
+        plan["est_bytes"] += decoded_bytes(
             [f for b in sorted(folds) for f in _bucket_files(self.root, snap, b)]
         )
         if plan["est_bytes"] > plan["threshold_bytes"]:
@@ -2514,19 +2514,35 @@ class SnapshotSink:
             return _take_rows(sources, win, target)
 
     def _merge_plan(self, merge_in: DataFrame) -> dict:
-        """Route a DataFrame ingest merge: ``arrow`` (row-LWW) or
-        ``one_task`` (patch) when Spark's own size estimate of
-        ``merge_in`` is at most
+        """Route a DataFrame ingest merge: ``arrow`` (row-LWW) when the
+        size of ``merge_in`` is at most
         ``spark.sql.execution.arrow.localRelationThreshold`` — the
         Arrow data Spark itself keeps on the driver, and the limit of
-        every other driver route (the driver changelog, ``apply_wal``).
-        The fixed cost of each stage and job, not the data, bounds such
-        a batch. A threshold of 0 (for an input that holds a row) and
+        every other driver route (the driver changelog, ``apply_wal``);
+        ``one_task`` (patch) when it is also at most
+        ``spark.sql.autoBroadcastJoinThreshold``. The fixed cost of
+        each stage and job, not the data, bounds such a batch. The
+        size is the larger of Spark's own estimate and the Arrow size
+        of the local files the plan reads, from their footers
+        (``decoded_bytes``): Spark counts an ``array<int>`` at a
+        default size, so it reads a 40 MB batch of token lists as
+        16-18 MB. A threshold of 0 (for an input that holds a row) and
         an input of unknown size (a foreachBatch ``LogicalRDD`` reports
         ``spark.sql.defaultSizeInBytes``) keep the ``parallel`` plan.
         Driver-side planning only, no Spark job."""
         est = merge_in._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+        files = [urlparse(u) for u in merge_in.inputFiles()]
+        if est >= 0 and all(u.scheme in ("", "file") for u in files):
+            est = max(est, decoded_bytes([unquote(u.path) for u in files]))
         threshold = self._sql_conf.arrowLocalRelationThreshold()
+        if self.patch:
+            # one core folds the whole batch: past the broadcast
+            # threshold (the size Spark hands whole to one task) it is
+            # slower than the parallel plan. On 4 cores a 40k-event
+            # patch batch Spark estimates at 12.5 MB took 1.38-1.60 s
+            # in one task against 1.10-1.54 s, an 80k-event one
+            # (25.5 MB) 1.78-1.84 s against 1.15-1.43 s.
+            threshold = min(threshold, self._sql_conf.autoBroadcastJoinThreshold())
         small = 0 <= est <= threshold
         return {
             "route": ("one_task" if self.patch else "arrow") if small else "parallel",
@@ -2595,7 +2611,7 @@ class SnapshotSink:
                 )
         with ThreadPoolExecutor(max_workers=min(16, max(1, len(files)))) as ex:
             list(ex.map(
-                lambda a: pq.write_table(a[0], a[1], **arrow_file_options(a[0])), files
+                lambda a: pq.write_table(a[0], a[1], **arrow_file_options(a[0].schema)), files
             ))
 
     def _move_staged(self, staging: str, buckets, tag: str) -> dict[int, str]:

@@ -774,7 +774,7 @@ class BeehiveBatchWriter(DataSourceArrowWriter):
                         pq.ParquetWriter(
                             os.path.join(d, name),
                             part.schema,
-                            **arrow_file_options(part),
+                            **arrow_file_options(part.schema),
                         ),
                         name,
                         0,

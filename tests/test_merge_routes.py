@@ -26,6 +26,7 @@ import pyarrow.parquet as pq
 import pytest
 
 from beehive_data_etl_spark.sinks.snapshot import KEY, SEQ, SnapshotSink
+from beehive_data_etl_spark.sources.arrow_fold import decoded_bytes
 from beehive_data_etl_spark.sources.spark_datasource import register
 from beehive_data_etl_spark.streaming.replay import _log_files, replay_incremental
 from beehive_data_etl_spark.verify import (
@@ -504,6 +505,32 @@ def test_the_driver_size_rule_is_the_local_relation_threshold(
         assert 1024 < plan["est_bytes"] <= plan["threshold_bytes"] == limit, plan
 
 
+def test_a_dataframe_is_sized_by_its_files_arrow_bytes(spark, tmp_path):
+    """Spark estimates a parquet scan by its compressed bytes and a
+    token list at a default size; the driver rule also weighs the
+    files' Arrow size, so a token-heavy batch Spark estimates under
+    the threshold but that is really over it keeps the parallel plan."""
+    path = str(tmp_path / "b0")
+    spark.createDataFrame(
+        [("U", i, f"k-{i:04d}", list(range(500)), 500, "s") for i in range(200)],
+        ROW_SCHEMA,
+    ).coalesce(1).write.parquet(path)
+    df = spark.read.parquet(path)
+    est = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    limit = 4 * est
+    files = [os.path.join(path, f) for f in os.listdir(path) if f.endswith(".parquet")]
+    assert decoded_bytes(files) > limit
+    sink = SnapshotSink(spark, str(tmp_path / "t"), n_buckets=4)
+    prev = spark.conf.get(THRESHOLD)
+    spark.conf.set(THRESHOLD, str(limit))
+    try:
+        plan = sink.apply_batch(df, "b0")["merge_plan"]
+    finally:
+        spark.conf.set(THRESHOLD, prev)
+    assert plan["route"] == "parallel", plan
+    assert plan["est_bytes"] > plan["threshold_bytes"] == limit, plan
+
+
 def _files(root) -> list[str]:
     return sorted(
         os.path.join(d, f)
@@ -529,7 +556,9 @@ def test_arrow_written_files_are_as_compact_as_sparks(spark, smoke_log, tmp_path
     from Arrow (the driver route and the ``beehive`` Data Source
     writer) keep a dictionary on the low-cardinality ``source`` column
     but not on the token list, and the driver route's table is within
-    5% of the parallel route's bytes."""
+    5% of the parallel route's bytes. The Data Source writer gets its
+    rows one per Arrow batch: a file's encoding must not hang on the
+    rows of the batch that opened it."""
     files = _log_files(smoke_log)[:4]
     sizes = {}
     for name in ROUTES:
@@ -539,9 +568,14 @@ def test_arrow_written_files_are_as_compact_as_sparks(spark, smoke_log, tmp_path
         sizes[name] = sum(os.path.getsize(f) for f in _files(sink.root))
     register(spark)
     ds_root = str(tmp_path / "ds")
-    spark.read.parquet(*files).write.format("beehive").option(
-        "batchId", "b0"
-    ).option("nBuckets", "2").mode("append").save(ds_root)
+    prev = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "1")
+    try:
+        spark.read.parquet(files[0]).write.format("beehive").option(
+            "batchId", "b0"
+        ).option("nBuckets", "2").mode("append").save(ds_root)
+    finally:
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", prev)
     for f in _files(str(tmp_path / "arrow")) + _files(ds_root):
         assert "RLE_DICTIONARY" not in _encodings(f, "tokens.list.element"), f
         assert "RLE_DICTIONARY" in _encodings(f, "source"), f
